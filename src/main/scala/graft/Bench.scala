@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import java.nio.file.Files
 
 /** Per-round benchmark main (driver contract): runs the headline TPC-H
   * suite on SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -17,7 +15,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *
   * Beyond wall time, the line carries a per-query `metrics` object
   * `{wall, shuffleRead, shuffleWrite, spillMem, spillDisk}` (bytes),
-  * collected by a SparkListener over task metrics — the engine-metrics
+  * collected by the [[TaskMetrics]] listener — the engine-metrics
   * surface the reference exposes per query (`src/execution/context.rs:
   * 33-53`: execute time, peak memory, spill counters). Shuffle/spill
   * bytes are the numbers that predict 100 TB behavior: a query whose
@@ -29,51 +27,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object Bench {
 
-  /** Accumulates task-level shuffle/spill bytes; snapshot deltas around
-    * each timed run give per-query totals. Listener delivery is async,
-    * so callers settle (three consecutive identical reads 50 ms apart)
-    * before snapshotting; metrics-only — wall time is measured outside
-    * the settle windows. */
-  private final class MetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spillMem = new AtomicLong
-    val spillDisk = new AtomicLong
-    // max per-task peakExecutionMemory since the last resetPeak() — the
-    // reference's per-query peak-memory metric (context.rs:33-53). The
-    // per-TASK peak is the number that predicts executor OOM at scale
-    // (executor heap / task slots); a sum over tasks would overstate it
-    // by the task count. Reset per timed window, not delta'd.
-    val peakTask = new AtomicLong
-    def resetPeak(): Unit = peakTask.set(0)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        peakTask.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-    def snapshot(): Seq[Long] =
-      Seq(shuffleRead.get, shuffleWrite.get, spillMem.get, spillDisk.get)
-    def settled(): Seq[Long] = {
-      var prev = snapshot()
-      var stable = 0
-      var tries = 0
-      while (tries < 30) {
-        Thread.sleep(50)
-        val cur = snapshot()
-        if (cur == prev) { stable += 1; if (stable >= 2) return cur }
-        else stable = 0
-        prev = cur
-        tries += 1
-      }
-      prev
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Validated: a non-numeric or <=0 value must not silently produce an
@@ -81,7 +34,7 @@ object Bench {
     val runs = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap(_.toIntOption).getOrElse(3))
     val spark = Engine.session()
-    val listener = new MetricsListener
+    val listener = new TaskMetrics
     spark.sparkContext.addSparkListener(listener)
     Engine.registerDir(spark, sfDir)
     Engine.tableNames.foreach { t =>
@@ -90,8 +43,8 @@ object Bench {
     }
 
     // One timed run ->
-    // (wall sec, [shuffleRead, shuffleWrite, spillMem, spillDisk], peakTaskMem).
-    def timeOnce(name: String): (Double, Seq[Long], Long) = {
+    // (wall sec, shuffle/spill byte deltas, peakTaskMem).
+    def timeOnce(name: String): (Double, TaskTotals, Long) = {
       val fn = SparkEntry.queries(name)
       val before = listener.settled()
       listener.resetPeak()
@@ -99,7 +52,7 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       val after = listener.settled()
-      (wall, after.zip(before).map { case (a, b) => a - b }, listener.peakTask.get)
+      (wall, after - before, listener.peakTaskMem)
     }
 
     // Untimed warm pass over the whole suite first: pays each query's
@@ -131,11 +84,10 @@ object Bench {
     // only the transport changed. The compact contract line still
     // prints LAST, wall seconds rounded to 4 decimals (r03 lesson).
     def r4(d: Double): Double = math.round(d * 1e4) / 1e4
-    val metricNames = Seq("shuffleRead", "shuffleWrite", "spillMem", "spillDisk")
     val ms = results.map { case (k, v) =>
       val fields = v match {
         case Some((wall, bytes, peak)) =>
-          ((s""""wall":${r4(wall)}""" +: metricNames.zip(bytes).map { case (n, b) => s""""$n":$b""" })
+          ((s""""wall":${r4(wall)}""" +: bytes.fields.map { case (n, b) => s""""$n":$b""" })
             :+ s""""peakMem":$peak""").mkString(",")
         case None => """"wall":-1.0"""
       }
@@ -143,11 +95,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val detailLine = s"""{"bench_detail":$ms,"runs":$runs,"sf":"$sfDir"}"""
     val dtag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "")
-    val detailPath =
-      s"/tmp/graft_bench_detail_${dtag}_${ProcessHandle.current.pid}.json"
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(detailPath), detailLine)
+      // createTempFile: an unpredictable name, created owner-only — a
+      // fixed /tmp path could be pre-planted by another local user
+      val detailPath = Files.createTempFile(s"graft_bench_detail_${dtag}_", ".json")
+      Files.writeString(detailPath, detailLine)
       println(s"""{"bench_detail_file":"$detailPath","sf":"$sfDir"}""")
     } catch { case _: Throwable => println(detailLine) }
 
@@ -193,14 +145,12 @@ object Bench {
         println(s"""{"golden_detail_top20":$slow,"sf":"$sfDir"}""")
         // the FULL per-query map goes to a file (it is ~4 KB — too big
         // for the driver's stdout tail window, which must keep the
-        // contract line); the path carries the sf-dir tag + pid so two
-        // concurrent bench runs never clobber each other's detail file
+        // contract line); a fresh temp file per run, so two concurrent
+        // bench runs never clobber each other's detail file
         val full = perQ.map { case (n, w) => s""""$n":$w""" }
           .mkString("{", ",", "}")
-        val tag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "")
-        val perqPath = s"/tmp/graft_golden_perq_${tag}_${ProcessHandle.current.pid}.json"
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(perqPath),
+        val perqPath = Files.createTempFile(s"graft_golden_perq_${dtag}_", ".json")
+        Files.writeString(perqPath,
           s"""{"golden_per_query":$full,"totalSec":${r4(gWall)},"sf":"$sfDir"}""")
         println(s"""{"metric":"golden_suite","value":${r4(gWall)},"unit":"sec","queries":${golden.size},"succeeded":$ok,"perq_file":"$perqPath","sf":"$sfDir"}""")
         queries.RefManifest.restoreViews(spark, sfDir)

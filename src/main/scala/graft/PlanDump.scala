@@ -4,70 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** The PRE-optimization ("stock") shapes of the five TPC-H queries the
-  * r16/r17 spill campaign reshaped. Single source of truth shared by
-  * the ScaleSweep A/B runners (which re-measure stock vs shipped at
-  * sf100) and [[PlanDump]] (which emits the before/after
-  * `explain("formatted")` evidence under plans/r18/). Each stock string
-  * IS the query's declared ORACLE SQL — derived from the catalog since
-  * r18 (ADVICE r17: the previous verbatim copies could silently desync
-  * from an oracle edit) — the reshapes changed the plan, never the
-  * result, and the driver's DuckDB differ re-proves that every round.
-  */
-private[graft] object TpchStockShapes {
-
-  /** q4 stock: EXISTS decorrelates to a left-semi sort-merge join that
-    * sorts the 600M-row lineitem side (17.4 GB mem + 6.6 GB disk spill
-    * at sf100). Shipped shape: per-order max(l_shipdate) aggregate. */
-  val q04 = queries.TpchQueries.q04.oracle.get
-
-  /** q11 stock: 600M rows into 20M l_partkey groups — map-side partial
-    * agg builds input-keyspace hash tables (45.3 GB mem + 7 GB disk
-    * spill at sf100). Shipped shape: REPARTITION(l_partkey) on the
-    * join output before the aggregate. */
-  val q11 = queries.TpchQueries.q11.oracle.get
-
-  /** q16 stock: count(DISTINCT l_suppkey) plans a dedupe aggregate over
-    * the part⋈lineitem join output (input-keyspace partial-agg state)
-    * on top of a sort-merge join that sorts lineitem (together 17.2 GB
-    * mem + 3.2 GB disk at sf100). Shipped: SHUFFLE_HASH(part) +
-    * REPARTITION on the dedupe key. */
-  val q16 = queries.TpchQueries.q16.oracle.get
-
-  /** q13 stock: customer LEFT OUTER orders, then a per-custkey count —
-    * the full orders table crosses the join shuffle and the count runs
-    * on the joined output. Shipped (r18): count per o_custkey BEFORE
-    * the join (guide §2.3), so the join probes a custkey-sized
-    * aggregate and reuses its partitioning. */
-  val q13 = queries.TpchQueries.q13.oracle.get
-
-  /** q18 stock: the HAVING subquery groups 600M lineitem rows into
-    * ~150M l_orderkey groups (50.6 GB mem + 7.1 GB disk spill at
-    * sf100). Shipped: REPARTITION(l_orderkey) on the scan first. */
-  val q18 = queries.TpchQueries.q18.oracle.get
-
-  /** q18 shipped shape, for the A/B runner — straight from the
-    * catalog (the string the declared query executes). */
-  val q18Prerepart = queries.TpchQueries.q18SparkSql
-
-  /** q21 stock: EXISTS / NOT EXISTS decorrelate to a left-semi plus a
-    * left-anti join, each shuffling AND sorting lineitem again — the
-    * suite's worst spiller (102 GB mem + 14 GB disk at sf100).
-    * Shipped: single-pass per-order distinct-supplier aggregate
-    * (since r18 WITHOUT the join back to the fact CTE). */
-  val q21 = queries.TpchQueries.q21.oracle.get
-
-  /** name -> stock SQL for every query the spill campaign touched. */
-  val all: Seq[(String, String)] = Seq(
-    "tpch_q04" -> q04, "tpch_q11" -> q11, "tpch_q13" -> q13,
-    "tpch_q16" -> q16, "tpch_q18" -> q18, "tpch_q21" -> q21)
-}
-
 /** Emits the `explain("formatted")` before/after evidence for every
-  * query the r17/r18 spill-elimination campaign reshaped:
-  * `<outDir>/<query>_before.txt` (the stock shape, from
-  * [[TpchStockShapes]]) and `<outDir>/<query>_after.txt` (the shipped
-  * declared query, straight out of `SparkEntry.queries`). Plans are
+  * query the r17/r18 spill-elimination campaign reshaped
+  * (`TpchQueries.reshaped`): `<outDir>/<query>_before.txt` (the stock
+  * shape, which is the row's declared oracle SQL in
+  * `SparkEntry.oracleSql`) and `<outDir>/<query>_after.txt` (the
+  * shipped declared query, straight out of `SparkEntry.queries`). Plans are
   * captured at plan time (AQE `isFinalPlan=false`) on the sf dir given —
   * shape claims (join strategy, Exchange count, PushedFilters) are
   * scale-independent EXCEPT join strategy choices, which follow size
@@ -103,9 +45,10 @@ object PlanDump {
       println(s"[plandump] wrote $p")
     }
 
-    TpchStockShapes.all.foreach { case (name, stockSql) =>
+    val reshaped = queries.TpchQueries.reshaped
+    reshaped.foreach { name =>
       write(name, "before",
-        spark.sql(stockSql).queryExecution.explainString(mode))
+        spark.sql(SparkEntry.oracleSql(name)).queryExecution.explainString(mode))
       write(name, "after",
         SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(mode))
@@ -113,8 +56,7 @@ object PlanDump {
     // The untouched TPC-H queries, captured as `_current` — the
     // evidence behind OPTIMIZATION_r17.md's "examined, left alone"
     // rows (join strategies, PushedFilters, Exchange counts).
-    val touched = TpchStockShapes.all.map(_._1).toSet
-    (1 to 22).map(i => f"tpch_q$i%02d").filterNot(touched).foreach { name =>
+    (1 to 22).map(i => f"tpch_q$i%02d").filterNot(reshaped.contains).foreach { name =>
       write(name, "current",
         SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(mode))

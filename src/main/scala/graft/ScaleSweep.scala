@@ -1,89 +1,138 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** One-shot scale sweep of the dedup path at 10⁶ docs — the measured
-  * anchor for SCALE.md's 100 TB plan-shape arguments (round-4 verdict
-  * item 4: "the 100 TB arguments are plan-shape-verified but never
-  * exercised above oracle scale").
+/** Scale sweeps: the measured anchors behind SCALE.md's 100 TB
+  * plan-shape arguments (round-4 verdict item 4: "the 100 TB arguments
+  * are plan-shape-verified but never exercised above oracle scale"),
+  * one mode per anchor, plus `ab`, which re-measures catalog rows
+  * stock against shipped.
   *
-  * Generates a DETERMINISTIC synthetic corpus (pure functions of the
-  * row id — no RNG state, so any rerun reproduces it bit-for-bit):
-  * 1,000,000 docs of ~25 tokens over a 50k-token vocabulary; every
-  * id ≡ 1 (mod 20) doc is a near-duplicate of its id-1 neighbor (one
-  * token perturbed → shingle Jaccard ≈ 0.77: 20 of 26 distinct shingles shared), planting 50k known
-  * 2-doc clusters. Runs:
+  * Every corpus is DETERMINISTIC synthetic data (pure functions of the
+  * row id — no RNG state, so any rerun reproduces it bit-for-bit).
+  * Each mode prints one JSON line (`ab`: one per arm). Usage:
   *
-  *   1. `Dedup.clusters(useLsh = true)` — MinHash+LSH banding →
-  *      connected components (the 100 TB clustering path), and
-  *   2. `Dedup.incrementalLshPairs` — a 10k-doc batch (the dup member
-  *      of every 5th planted pair, so each has its partner on the
-  *      corpus side) against the 990k-doc remainder (the daily-ingest
-  *      path),
+  *   scripts/run_main.sh graft.ScaleSweep [nDocs]               # dedup paths
+  *   scripts/run_main.sh graft.ScaleSweep <mode> [size] [dial]  # see `modes`
+  *   scripts/run_main.sh graft.ScaleSweep ab [catalog names…]   # stock vs shipped
   *
-  * recording per-phase wall time, shuffle bytes vs input bytes, CC
-  * round count, and the worst per-stage straggler ratio
-  * (max task duration / median, stages with ≥ 8 tasks) from a task
-  * listener. Prints one JSON line; usage:
-  *
-  *   sbt -batch "runMain graft.ScaleSweep [nDocs]"          # dedup paths
-  *   sbt -batch "runMain graft.ScaleSweep ann [nDocs]"      # ANN paths
-  *   sbt -batch "runMain graft.ScaleSweep spans [nDocs]"    # span dedup
-  *   sbt -batch "runMain graft.ScaleSweep simhash [nDocs]"  # simhash banding
+  * SPARK_GRAFT_SF_DIR names the TPC-H directory the table-reading modes
+  * use (default: the sf0.1 test tables, as for Bench). An unknown mode
+  * exits 2 and lists the valid ones.
   */
 object ScaleSweep {
 
-  /** (stageId -> task durations ms, cumulative shuffle read+write bytes). */
-  private final class StageListener extends SparkListener {
-    val durations = new ConcurrentHashMap[Int, java.util.List[Long]]()
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        durations
-          .computeIfAbsent(t.stageId, _ => java.util.Collections.synchronizedList(
-            new java.util.ArrayList[Long]()))
-          .add(t.taskInfo.duration)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
+  /** A sweep: runs on a session it neither creates nor stops, given the
+    * arguments that follow the mode name. */
+  type Mode = (SparkSession, Seq[String]) => Unit
+
+  /** The mode table. `env` supplies the directories the table-reading
+    * modes use and the semdedup2 union dials. */
+  def modes(env: Map[String, String]): Map[String, Mode] = {
+    val sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // numeric arguments in order: the first is the size (docs, rows,
+    // files or replicas), the second a mode-specific dial
+    def num(a: Seq[String], i: Int): Option[Long] =
+      a.filter(x => x.nonEmpty && x.forall(_.isDigit)).lift(i).map(_.toLong)
+    def size(a: Seq[String], default: Long = 1000000L): Long = num(a, 0).getOrElse(default)
+    def dial(a: Seq[String]): Option[Int] = num(a, 1).map(_.toInt)
+    def metered(f: (SparkSession, TaskMetrics, Seq[String]) => Unit): Mode =
+      (s, a) => TaskMetrics.during(s)(m => f(s, m, a))
+    Map[String, Mode](
+      "dedup" -> metered((s, m, a) => dedupSweep(s, m, size(a))),
+      "spans" -> metered((s, m, a) => spansSweep(s, m, size(a))),
+      "simhash" -> metered((s, m, a) => simhashSweep(s, m, size(a))),
+      "contam" -> metered((s, m, a) => contamSweep(s, m, size(a))),
+      "ann" -> metered((s, m, a) => annSweep(s, m, size(a))),
+      "ann-clustered" -> ((s, a) => annClusteredSweep(s, size(a))),
+      "pq" -> metered((s, m, a) => pqSweep(s, m, size(a))),
+      "semdedup" -> metered((s, m, a) => semDedupSweep(s, m, size(a, 200000L))),
+      // the dial = TARGET TOTAL CELLS (overrides the docs/2000 sizing):
+      // "semdedup2 20000000 50176" prices the two-level path at the
+      // SemDeDup discipline's real cell count
+      "semdedup2" -> metered((s, m, a) => semDedupTwoLevelSweep(s, m,
+        size(a, 200000L), dial(a),
+        union = env.get("SPARK_GRAFT_SEMDEDUP2_UNION").contains("1"),
+        unionBands = env.get("SPARK_GRAFT_SEMDEDUP2_UNION_BANDS")
+          .flatMap(_.toIntOption).getOrElse(2))),
+      "rel_ab" -> metered((s, m, a) => relAbSweep(s, m, size(a, 200000L), dial(a))),
+      "semdedup2rel" -> metered((s, m, a) => semDedupRelSweep(s, m,
+        size(a, 200000L), dial(a),
+        union = !env.get("SPARK_GRAFT_SEMDEDUP2_UNION").contains("0"))),
+      "lshauto" -> ((s, a) => lshAutoSweep(s, size(a))),
+      "iceberg" -> ((s, a) => icebergSweep(s, size(a))),
+      // the dial = files per manifest (default 100): "plan 1000000 10"
+      // builds a 10⁵-MANIFEST table
+      "plan" -> ((s, a) => planSweep(s, size(a), dial(a).getOrElse(100))),
+      "metafiles" -> ((s, a) => metaFilesSweep(s, size(a), dial(a).getOrElse(100))),
+      "stats" -> ((s, a) => statsSweep(s, size(a), dial(a).getOrElse(100))),
+      "writemeta" -> ((s, a) => writeMetaSweep(s, size(a))),
+      "eqdel" -> ((s, a) => eqDeleteSweep(s, size(a))),
+      "eqdelk" -> ((s, a) => eqdelKSweep(s, size(a))),
+      "hidden" -> ((s, a) => hiddenSweep(s, size(a))),
+      "optimize" -> ((s, a) => optimizeSweep(s, size(a))),
+      "lakehouse" -> ((s, _) => lakehouseSweep(s, sfDir)),
+      "update" -> ((s, _) => updateSweep(s, sfDir)),
+      "sqldml" -> ((s, _) => sqlDmlSweep(s, sfDir)),
+      "stream" -> ((s, a) => streamSweep(s, sfDir, size(a, 10L).toInt)),
+      "tpchgen" -> ((s, a) => tpchScaleUp(s,
+        env.getOrElse("SPARK_GRAFT_TPCH_SRC", "/root/testdata/sf0.1"),
+        math.max(2, size(a).toInt))),
+      "ab" -> metered((s, m, a) => abSweep(s, m, sfDir,
+        if (a.isEmpty) queries.TpchQueries.reshaped else a)))
+  }
+
+  def main(args: Array[String]): Unit = {
+    // a bare size runs the dedup sweep
+    val (name, rest) = args.toSeq match {
+      case h +: t if !h.forall(_.isDigit) => (h, t)
+      case all => ("dedup", all)
     }
-    def snapshot(): (Long, Long) = (shuffleRead.get, shuffleWrite.get)
-    def spills(): (Long, Long) = (memSpill.get, diskSpill.get)
-    /** Worst max/median task-duration ratio over stages that do real
-      * work (median >= 200 ms, >= 8 tasks). Trivial stages — a 1 ms
-      * median with one 300 ms task — would otherwise report absurd
-      * ratios that say nothing about 100 TB skew. Also returns the
-      * single longest task anywhere (the straggler that matters in
-      * absolute terms). */
-    def worstStraggler(): (Double, Double) = {
-      val all = durations.asScala.values.map(_.asScala.toSeq.sorted).toSeq
-      val maxTaskSec = if (all.isEmpty) 0.0 else all.map(_.last).max / 1000.0
-      val ratios = all.flatMap { ds =>
-        val med = if (ds.isEmpty) 0L else ds(ds.size / 2)
-        if (ds.size < 8 || med < 200) None
-        else Some(ds.last.toDouble / med)
-      }
-      (if (ratios.isEmpty) 0.0 else ratios.max, maxTaskSec)
-    }
+    val table = modes(sys.env)
+    val mode = table.getOrElse(name, {
+      System.err.println(s"[scalesweep] unknown mode '$name'; valid modes: " +
+        table.keys.toSeq.sorted.mkString(" "))
+      sys.exit(2)
+    })
+    val spark = Engine.session()
+    try mode(spark, rest) finally spark.stop()
+  }
+
+  private def r(x: Double, digits: Int = 1): Double = {
+    val scale = math.pow(10, digits)
+    math.round(x * scale) / scale
+  }
+
+  private def mb(bytes: Long): Double = math.round(bytes / 1e5) / 10.0
+
+  /** `"<prefix>ShuffleReadMB":…,"<prefix>ShuffleWriteMB":…,` for one
+    * settled window (`"shuffleReadMB"`… with no prefix). */
+  private def shuffleJson(prefix: String, d: TaskTotals): String = {
+    val (rd, wr) =
+      if (prefix.isEmpty) ("shuffleReadMB", "shuffleWriteMB")
+      else (s"${prefix}ShuffleReadMB", s"${prefix}ShuffleWriteMB")
+    s""""$rd":${mb(d.shuffleRead)},"$wr":${mb(d.shuffleWrite)},"""
+  }
+
+  /** The last JSON fields of a metered sweep: the worst per-stage
+    * straggler ratio and the longest task, over the whole run. */
+  private def stragglerJson(m: TaskMetrics): String = {
+    val (ratio, maxTaskSec) = m.worstStraggler()
+    s""""worstStragglerRatio":${r(ratio)},"maxTaskSec":${r(maxTaskSec)}"""
+  }
+
+  /** `f`'s result and its wall time in seconds. */
+  private def timed[A](f: => A): (A, Double) = {
+    val t = System.nanoTime(); val a = f; (a, (System.nanoTime() - t) / 1e9)
   }
 
   /** Deterministic ~25-token doc: token j of doc d is a pure hash of
     * (d', j) where d' collapses each near-dup pair to its seed doc;
     * the dup member then perturbs one token so the pair is near, not
     * exact. */
-  private def corpusDf(spark: org.apache.spark.sql.SparkSession, nDocs: Long): DataFrame = {
+  private def corpusDf(spark: SparkSession, nDocs: Long): DataFrame = {
     val base = spark.range(nDocs).select(col("id").as("doc_id"))
     // seed id: docs (20k, 20k+1) share a seed; everyone else is alone
     val seed = when(col("doc_id") % 20 === 1, col("doc_id") - 1).otherwise(col("doc_id"))
@@ -101,7 +150,7 @@ object ScaleSweep {
   /** Deterministic dim-`dim` embedding: value (d) of doc id is a pure
     * hash of (id, d) mapped to [-1, 1] — any rerun reproduces the
     * corpus bit-for-bit, like [[corpusDf]]. */
-  private def embeddingsDf(spark: org.apache.spark.sql.SparkSession,
+  private def embeddingsDf(spark: SparkSession,
       nDocs: Long, dim: Int): DataFrame =
     spark.range(nDocs).select(col("id").as("doc_id"),
       transform(sequence(lit(0), lit(dim - 1)),
@@ -121,109 +170,128 @@ object ScaleSweep {
     p
   }
 
-  def main(args: Array[String]): Unit = {
-    val mode = args.headOption.filterNot(_.forall(_.isDigit)).getOrElse("dedup")
-    val nDocs = args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(1000000L)
-    val spark = Engine.session()
-    val listener = new StageListener
-    spark.sparkContext.addSparkListener(listener)
-    if (mode == "ann") { annSweep(spark, listener, nDocs); spark.stop(); return }
-    if (mode == "spans") { spansSweep(spark, listener, nDocs); spark.stop(); return }
-    if (mode == "ann-clustered") {
-      annClusteredSweep(spark, nDocs); spark.stop(); return
-    }
-    if (mode == "semdedup") {
-      semDedupSweep(spark, listener,
-        args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(200000L))
-      spark.stop(); return
-    }
-    if (mode == "semdedup2") {
-      // optional 2nd numeric arg = TARGET TOTAL CELLS (overrides the
-      // docs/2000 sizing): "semdedup2 20000000 50176" prices the
-      // two-level path at the SemDeDup discipline's real cell count
-      val cellsOverride = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt)
-      semDedupTwoLevelSweep(spark, listener,
-        args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(200000L),
-        cellsOverride)
-      spark.stop(); return
-    }
-    if (mode == "rel_ab") {
-      val cellsOverride = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt)
-      relAbSweep(spark, listener,
-        args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(200000L),
-        cellsOverride)
-      spark.stop(); return
-    }
-    if (mode == "semdedup2rel") {
-      val cellsOverride = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt)
-      semDedupRelSweep(spark, listener,
-        args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(200000L),
-        cellsOverride)
-      spark.stop(); return
-    }
-    if (mode == "contam") { contamSweep(spark, listener, nDocs); spark.stop(); return }
-    if (mode == "simhash") { simhashSweep(spark, listener, nDocs); spark.stop(); return }
-    if (mode == "pq") { pqSweep(spark, listener, nDocs); spark.stop(); return }
-    if (mode == "iceberg") { icebergSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "plan") {
-      // optional 2nd numeric arg = files per manifest (default 100):
-      // "plan 1000000 10" builds a 10⁵-MANIFEST table
-      val filesPer = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt).getOrElse(100)
-      planSweep(spark, nDocs, filesPer); spark.stop(); return
-    }
-    if (mode == "metafiles") {
-      val filesPer = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt).getOrElse(100)
-      metaFilesSweep(spark, nDocs, filesPer); spark.stop(); return
-    }
-    if (mode == "stats") {
-      val filesPer = args.filter(_.forall(_.isDigit)).drop(1).headOption
-        .map(_.toInt).getOrElse(100)
-      statsSweep(spark, nDocs, filesPer); spark.stop(); return
-    }
-    if (mode == "writemeta") { writeMetaSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "stream") {
-      val replicas = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(10)
-      streamSweep(spark, replicas); spark.stop(); return
-    }
-    if (mode == "eqdel") { eqDeleteSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "eqdelk") { eqdelKSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "lakehouse") { lakehouseSweep(spark); spark.stop(); return }
-    if (mode == "update") { updateSweep(spark); spark.stop(); return }
-    if (mode == "sqldml") { sqlDmlSweep(spark); spark.stop(); return }
-    if (mode == "hidden") { hiddenSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "optimize") { optimizeSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "tpchgen") {
-      tpchScaleUp(spark, math.max(2, nDocs.toInt)); spark.stop(); return
-    }
-    if (mode == "lshauto") { lshAutoSweep(spark, nDocs); spark.stop(); return }
-    if (mode == "q11ab") { q11AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "q18ab") { q18AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "q21ab") { q21AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "q16ab") { q16AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "q4ab") { q4AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "q13ab") { q13AbSweep(spark, listener); spark.stop(); return }
-    if (mode == "rebab") { rebalanceAbSweep(spark, listener); spark.stop(); return }
+  /** [[corpusDf]] pinned for a multi-pass text sweep, with its input
+    * size in bytes. */
+  private def textCorpus(spark: SparkSession, nDocs: Long): (DataFrame, Long) = {
+    val corpus = corpusDf(spark, nDocs).persist(MEMORY_AND_DISK)
+    (corpus, corpus.agg(sum(length(col("text")))).head.getLong(0))
+  }
 
-    val corpus = corpusDf(spark, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inputBytes = corpus.agg(sum(length(col("text")))).head.getLong(0)
+  /** Writes a generated vector corpus to a self-cleaning temp dir and
+    * scans it back: the shape of real use (the corpus lives in
+    * storage), and a generator-rooted self-referencing plan trips
+    * constraint propagation on the cell_id alias. A unique dir per run,
+    * so two concurrent sweeps never overwrite each other's corpus
+    * mid-read. Pinned and counted. */
+  private def materialize(spark: SparkSession, prefix: String, df: DataFrame): DataFrame = {
+    val path = tempDir(prefix).resolve("emb").toString
+    df.write.mode("overwrite").parquet(path)
+    val corpus = spark.read.parquet(path).persist(MEMORY_AND_DISK)
+    corpus.count()
+    corpus
+  }
+
+  /** Every (nDocs/20)-th corpus vector as a standalone ~20-row query
+    * frame (bounded collect) — the shape of real use: queries are a
+    * small separate table, not a projection of the corpus plan (a
+    * range×range self-join trips Catalyst's relation dedup on
+    * identical generator plans). */
+  private def sampleQueries(spark: SparkSession, corpus: DataFrame,
+      nDocs: Long): DataFrame = {
+    val qPlan = corpus
+      .filter(col("doc_id") % (nDocs / 20L) === 7)
+      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
+    spark.createDataFrame(
+      java.util.Arrays.asList(qPlan.collect(): _*), qPlan.schema)
+  }
+
+  /** Share of the exact top-k (query, neighbor) pairs that an
+    * approximate top-k also returned. */
+  private def recall(approx: DataFrame, exact: DataFrame, exactRows: Long): Double = {
+    val hit = approx.select(col("query_id"), col("neighbor_id"))
+      .join(exact.select(col("query_id"), col("neighbor_id")),
+        Seq("query_id", "neighbor_id")).count()
+    if (exactRows == 0) 0.0 else hit.toDouble / exactRows
+  }
+
+  /** Runs a SemDeDup sweep's verdicts `plan` once, timed between
+    * settled listener reads, and renders `"dedupSec"`, its shuffle
+    * deltas and the witnesses shared by the SemDeDup sweeps: one
+    * verdict per input vector; planted-pair recall (a planted dup is
+    * only findable if the pair lands in one cell — the paper's
+    * documented miss mode is boundary straddle, so recall is expected
+    * near, not at, 1.0); and every emitted (dup_of, doc_id) witness
+    * re-checked cosine ≥ τ distributedly (violations must be 0). */
+  private def semDedupJson(m: TaskMetrics, corpus: DataFrame, nDocs: Long,
+      tau: Double)(plan: => DataFrame): String = {
+    val s0 = m.settled()
+    val verdicts = plan.persist(MEMORY_AND_DISK)
+    val (rowsOut, wall) = timed(verdicts.count())
+    val s1 = m.settled()
+    val dups = verdicts.filter(col("dup_of").isNotNull).persist(MEMORY_AND_DISK)
+    val dupCount = dups.count()
+    val plantedFound = dups
+      .filter(pmod(col("doc_id"), lit(20L)) === 1 && col("dup_of") === col("doc_id") - 1)
+      .count()
+    val plantedPairs = nDocs / 20
+    // join the pairs back to both vectors and re-check the cosine (the
+    // dup set is the only thing that moves)
+    val vecs = corpus.select(col("doc_id"), col("vec"))
+    val violations = dups.select(col("doc_id"), col("dup_of"))
+      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_a", "vec" -> "va")),
+        col("doc_id") === col("doc_id_a"))
+      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_b", "vec" -> "vb")),
+        col("dup_of") === col("doc_id_b"))
+      .filter(operators.Similarity.cosine(col("va"), col("vb")) < tau)
+      .count()
+    s""""dedupSec":${r(wall)},""" + shuffleJson("", s1 - s0) +
+    s""""rowsOut":$rowsOut,"oneVerdictPerVector":${rowsOut == nDocs},""" +
+    s""""dupCount":$dupCount,"plantedPairs":$plantedPairs,""" +
+    s""""plantedFound":$plantedFound,""" +
+    s""""plantedRecall":${math.round(plantedFound * 10000.0 / plantedPairs) / 10000.0},""" +
+    s""""witnessViolations":$violations,"""
+  }
+
+  /** The SemDeDup sweeps' default cell count: cells ~2k rows until the
+    * fit guard's MaxFitCells ceiling (the plan-literal bound); past
+    * ~262M docs, cells grow instead — shard-fitting is the documented
+    * path beyond that. Clamp on Long BEFORE narrowing: docs/2000 can
+    * overflow Int at absurd nDocs. */
+  private def fitCells(nDocs: Long): Int =
+    math.min(operators.Similarity.MaxFitCells.toLong, math.max(64L, nDocs / 2000)).toInt
+
+  /** Dedup sweep at 10⁶ docs over [[corpusDf]]: ~25 tokens per doc
+    * over a 50k-token vocabulary; every id ≡ 1 (mod 20) doc is a
+    * near-duplicate of its id-1 neighbor (one token perturbed → shingle
+    * Jaccard ≈ 0.77: 20 of 26 distinct shingles shared), planting
+    * nDocs/20 known 2-doc clusters. Runs
+    *
+    *   1. `Dedup.clusters(useLsh = true)` — MinHash+LSH banding →
+    *      connected components (the 100 TB clustering path), and
+    *   2. `Dedup.incrementalLshPairs` — a 10k-doc batch (the dup member
+    *      of every 5th planted pair, so each has its partner on the
+    *      corpus side) against the 990k-doc remainder (the daily-ingest
+    *      path),
+    *
+    * recording per-phase wall time, shuffle bytes vs input bytes, CC
+    * round count and the worst straggler.
+    *
+    *   scripts/run_main.sh graft.ScaleSweep [nDocs]
+    */
+  private def dedupSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
+    val (corpus, inputBytes) = textCorpus(spark, nDocs)
     val expectedPairs = nDocs / 20
 
     // phase 1: LSH clustering end-to-end (pairs -> connected components)
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
-    val pairs = operators.Dedup.minhashLshPairs(
-      corpus, col("doc_id"), col("text"), n = 3, bands = 16, rowsPerBand = 4,
-      threshold = 0.5)
-    val (comps, ccRounds) = operators.Dedup.connectedComponentsWithRounds(pairs)
-    val nClusters = comps.groupBy(col("cluster_id")).count().count()
-    val clusterWall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+    val s0 = m.settled()
+    val ((nClusters, ccRounds), clusterWall) = timed {
+      val pairs = operators.Dedup.minhashLshPairs(
+        corpus, col("doc_id"), col("text"), n = 3, bands = 16, rowsPerBand = 4,
+        threshold = 0.5)
+      val (comps, rounds) = operators.Dedup.connectedComponentsWithRounds(pairs)
+      (comps.groupBy(col("cluster_id")).count().count(), rounds)
+    }
+    val s1 = m.settled()
 
     // phase 2: incremental batch-vs-corpus. The batch takes the DUP
     // member of every 5th planted pair (ids ≡ 81 mod 100 are ≡ 1 mod
@@ -233,26 +301,18 @@ object ScaleSweep {
     val batch = corpus.filter(col("doc_id") % 100 === 81)
     val rest = corpus.filter(col("doc_id") % 100 =!= 81)
     val expectedCross = nDocs / 100
-    val t1 = System.nanoTime()
-    val incPairs = operators.Dedup.incrementalLshPairs(
+    val (incPairs, incWall) = timed(operators.Dedup.incrementalLshPairs(
       batch, rest, col("doc_id"), col("text"), n = 3, bands = 16,
-      rowsPerBand = 4, threshold = 0.5).count()
-    val incWall = (System.nanoTime() - t1) / 1e9
-    val s2 = listener.snapshot()
+      rowsPerBand = 4, threshold = 0.5).count())
+    val s2 = m.settled()
 
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"dedup","docs":$nDocs,"inputMB":${mb(inputBytes)},""" +
-      s""""clusterWallSec":${math.round(clusterWall * 10) / 10.0},""" +
-      s""""clusterShuffleReadMB":${mb(s1._1 - s0._1)},"clusterShuffleWriteMB":${mb(s1._2 - s0._2)},""" +
+      s""""clusterWallSec":${r(clusterWall)},""" + shuffleJson("cluster", s1 - s0) +
       s""""ccRounds":$ccRounds,"clusters":$nClusters,"expectedNonSingleton":$expectedPairs,""" +
       s""""incrementalPairs":$incPairs,"expectedCrossPairs":$expectedCross,""" +
-      s""""incrementalWallSec":${math.round(incWall * 10) / 10.0},""" +
-      s""""incShuffleReadMB":${mb(s2._1 - s1._1)},"incShuffleWriteMB":${mb(s2._2 - s1._2)},""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
-    spark.stop()
+      s""""incrementalWallSec":${r(incWall)},""" + shuffleJson("inc", s2 - s1) +
+      stragglerJson(m) + "}")
   }
 
   /** Span-dedup sweep at 10⁶ docs — the measured anchor for
@@ -270,39 +330,32 @@ object ScaleSweep {
     * keys; string-path equivalence is property-tested in LlmOpsSpec)
     * and checks the planted counts exactly.
     *
-    *   sbt -batch "runMain graft.ScaleSweep spans [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep spans [nDocs]
     */
-  private def spansSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
+  private def spansSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
     val k = 8
-    val corpus = corpusDf(spark, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inputBytes = corpus.agg(sum(length(col("text")))).head.getLong(0)
+    val (corpus, inputBytes) = textCorpus(spark, nDocs)
     val expectedDupDocs = 2 * (nDocs / 20)
 
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
-    val stats = operators.Dedup.duplicateSpans(
-        corpus, col("doc_id"), col("text"), k, digestKeyed = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val agg = stats.agg(
-      sum(when(col("n_spans") > 0, 1L).otherwise(0L)).as("dup_docs"),
-      sum(col("dup_tokens")).as("dup_tokens"),
-      sum(when(col("n_spans") === 2 && col("dup_tokens") === 24, 1L)
-        .otherwise(0L)).as("exact_shape")).head
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+    val s0 = m.settled()
+    val (agg, wall) = timed {
+      val stats = operators.Dedup.duplicateSpans(
+          corpus, col("doc_id"), col("text"), k, digestKeyed = true)
+        .persist(MEMORY_AND_DISK)
+      stats.agg(
+        sum(when(col("n_spans") > 0, 1L).otherwise(0L)).as("dup_docs"),
+        sum(col("dup_tokens")).as("dup_tokens"),
+        sum(when(col("n_spans") === 2 && col("dup_tokens") === 24, 1L)
+          .otherwise(0L)).as("exact_shape")).head
+    }
+    val s1 = m.settled()
 
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"spans","docs":$nDocs,"k":$k,"inputMB":${mb(inputBytes)},""" +
-      s""""wallSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadMB":${mb(s1._1 - s0._1)},"shuffleWriteMB":${mb(s1._2 - s0._2)},""" +
+      s""""wallSec":${r(wall)},""" + shuffleJson("", s1 - s0) +
       s""""dupDocs":${agg.getLong(0)},"expectedDupDocs":$expectedDupDocs,""" +
       s""""exactShapeDocs":${agg.getLong(2)},"dupTokens":${agg.getLong(1)},""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      stragglerJson(m) + "}")
   }
 
   /** SimHash sweep at 10⁶ docs — the measured anchor for
@@ -327,14 +380,11 @@ object ScaleSweep {
     *     of 64 bits for some pairs) are reported as radius coverage,
     *     the dial a deployment tunes with maxHamming/chunks.
     *
-    *   sbt -batch "runMain graft.ScaleSweep simhash [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep simhash [nDocs]
     */
-  private def simhashSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
+  private def simhashSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
     val maxHamming = 3
-    val corpus = corpusDf(spark, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inputBytes = corpus.agg(sum(length(col("text")))).head.getLong(0)
+    val (corpus, inputBytes) = textCorpus(spark, nDocs)
     val expectedPairs = nDocs / 20
 
     // ground truth: the planted pairs whose full fingerprints really
@@ -348,90 +398,73 @@ object ScaleSweep {
       .filter(bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= maxHamming)
       .count()
 
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
-    val pairs = operators.Dedup.simhashPairs(
-        corpus, col("doc_id"), col("text"), maxHamming = maxHamming, chunks = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totalPairs = pairs.count()
-    val plantedFound = pairs
-      .filter(col("b_id") === col("a_id") + 1 && col("a_id") % 20 === 0).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+    val s0 = m.settled()
+    val ((totalPairs, plantedFound), wall) = timed {
+      val pairs = operators.Dedup.simhashPairs(
+          corpus, col("doc_id"), col("text"), maxHamming = maxHamming, chunks = 4)
+        .persist(MEMORY_AND_DISK)
+      (pairs.count(), pairs
+        .filter(col("b_id") === col("a_id") + 1 && col("a_id") % 20 === 0).count())
+    }
+    val s1 = m.settled()
 
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"simhash","docs":$nDocs,"chunks":4,"maxHamming":$maxHamming,""" +
-      s""""inputMB":${mb(inputBytes)},"wallSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadMB":${mb(s1._1 - s0._1)},"shuffleWriteMB":${mb(s1._2 - s0._2)},""" +
+      s""""inputMB":${mb(inputBytes)},"wallSec":${r(wall)},""" + shuffleJson("", s1 - s0) +
       s""""totalPairs":$totalPairs,"plantedFound":$plantedFound,""" +
       s""""plantedWithinRadius":$withinRadius,"exactRecall":${plantedFound == withinRadius},""" +
       s""""plantedPairs":$expectedPairs,""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      stragglerJson(m) + "}")
   }
 
   /** Decontamination sweep at 10⁶ train docs — the measured anchor for
     * `Dedup.contaminationPairs`/`decontaminate` (the release-gate
-    * leakage check): a small benchmark set (2,000 docs) where bench
-    * doc b verbatim-copies train doc 20b+2 (ids ≡ 2 mod 20 are never
-    * planted near-dup members, so each bench doc has EXACTLY one
-    * containing train doc at containment 1.0, and a cross-seed 3-gram
-    * collision needs 3 consecutive 1-in-50k token matches — no false
-    * pairs at threshold 0.8). Checks the report finds all nBench
-    * planted leaks and nothing else, and that `decontaminate` keeps
-    * exactly nDocs − nBench docs. The claimed scale shape under
-    * measure: shuffle is dominated by ONE pass over the train
-    * shingles; the benchmark side is tiny.
+    * leakage check): a small benchmark set (2,000 docs, fewer below
+    * 80k train docs) where bench doc b verbatim-copies train doc 20b+2
+    * (ids ≡ 2 mod 20 are never planted near-dup members, so each bench
+    * doc has EXACTLY one containing train doc at containment 1.0, and
+    * a cross-seed 3-gram collision needs 3 consecutive 1-in-50k token
+    * matches — no false pairs at threshold 0.8). Checks the report
+    * finds all nBench planted leaks and nothing else, and that
+    * `decontaminate` keeps exactly nDocs − nBench docs. The claimed
+    * scale shape under measure: shuffle is dominated by ONE pass over
+    * the train shingles; the benchmark side is tiny.
     *
-    *   sbt -batch "runMain graft.ScaleSweep contam [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep contam [nDocs]
     */
-  private def contamSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
-    val nBench = 2000L
-    require(nDocs > nBench * 20, "need nDocs > 20*nBench for distinct plants")
-    val corpus = corpusDf(spark, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inputBytes = corpus.agg(sum(length(col("text")))).head.getLong(0)
+  private def contamSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
+    val nBench = math.min(2000L, nDocs / 40)
+    require(nBench > 0, "need nDocs >= 40 for distinct plants")
+    val (corpus, inputBytes) = textCorpus(spark, nDocs)
     val bench = corpusDf(spark, nDocs)
       .filter(col("doc_id") % 20 === 2 && col("doc_id") < nBench * 20)
       .select(((col("doc_id") - 2) / 20).cast("long").as("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val nBenchActual = bench.count()
 
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
-    val report = operators.Dedup.contaminationPairs(
-        corpus, bench, col("doc_id"), col("text"), n = 3, threshold = 0.8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = report.count()
-    val fullContainment = report.filter(col("containment") === 1.0).count()
-    // every planted (train 20b+2, bench b) pair must be present
-    val planted = report.filter(col("train_id") === col("bench_id") * 20 + 2).count()
-    val reportWall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+    val s0 = m.settled()
+    val ((nPairs, fullContainment, planted), reportWall) = timed {
+      val report = operators.Dedup.contaminationPairs(
+          corpus, bench, col("doc_id"), col("text"), n = 3, threshold = 0.8)
+        .persist(MEMORY_AND_DISK)
+      (report.count(), report.filter(col("containment") === 1.0).count(),
+        // every planted (train 20b+2, bench b) pair must be present
+        report.filter(col("train_id") === col("bench_id") * 20 + 2).count())
+    }
+    val s1 = m.settled()
+    val (kept, decontamWall) = timed(operators.Dedup.decontaminate(
+      corpus, bench, col("doc_id"), col("text"), n = 3, threshold = 0.8).count())
+    val s2 = m.settled()
 
-    val t1 = System.nanoTime()
-    val kept = operators.Dedup.decontaminate(
-      corpus, bench, col("doc_id"), col("text"), n = 3, threshold = 0.8).count()
-    val decontamWall = (System.nanoTime() - t1) / 1e9
-    val s2 = listener.snapshot()
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"contam","docs":$nDocs,"benchDocs":$nBenchActual,""" +
       s""""inputMB":${mb(inputBytes)},""" +
-      s""""reportWallSec":${math.round(reportWall * 10) / 10.0},""" +
-      s""""reportShuffleReadMB":${mb(s1._1 - s0._1)},"reportShuffleWriteMB":${mb(s1._2 - s0._2)},""" +
+      s""""reportWallSec":${r(reportWall)},""" + shuffleJson("report", s1 - s0) +
       s""""pairs":$nPairs,"fullContainment":$fullContainment,"plantedFound":$planted,""" +
       s""""expectedPairs":$nBench,""" +
-      s""""decontamWallSec":${math.round(decontamWall * 10) / 10.0},""" +
-      s""""decontamShuffleReadMB":${mb(s2._1 - s1._1)},"decontamShuffleWriteMB":${mb(s2._2 - s1._2)},""" +
+      s""""decontamWallSec":${r(decontamWall)},""" + shuffleJson("decontam", s2 - s1) +
       s""""keptDocs":$kept,"expectedKept":${nDocs - nBench},""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      stragglerJson(m) + "}")
   }
 
   /** Deterministic CLUSTERED embeddings: doc id belongs to natural
@@ -442,7 +475,7 @@ object ScaleSweep {
     * corpora cluster — this is the shape where IVF's nProbe dial
     * actually works, vs the uniform-random corpus of the main ann
     * sweep, which is IVF's documented worst case. */
-  private def clusteredEmbeddingsDf(spark: org.apache.spark.sql.SparkSession,
+  private def clusteredEmbeddingsDf(spark: SparkSession,
       nDocs: Long, dim: Int, nNatural: Int,
       plantedDups: Boolean = false): DataFrame = {
     // plantedDups: every id ≡ 1 (mod 20) vector becomes its id-1
@@ -473,28 +506,19 @@ object ScaleSweep {
     * where the data has the structure IVF exploits). One brute-force
     * exact pass and one k-means fit, then a probe per nProbe value.
     *
-    *   sbt -batch "runMain graft.ScaleSweep ann-clustered [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep ann-clustered [nDocs]
     */
-  private def annClusteredSweep(spark: org.apache.spark.sql.SparkSession,
-      nDocs: Long): Unit = {
+  private def annClusteredSweep(spark: SparkSession, nDocs: Long): Unit = {
     val dim = 32
     val k = 10
     val nCells = 64
-    val corpusPath = tempDir("graft_ann_clustered").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200)
-      .write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
-    val qPlan = corpus
-      .filter(col("doc_id") % (nDocs / 20L) === 7)
-      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
-    val queries = spark.createDataFrame(
-      java.util.Arrays.asList(qPlan.collect(): _*), qPlan.schema)
+    val corpus = materialize(spark, "graft_ann_clustered",
+      clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200))
+    val queries = sampleQueries(spark, corpus, nDocs)
 
     val brute = operators.Similarity.bruteForceTopK(
         corpus, queries, "doc_id", "vec", "query_id", "qvec", k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val bruteRows = brute.count()
     val index = operators.Similarity.kmeansCentroids(
       corpus, "doc_id", "vec", nCells = nCells, iters = 2)
@@ -502,13 +526,10 @@ object ScaleSweep {
       val ivf = operators.Similarity.ivfTopK(
         corpus, queries, "doc_id", "vec", "query_id", "qvec", k,
         nCells = nCells, nProbe = nProbe, centroids = Some(index))
-      val hit = ivf.select(col("query_id"), col("neighbor_id"))
-        .join(brute.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id")).count()
-      nProbe -> (if (bruteRows == 0) 0.0 else hit.toDouble / bruteRows)
+      nProbe -> recall(ivf, brute, bruteRows)
     }
-    val curveJson = curve.map { case (p, r) =>
-      s""""$p":${math.round(r * 1000) / 1000.0}""" }.mkString("{", ",", "}")
+    val curveJson = curve.map { case (p, rc) => s""""$p":${r(rc, 3)}""" }
+      .mkString("{", ",", "}")
     println(
       s"""{"sweep":"ann_clustered","docs":$nDocs,"dim":$dim,"nCells":$nCells,""" +
       s""""naturalClusters":200,"k":$k,"recallVsNProbe":$curveJson}""")
@@ -519,111 +540,52 @@ object ScaleSweep {
     * never shuffles the corpus, and the quadratic pair scan is confined
     * to cells (per-cell cost c²/2 — `nCells` here scales as docs/2000 so
     * cells stay ~2k rows, exactly the paper's discipline of growing the
-    * cluster count with the corpus). Witnesses: one output verdict per
-    * input vector; every emitted (dup_of, id) witness re-verified
-    * cosine ≥ τ distributedly (must be ALL); planted-pair recall
-    * reported (a planted dup is only findable if the pair lands in one
-    * cell — the paper's documented miss mode is boundary straddle, so
-    * recall is expected near, not at, 1.0).
+    * cluster count with the corpus). Witnesses: [[semDedupJson]].
     *
-    *   sbt -batch "runMain graft.ScaleSweep semdedup [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep semdedup [nDocs]
     */
-  private def semDedupSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
+  private def semDedupSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
     val dim = 32
     val tau = 0.99
-    // cells ~2k rows until the fit guard's MaxFitCells ceiling (the
-    // plan-literal bound); past ~262M docs, cells grow instead —
-    // shard-fitting is the documented path beyond that. Clamp on Long
-    // BEFORE narrowing: docs/2000 can overflow Int at absurd nDocs
-    val nCells = math.min(operators.Similarity.MaxFitCells.toLong,
-      math.max(64L, nDocs / 2000)).toInt
-    val corpusPath = tempDir("graft_semdedup").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true)
-      .write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
+    val nCells = fitCells(nDocs)
+    val corpus = materialize(spark, "graft_semdedup",
+      clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true))
 
-    val tFit0 = System.nanoTime()
-    val index = operators.Similarity.kmeansCentroids(
-      corpus, "doc_id", "vec", nCells = nCells, iters = 2)
-    val fitSec = (System.nanoTime() - tFit0) / 1e9
+    val (index, fitSec) = timed(operators.Similarity.kmeansCentroids(
+      corpus, "doc_id", "vec", nCells = nCells, iters = 2))
 
-    val s0 = listener.snapshot()
-    val t0 = System.nanoTime()
-    val verdicts = operators.Similarity.semanticDedup(
-        corpus, "doc_id", "vec", nCells = nCells, iters = 2,
-        threshold = tau, centroids = Some(index))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowsOut = verdicts.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+    val dedup = semDedupJson(m, corpus, nDocs, tau)(operators.Similarity.semanticDedup(
+      corpus, "doc_id", "vec", nCells = nCells, iters = 2,
+      threshold = tau, centroids = Some(index)))
 
-    val dups = verdicts.filter(col("dup_of").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dupCount = dups.count()
-    val plantedFound = dups
-      .filter(pmod(col("doc_id"), lit(20L)) === 1 && col("dup_of") === col("doc_id") - 1)
-      .count()
-    val plantedPairs = nDocs / 20
-    // every emitted witness must be a TRUE >= tau pair: join the pairs
-    // back to both vectors and re-check the cosine (distributed; the
-    // dup set is the only thing that moves)
-    val vecs = corpus.select(col("doc_id"), col("vec"))
-    val violations = dups.select(col("doc_id"), col("dup_of"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_a", "vec" -> "va")),
-        col("doc_id") === col("doc_id_a"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_b", "vec" -> "vb")),
-        col("dup_of") === col("doc_id_b"))
-      .filter(operators.Similarity.cosine(col("va"), col("vb")) < tau)
-      .count()
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"semdedup","docs":$nDocs,"dim":$dim,"nCells":$nCells,"tau":$tau,""" +
-      s""""fitSec":${math.round(fitSec * 10) / 10.0},""" +
-      s""""dedupSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadMB":${mb(s1._1 - s0._1)},"shuffleWriteMB":${mb(s1._2 - s0._2)},""" +
-      s""""rowsOut":$rowsOut,"oneVerdictPerVector":${rowsOut == nDocs},""" +
-      s""""dupCount":$dupCount,"plantedPairs":$plantedPairs,""" +
-      s""""plantedFound":$plantedFound,""" +
-      s""""plantedRecall":${math.round(plantedFound * 10000.0 / plantedPairs) / 10000.0},""" +
-      s""""witnessViolations":$violations,""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      s""""fitSec":${r(fitSec)},""" + dedup + stragglerJson(m) + "}")
   }
 
-  /** Two-level SemDeDup sweep — measures the IMI-style remedy for the
-    * flat sweep's O(docs·nCells) assignment law at the SAME total cell
-    * count (nSuper = nSub = √cells): assignment cost per row drops to
-    * O(2√cells) cosines, so the 1M→5M trend should return to near-
-    * linear. Same corpus, same witnesses as `semdedup`.
-    *
-    *   sbt -batch "runMain graft.ScaleSweep semdedup2 [nDocs]"
-    */
   /** Calibration anchor for [[operators.Similarity.autoLshBands]]
     * (VERDICT r15 #4): the SAME clustered corpus as the semdedup2
     * anchors, the sampler's per-config candidate estimates, and the
     * auto choice — to be checked against the hand-tuned outcomes
     * (2×32 perfect at 20M, disk-dead at 40M where 1×64 delivers).
     * Cheap: writes the corpus, runs ONE bounded sample + count, no
-    * fit, no dedup. */
-  private def lshAutoSweep(spark: org.apache.spark.sql.SparkSession,
-      nDocs: Long): Unit = {
+    * fit, no dedup.
+    *
+    *   scripts/run_main.sh graft.ScaleSweep lshauto [nDocs]
+    */
+  private def lshAutoSweep(spark: SparkSession, nDocs: Long): Unit = {
+    // not pinned: the timed window below includes the corpus scan
     val corpusPath = tempDir("graft_lshauto").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim = 32, nNatural = 200,
-        plantedDups = true)
+    clusteredEmbeddingsDf(spark, nDocs, dim = 32, nNatural = 200, plantedDups = true)
       .write.mode("overwrite").parquet(corpusPath)
     val corpus = spark.read.parquet(corpusPath)
-    val t0 = System.nanoTime()
-    val n = corpus.count()
-    val sigs = operators.Similarity.lshSampleSigs(
-      corpus, "doc_id", "vec", seed = 42L, sampleSize = 2048)
-    val est = operators.Similarity.lshBandEstimates(sigs, n)
-    val choice = operators.Similarity.chooseLshBands(sigs, n)
-    val wall = (System.nanoTime() - t0) / 1e9
+    val ((n, est, choice), wall) = timed {
+      val n = corpus.count()
+      val sigs = operators.Similarity.lshSampleSigs(
+        corpus, "doc_id", "vec", seed = 42L, sampleSize = 2048)
+      (n, operators.Similarity.lshBandEstimates(sigs, n),
+        operators.Similarity.chooseLshBands(sigs, n))
+    }
     val budget = math.max(operators.Similarity.LshCandidateFloor,
       operators.Similarity.LshCandidatesPerDoc * n)
     val estJson = est.map { case (b, e) => s""""$b":${math.round(e)}""" }
@@ -632,472 +594,63 @@ object ScaleSweep {
       s"""{"sweep":"lshauto","docs":$n,"estimates":$estJson,""" +
       s""""budget":${math.round(budget)},""" +
       s""""choice":[${choice._1},${choice._2}],""" +
-      s""""sampleSec":${math.round(wall * 10) / 10.0}}""")
+      s""""sampleSec":${r(wall)}}""")
   }
 
-  /** Shared runner for the TPC-H A/B sweeps (q11ab/q18ab/q21ab/
-    * q16ab/q4ab): executes one variant, prints one JSON line with
-    * wall + shuffle + spill deltas from the stage listener.
-    * `collectDigest = true` collects the result and emits a digest of
-    * every column of every row (the cross-variant equality witness);
-    * false uses the noop write sink (for variants whose equality is
-    * oracle-checked elsewhere). `extraJson` must be empty or end with
-    * a comma. */
-  private def abRun(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, sweep: String, sfDir: String,
-      tag: String, q: String, collectDigest: Boolean,
-      extraJson: String = ""): Unit = {
-    val s0 = listener.snapshot(); val sp0 = listener.spills()
-    val t0 = System.nanoTime()
-    var ok = true
-    var rows: Seq[org.apache.spark.sql.Row] = Nil
-    try {
-      if (collectDigest) rows = spark.sql(q).collect().toSeq
-      else spark.sql(q).write.format("noop").mode("overwrite").save()
-    } catch { case e: Throwable =>
-      ok = false
-      System.err.println(s"[$sweep] $tag failed: ${e.getMessage}")
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot(); val sp1 = listener.spills()
-    def gb(b: Long): Double = math.round(b / 1e8) / 10.0
-    val resultPart =
-      if (collectDigest)
-        s""""rows":${rows.size},"resultDigest":${
-          rows.map(_.toSeq.mkString(":")).mkString("|").hashCode},"""
-      else s""""ok":$ok,"""
-    println(
-      s"""{"sweep":"$sweep","variant":"$tag",$extraJson$resultPart""" +
-      s""""wallSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadGB":${gb(s1._1 - s0._1)},"shuffleWriteGB":${gb(s1._2 - s0._2)},""" +
-      s""""memSpillGB":${gb(sp1._1 - sp0._1)},"diskSpillGB":${gb(sp1._2 - sp0._2)},""" +
-      s""""sf":"$sfDir"}""")
-  }
-
-  /** q11 high-cardinality-aggregation A/B at scale (VERDICT r15 #3):
-    * at sf100, 600M lineitem rows aggregate into 20M l_partkey groups,
-    * so map-side partial aggregation combines almost nothing yet still
-    * builds and spills ~45 GB of hash tables, and the pp exchange is
-    * read 3× (ReuseExchange for the scalar-subquery threshold). The
-    * named-but-unpriced remedies:
-    *  - reduce-partition dial on the STOCK plan (128 / 256 / 1024);
-    *  - partial-agg bypass: REPARTITION(l_partkey) on the JOINED rows
-    *    before the groupBy, so the "partial" aggregate runs over
-    *    already-colocated keys (each task owns its key range — the
-    *    hash table is keys/partitions entries instead of ~rows/task)
-    *    and no second exchange follows.
-    * Runs against SPARK_GRAFT_SF_DIR (default /tmp/graft_sf100);
-    * one JSON line per variant with wall + shuffle + spill deltas. */
-  private def q11AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q11
-    // the bypass: hint on the JOIN OUTPUT (hinting the lineitem scan
-    // would be destroyed by the join's own shuffle when supplier is
-    // too big to broadcast)
-    val prerepart = """
-      WITH j AS (SELECT /*+ REPARTITION(l_partkey) */ l_partkey, l_extendedprice
-                 FROM lineitem, supplier WHERE l_suppkey = s_suppkey),
-           pp AS (SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS dval
-                  FROM j GROUP BY l_partkey)
-      SELECT l_partkey, round(CAST(dval AS DOUBLE), 2) AS value
-      FROM pp
-      WHERE CAST(dval AS DOUBLE) > (SELECT 1.5 * CAST(sum(dval) AS DOUBLE) / count(*) FROM pp)
-      ORDER BY value DESC, l_partkey"""
-    def run(tag: String, parts: Int, q: String): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      abRun(spark, listener, "q11ab", sfDir, tag, q,
-        collectDigest = false, extraJson = s""""partitions":$parts,""")
-    }
-    run("stock", 128, stock)
-    run("stock", 256, stock)
-    run("stock", 1024, stock)
-    run("prerepart", 256, prerepart)
-  }
-
-  /** q18 high-cardinality-aggregation A/B (r17 — same pathology class
-    * as q11: the HAVING subquery groups 600M lineitem rows into ~150M
-    * l_orderkey groups, so map-side partial aggregation combines ~4
-    * rows per key but builds input-keyspace hash tables; the measured
-    * sf100 suite charge is 50.6 GB memory spill + 7.1 GB disk on q18).
-    * Variant B colocates keys first with REPARTITION(l_orderkey) on
-    * the scan (no join upstream here, so the scan hint survives —
-    * unlike q11 where it had to ride the join output).
+  /** Two-level SemDeDup sweep — measures the IMI-style remedy for the
+    * flat sweep's O(docs·nCells) assignment law at the SAME total cell
+    * count (nSuper = nSub = √cells): assignment cost per row drops to
+    * O(2√cells) cosines, so the 1M→5M trend should return to near-
+    * linear. Same corpus, same witnesses as `semdedup`.
     *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep q18ab
+    * SPARK_GRAFT_SEMDEDUP2_UNION=1 (`union`) prices the LSH-union
+    * recall recovery at the same dials (SCALE.md r14 named it as the
+    * remedy for the fine grid's boundary-straddle recall cost). Banding
+    * at THIS scale is 2×32-bit: the corpus's background similarity is
+    * the cluster-mate cosine ≈ 0.61 (per-bit sign agreement 0.71, so a
+    * 32-bit chunk collides with p = 0.71^32 ≈ 1.8e-5 → ~tens of
+    * millions of candidate pairs at 20M docs), while a ≥0.99 dup agrees
+    * on 32 bits with p ≈ 0.87 (→ LSH-source recall ≈ 0.98 over 2
+    * bands). The default 16×4-bit banding has 16 bucket values per
+    * band — quadratic at any real corpus size.
+    *
+    * Width dial SPARK_GRAFT_SEMDEDUP2_UNION_BANDS (`unionBands`, bands
+    * of 64/bands bits): 2 at 20M recovers ~all straddlers; at 40M the
+    * corpus's similarity TAIL makes 32-bit buckets produce
+    * quadratically many medium-bucket pairs (the bucket cap cannot bind
+    * on volume spread across millions of 100–1000-doc buckets —
+    * measured: >55 GB of candidate pairs, disk-dead), so the ceiling
+    * anchor runs 1×64-bit — background collisions ~0.71^64 ≈ 3e-10
+    * while a ≥0.9999 dup still matches all 64 bits with p ≈ 0.75.
+    *
+    *   scripts/run_main.sh graft.ScaleSweep semdedup2 [nDocs] [cells]
     */
-  private def q18AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q18
-    val prerepart = TpchStockShapes.q18Prerepart
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "q18ab", sfDir, tag, q, collectDigest = false)
-    run("stock", stock)
-    run("prerepart", prerepart)
-    run("stock", stock) // second reading: order-of-run page-cache check
-    run("prerepart", prerepart)
-  }
-
-  /** q21 A/B (r17): the stock shape runs the EXISTS / NOT EXISTS as a
-    * left-semi + left-anti join — each shuffles AND SORTS the 600M-row
-    * lineitem again (the sf100 suite's worst spiller: 102 GB memory +
-    * 14 GB disk). Variant B is the classic aggregate rewrite: per
-    * order, count distinct suppliers and distinct LATE suppliers once,
-    * then a late line qualifies iff nsupp > 1 (the EXISTS) and
-    * nlate = 1 (the NOT EXISTS — the line's own supplier is late, so
-    * "no OTHER late supplier" is exactly one distinct late supplier).
-    * Row-for-row equivalent: both count qualifying late LINES.
-    *
-    * r18 third arm: the r17 rewrite consumed `j` twice (the aggregate
-    * AND the outer join probe; pruning made the subtrees canonically
-    * different so no ReusedExchange fired — two full lineitem⋈orders
-    * passes). The shipped r18 shape folds the late-supplier identity
-    * (max over late-case suppkeys, single-valued when nlate = 1) and
-    * the late-line count (sum(late)) into the same per-order aggregate
-    * and never joins back to `j` — one fact pass by construction.
-    *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep q21ab
-    */
-  private def q21AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q21
-    // the r17 shape, kept verbatim as the A/B middle arm (historical —
-    // measures exactly what removing the second fact pass buys)
-    val rewrite17 = """
-      WITH j AS (SELECT /*+ REPARTITION(l_orderkey) */ l_orderkey, l_suppkey,
-                        CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY
-                             THEN 1 ELSE 0 END AS late
-                 FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-                 WHERE o_orderstatus = 'F'),
-           g AS (SELECT l_orderkey,
-                        count(DISTINCT l_suppkey) AS nsupp,
-                        count(DISTINCT CASE WHEN late = 1 THEN l_suppkey END) AS nlate
-                 FROM j GROUP BY l_orderkey)
-      SELECT s_name, count(*) AS numwait
-      FROM j JOIN g ON j.l_orderkey = g.l_orderkey
-             JOIN supplier ON s_suppkey = j.l_suppkey
-             JOIN nation ON s_nationkey = n_nationkey
-      WHERE j.late = 1 AND g.nsupp > 1 AND g.nlate = 1
-      GROUP BY s_name
-      ORDER BY numwait DESC, s_name
-      LIMIT 100"""
-    val shipped = queries.TpchQueries.q21SparkSql
-    // r18 intermediate arm, kept verbatim: the first one-pass shape
-    // computed nsupp/nlate as two count(DISTINCT)s — Spark plans an
-    // Expand (3 projections, 1.8B rows into the first aggregate at
-    // sf100; its only residual spill). The shipped shape stacks two
-    // plain aggregates on the same REPARTITION(l_orderkey) exchange
-    // instead (hash on a subset of the group keys satisfies both
-    // groupings) — no Expand, no distinct anywhere; at sf10 that
-    // halved this arm's wall and shuffle (2.1 -> 1.1 GB).
-    val twodistinct = """
-      WITH j AS (SELECT /*+ REPARTITION(l_orderkey) */ l_orderkey, l_suppkey,
-                        CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY
-                             THEN 1 ELSE 0 END AS late
-                 FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-                 WHERE o_orderstatus = 'F'),
-           g AS (SELECT l_orderkey,
-                        count(DISTINCT l_suppkey) AS nsupp,
-                        count(DISTINCT CASE WHEN late = 1 THEN l_suppkey END) AS nlate,
-                        max(CASE WHEN late = 1 THEN l_suppkey END) AS late_supp,
-                        sum(late) AS nlate_lines
-                 FROM j GROUP BY l_orderkey)
-      SELECT s_name, sum(nlate_lines) AS numwait
-      FROM g JOIN supplier ON s_suppkey = late_supp
-             JOIN nation ON s_nationkey = n_nationkey
-      WHERE nsupp > 1 AND nlate = 1
-      GROUP BY s_name
-      ORDER BY numwait DESC, s_name
-      LIMIT 100"""
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "q21ab", sfDir, tag, q, collectDigest = true)
-    run("stock", stock)
-    run("rewrite17", rewrite17)
-    run("twodistinct", twodistinct)
-    run("shipped", shipped)
-    run("stock", stock)
-    run("rewrite17", rewrite17)
-    run("twodistinct", twodistinct)
-    run("shipped", shipped)
-  }
-
-  /** q16 A/B (r17): count(DISTINCT l_suppkey) plans as a first
-    * aggregate keyed by (p_brand, p_type, p_size, l_suppkey) — the
-    * dedupe — whose map-side partial phase builds an input-keyspace
-    * hash table over the part⋈lineitem join output (the sf100 suite
-    * charges q16 ~17 GB memory + 3.2 GB disk spill). Variant B
-    * colocates the dedupe key first (the q11/q18 rule: repartition on
-    * the high-cardinality key BEFORE the aggregate so partial agg
-    * state is group-sized, not input-sized).
-    *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep q16ab
-    */
-  private def q16AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q16
-    val prerepart = """
-      SELECT p_brand, p_type, p_size, count(*) AS supplier_cnt
-      FROM (SELECT DISTINCT p_brand, p_type, p_size, l_suppkey
-            FROM (SELECT /*+ REPARTITION(p_brand, p_type, p_size, l_suppkey) */
-                         p_brand, p_type, p_size, l_suppkey
-                  FROM lineitem, part
-                  WHERE p_partkey = l_partkey
-                    AND p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-                    AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-                    AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                          WHERE s_acctbal < 0)))
-      GROUP BY p_brand, p_type, p_size
-      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
-    // the 17 GB mem spill survives prerepart untouched — it is the
-    // part⋈lineitem sort-merge join's big-side sort, not agg state;
-    // building the ~3M-row filtered part side as a shuffled hash map
-    // streams lineitem unsorted
-    val hashjoin = prerepart.replace(
-      "SELECT /*+ REPARTITION(p_brand, p_type, p_size, l_suppkey) */",
-      "SELECT /*+ REPARTITION(p_brand, p_type, p_size, l_suppkey), SHUFFLE_HASH(part) */")
-    require(hashjoin != prerepart,
-      "q16ab hint-replace target drifted: the hashjoin variant would silently re-measure prerepart")
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "q16ab", sfDir, tag, q, collectDigest = true)
-    run("stock", stock)
-    run("prerepart", prerepart)
-    run("hashjoin", hashjoin)
-    run("stock", stock)
-    run("prerepart", prerepart)
-    run("hashjoin", hashjoin)
-  }
-
-  /** q4 A/B (r17): the EXISTS plans as a left-semi sort-merge join
-    * that sorts the 600M-row lineitem side (~17 GB memory + 6.6 GB
-    * disk spill at sf100). Variant B replaces the semi join with a
-    * per-order max(l_shipdate) aggregate (repartitioned first, the
-    * q18 rule) joined to the filtered orders: EXISTS(l_shipdate >
-    * o_orderdate) ⟺ max(l_shipdate) > o_orderdate, and the aggregate
-    * output is unique per l_orderkey so the inner join cannot
-    * multiply rows. Variant C keeps the stock shape but hints
-    * SHUFFLE_HASH on lineitem to skip the big-side sort.
-    *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep q4ab
-    */
-  private def q4AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q04
-    val aggjoin = """
-      SELECT o_orderpriority, count(*) AS order_count
-      FROM orders
-      JOIN (SELECT l_orderkey, max(l_shipdate) AS max_ship
-            FROM (SELECT /*+ REPARTITION(l_orderkey) */ l_orderkey, l_shipdate
-                  FROM lineitem)
-            GROUP BY l_orderkey) g
-        ON o_orderkey = g.l_orderkey
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        AND g.max_ship > o_orderdate
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority"""
-    val hashhint = """
-      SELECT o_orderpriority, count(*) AS order_count
-      FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        AND EXISTS (SELECT /*+ SHUFFLE_HASH(lineitem) */ 1 FROM lineitem
-                    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority"""
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "q4ab", sfDir, tag, q, collectDigest = true)
-    run("stock", stock)
-    run("aggjoin", aggjoin)
-    run("hashhint", hashhint)
-    run("stock", stock)
-    run("aggjoin", aggjoin)
-    run("hashhint", hashhint)
-  }
-
-  /** q13 A/B (r18, VERDICT r17 item 4). A runtime bloom filter is
-    * INAPPLICABLE here: the join is customer LEFT OUTER orders — every
-    * customer row survives by definition, and the orders-side filter
-    * (o_orderpriority <> '1-URGENT') keeps ~4/5 of rows, so there is
-    * no selective side to build a filter from and nothing the probe
-    * side could drop (outer semantics keep matchless rows anyway).
-    * The real lever is guide §2.3 "aggregate before you shuffle":
-    * count orders per custkey BEFORE the join, so the join probes a
-    * custkey-sized aggregate (10× fewer rows than orders) and reuses
-    * its partitioning, and the post-join re-aggregation disappears.
-    * Equivalent because c_custkey is the customer primary key (one
-    * row per key) and count(o_orderkey) = count(*) per custkey on the
-    * filtered orders (o_orderkey is never NULL); a matchless customer
-    * reads coalesce(NULL, 0) = 0 exactly like count over an all-NULL
-    * group. The third arm colocates the pre-aggregate first (the
-    * q11/q18 rule — orders rows per custkey ≈ 10 at every SF, so
-    * map-side partial agg state is input-keyspace-sized).
-    *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep q13ab
-    */
-  private def q13AbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100")
-    Engine.registerDir(spark, sfDir)
-    val stock = TpchStockShapes.q13
-    val preagg = """
-      SELECT c_count, count(*) AS custdist
-      FROM (SELECT c_custkey, coalesce(cnt, 0) AS c_count
-            FROM customer LEFT JOIN
-                 (SELECT o_custkey, count(*) AS cnt
-                  FROM orders WHERE o_orderpriority <> '1-URGENT'
-                  GROUP BY o_custkey) o ON c_custkey = o_custkey) c_orders
-      GROUP BY c_count
-      ORDER BY custdist DESC, c_count DESC"""
-    // the shipped shape = preagg + colocation. The colocating hint must
-    // ride an INNER subselect of the raw scan: hinting the GROUP BY's
-    // own block repartitions the aggregate OUTPUT (measured: identical
-    // 6 GB spill to the unhinted arm).
-    val prerepart = queries.TpchQueries.q13SparkSql
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "q13ab", sfDir, tag, q, collectDigest = true)
-    run("stock", stock)
-    run("preagg", preagg)
-    run("prerepart", prerepart)
-    run("stock", stock)
-    run("preagg", preagg)
-    run("prerepart", prerepart)
-  }
-
-  /** REPARTITION vs REBALANCE A/B on every shipped hint site (r18,
-    * VERDICT r17 item 5): the REPARTITION(key) exchanges that zero the
-    * sf100 spill produce `shuffle.partitions` fixed-size partitions at
-    * every scale — at toy/mid SFs that is dozens of tiny tasks per
-    * exchange. A REBALANCE(key) exchange keeps the same hash
-    * clustering (so the colocate-before-aggregate property and the
-    * zero-spill story are untouched; AQE's skew-split on rebalance is
-    * validated out when a downstream operator requires clustering) but
-    * lets AQE coalesce the output to the advisory partition size.
-    * Interleaved same-JVM arms, because back-to-back suite benches
-    * drift more per window (~±5%) than the effect size.
-    *
-    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf10 scripts/run_main.sh graft.ScaleSweep rebab
-    */
-  private def rebalanceAbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    Engine.registerDir(spark, sfDir)
-    val sites = Seq(
-      "q04" -> queries.TpchQueries.q04SparkSql,
-      "q11" -> queries.TpchQueries.q11SparkSql,
-      "q16" -> queries.TpchQueries.q16SparkSql,
-      "q18" -> queries.TpchQueries.q18SparkSql,
-      "q21" -> queries.TpchQueries.q21SparkSql)
-    def run(tag: String, q: String): Unit =
-      abRun(spark, listener, "rebab", sfDir, tag, q, collectDigest = true)
-    (1 to 2).foreach { _ =>
-      sites.foreach { case (name, shipped) =>
-        // derive both arms from whichever hint the catalog ships
-        // (r18 outcome: q4/q11/q16/q18 ship REBALANCE, q21 REPARTITION)
-        val repart = shipped.replace("REBALANCE(", "REPARTITION(")
-        val rebal = repart.replace("REPARTITION(", "REBALANCE(")
-        require(rebal != repart, s"rebab: $name has no exchange hint")
-        run(s"${name}_repart", repart)
-        run(s"${name}_rebal", rebal)
-      }
-    }
-  }
-
-  private def semDedupTwoLevelSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long,
-      cellsOverride: Option[Int] = None): Unit = {
+  private def semDedupTwoLevelSweep(spark: SparkSession, m: TaskMetrics,
+      nDocs: Long, cellsOverride: Option[Int], union: Boolean,
+      unionBands: Int): Unit = {
     val dim = 32
     val tau = 0.99
-    val cells = cellsOverride.getOrElse(
-      math.min(operators.Similarity.MaxFitCells.toLong,
-        math.max(64L, nDocs / 2000)).toInt)
+    val cells = cellsOverride.getOrElse(fitCells(nDocs))
     val side = math.max(8, math.ceil(math.sqrt(cells.toDouble)).toInt)
-    val corpusPath = tempDir("graft_semdedup2").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true)
-      .write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
+    val corpus = materialize(spark, "graft_semdedup2",
+      clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true))
 
-    val tFit0 = System.nanoTime()
-    val index = operators.Similarity.kmeansTwoLevel(
-      corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2)
-    val fitSec = (System.nanoTime() - tFit0) / 1e9
+    val (index, fitSec) = timed(operators.Similarity.kmeansTwoLevel(
+      corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2))
 
-    // SPARK_GRAFT_SEMDEDUP2_UNION=1 prices the LSH-union recall
-    // recovery at the same dials (SCALE.md r14 named it as the remedy
-    // for the fine grid's boundary-straddle recall cost). Banding at
-    // THIS scale is 2×32-bit: the corpus's background similarity is
-    // the cluster-mate cosine ≈ 0.61 (per-bit sign agreement 0.71, so
-    // a 32-bit chunk collides with p = 0.71^32 ≈ 1.8e-5 → ~tens of
-    // millions of candidate pairs at 20M docs), while a ≥0.99 dup
-    // agrees on 32 bits with p ≈ 0.87 (→ LSH-source recall ≈ 0.98
-    // over 2 bands). The default 16×4-bit banding has 16 bucket
-    // values per band — quadratic at any real corpus size.
-    val union = sys.env.get("SPARK_GRAFT_SEMDEDUP2_UNION").contains("1")
-    // Width dial (bands of 64/bands bits): 2 at 20M recovers ~all
-    // straddlers; at 40M the corpus's similarity TAIL makes 32-bit
-    // buckets produce quadratically many medium-bucket pairs (the
-    // bucket cap cannot bind on volume spread across millions of
-    // 100–1000-doc buckets — measured: >55 GB of candidate pairs,
-    // disk-dead), so the ceiling anchor runs 1×64-bit — background
-    // collisions ~0.71^64 ≈ 3e-10 while a ≥0.9999 dup still matches
-    // all 64 bits with p ≈ 0.75.
-    val unionBands = sys.env.get("SPARK_GRAFT_SEMDEDUP2_UNION_BANDS")
-      .flatMap(_.toIntOption).getOrElse(2)
-    val s0 = listener.snapshot()
-    val t0 = System.nanoTime()
-    val verdicts = operators.Similarity.semanticDedupTwoLevel(
+    val dedup = semDedupJson(m, corpus, nDocs, tau)(
+      operators.Similarity.semanticDedupTwoLevel(
         corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side,
         iters = 2, threshold = tau, index = Some(index), lshUnion = union,
         // tight bucket cap on top of the width dial above: 1024 bounds
         // any single bucket to ~0.5M pairs; dense regions it drops are
         // exactly the regions the within-cell source owns
-        lshBands = unionBands, lshBucketCap = 1024)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowsOut = verdicts.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+        lshBands = unionBands, lshBucketCap = 1024))
 
-    val dups = verdicts.filter(col("dup_of").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dupCount = dups.count()
-    val plantedFound = dups
-      .filter(pmod(col("doc_id"), lit(20L)) === 1 && col("dup_of") === col("doc_id") - 1)
-      .count()
-    val plantedPairs = nDocs / 20
-    val vecs = corpus.select(col("doc_id"), col("vec"))
-    val violations = dups.select(col("doc_id"), col("dup_of"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_a", "vec" -> "va")),
-        col("doc_id") === col("doc_id_a"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_b", "vec" -> "vb")),
-        col("dup_of") === col("doc_id_b"))
-      .filter(operators.Similarity.cosine(col("va"), col("vb")) < tau)
-      .count()
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"semdedup2","docs":$nDocs,"dim":$dim,""" +
       s""""nSuper":$side,"nSubPerCell":$side,"tau":$tau,"lshUnion":$union,""" +
-      s""""fitSec":${math.round(fitSec * 10) / 10.0},""" +
-      s""""dedupSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadMB":${mb(s1._1 - s0._1)},"shuffleWriteMB":${mb(s1._2 - s0._2)},""" +
-      s""""rowsOut":$rowsOut,"oneVerdictPerVector":${rowsOut == nDocs},""" +
-      s""""dupCount":$dupCount,"plantedPairs":$plantedPairs,""" +
-      s""""plantedFound":$plantedFound,""" +
-      s""""plantedRecall":${math.round(plantedFound * 10000.0 / plantedPairs) / 10000.0},""" +
-      s""""witnessViolations":$violations,""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      s""""fitSec":${r(fitSec)},""" + dedup + stragglerJson(m) + "}")
   }
 
   /** A/B: broadcast-kernel vs relation-join two-level assignment on
@@ -1109,38 +662,26 @@ object ScaleSweep {
     *
     *   scripts/run_main.sh graft.ScaleSweep rel_ab [nDocs] [cells]
     */
-  private def relAbSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long,
+  private def relAbSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long,
       cellsOverride: Option[Int]): Unit = {
     val dim = 32
-    val cells = cellsOverride.getOrElse(
-      math.min(operators.Similarity.MaxFitCells.toLong,
-        math.max(64L, nDocs / 2000)).toInt)
+    val cells = cellsOverride.getOrElse(fitCells(nDocs))
     val side = math.max(8, math.ceil(math.sqrt(cells.toDouble)).toInt)
-    val corpusPath = tempDir("graft_relab").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200,
-      plantedDups = true)
-      .write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
-    val tFit0 = System.nanoTime()
-    val index = operators.Similarity.kmeansTwoLevel(
-      corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2)
-    val fitSec = (System.nanoTime() - tFit0) / 1e9
+    val corpus = materialize(spark, "graft_relab",
+      clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true))
+    val (index, fitSec) = timed(operators.Similarity.kmeansTwoLevel(
+      corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2))
     val relDf = spark.createDataFrame(
         index._1.zipWithIndex.map { case (v, s) => (s, -1, v) } ++
           index._2.zipWithIndex.flatMap { case (cs, s) =>
             cs.zipWithIndex.map { case (v, b) => (s, b, v) } })
       .toDF("super_id", "sub_id", "centroid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     relDf.count()
 
     def timeAssign(tag: String, df: => DataFrame): (DataFrame, Double) = {
-      val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val n = out.count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val out = df.persist(MEMORY_AND_DISK)
+      val (n, sec) = timed(out.count())
       require(n == nDocs, s"$tag assigned $n of $nDocs rows")
       (out, sec)
     }
@@ -1152,49 +693,42 @@ object ScaleSweep {
       .join(viaRel.select(col("doc_id"), col("cell_id").as("cb")),
         Seq("doc_id"))
       .filter(col("ca") =!= col("cb")).count()
-    val (straggler, maxTaskSec) = listener.worstStraggler()
     println(
       s"""{"sweep":"rel_ab","docs":$nDocs,"dim":$dim,""" +
       s""""nSuper":$side,"nSubPerCell":$side,""" +
-      s""""fitSec":${math.round(fitSec * 10) / 10.0},""" +
-      s""""assignBcSec":${math.round(bcSec * 10) / 10.0},""" +
-      s""""assignRelSec":${math.round(relSec * 10) / 10.0},""" +
+      s""""fitSec":${r(fitSec)},""" +
+      s""""assignBcSec":${r(bcSec)},""" +
+      s""""assignRelSec":${r(relSec)},""" +
       s""""cellMismatches":$mismatches,""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      stragglerJson(m) + "}")
   }
 
   /** The ABOVE-CEILING anchor (VERDICT r16 #1): full fit + SemDeDup
     * through the relation-indexed path at a cells count the broadcast
     * path refuses — cells ∝ corpus with no index through the driver.
     * Same corpus, metrics and recall harness as `semdedup2`, so the
-    * SCALE.md ladder reads across directly; the union runs with
-    * auto-sized banding (the r17 default). Also asserts the assignment
-    * plan is the join shape (nearest_in_packed, no broadcast kernel).
+    * SCALE.md ladder reads across directly; the union (on unless
+    * SPARK_GRAFT_SEMDEDUP2_UNION=0) runs with auto-sized banding (the
+    * r17 default). Also asserts the assignment plan is the join shape
+    * (nearest_in_packed, no broadcast kernel).
     *
     *   scripts/run_main.sh graft.ScaleSweep semdedup2rel [nDocs] [cells]
     */
-  private def semDedupRelSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long,
-      cellsOverride: Option[Int]): Unit = {
+  private def semDedupRelSweep(spark: SparkSession, m: TaskMetrics,
+      nDocs: Long, cellsOverride: Option[Int], union: Boolean): Unit = {
     val dim = 32
     val tau = 0.99
     val cells = cellsOverride.getOrElse(
       math.max(64L, nDocs / 20).toInt) // cells ∝ corpus, PAST the ceiling
     val side = math.max(8, math.ceil(math.sqrt(cells.toDouble)).toInt)
-    val corpusPath = tempDir("graft_semdedup2rel").resolve("emb").toString
-    clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200,
-      plantedDups = true)
-      .write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
+    val corpus = materialize(spark, "graft_semdedup2rel",
+      clusteredEmbeddingsDf(spark, nDocs, dim, nNatural = 200, plantedDups = true))
 
-    val tFit0 = System.nanoTime()
-    val indexRel = operators.Similarity.kmeansTwoLevelRel(
-      corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2)
-    val actualCells = indexRel.filter(col("sub_id") >= 0).count()
-    val fitSec = (System.nanoTime() - tFit0) / 1e9
+    val ((indexRel, actualCells), fitSec) = timed {
+      val idx = operators.Similarity.kmeansTwoLevelRel(
+        corpus, "doc_id", "vec", nSuper = side, nSubPerCell = side, iters = 2)
+      (idx, idx.filter(col("sub_id") >= 0).count())
+    }
 
     // the plan-shape assert: join-based assignment, packed sub argmax,
     // no broadcast two-level kernel anywhere
@@ -1204,52 +738,18 @@ object ScaleSweep {
     val planOk = assignPlan.contains("nearest_in_packed") &&
       !assignPlan.contains("two_level_nearest_cell")
 
-    val union = !sys.env.get("SPARK_GRAFT_SEMDEDUP2_UNION").contains("0")
-    val s0 = listener.snapshot()
-    val t0 = System.nanoTime()
-    val verdicts = operators.Similarity.semanticDedupTwoLevelRel(
+    val dedup = semDedupJson(m, corpus, nDocs, tau)(
+      operators.Similarity.semanticDedupTwoLevelRel(
         corpus, "doc_id", "vec", threshold = tau, indexRel = indexRel,
-        lshUnion = union, lshBands = 0, lshBucketCap = 1024)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowsOut = verdicts.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+        lshUnion = union, lshBands = 0, lshBucketCap = 1024))
 
-    val dups = verdicts.filter(col("dup_of").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dupCount = dups.count()
-    val plantedFound = dups
-      .filter(pmod(col("doc_id"), lit(20L)) === 1 &&
-        col("dup_of") === col("doc_id") - 1)
-      .count()
-    val plantedPairs = nDocs / 20
-    val vecs = corpus.select(col("doc_id"), col("vec"))
-    val violations = dups.select(col("doc_id"), col("dup_of"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_a", "vec" -> "va")),
-        col("doc_id") === col("doc_id_a"))
-      .join(vecs.withColumnsRenamed(Map("doc_id" -> "doc_id_b", "vec" -> "vb")),
-        col("dup_of") === col("doc_id_b"))
-      .filter(operators.Similarity.cosine(col("va"), col("vb")) < tau)
-      .count()
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"semdedup2rel","docs":$nDocs,"dim":$dim,""" +
       s""""nSuper":$side,"nSubPerCell":$side,"targetCells":$cells,""" +
       s""""actualCells":$actualCells,""" +
       s""""overCeiling":${cells > operators.Similarity.MaxFitCells},""" +
       s""""planJoinShape":$planOk,"tau":$tau,"lshUnion":$union,""" +
-      s""""fitSec":${math.round(fitSec * 10) / 10.0},""" +
-      s""""dedupSec":${math.round(wall * 10) / 10.0},""" +
-      s""""shuffleReadMB":${mb(s1._1 - s0._1)},"shuffleWriteMB":${mb(s1._2 - s0._2)},""" +
-      s""""rowsOut":$rowsOut,"oneVerdictPerVector":${rowsOut == nDocs},""" +
-      s""""dupCount":$dupCount,"plantedPairs":$plantedPairs,""" +
-      s""""plantedFound":$plantedFound,""" +
-      s""""plantedRecall":${math.round(plantedFound * 10000.0 / plantedPairs) / 10000.0},""" +
-      s""""witnessViolations":$violations,""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      s""""fitSec":${r(fitSec)},""" + dedup + stragglerJson(m) + "}")
   }
 
   /** ANN sweep at 10⁶ vectors — the measured anchor for the similarity
@@ -1260,8 +760,43 @@ object ScaleSweep {
     * collects only) and an 8/64-cell probe; recall measured against the
     * exact brute-force result.
     *
-    *   sbt -batch "runMain graft.ScaleSweep ann [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep ann [nDocs]
     */
+  private def annSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
+    val dim = 32
+    val k = 10
+    val corpus = materialize(spark, "graft_ann_sweep", embeddingsDf(spark, nDocs, dim))
+    val queries = sampleQueries(spark, corpus, nDocs)
+    val nQueries = queries.count()
+
+    val s0 = m.settled()
+    val brute = operators.Similarity.bruteForceTopK(
+        corpus, queries, "doc_id", "vec", "query_id", "qvec", k)
+      .persist(MEMORY_AND_DISK)
+    val (bruteRows, bruteWall) = timed(brute.count())
+    val s1 = m.settled()
+
+    // fit (amortized once per index build) timed separately from the
+    // per-query-batch probe — the number that matters for serving
+    val (index, fitWall) = timed(operators.Similarity.kmeansCentroids(
+      corpus, "doc_id", "vec", nCells = 64, iters = 2))
+
+    val ivf = operators.Similarity.ivfTopK(
+        corpus, queries, "doc_id", "vec", "query_id", "qvec", k,
+        nCells = 64, nProbe = 8, centroids = Some(index))
+      .persist(MEMORY_AND_DISK)
+    val (ivfRows, ivfWall) = timed(ivf.count())
+    val s2 = m.settled()
+
+    println(
+      s"""{"sweep":"ann","docs":$nDocs,"dim":$dim,"queries":$nQueries,"k":$k,""" +
+      s""""bruteWallSec":${r(bruteWall)},""" + shuffleJson("brute", s1 - s0) +
+      s""""ivfFitWallSec":${r(fitWall)},""" +
+      s""""ivfProbeWallSec":${r(ivfWall)},""" + shuffleJson("ivf", s2 - s1) +
+      s""""ivfRows":$ivfRows,"recallVsExact":${r(recall(ivf, brute, bruteRows), 3)},""" +
+      stragglerJson(m) + "}")
+  }
+
   /** PQ sweep at 10⁶ vectors — the measured anchor for
     * `Similarity.pqFit/pqTopK` (the 32× ANN compression dial): exact
     * brute-force baseline, then the codebook fit (amortized once per
@@ -1272,75 +807,95 @@ object ScaleSweep {
     * anchor's point is the SHUFFLE/STRAGGLER shape: the approx pass
     * must move ~queries×k·oversample rows, never the corpus.
     *
-    *   sbt -batch "runMain graft.ScaleSweep pq [nDocs]"
+    *   scripts/run_main.sh graft.ScaleSweep pq [nDocs]
     */
-  private def pqSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
+  private def pqSweep(spark: SparkSession, m: TaskMetrics, nDocs: Long): Unit = {
     val dim = 32
     val k = 10
-    val corpusPath = tempDir("graft_pq_sweep").resolve("emb").toString
-    embeddingsDf(spark, nDocs, dim).write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
-    val qPlan = corpus
-      .filter(col("doc_id") % (nDocs / 20L) === 7)
-      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
-    val queries = spark.createDataFrame(
-      java.util.Arrays.asList(qPlan.collect(): _*), qPlan.schema)
+    val corpus = materialize(spark, "graft_pq_sweep", embeddingsDf(spark, nDocs, dim))
+    val queries = sampleQueries(spark, corpus, nDocs)
     val nQueries = queries.count()
 
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
+    val s0 = m.settled()
     val brute = operators.Similarity.bruteForceTopK(
         corpus, queries, "doc_id", "vec", "query_id", "qvec", k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bruteRows = brute.count()
-    val bruteWall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
+      .persist(MEMORY_AND_DISK)
+    val (bruteRows, bruteWall) = timed(brute.count())
+    val s1 = m.settled()
 
-    val tFit = System.nanoTime()
-    val books = operators.Similarity.pqFit(
-      corpus, "doc_id", "vec", m = 8, ksub = 16, iters = 2)
-    val fitWall = (System.nanoTime() - tFit) / 1e9
+    val (books, fitWall) = timed(operators.Similarity.pqFit(
+      corpus, "doc_id", "vec", m = 8, ksub = 16, iters = 2))
 
     // index build (encode once) — amortized across query batches, like
     // the codebook fit; timed separately from the probe
-    val tEnc = System.nanoTime()
     val index = operators.Similarity.pqIndex(corpus, "doc_id", "vec", books)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    index.count()
-    val encWall = (System.nanoTime() - tEnc) / 1e9
+      .persist(MEMORY_AND_DISK)
+    val (_, encWall) = timed(index.count())
 
-    val t1 = System.nanoTime()
-    val s1b = listener.snapshot()
+    val s1b = m.settled()
     val pq = operators.Similarity.pqTopK(
         corpus, queries, "doc_id", "vec", "query_id", "qvec", k,
         m = 8, ksub = 16, oversample = 4, codebook = Some(books),
         index = Some(index))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pqRows = pq.count()
-    val pqWall = (System.nanoTime() - t1) / 1e9
-    val s2 = listener.snapshot()
+      .persist(MEMORY_AND_DISK)
+    val (pqRows, pqWall) = timed(pq.count())
+    val s2 = m.settled()
 
-    val hit = pq.select(col("query_id"), col("neighbor_id"))
-      .join(brute.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id")).count()
-    val recall = if (bruteRows == 0) 0.0 else hit.toDouble / bruteRows
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
     println(
       s"""{"sweep":"pq","docs":$nDocs,"dim":$dim,"queries":$nQueries,"k":$k,""" +
-      s""""bruteWallSec":${math.round(bruteWall * 10) / 10.0},""" +
-      s""""bruteShuffleReadMB":${mb(s1._1 - s0._1)},"bruteShuffleWriteMB":${mb(s1._2 - s0._2)},""" +
-      s""""pqFitWallSec":${math.round(fitWall * 10) / 10.0},""" +
-      s""""pqEncodeWallSec":${math.round(encWall * 10) / 10.0},""" +
-      s""""pqWallSec":${math.round(pqWall * 10) / 10.0},""" +
-      s""""pqShuffleReadMB":${mb(s2._1 - s1b._1)},"pqShuffleWriteMB":${mb(s2._2 - s1b._2)},""" +
-      s""""pqRows":$pqRows,"recallVsExact":${math.round(recall * 1000) / 1000.0},""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
+      s""""bruteWallSec":${r(bruteWall)},""" + shuffleJson("brute", s1 - s0) +
+      s""""pqFitWallSec":${r(fitWall)},""" +
+      s""""pqEncodeWallSec":${r(encWall)},""" +
+      s""""pqWallSec":${r(pqWall)},""" + shuffleJson("pq", s2 - s1b) +
+      s""""pqRows":$pqRows,"recallVsExact":${r(recall(pq, brute, bruteRows), 3)},""" +
+      stragglerJson(m) + "}")
+  }
+
+  /** Stock against shipped for catalog rows: the stock arm runs the
+    * row's declared oracle SQL in Spark (`SparkEntry.oracleSql`), the
+    * shipped arm the row itself (`SparkEntry.queries`). Arms are
+    * interleaved over two rounds in one JVM, because back-to-back suite
+    * runs drift more per window (~±5%) than the effects measured. Each
+    * arm prints one JSON line: its result digest, wall time and the
+    * settled shuffle/spill deltas. Both arms of a row must give the
+    * same digest — an order-insensitive distributed aggregate over the
+    * name-sorted columns (count plus the exact sum of per-row xxhash64),
+    * so no result is collected to the driver at any scale.
+    *
+    *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf100 scripts/run_main.sh graft.ScaleSweep ab tpch_q21
+    */
+  private def abSweep(spark: SparkSession, m: TaskMetrics, sfDir: String,
+      names: Seq[String]): Unit = {
+    val oracle = SparkEntry.oracleSql
+    val shipped = SparkEntry.queries
+    val missing = names.filterNot(oracle.contains)
+    require(missing.isEmpty,
+      s"ab: no catalog row with oracle SQL named ${missing.mkString(", ")}")
+    Engine.registerDir(spark, sfDir)
+    for (round <- 1 to 2; name <- names) {
+      val arms = Seq[(String, () => DataFrame)](
+        "stock" -> (() => spark.sql(oracle(name))),
+        "shipped" -> (() => shipped(name)(spark, sfDir)))
+      val digests = arms.map { case (arm, df) =>
+        val before = m.settled()
+        val (digest, wall) = timed {
+          val d = df()
+          d.agg(count(lit(1)),
+            sum(xxhash64(d.columns.sorted.map(c => d.col(s"`$c`")): _*)
+              .cast("decimal(38,0)")))
+            .head
+        }
+        val delta = m.settled() - before
+        println(s"""{"sweep":"ab","query":"$name","arm":"$arm","round":$round,""" +
+          s""""rows":${digest.getLong(0)},"resultDigest":"${digest.get(1)}",""" +
+          s""""wallSec":${r(wall)},""" + shuffleJson("", delta) +
+          s""""memSpillMB":${mb(delta.spillMem)},"diskSpillMB":${mb(delta.spillDisk)},""" +
+          s""""sf":"$sfDir"}""")
+        digest
+      }
+      require(digests.distinct.size == 1,
+        s"ab: $name stock and shipped results differ: ${digests.mkString(" vs ")}")
+    }
   }
 
   /** Iceberg write-family sweep at 10⁶ rows / 32 partitions / 128
@@ -1355,12 +910,16 @@ object ScaleSweep {
     *
     *   sbt -batch "runMain graft.ScaleSweep iceberg [nRows]"
     */
-  private def icebergSweep(spark: org.apache.spark.sql.SparkSession,
+  private def icebergSweep(spark: SparkSession,
       nRows: Long): Unit = {
     val root = tempDir("graft_iceberg_sweep").resolve("t").toString
     sources.IcebergLite.createTable(root)
     val nParts = 32
     val perPart = nRows / nParts
+    // merge and CDC batch sizes (5,000 and 2,000 keys at 10⁶ rows),
+    // capped at one partition's key range so keys stay distinct
+    val nUpd = math.min(5000L, perPart)
+    val nCdc = math.min(2000L, perPart)
     def partOf(k: org.apache.spark.sql.Column) =
       format_string("p%02d", (k / perPart).cast("int"))
 
@@ -1368,30 +927,26 @@ object ScaleSweep {
     // the many-small-files shape a streaming ingest leaves behind.
     // `seq` is the CDC sequence column the upsert-stream stage orders
     // on; the seed rows all carry seq 0.
-    val tApp = System.nanoTime()
-    (0 until 4).foreach { b =>
+    val (_, appendWall) = timed((0 until 4).foreach { b =>
       val df = spark.range(nRows / 4)
         .select((col("id") * 4 + b).as("k"))
         .select(col("k"), partOf(col("k")).as("part"),
           (col("k") % 1000 * 1.0).as("amount"), lit(0L).as("seq"))
         .repartition(col("part"))
       sources.IcebergLite.append(spark, root, df, partitionColumns = Seq("part"))
-    }
-    val appendWall = (System.nanoTime() - tApp) / 1e9
+    })
     val nFiles0 = sources.IcebergLite.dataFiles(root).size
 
     // merge: 5k updates inside partition 7's key range + 5k inserts in
     // fresh key space (a new partition) — only p07's files may rewrite
     val before = sources.IcebergLite.dataFiles(root).map(_.filePath).toSet
-    val updates = spark.range(5000)
-      .select((col("id") * (perPart / 5000) + 7L * perPart).as("k"))
-    val inserts = spark.range(5000).select((col("id") + nRows).as("k"))
+    val updates = spark.range(nUpd)
+      .select((col("id") * (perPart / nUpd) + 7L * perPart).as("k"))
+    val inserts = spark.range(nUpd).select((col("id") + nRows).as("k"))
     val batch = updates.union(inserts)
       .select(col("k"), partOf(col("k")).as("part"), lit(-1.0).as("amount"),
         lit(0L).as("seq"))
-    val tMerge = System.nanoTime()
-    sources.IcebergLite.merge(spark, root, batch, Seq("k"))
-    val mergeWall = (System.nanoTime() - tMerge) / 1e9
+    val (_, mergeWall) = timed(sources.IcebergLite.merge(spark, root, batch, Seq("k")))
     val afterMerge = sources.IcebergLite.dataFiles(root)
     val carried = afterMerge.count(f => before.contains(f.filePath))
     val updatedCount = sources.IcebergLite.read(spark, root)
@@ -1411,8 +966,8 @@ object ScaleSweep {
     val stageDir = tempDir("graft_cdc_stage").toString
     val ckptDir = tempDir("graft_cdc_ckpt").toString
     cdcTargets.zipWithIndex.foreach { case (p, b) =>
-      spark.range(2000)
-        .select((col("id") * (perPart / 2000) + p.toLong * perPart).as("k"))
+      spark.range(nCdc)
+        .select((col("id") * (perPart / nCdc) + p.toLong * perPart).as("k"))
         .select(col("k"), partOf(col("k")).as("part"),
           lit(-(10.0 + b)).as("amount"), lit((b + 1).toLong).as("seq"))
         .coalesce(1).write.mode("append").parquet(stageDir)
@@ -1421,10 +976,8 @@ object ScaleSweep {
     val changelog = spark.readStream
       .schema(spark.read.parquet(stageDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir)
-    val tCdc = System.nanoTime()
-    streaming.EventStream.upsertStream(changelog, root, ckptDir,
-      keyCol = "k", seqCol = "seq", carryCols = Seq("part", "amount"))
-    val cdcWall = (System.nanoTime() - tCdc) / 1e9
+    val (_, cdcWall) = timed(streaming.EventStream.upsertStream(changelog, root, ckptDir,
+      keyCol = "k", seqCol = "seq", carryCols = Seq("part", "amount")))
     val cdcSnaps = sources.IcebergLite.snapshots(root)
       .filterNot(snapsBefore.toSet).sorted
     val cdcScope = (snapsBefore.max +: cdcSnaps).sliding(2).map { w =>
@@ -1448,34 +1001,25 @@ object ScaleSweep {
     // materialization being free-riding on the compact pass.
     val preMorCount = sources.IcebergLite.read(spark, root).count()
     val preMorFiles = sources.IcebergLite.dataFiles(root).map(_.filePath).toSet
-    val tMor = System.nanoTime()
-    sources.IcebergLite.deleteMergeOnRead(spark, root,
+    val (_, morWall) = timed(sources.IcebergLite.deleteMergeOnRead(spark, root,
       Seq(sources.IcebergLite.Eq("part", "p13"),
-        sources.IcebergLite.Lt("amount", "100")))
-    val morWall = (System.nanoTime() - tMor) / 1e9
+        sources.IcebergLite.Lt("amount", "100"))))
     val morZeroRewrite =
       sources.IcebergLite.dataFiles(root).map(_.filePath).toSet == preMorFiles
-    val tMorRead = System.nanoTime()
-    val postMorCount = sources.IcebergLite.read(spark, root).count()
-    val morReadWall = (System.nanoTime() - tMorRead) / 1e9
+    val (postMorCount, morReadWall) = timed(sources.IcebergLite.read(spark, root).count())
     val morDeleted = preMorCount - postMorCount
 
     // partition-scoped delete: metadata-only, zero files rewritten
-    val tDel = System.nanoTime()
-    sources.IcebergLite.delete(spark, root,
-      Seq(sources.IcebergLite.Eq("part", "p31")))
-    val delWall = (System.nanoTime() - tDel) / 1e9
+    val (_, delWall) = timed(sources.IcebergLite.delete(spark, root,
+      Seq(sources.IcebergLite.Eq("part", "p31"))))
     val afterDel = sources.IcebergLite.dataFiles(root)
     val delRewrote = afterDel.exists(_.filePath.contains("delete-"))
 
     // compact to one file per partition, then expire everything else
-    val tComp = System.nanoTime()
-    sources.IcebergLite.compact(spark, root)
-    val compactWall = (System.nanoTime() - tComp) / 1e9
+    val (_, compactWall) = timed(sources.IcebergLite.compact(spark, root))
     val nFilesComp = sources.IcebergLite.dataFiles(root).size
-    val tExp = System.nanoTime()
-    val (expSnaps, expFiles) = sources.IcebergLite.expireSnapshots(root, retainLast = 1)
-    val expWall = (System.nanoTime() - tExp) / 1e9
+    val ((expSnaps, expFiles), expWall) =
+      timed(sources.IcebergLite.expireSnapshots(root, retainLast = 1))
 
     // z-order cluster on (k, amount): in the compacted layout every
     // partition file spans the full amount cycle, so an amount-only
@@ -1486,10 +1030,8 @@ object ScaleSweep {
     val amtFilter = Seq(sources.IcebergLite.Lt("amount", "100"))
     val preZFiles = sources.IcebergLite.dataFiles(root).size
     val preZAmtKept = sources.IcebergLite.dataFiles(root, filters = amtFilter).size
-    val tZ = System.nanoTime()
-    sources.IcebergLite.cluster(spark, root, Seq("k", "amount"),
-      targetFiles = 32, zorder = true)
-    val zWall = (System.nanoTime() - tZ) / 1e9
+    val (_, zWall) = timed(sources.IcebergLite.cluster(spark, root, Seq("k", "amount"),
+      targetFiles = 32, zorder = true))
     val zFiles = sources.IcebergLite.dataFiles(root).size
     val zAmtKept = sources.IcebergLite.dataFiles(root, filters = amtFilter).size
     val zKKept = sources.IcebergLite.dataFiles(root,
@@ -1499,10 +1041,8 @@ object ScaleSweep {
     // z-range straddles every hive dir (zorderFiles multiplies ~8× the
     // target), scoped keys the shuffle on (part, z) and caps files at
     // targetFiles × partitions while keeping both-dimension pruning
-    val tZs = System.nanoTime()
-    sources.IcebergLite.cluster(spark, root, Seq("k", "amount"),
-      targetFiles = 4, zorder = true, partitionScoped = true)
-    val zsWall = (System.nanoTime() - tZs) / 1e9
+    val (_, zsWall) = timed(sources.IcebergLite.cluster(spark, root, Seq("k", "amount"),
+      targetFiles = 4, zorder = true, partitionScoped = true))
     val zsFiles = sources.IcebergLite.dataFiles(root).size
     val zsAmtKept = sources.IcebergLite.dataFiles(root, filters = amtFilter).size
     val zsKKept = sources.IcebergLite.dataFiles(root,
@@ -1511,7 +1051,7 @@ object ScaleSweep {
     // end-state invariant: full history applied exactly once
     val fin = sources.IcebergLite.read(spark, root)
       .agg(count(lit(1)), sum(col("k"))).head()
-    val expectRows = nRows + 5000 - perPart - morDeleted // +inserts, -p31, -MoR
+    val expectRows = nRows + nUpd - perPart - morDeleted // +inserts, -p31, -MoR
     println(
       s"""{"sweep":"iceberg","rows":$nRows,"partitions":$nParts,"files":$nFiles0,""" +
       s""""appendWallSec":${math.round(appendWall * 10) / 10.0},""" +
@@ -1521,7 +1061,7 @@ object ScaleSweep {
       s""""cdcWallSec":${math.round(cdcWall * 10) / 10.0},""" +
       s""""cdcBatches":[${cdcScope.mkString(",")}],""" +
       s""""cdcStaleRows":$staleRows,"cdcWinRows":$winRows,""" +
-      s""""cdcOrderedOk":${staleRows == 0 && winRows == 2000},""" +
+      s""""cdcOrderedOk":${staleRows == 0 && winRows == nCdc},""" +
       s""""morDeleteWallSec":${math.round(morWall * 100) / 100.0},""" +
       s""""morZeroRewrite":$morZeroRewrite,"morDeletedRows":$morDeleted,""" +
       s""""morPendingReadWallSec":${math.round(morReadWall * 10) / 10.0},""" +
@@ -1546,7 +1086,8 @@ object ScaleSweep {
   }
 
   /** TPC-H SCALE-UP generator (`runMain graft.ScaleSweep tpchgen 10`):
-    * writes an sf≈1 replica of the driver's sf0.1 testdata to
+    * writes an sf≈1 replica of SPARK_GRAFT_TPCH_SRC (default: the sf0.1
+    * test tables) to
     * `/tmp/graft_sf1` by unioning each fact/dim table `n` times with
     * every key column offset by `replica × 10⁸` — joins stay strictly
     * within a replica, so join selectivities and per-group row counts
@@ -1556,8 +1097,7 @@ object ScaleSweep {
     * Bench-compatible (`SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 runMain
     * graft.Bench`), giving the measured sf1 anchor the sf0.1 bench —
     * dominated by Spark's fixed per-query job floor — cannot. */
-  private def tpchScaleUp(spark: org.apache.spark.sql.SparkSession, replicas: Int): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_TPCH_SRC", "/root/testdata/sf0.1")
+  private def tpchScaleUp(spark: SparkSession, src: String, replicas: Int): Unit = {
     // 10 replicas of sf0.1 → /tmp/graft_sf1 (the documented r12/r13
     // anchor path); 100 → /tmp/graft_sf10. Non-decade replica counts
     // get their own dir so an sf0.5 corpus can't masquerade as (or
@@ -1573,8 +1113,7 @@ object ScaleSweep {
       "part" -> Seq("p_partkey"),
       "orders" -> Seq("o_orderkey", "o_custkey"),
       "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"))
-    val t0 = System.nanoTime()
-    val sizes = keyCols.map { case (t, keys) =>
+    val (sizes, wall) = timed(keyCols.map { case (t, keys) =>
       val df = Engine.t(spark, src, t)
       val scaled =
         if (keys.isEmpty) df.coalesce(1)
@@ -1590,12 +1129,35 @@ object ScaleSweep {
         }
       scaled.write.mode("overwrite").parquet(s"$out/$t.parquet")
       t -> spark.read.parquet(s"$out/$t.parquet").count()
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
+    })
     println(s"""{"sweep":"tpchgen","out":"$out","replicas":$replicas,""" +
       sizes.map { case (t, n) => s""""$t":$n""" }.mkString(",") +
       s""","genWallSec":${math.round(wall * 10) / 10.0}}""")
   }
+
+  /** Writes nManifests × filesPer synthetic manifest entries under
+    * `root` for a METADATA-ONLY table: partition values, per-file
+    * bounds and record counts, but no parquet behind the paths —
+    * planning never opens data files, so this isolates exactly the
+    * planning cost. `planShape` adds per-file ts bounds in place of the
+    * file size (the plan sweep's entry shape). Returns the manifests'
+    * relative paths, ready to adopt in one commit. */
+  private def writeManifests(root: String, nManifests: Int, filesPer: Int,
+      planShape: Boolean): Seq[String] =
+    (1 to nManifests).map { i =>
+      val entries = (0 until filesPer).map { j =>
+        val ts = if (planShape) s""", "ts": "2024-01-0${j % 9 + 1}"""" else ""
+        val size = if (planShape) "" else """"file_size_in_bytes": 1048576, """
+        s"""{"data_file": {"file_path": "data/f-$i-$j.parquet", "file_format": "PARQUET",
+           |  "partition": {"p": "${i % 10}"}, "record_count": 1000, "sequence_number": 1,
+           |  $size"lower_bounds": {"id": "${j * 1000}"$ts},
+           |  "upper_bounds": {"id": "${j * 1000 + 999}"$ts}}}""".stripMargin
+      }
+      val rel = s"metadata/manifest-pre-$i.json"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/$rel"),
+        entries.mkString("{\"entries\": [", ",\n", "]}"))
+      rel
+    }
 
   /** Manifest-PLANNING sweep — the many-file anchor for
     * `IcebergLite.planFilesDistributed`. Builds a METADATA-ONLY table
@@ -1608,6 +1170,66 @@ object ScaleSweep {
     * line reports matched vs total so the ratio is visible. Run with
     * `runMain graft.ScaleSweep plan 10000` (files; 100 entries per
     * manifest). */
+  private def planSweep(spark: SparkSession, nFiles: Long,
+      filesPer: Int): Unit = {
+    val nManifests = math.max(1, (nFiles / filesPer).toInt)
+    val root = tempDir("graft_plan_sweep").toString
+    sources.IcebergLite.createTable(root)
+    val (_, buildWall) = timed(sources.IcebergLite.commitSnapshot(root, None,
+      entries = Nil,
+      carriedManifests = writeManifests(root, nManifests, filesPer, planShape = true)))
+
+    // selective plan: 1-in-10 partitions, upper ~30% of each
+    // manifest's id range → matched ≈ 3% of entries
+    val filters = Seq(sources.IcebergLite.Eq("p", "7"),
+      sources.IcebergLite.Gt("id", (filesPer * 700).toString))
+    val (driver, driverWall) = timed(sources.IcebergLite.dataFiles(root, filters = filters))
+    // warm the distributed path once (first Spark job pays session
+    // warm-up that a long-lived cluster never sees per-plan), then time
+    sources.IcebergLite.planFilesDistributed(spark, root, filters = filters)
+    val (dist, distWall) =
+      timed(sources.IcebergLite.planFilesDistributed(spark, root, filters = filters))
+    require(dist.toSet == driver.toSet, "distributed plan diverged from driver plan")
+
+    // the unfiltered full listing, driver-side — the O(files) driver
+    // cost a distributed planner avoids holding/parsing in one thread
+    val (total, fullWall) = timed(sources.IcebergLite.dataFiles(root).size)
+
+    // the maintenance answer to manifest sprawl: rewriteManifests
+    // consolidates (here 100× fewer), and the SAME driver plan must
+    // return the identical file set at a fraction of the parse cost
+    val targetM = math.max(1, nManifests / 100)
+    // driver rewrite vs the distributed one (one Spark job, manifests
+    // written + summarized where the entries are): same consolidation,
+    // the 10⁶-entry driver JSON re-list drops out of the wall
+    val (rwSnap, rwDistWall) =
+      timed(sources.IcebergLite.rewriteManifests(spark, root, targetM))
+    val distSet = sources.IcebergLite.dataFiles(root).map(_.filePath).toSet
+    // roll back to the pre-rewrite snapshot state for the driver
+    // timing by rewriting AGAIN from the consolidated state is not
+    // comparable; instead time the driver path on the consolidated
+    // table's same entry count via a fresh rewrite target of 1
+    val (_, rwWall) = timed(sources.IcebergLite.rewriteManifests(root,
+      targetManifests = math.max(1, targetM / 2)))
+    require(sources.IcebergLite.dataFiles(root).map(_.filePath).toSet == distSet,
+      s"rewrites must preserve the file set (snap $rwSnap)")
+    val (driver2, driver2Wall) = timed(sources.IcebergLite.dataFiles(root, filters = filters))
+    require(driver2.toSet == driver.toSet,
+      "post-rewrite plan diverged from the pre-rewrite plan")
+    println(
+      s"""{"sweep":"plan","files":$total,"manifests":$nManifests,""" +
+      s""""buildWallSec":${math.round(buildWall * 100) / 100.0},""" +
+      s""""matched":${driver.size},""" +
+      s""""driverPlanSec":${math.round(driverWall * 1000) / 1000.0},""" +
+      s""""distributedPlanSec":${math.round(distWall * 1000) / 1000.0},""" +
+      s""""driverFullListSec":${math.round(fullWall * 1000) / 1000.0},""" +
+      s""""rewriteManifestsDistributedSec":${math.round(rwDistWall * 100) / 100.0},""" +
+      s""""rewriteManifestsDriverSec":${math.round(rwWall * 100) / 100.0},""" +
+      s""""manifestsAfter":$targetM,""" +
+      s""""postRewriteDriverPlanSec":${math.round(driver2Wall * 1000) / 1000.0},""" +
+      s""""plansAgree":true}""")
+  }
+
   /** Hidden-partitioning at ingest scale: `nRows` rows land in a
     * day(ts) + bucket(16, uid) spec table (30 days x 16 buckets = 480
     * hidden tuples), then point/range/combined queries that name ONLY
@@ -1616,7 +1238,7 @@ object ScaleSweep {
     * key lookup reads 1/16 of the table, a 5-day window 5/30, their
     * conjunction the product — without the query ever mentioning a
     * partition column. */
-  private def hiddenSweep(spark: org.apache.spark.sql.SparkSession, nRows: Long): Unit = {
+  private def hiddenSweep(spark: SparkSession, nRows: Long): Unit = {
     import sources.{IcebergLite, IcebergTransforms}
     val root = tempDir("graft_hidden_sweep").resolve("t").toString
     IcebergLite.createTable(root, Seq(
@@ -1640,17 +1262,13 @@ object ScaleSweep {
       .withColumn("uid_bucket16", pmod(hash(col("uid")), lit(16)))
       .repartition(col("ts_day"), col("uid_bucket16"))
       .drop("id")
-    val tApp = System.nanoTime()
-    IcebergLite.append(spark, root, df)
-    val appendWall = (System.nanoTime() - tApp) / 1e9
+    val (_, appendWall) = timed(IcebergLite.append(spark, root, df))
     val total = IcebergLite.dataFiles(root).size
 
     def measure(name: String, filters: Seq[IcebergLite.PartitionFilter],
         rowPred: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
       val planned = IcebergLite.dataFiles(root, filters = filters).size
-      val t0 = System.nanoTime()
-      val n = rowPred(IcebergLite.read(spark, root, filters = filters)).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (n, wall) = timed(rowPred(IcebergLite.read(spark, root, filters = filters)).count())
       s""""$name":{"filesPlanned":$planned,"rows":$n,"scanSec":${math.round(wall * 1000) / 1000.0}}"""
     }
     val point = measure("pointUid", Seq(IcebergLite.Eq("uid", "4242")),
@@ -1661,9 +1279,7 @@ object ScaleSweep {
       Seq(IcebergLite.Eq("uid", "4242"), IcebergLite.Gt("ts", "2024-01-25 00:00:00")),
       _.filter(col("uid") === 4242L &&
         col("ts") > lit("2024-01-25 00:00:00").cast("timestamp")))
-    val tFull = System.nanoTime()
-    val nAll = IcebergLite.read(spark, root).count()
-    val fullWall = (System.nanoTime() - tFull) / 1e9
+    val (nAll, fullWall) = timed(IcebergLite.read(spark, root).count())
     println(
       s"""{"sweep":"hidden","rows":$nAll,"files":$total,""" +
       s""""appendWallSec":${math.round(appendWall * 100) / 100.0},""" +
@@ -1677,7 +1293,7 @@ object ScaleSweep {
     * under test for 100 TB: `compactSmallFiles` consolidates ONLY the
     * stragglers — wall time scales with the straggler bytes, never the
     * table — and every seed file survives path-identical. */
-  private def optimizeSweep(spark: org.apache.spark.sql.SparkSession, nRows: Long): Unit = {
+  private def optimizeSweep(spark: SparkSession, nRows: Long): Unit = {
     import sources.IcebergLite
     val root = tempDir("graft_optimize_sweep").resolve("t").toString
     IcebergLite.createTable(root)
@@ -1693,21 +1309,17 @@ object ScaleSweep {
       partitionColumns = Seq("part"))
     val seeds = IcebergLite.dataFiles(root).map(_.filePath).toSet
     // 200 straggler commits of 50 rows each (the streaming-ingest residue)
-    val tIngest = System.nanoTime()
-    (0 until 200).foreach { b =>
+    val (_, ingestWall) = timed((0 until 200).foreach { b =>
       IcebergLite.append(spark, root,
         spark.range(50).select((col("id") * 200 + b + nRows).as("k"))
           .select(col("k"), partOf(col("k")).as("part"),
             lit(-1.0).as("amount"))
           .coalesce(1),
         partitionColumns = Seq("part"))
-    }
-    val ingestWall = (System.nanoTime() - tIngest) / 1e9
+    })
     val before = IcebergLite.dataFiles(root)
     val smallCount = before.count(_.fileSizeBytes < 32 * 1024)
-    val tOpt = System.nanoTime()
-    IcebergLite.compactSmallFiles(spark, root, 32 * 1024)
-    val optWall = (System.nanoTime() - tOpt) / 1e9
+    val (_, optWall) = timed(IcebergLite.compactSmallFiles(spark, root, 32 * 1024))
     val after = IcebergLite.dataFiles(root)
     val seedsCarried = after.count(f => seeds.contains(f.filePath))
     val total = IcebergLite.read(spark, root).count()
@@ -1724,48 +1336,31 @@ object ScaleSweep {
     * manifest in one driver thread. Builds the planSweep synthetic
     * (nFiles entries over nFiles/filesPer manifests), then times the
     * driver walk vs the job-based walk, verifying row identity. */
-  private def metaFilesSweep(spark: org.apache.spark.sql.SparkSession,
-      nFiles: Long, filesPer: Int = 100): Unit = {
+  private def metaFilesSweep(spark: SparkSession,
+      nFiles: Long, filesPer: Int): Unit = {
     val nManifests = math.max(1, (nFiles / filesPer).toInt)
     val root = tempDir("graft_metafiles_sweep").toString
     sources.IcebergLite.createTable(root)
-    val manifestPaths = (1 to nManifests).map { i =>
-      val entries = (0 until filesPer).map { j =>
-        s"""{"data_file": {"file_path": "data/f-$i-$j.parquet", "file_format": "PARQUET",
-           |  "partition": {"p": "${i % 10}"}, "record_count": 1000, "sequence_number": 1,
-           |  "file_size_in_bytes": 1048576,
-           |  "lower_bounds": {"id": "${j * 1000}"}, "upper_bounds": {"id": "${j * 1000 + 999}"}}}""".stripMargin
-      }
-      val rel = s"metadata/manifest-pre-$i.json"
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/$rel"),
-        entries.mkString("{\"entries\": [", ",\n", "]}"))
-      rel
-    }
+    val manifestPaths = writeManifests(root, nManifests, filesPer, planShape = false)
     sources.IcebergLite.commitSnapshot(root, None, entries = Nil,
       carriedManifests = manifestPaths)
     // warm the job path once (session warm-up), then time
     sources.IcebergLite.filesMetadata(spark, root).count()
-    val tDist = System.nanoTime()
-    val distCount = sources.IcebergLite.filesMetadata(spark, root).count()
-    val distWall = (System.nanoTime() - tDist) / 1e9
-    val tParts = System.nanoTime()
-    val partRows = sources.IcebergLite.partitionsMetadata(spark, root)
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    val partsWall = (System.nanoTime() - tParts) / 1e9
+    val (distCount, distWall) =
+      timed(sources.IcebergLite.filesMetadata(spark, root).count())
+    val (partRows, partsWall) = timed(sources.IcebergLite.partitionsMetadata(spark, root)
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap)
     spark.conf.set("graft.iceberg.planning.distributedThreshold", "2000000000")
-    val (driverWall, driverCount) = try {
-      val t = System.nanoTime()
-      val c = sources.IcebergLite.filesMetadata(spark, root).count()
-      ((System.nanoTime() - t) / 1e9, c)
-    } finally spark.conf.unset("graft.iceberg.planning.distributedThreshold")
+    val (driverCount, driverWall) =
+      try timed(sources.IcebergLite.filesMetadata(spark, root).count())
+      finally spark.conf.unset("graft.iceberg.planning.distributedThreshold")
     require(distCount == driverCount, "distributed files table diverged")
     require(partRows.size == 10 &&
       partRows.values.sum == nManifests.toLong * filesPer * 1000,
       s"partitions table wrong: $partRows")
-    def r1(d: Double) = math.round(d * 100) / 100.0
     println(s"""{"sweep":"metafiles","files":${nManifests.toLong * filesPer},""" +
-      s""""manifests":$nManifests,"distWallSec":${r1(distWall)},""" +
-      s""""partitionsWallSec":${r1(partsWall)},"driverWallSec":${r1(driverWall)},""" +
+      s""""manifests":$nManifests,"distWallSec":${r(distWall, 2)},""" +
+      s""""partitionsWallSec":${r(partsWall, 2)},"driverWallSec":${r(driverWall, 2)},""" +
       s""""rows":$distCount}""")
   }
 
@@ -1776,132 +1371,44 @@ object ScaleSweep {
     * each manifest once — the cost the summary already paid), then
     * times snapshotTotals vs the dataFiles fallback walk, verifying
     * the answers agree. */
-  private def statsSweep(spark: org.apache.spark.sql.SparkSession,
-      nFiles: Long, filesPer: Int = 100): Unit = {
+  private def statsSweep(spark: SparkSession,
+      nFiles: Long, filesPer: Int): Unit = {
     val nManifests = math.max(1, (nFiles / filesPer).toInt)
     val root = tempDir("graft_stats_sweep").toString
     sources.IcebergLite.createTable(root)
-    val manifestPaths = (1 to nManifests).map { i =>
-      val entries = (0 until filesPer).map { j =>
-        s"""{"data_file": {"file_path": "data/f-$i-$j.parquet", "file_format": "PARQUET",
-           |  "partition": {"p": "${i % 10}"}, "record_count": 1000, "sequence_number": 1,
-           |  "file_size_in_bytes": 1048576,
-           |  "lower_bounds": {"id": "${j * 1000}"}, "upper_bounds": {"id": "${j * 1000 + 999}"}}}""".stripMargin
-      }
-      val rel = s"metadata/manifest-pre-$i.json"
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/$rel"),
-        entries.mkString("{\"entries\": [", ",\n", "]}"))
-      rel
-    }
-    val tCommit = System.nanoTime()
-    sources.IcebergLite.commitSnapshot(root, None, entries = Nil,
-      carriedManifests = manifestPaths)
-    val commitWall = (System.nanoTime() - tCommit) / 1e9
-    val tTotals = System.nanoTime()
-    val totals = sources.IcebergLite.snapshotTotals(root)
-    val totalsWall = (System.nanoTime() - tTotals) / 1e9
-    val tWalk = System.nanoTime()
-    val walked = sources.IcebergLite.dataFiles(root)
-    val walkWall = (System.nanoTime() - tWalk) / 1e9
+    val manifestPaths = writeManifests(root, nManifests, filesPer, planShape = false)
+    val (_, commitWall) = timed(sources.IcebergLite.commitSnapshot(root, None, entries = Nil,
+      carriedManifests = manifestPaths))
+    val (totals, totalsWall) = timed(sources.IcebergLite.snapshotTotals(root))
+    val (walked, walkWall) = timed(sources.IcebergLite.dataFiles(root))
     require(totals.exists(_._1 == walked.map(_.recordCount).sum),
       s"list totals $totals diverge from the walk")
     // a follow-up append must NOT re-parse the carried manifests to
     // keep totals current (parent carry): time it at this width
     val s2 = spark
     import s2.implicits._
-    val tApp = System.nanoTime()
-    sources.IcebergLite.append(spark, root, Seq((1L, "x")).toDF("id", "v"))
-    val appendWall = (System.nanoTime() - tApp) / 1e9
+    val (_, appendWall) =
+      timed(sources.IcebergLite.append(spark, root, Seq((1L, "x")).toDF("id", "v")))
     require(sources.IcebergLite.snapshotTotals(root)
       .exists(_._1 == walked.map(_.recordCount).sum + 1), "post-append totals wrong")
-    def r1(d: Double) = math.round(d * 1000) / 1000.0
     println(s"""{"sweep":"stats","files":${nManifests.toLong * filesPer},""" +
-      s""""manifests":$nManifests,"adoptCommitWallSec":${r1(commitWall)},""" +
-      s""""snapshotTotalsWallSec":${r1(totalsWall)},""" +
-      s""""manifestWalkWallSec":${r1(walkWall)},"appendWallSec":${r1(appendWall)},""" +
+      s""""manifests":$nManifests,"adoptCommitWallSec":${r(commitWall, 3)},""" +
+      s""""snapshotTotalsWallSec":${r(totalsWall, 3)},""" +
+      s""""manifestWalkWallSec":${r(walkWall, 3)},"appendWallSec":${r(appendWall, 3)},""" +
       s""""rows":${totals.map(_._1).getOrElse(-1L)}}""")
   }
 
-  private def planSweep(spark: org.apache.spark.sql.SparkSession, nFiles: Long,
-      filesPer: Int = 100): Unit = {
-    val nManifests = math.max(1, (nFiles / filesPer).toInt)
-    val root = tempDir("graft_plan_sweep").toString
+  /** A fresh IcebergLite table of `nRows` (k, amount, v) rows over 64
+    * data files, keys hash-scattered across them by the repartition. */
+  private def freshKeyedTable(spark: SparkSession, prefix: String,
+      nRows: Long): String = {
+    val root = tempDir(prefix).resolve("t").toString
     sources.IcebergLite.createTable(root)
-    val tBuild = System.nanoTime()
-    val manifestPaths = (1 to nManifests).map { i =>
-      val entries = (0 until filesPer).map { j =>
-        s"""{"data_file": {"file_path": "data/f-$i-$j.parquet", "file_format": "PARQUET",
-           |  "partition": {"p": "${i % 10}"}, "record_count": 1000, "sequence_number": 1,
-           |  "lower_bounds": {"id": "${j * 1000}", "ts": "2024-01-0${j % 9 + 1}"},
-           |  "upper_bounds": {"id": "${j * 1000 + 999}", "ts": "2024-01-0${j % 9 + 1}"}}}""".stripMargin
-      }
-      val rel = s"metadata/manifest-pre-$i.json"
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/$rel"),
-        entries.mkString("{\"entries\": [", ",\n", "]}"))
-      rel
-    }
-    sources.IcebergLite.commitSnapshot(root, None, entries = Nil,
-      carriedManifests = manifestPaths)
-    val buildWall = (System.nanoTime() - tBuild) / 1e9
-
-    // selective plan: 1-in-10 partitions, upper ~30% of each
-    // manifest's id range → matched ≈ 3% of entries
-    val filters = Seq(sources.IcebergLite.Eq("p", "7"),
-      sources.IcebergLite.Gt("id", (filesPer * 700).toString))
-    val tDriver = System.nanoTime()
-    val driver = sources.IcebergLite.dataFiles(root, filters = filters)
-    val driverWall = (System.nanoTime() - tDriver) / 1e9
-    // warm the distributed path once (first Spark job pays session
-    // warm-up that a long-lived cluster never sees per-plan), then time
-    sources.IcebergLite.planFilesDistributed(spark, root, filters = filters)
-    val tDist = System.nanoTime()
-    val dist = sources.IcebergLite.planFilesDistributed(spark, root, filters = filters)
-    val distWall = (System.nanoTime() - tDist) / 1e9
-    require(dist.toSet == driver.toSet, "distributed plan diverged from driver plan")
-
-    // the unfiltered full listing, driver-side — the O(files) driver
-    // cost a distributed planner avoids holding/parsing in one thread
-    val tFull = System.nanoTime()
-    val total = sources.IcebergLite.dataFiles(root).size
-    val fullWall = (System.nanoTime() - tFull) / 1e9
-
-    // the maintenance answer to manifest sprawl: rewriteManifests
-    // consolidates (here 100× fewer), and the SAME driver plan must
-    // return the identical file set at a fraction of the parse cost
-    val targetM = math.max(1, nManifests / 100)
-    // driver rewrite vs the distributed one (one Spark job, manifests
-    // written + summarized where the entries are): same consolidation,
-    // the 10⁶-entry driver JSON re-list drops out of the wall
-    val tRwD = System.nanoTime()
-    val rwSnap = sources.IcebergLite.rewriteManifests(spark, root, targetM)
-    val rwDistWall = (System.nanoTime() - tRwD) / 1e9
-    val distSet = sources.IcebergLite.dataFiles(root).map(_.filePath).toSet
-    // roll back to the pre-rewrite snapshot state for the driver
-    // timing by rewriting AGAIN from the consolidated state is not
-    // comparable; instead time the driver path on the consolidated
-    // table's same entry count via a fresh rewrite target of 1
-    val tRw = System.nanoTime()
-    sources.IcebergLite.rewriteManifests(root, targetManifests = math.max(1, targetM / 2))
-    val rwWall = (System.nanoTime() - tRw) / 1e9
-    require(sources.IcebergLite.dataFiles(root).map(_.filePath).toSet == distSet,
-      s"rewrites must preserve the file set (snap $rwSnap)")
-    val tDriver2 = System.nanoTime()
-    val driver2 = sources.IcebergLite.dataFiles(root, filters = filters)
-    val driver2Wall = (System.nanoTime() - tDriver2) / 1e9
-    require(driver2.toSet == driver.toSet,
-      "post-rewrite plan diverged from the pre-rewrite plan")
-    println(
-      s"""{"sweep":"plan","files":$total,"manifests":$nManifests,""" +
-      s""""buildWallSec":${math.round(buildWall * 100) / 100.0},""" +
-      s""""matched":${driver.size},""" +
-      s""""driverPlanSec":${math.round(driverWall * 1000) / 1000.0},""" +
-      s""""distributedPlanSec":${math.round(distWall * 1000) / 1000.0},""" +
-      s""""driverFullListSec":${math.round(fullWall * 1000) / 1000.0},""" +
-      s""""rewriteManifestsDistributedSec":${math.round(rwDistWall * 100) / 100.0},""" +
-      s""""rewriteManifestsDriverSec":${math.round(rwWall * 100) / 100.0},""" +
-      s""""manifestsAfter":$targetM,""" +
-      s""""postRewriteDriverPlanSec":${math.round(driver2Wall * 1000) / 1000.0},""" +
-      s""""plansAgree":true}""")
+    sources.IcebergLite.append(spark, root,
+      spark.range(nRows).select(col("id").as("k"),
+        (col("id") % 1000 * 1.0).as("amount"),
+        concat(lit("v"), col("id")).as("v")).repartition(64))
+    root
   }
 
   /** EQUALITY-DELETE anchor (r9): the ingest-latency contrast the v2
@@ -1917,35 +1424,21 @@ object ScaleSweep {
     *
     *   sbt -batch "runMain graft.ScaleSweep eqdel [nRows]"
     */
-  private def eqDeleteSweep(spark: org.apache.spark.sql.SparkSession,
+  private def eqDeleteSweep(spark: SparkSession,
       nRows: Long): Unit = {
     import sources.IcebergLite
-    def freshTable(): String = {
-      val root = tempDir("graft_eqdel_sweep").resolve("t").toString
-      IcebergLite.createTable(root)
-      IcebergLite.append(spark, root,
-        spark.range(nRows).select(col("id").as("k"),
-          (col("id") % 1000 * 1.0).as("amount"),
-          concat(lit("v"), col("id")).as("v")).repartition(64))
-      root
-    }
+    def freshTable(): String = freshKeyedTable(spark, "graft_eqdel_sweep", nRows)
     // every 10th key: touches EVERY file (ids hash-scattered by the
     // repartition) — the worst case for copy-on-write
     def keysDf = spark.range(nRows / 10).select((col("id") * 10).as("k"))
 
     val rootEq = freshTable()
     val filesBefore = IcebergLite.dataFiles(rootEq).map(_.filePath).toSet
-    val t0 = System.nanoTime()
-    IcebergLite.deleteEquality(spark, rootEq, keysDf)
-    val eqWall = (System.nanoTime() - t0) / 1e9
+    val (_, eqWall) = timed(IcebergLite.deleteEquality(spark, rootEq, keysDf))
     val rewrittenEq = IcebergLite.dataFiles(rootEq)
       .count(f => !filesBefore.contains(f.filePath))
-    val t1 = System.nanoTime()
-    val nAfter = IcebergLite.read(spark, rootEq).count()
-    val readWall = (System.nanoTime() - t1) / 1e9
-    val t2 = System.nanoTime()
-    IcebergLite.compact(spark, rootEq)
-    val compactWall = (System.nanoTime() - t2) / 1e9
+    val (nAfter, readWall) = timed(IcebergLite.read(spark, rootEq).count())
+    val (_, compactWall) = timed(IcebergLite.compact(spark, rootEq))
     val pendingAfterCompact = IcebergLite.eqDeletes(rootEq).size
     val nCompacted = IcebergLite.read(spark, rootEq).count()
 
@@ -1954,10 +1447,8 @@ object ScaleSweep {
     val cowBefore = IcebergLite.dataFiles(rootCow).map(_.filePath).toSet
     val tombstones = keysDf.select(col("k"), lit(null).cast("double").as("amount"),
       lit(null).cast("string").as("v"), lit(true).as("op_del"))
-    val t3 = System.nanoTime()
-    IcebergLite.merge(spark, rootCow, tombstones, keyCols = Seq("k"),
-      maxKeyPrune = 100, tombstoneCol = Some("op_del"))
-    val cowWall = (System.nanoTime() - t3) / 1e9
+    val (_, cowWall) = timed(IcebergLite.merge(spark, rootCow, tombstones, keyCols = Seq("k"),
+      maxKeyPrune = 100, tombstoneCol = Some("op_del")))
     val rewrittenCow = IcebergLite.dataFiles(rootCow)
       .count(f => !cowBefore.contains(f.filePath))
     val nCow = IcebergLite.read(spark, rootCow).count()
@@ -1983,18 +1474,10 @@ object ScaleSweep {
     *
     *   sbt -batch "runMain graft.ScaleSweep eqdelk [nRows]"
     */
-  private def eqdelKSweep(spark: org.apache.spark.sql.SparkSession,
+  private def eqdelKSweep(spark: SparkSession,
       nRows: Long): Unit = {
     import sources.IcebergLite
-    def freshTable(): String = {
-      val root = tempDir("graft_eqdelk_sweep").resolve("t").toString
-      IcebergLite.createTable(root)
-      IcebergLite.append(spark, root,
-        spark.range(nRows).select(col("id").as("k"),
-          (col("id") % 1000 * 1.0).as("amount"),
-          concat(lit("v"), col("id")).as("v")).repartition(64))
-      root
-    }
+    def freshTable(): String = freshKeyedTable(spark, "graft_eqdelk_sweep", nRows)
     val batch = nRows / 100
     val results = Seq(1, 4, 16).map { k =>
       val root = freshTable()
@@ -2007,9 +1490,7 @@ object ScaleSweep {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.size
       IcebergLite.read(spark, root).count() // warm (page cache, codegen)
-      val t = System.nanoTime()
-      val n = IcebergLite.read(spark, root).count()
-      val wall = (System.nanoTime() - t) / 1e9
+      val (n, wall) = timed(IcebergLite.read(spark, root).count())
       require(n == nRows - k * batch, s"survivors $n at K=$k")
       require(joins <= 3, s"K=$k pending deletes must cost ≤3 joins, got $joins")
       (k, joins, math.round(wall * 100) / 100.0)
@@ -2021,14 +1502,6 @@ object ScaleSweep {
       }.mkString(",") + "}")
   }
 
-  /** sf0.1 LAKEHOUSE anchor (r10): the eq-delete, position-delete and
-    * type-widening lifecycles against a real sf0.1 lineitem table
-    * (~600k rows) — the same scale point the TPC-H bench prices — so
-    * the merge-on-read evidence extends beyond row-scale fixtures.
-    *
-    *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-    *     sbt -batch "runMain graft.ScaleSweep lakehouse"
-    */
   /** Copy-on-write UPDATE at the bench's scale point: sf0.1 lineitem
     * partitioned 7 ways on l_linenumber. A predicate naming one
     * partition must rewrite only that partition's files (the rest
@@ -2036,9 +1509,8 @@ object ScaleSweep {
     * on wall — the scoping SQL `UPDATE ... WHERE` rides on.
     *     sbt -batch "runMain graft.ScaleSweep update"
     */
-  private def updateSweep(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def updateSweep(spark: SparkSession, sfDir: String): Unit = {
     import sources.IcebergLite
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = tempDir("graft_update_sweep").resolve("t").toString
     IcebergLite.createTable(root)
     val li = Engine.t(spark, sfDir, "lineitem")
@@ -2056,11 +1528,9 @@ object ScaleSweep {
     val sumBefore = IcebergLite.read(spark, root)
       .agg(sum(col("l_extendedprice"))).head.getDouble(0)
 
-    val t0 = System.nanoTime()
-    IcebergLite.updateWhere(spark, root,
+    val (_, prunedWall) = timed(IcebergLite.updateWhere(spark, root,
       col("l_linenumber") === "1" && col("l_quantity") <= 25.0,
-      Seq("l_extendedprice" -> (col("l_extendedprice") + 1.0)))
-    val prunedWall = (System.nanoTime() - t0) / 1e9
+      Seq("l_extendedprice" -> (col("l_extendedprice") + 1.0))))
     val after = IcebergLite.dataFiles(root).map(_.filePath)
     val carried = before.toSet.intersect(after.toSet)
     require(before.filterNot(_.contains("l_linenumber=1")).forall(carried.contains),
@@ -2072,11 +1542,9 @@ object ScaleSweep {
 
     // contrast: the same assignment with an unprunable predicate
     // rewrites every file
-    val t1 = System.nanoTime()
-    IcebergLite.updateWhere(spark, root,
+    val (_, fullWall) = timed(IcebergLite.updateWhere(spark, root,
       col("l_quantity") % 2.0 === 1.0,
-      Seq("l_extendedprice" -> (col("l_extendedprice") + 1.0)))
-    val fullWall = (System.nanoTime() - t1) / 1e9
+      Seq("l_extendedprice" -> (col("l_extendedprice") + 1.0))))
     println(
       s"""{"sweep":"update","sf":"${sfDir.split('/').last}","rows":$nRows,""" +
       s""""files":${before.size},"touchedRows":$expectTouched,""" +
@@ -2092,9 +1560,8 @@ object ScaleSweep {
     * claim that the SQL layer adds analysis-time machinery only.
     *     SPARK_GRAFT_SF_DIR=... sbt -batch "runMain graft.ScaleSweep sqldml"
     */
-  private def sqlDmlSweep(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def sqlDmlSweep(spark: SparkSession, sfDir: String): Unit = {
     import sources.{Catalog, IcebergLite}
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = tempDir("graft_sqldml_sweep").toString
     Catalog.init(root)
     spark.conf.set("spark.sql.catalog.sweepcat",
@@ -2106,9 +1573,6 @@ object ScaleSweep {
         col("l_quantity").cast("double").as("qty"),
         col("l_extendedprice").cast("double").as("price"))
       .createOrReplaceTempView("li_src")
-    def timed[A](f: => A): (A, Double) = {
-      val t = System.nanoTime(); val a = f; (a, (System.nanoTime() - t) / 1e9)
-    }
     val (_, ctasWall) = timed(spark.sql(
       "CREATE TABLE sweepcat.db.li PARTITIONED BY (ln) AS SELECT * FROM li_src"))
     val path = Catalog.tablePath(root, "db", "li")
@@ -2170,9 +1634,16 @@ object ScaleSweep {
       s""""rowsAfter":$after}""")
   }
 
-  private def lakehouseSweep(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** sf0.1 LAKEHOUSE anchor (r10): the eq-delete, position-delete and
+    * type-widening lifecycles against a real sf0.1 lineitem table
+    * (~600k rows) — the same scale point the TPC-H bench prices — so
+    * the merge-on-read evidence extends beyond row-scale fixtures.
+    *
+    *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+    *     sbt -batch "runMain graft.ScaleSweep lakehouse"
+    */
+  private def lakehouseSweep(spark: SparkSession, sfDir: String): Unit = {
     import sources.IcebergLite
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = tempDir("graft_lakehouse_sweep").resolve("t").toString
     IcebergLite.createTable(root)
     val li = Engine.t(spark, sfDir, "lineitem")
@@ -2180,9 +1651,7 @@ object ScaleSweep {
         col("l_quantity").cast("double").as("l_quantity"),
         col("l_extendedprice").cast("double").as("l_extendedprice"))
     val nRows = li.count()
-    val tW = System.nanoTime()
-    IcebergLite.append(spark, root, li.repartition(32))
-    val writeWall = (System.nanoTime() - tW) / 1e9
+    val (_, writeWall) = timed(IcebergLite.append(spark, root, li.repartition(32)))
 
     // EQ-DELETE lifecycle: every orderkey ≡ 0 (mod 10) — high-
     // cardinality keys scattered over every file
@@ -2191,12 +1660,8 @@ object ScaleSweep {
     val nDelKeys = delKeys.count()
     val expectAfter = IcebergLite.read(spark, root)
       .filter(col("l_orderkey") % 10 =!= 0).count()
-    val t0 = System.nanoTime()
-    IcebergLite.deleteEquality(spark, root, delKeys)
-    val eqWall = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val nAfterEq = IcebergLite.read(spark, root).count()
-    val eqReadWall = (System.nanoTime() - t1) / 1e9
+    val (_, eqWall) = timed(IcebergLite.deleteEquality(spark, root, delKeys))
+    val (nAfterEq, eqReadWall) = timed(IcebergLite.read(spark, root).count())
     require(nAfterEq == expectAfter, s"$nAfterEq vs $expectAfter")
 
     // POSITION-DELETE lifecycle: locate ~10^5 rows by predicate via
@@ -2207,48 +1672,36 @@ object ScaleSweep {
       .groupBy(_.getAs[String]("_file"))
       .map { case (f, rs) => f -> rs.map(_.getAs[Long]("_pos")).toSeq }
     val nPos = hits.values.map(_.size).sum
-    val t2 = System.nanoTime()
-    IcebergLite.deletePositions(spark, root, hits)
-    val posWall = (System.nanoTime() - t2) / 1e9
+    val (_, posWall) = timed(IcebergLite.deletePositions(spark, root, hits))
     val snapJsonBytes = java.nio.file.Files.size(java.nio.file.Paths.get(
       s"$root/metadata/snap-${IcebergLite.currentSnapshotId(root).get}.snapshot.json"))
-    val t3 = System.nanoTime()
-    val nAfterPos = IcebergLite.read(spark, root).count()
-    val posReadWall = (System.nanoTime() - t3) / 1e9
+    val (nAfterPos, posReadWall) = timed(IcebergLite.read(spark, root).count())
     require(nAfterPos == nAfterEq - nPos, s"$nAfterPos vs ${nAfterEq - nPos}")
 
     // TYPE-WIDENING lifecycle: metadata-only promote, then a wide
     // append, unified read across both physical generations
-    val t4 = System.nanoTime()
-    IcebergLite.widenColumn(spark, root, "l_linenumber",
-      org.apache.spark.sql.types.LongType)
-    val widenWall = (System.nanoTime() - t4) / 1e9
+    val (_, widenWall) = timed(IcebergLite.widenColumn(spark, root, "l_linenumber",
+      org.apache.spark.sql.types.LongType))
     IcebergLite.append(spark, root,
       spark.range(1).select(lit(900000001L).as("l_orderkey"),
         lit(1L).as("l_partkey"), lit(3000000000L).as("l_linenumber"),
         lit(1.0).as("l_quantity"), lit(1.0).as("l_extendedprice")))
-    val t5 = System.nanoTime()
-    val maxLine = IcebergLite.read(spark, root)
-      .agg(max(col("l_linenumber"))).collect()(0).getLong(0)
-    val widenReadWall = (System.nanoTime() - t5) / 1e9
+    val (maxLine, widenReadWall) = timed(IcebergLite.read(spark, root)
+      .agg(max(col("l_linenumber"))).collect()(0).getLong(0))
     require(maxLine == 3000000000L, s"widened read lost the long gen: $maxLine")
 
     // CDC-OUT at this scale: the changelog of the WHOLE lifecycle
     // (eq-delete, pos-delete, widen, append) — per-commit cost bounded
     // by touched files, so the wall prices the delete diffs, not a
     // table-sized compare
-    val t5b = System.nanoTime()
-    val changes = IcebergLite.changelogRead(spark, root, fromSnapshotId = 1L)
+    val (changes, changelogWall) = timed(IcebergLite.changelogRead(spark, root, fromSnapshotId = 1L)
       .groupBy(col("_change_type")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val changelogWall = (System.nanoTime() - t5b) / 1e9
+      .map(r => r.getString(0) -> r.getLong(1)).toMap)
     require(changes.getOrElse("delete", 0L) == (nRows - nAfterEq) + nPos,
       s"changelog deletes ${changes}")
 
     // compaction retires all pending delete forms at this scale
-    val t6 = System.nanoTime()
-    IcebergLite.compact(spark, root)
-    val compactWall = (System.nanoTime() - t6) / 1e9
+    val (_, compactWall) = timed(IcebergLite.compact(spark, root))
     require(IcebergLite.eqDeletes(root).isEmpty &&
       IcebergLite.posDeletes(root).isEmpty)
     require(IcebergLite.read(spark, root).count() == nAfterPos + 1)
@@ -2279,7 +1732,7 @@ object ScaleSweep {
     *
     *   sbt -batch "runMain graft.ScaleSweep writemeta [nRows]"
     */
-  private def writeMetaSweep(spark: org.apache.spark.sql.SparkSession,
+  private def writeMetaSweep(spark: SparkSession,
       nRows: Long): Unit = {
     import sources.IcebergLite
     val nParts = 2000
@@ -2292,9 +1745,8 @@ object ScaleSweep {
       (col("id") / rowsPer).cast("long").as("part"),
       (col("id") % 1000 * 1.0).as("amount"))
       .repartition(col("part"))
-    val t0 = System.nanoTime()
-    IcebergLite.append(spark, root, df, partitionColumns = Seq("part"))
-    val appendWall = (System.nanoTime() - t0) / 1e9
+    val (_, appendWall) =
+      timed(IcebergLite.append(spark, root, df, partitionColumns = Seq("part")))
     val files = IcebergLite.dataFiles(root)
     // per-FILE bounds, not shared partition bounds: every file's k
     // range is its own
@@ -2304,9 +1756,8 @@ object ScaleSweep {
     val withSizes = files.count(_.fileSizeBytes > 0)
     // a point filter on k prunes to exactly the file(s) holding it
     val probe = (rowsPer * 7 + 1).toString
-    val tPlan = System.nanoTime()
-    val kept = IcebergLite.dataFiles(root, filters = Seq(IcebergLite.Eq("k", probe)))
-    val planWall = (System.nanoTime() - tPlan) / 1e9
+    val (kept, planWall) =
+      timed(IcebergLite.dataFiles(root, filters = Seq(IcebergLite.Eq("k", probe))))
     println(
       s"""{"sweep":"writemeta","rows":$nRows,"files":${files.size},""" +
       s""""appendWallSec":${math.round(appendWall * 100) / 100.0},""" +
@@ -2314,76 +1765,6 @@ object ScaleSweep {
       s""""distinctFileBounds":$distinctBounds,"footerTrueCounts":$withCounts,""" +
       s""""exactSizes":$withSizes,"pointFilterKept":${kept.size},""" +
       s""""planSec":${math.round(planWall * 1000) / 1000.0}}""")
-  }
-
-  private def annSweep(spark: org.apache.spark.sql.SparkSession,
-      listener: StageListener, nDocs: Long): Unit = {
-    val dim = 32
-    val k = 10
-    // materialize to parquet and scan back: the shape of real use (the
-    // corpus lives in storage), and a generator-rooted self-referencing
-    // plan trips constraint propagation on the cell_id alias. Unique
-    // temp dir per sweep run — a fixed path would let two concurrent
-    // sweeps overwrite each other's corpus mid-read (sweeps are rare
-    // manual runs, so the per-run dir doesn't meaningfully accumulate).
-    val corpusPath = tempDir("graft_ann_sweep").resolve("emb").toString
-    embeddingsDf(spark, nDocs, dim).write.mode("overwrite").parquet(corpusPath)
-    val corpus = spark.read.parquet(corpusPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    corpus.count()
-    // materialized as a standalone 20-row frame (bounded collect), the
-    // shape of real use — queries are a small separate table, not a
-    // projection of the corpus plan (a range×range self-join trips
-    // Catalyst's relation dedup on identical generator plans)
-    val qPlan = corpus
-      .filter(col("doc_id") % (nDocs / 20L) === 7)
-      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
-    val queries = spark.createDataFrame(
-      java.util.Arrays.asList(qPlan.collect(): _*), qPlan.schema)
-    val nQueries = queries.count()
-
-    val t0 = System.nanoTime()
-    val s0 = listener.snapshot()
-    val brute = operators.Similarity.bruteForceTopK(
-        corpus, queries, "doc_id", "vec", "query_id", "qvec", k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bruteRows = brute.count()
-    val bruteWall = (System.nanoTime() - t0) / 1e9
-    val s1 = listener.snapshot()
-
-    // fit (amortized once per index build) timed separately from the
-    // per-query-batch probe — the number that matters for serving
-    val tFit = System.nanoTime()
-    val index = operators.Similarity.kmeansCentroids(
-      corpus, "doc_id", "vec", nCells = 64, iters = 2)
-    val fitWall = (System.nanoTime() - tFit) / 1e9
-
-    val t1 = System.nanoTime()
-    val ivf = operators.Similarity.ivfTopK(
-        corpus, queries, "doc_id", "vec", "query_id", "qvec", k,
-        nCells = 64, nProbe = 8, centroids = Some(index))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ivfRows = ivf.count()
-    val ivfWall = (System.nanoTime() - t1) / 1e9
-    val s2 = listener.snapshot()
-
-    val hit = ivf.select(col("query_id"), col("neighbor_id"))
-      .join(brute.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id")).count()
-    val recall = if (bruteRows == 0) 0.0 else hit.toDouble / bruteRows
-
-    val (straggler, maxTaskSec) = listener.worstStraggler()
-    def mb(b: Long): Double = math.round(b / 1e5) / 10.0
-    println(
-      s"""{"sweep":"ann","docs":$nDocs,"dim":$dim,"queries":$nQueries,"k":$k,""" +
-      s""""bruteWallSec":${math.round(bruteWall * 10) / 10.0},""" +
-      s""""bruteShuffleReadMB":${mb(s1._1 - s0._1)},"bruteShuffleWriteMB":${mb(s1._2 - s0._2)},""" +
-      s""""ivfFitWallSec":${math.round(fitWall * 10) / 10.0},""" +
-      s""""ivfProbeWallSec":${math.round(ivfWall * 10) / 10.0},""" +
-      s""""ivfShuffleReadMB":${mb(s2._1 - s1._1)},"ivfShuffleWriteMB":${mb(s2._2 - s1._2)},""" +
-      s""""ivfRows":$ivfRows,"recallVsExact":${math.round(recall * 1000) / 1000.0},""" +
-      s""""worstStragglerRatio":${math.round(straggler * 10) / 10.0},""" +
-      s""""maxTaskSec":${math.round(maxTaskSec * 10) / 10.0}}""")
   }
 
   /** STREAMING scale sweep (`SPARK_GRAFT_SF_DIR=... runMain
@@ -2409,11 +1790,10 @@ object ScaleSweep {
     * — the 100 TB predictor: windowed-agg state is O(open windows ×
     * types), dedup state O(ids within the watermark horizon), session
     * state O(users) — all bounded, none O(stream length). */
-  private def streamSweep(spark: org.apache.spark.sql.SparkSession,
+  private def streamSweep(spark: SparkSession, sfDir: String,
       replicas: Int): Unit = {
     import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.types.TimestampType
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val base = Engine.t(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -2433,7 +1813,7 @@ object ScaleSweep {
     val chunked = feed.withColumn("chunk",
       ntile(chunks).over(org.apache.spark.sql.expressions.Window
         .orderBy(col("ts"), col("event_id"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // written SEQUENTIALLY so file mtimes follow event time — the file
     // source's arrival order IS the time order, and no row is ever
     // late (chunk k+1's min ts >= chunk k's max ts > its watermark)
@@ -2467,7 +1847,6 @@ object ScaleSweep {
       q.stop()
       (wall, stateRows, dataBatches)
     }
-    def r2(d: Double) = math.round(d * 100) / 100.0
 
     // 1) watermarked tumbling windowed agg, append mode
     val (winWall, winState, winBatches) =
@@ -2532,14 +1911,14 @@ object ScaleSweep {
       s"stream-stream join emitted $jRows matches, batch witness says $jBatch")
 
     println(s"""{"sweep":"stream","events":$nEvents,"replicas":$replicas,""" +
-      s""""chunks":$chunks,"prepWallSec":${r2(prepWall)},""" +
-      s""""windowWallSec":${r2(winWall)},"windowRowsPerSec":${(nEvents / winWall).toLong},""" +
+      s""""chunks":$chunks,"prepWallSec":${r(prepWall, 2)},""" +
+      s""""windowWallSec":${r(winWall, 2)},"windowRowsPerSec":${(nEvents / winWall).toLong},""" +
       s""""windowStateRows":$winState,"windowBatches":$winBatches,""" +
-      s""""sessionWallSec":${r2(sesWall)},"sessionRowsPerSec":${(nEvents / sesWall).toLong},""" +
+      s""""sessionWallSec":${r(sesWall, 2)},"sessionRowsPerSec":${(nEvents / sesWall).toLong},""" +
       s""""sessionStateRows":$sesState,""" +
-      s""""dedupWallSec":${r2(ddWall)},"dedupRowsPerSec":${(2 * nEvents / ddWall).toLong},""" +
+      s""""dedupWallSec":${r(ddWall, 2)},"dedupRowsPerSec":${(2 * nEvents / ddWall).toLong},""" +
       s""""dedupStateRows":$ddState,""" +
-      s""""joinWallSec":${r2(jWall)},"joinRowsPerSec":${(nEvents / jWall).toLong},""" +
+      s""""joinWallSec":${r(jWall, 2)},"joinRowsPerSec":${(nEvents / jWall).toLong},""" +
       s""""joinStateRows":$jState,"joinMatches":$jRows,""" +
       s""""witnesses":true}""")
   }

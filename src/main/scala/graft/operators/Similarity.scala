@@ -995,7 +995,11 @@ object Similarity {
         // sum + non-null count as 2×dim primitive agg columns keeps
         // the aggregate a codegen HashAggregate whose partial phase
         // rides the assignment join's existing __s partitioning (no
-        // extra exchange when the packed side shuffle-joins).
+        // extra exchange when the packed side shuffle-joins). Codegen
+        // holds only while those 2×dim + 3 columns stay within
+        // spark.sql.codegen.maxFields (default 100): above dim ≈ 49
+        // whole-stage codegen is off for this aggregate (same results,
+        // interpreted speed).
         // Explode-form semantics preserved exactly: NULL/empty vectors
         // contribute no rows (the where), a position counts only
         // vectors that reach it non-null, an all-missing position

@@ -178,9 +178,8 @@ object TpchQueries extends QueryCatalog {
     // at sf0.1/sf10/sf100, zero spill at all three.
     (s, dir) => sql(s, dir)(q04SparkSql))
 
-  /** The shipped q4 SQL — shared with the ScaleSweep A/B runners so
-    * the evidence can never desync from the catalog. */
-  private[graft] val q04SparkSql = """
+  /** The shipped q4 SQL. */
+  private val q04SparkSql = """
       SELECT o_orderpriority, count(*) AS order_count
       FROM orders
       JOIN (SELECT l_orderkey, max(l_shipdate) AS max_ship
@@ -400,8 +399,9 @@ object TpchQueries extends QueryCatalog {
     // ReuseExchange serves the scalar subquery from the same shuffle —
     // the round-1 shape scanned lineitem twice (VERDICT r1 item 7).
     // REPARTITION(l_partkey) on the join output is the r16
-    // high-cardinality-aggregation fix (ScaleSweep q11ab at sf100,
-    // docs/BENCH_NOTES.md): with ~20M groups from 600M rows, map-side
+    // high-cardinality-aggregation fix (the retired q11ab A/B at
+    // sf100, docs/BENCH_NOTES.md; re-measure with `ScaleSweep ab`):
+    // with ~20M groups from 600M rows, map-side
     // partial aggregation combines almost nothing yet builds and
     // spills 45.3 GB of hash tables; colocating keys FIRST makes the
     // aggregate's hash table keys/partitions-sized (zero spill, wall
@@ -412,8 +412,8 @@ object TpchQueries extends QueryCatalog {
     // sf100 78.6/99.0 vs 102.2/120.7 s — spill stays zero).
     (s, dir) => sql(s, dir)(q11SparkSql))
 
-  /** The shipped q11 SQL — shared with the ScaleSweep A/B runners. */
-  private[graft] val q11SparkSql = """
+  /** The shipped q11 SQL. */
+  private val q11SparkSql = """
       WITH j AS (SELECT /*+ REBALANCE(l_partkey) */ l_partkey, l_extendedprice
                  FROM lineitem, supplier WHERE l_suppkey = s_suppkey),
            pp AS (SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS dval
@@ -481,8 +481,8 @@ object TpchQueries extends QueryCatalog {
     // side exists to build a filter from.
     (s, dir) => sql(s, dir)(q13SparkSql))
 
-  /** The shipped q13 SQL — shared with the ScaleSweep A/B runners. */
-  private[graft] val q13SparkSql = """
+  /** The shipped q13 SQL. */
+  private val q13SparkSql = """
       SELECT c_count, count(*) AS custdist
       FROM (SELECT c_custkey, coalesce(cnt, 0) AS c_count
             FROM customer LEFT JOIN
@@ -568,8 +568,8 @@ object TpchQueries extends QueryCatalog {
     // sf10, parity at sf100, zero spill everywhere).
     (s, dir) => sql(s, dir)(q16SparkSql))
 
-  /** The shipped q16 SQL — shared with the ScaleSweep A/B runners. */
-  private[graft] val q16SparkSql = """
+  /** The shipped q16 SQL. */
+  private val q16SparkSql = """
       SELECT p_brand, p_type, p_size, count(*) AS supplier_cnt
       FROM (SELECT DISTINCT p_brand, p_type, p_size, l_suppkey
             FROM (SELECT /*+ REBALANCE(p_brand, p_type, p_size, l_suppkey), SHUFFLE_HASH(part) */
@@ -613,8 +613,9 @@ object TpchQueries extends QueryCatalog {
       ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
       LIMIT 100"""),
     // REPARTITION(l_orderkey) under the HAVING subquery is the r17
-    // high-cardinality-aggregation fix (ScaleSweep q18ab at sf100,
-    // docs/BENCH_NOTES.md): ~150M l_orderkey groups from 600M rows —
+    // high-cardinality-aggregation fix (the retired q18ab A/B at
+    // sf100, docs/BENCH_NOTES.md; re-measure with `ScaleSweep ab`):
+    // ~150M l_orderkey groups from 600M rows —
     // map-side partial aggregation combines ~4 rows per key yet builds
     // and spills 50.6 GB of hash tables (+7.1 GB disk); colocating the
     // keys first zeroes the spill AND runs 27–30% faster (108–113 s →
@@ -627,9 +628,8 @@ object TpchQueries extends QueryCatalog {
     // aggregate state and spilled 39.7+4.8 GB at sf100 (measured).
     (s, dir) => sql(s, dir)(q18SparkSql))
 
-  /** The shipped q18 SQL — shared with the ScaleSweep A/B runner and
-    * PlanDump so the evidence can never desync from the catalog. */
-  private[graft] val q18SparkSql = """
+  /** The shipped q18 SQL. */
+  private val q18SparkSql = """
       SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
              round(sum(l_quantity), 2) AS sum_qty
       FROM customer, orders, lineitem
@@ -730,7 +730,7 @@ object TpchQueries extends QueryCatalog {
     * 2:1 under REBALANCE, and the doubled per-task state of the
     * ~150M-key (order, supplier) dedupe aggregate spilled 39.7 GB mem
     * + 4.8 GB disk (measured; REPARTITION: zero). */
-  private[graft] val q21SparkSql = """
+  private val q21SparkSql = """
       WITH j AS (SELECT /*+ REPARTITION(l_orderkey) */ l_orderkey, l_suppkey,
                         CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY
                              THEN 1 ELSE 0 END AS late
@@ -791,6 +791,13 @@ object TpchQueries extends QueryCatalog {
       WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
       GROUP BY cntrycode
       ORDER BY cntrycode"""))
+
+  /** The rows the r16–r18 spill campaign reshaped: each ships a plan
+    * different from its stock oracle SQL. `ScaleSweep ab` re-measures
+    * stock against shipped on these by default, and `PlanDump` captures
+    * their before/after plans. */
+  val reshaped: Seq[String] = Seq(
+    "tpch_q04", "tpch_q11", "tpch_q13", "tpch_q16", "tpch_q18", "tpch_q21")
 
   override def defs: Seq[Q] = Seq(
     q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11,

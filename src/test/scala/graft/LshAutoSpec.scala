@@ -13,8 +13,8 @@ import graft.operators.Similarity
   * estimator's determinism (sample order-, partition- and
   * parallelism-independent; core pure function repeatable) and the
   * law's direction (same corpus statistics + bigger corpus ⇒ never
-  * narrower bands). The 20M/40M anchor calibration lives in ScaleSweep
-  * (`lshauto` mode) and SCALE.md. */
+  * narrower bands). The 20M/40M anchor calibration lives in SCALE.md;
+  * re-run it with `scripts/run_main.sh graft.ScaleSweep lshauto <nDocs>`. */
 class LshAutoSpec extends AnyFunSuite {
   import TestSpark._
 
