@@ -475,8 +475,8 @@ object IcebergLite {
     * delete time. Scoping is by NAMED file path (no sequence number:
     * a rewrite that drops/rewrites a target file materializes its
     * positions with it), and `targetLower`/`targetUpper` — the key
-    * file's own min/max on its `file_path` column, from the same
-    * distributed stats pass data writes use — prune the read-side
+    * file's own min/max on its `file_path` column, recorded by the
+    * write tasks exactly as for data files — prune the read-side
     * anti-join to reads that actually touch a named file. Snapshot
     * metadata is O(1) per delete file however many positions it
     * carries (a 10⁵-row erasure batch is one bounded entry, not a
@@ -953,7 +953,7 @@ object IcebergLite {
     * would key partition recovery and bounds lookups on the escaped
     * form: recovery surfaces `a%3Ab` and the per-partition bounds
     * lookup silently misses (files lose their pruning bounds). */
-  private def unescapeHive(s: String): String =
+  private[graft] def unescapeHive(s: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
   /** Whether a recorded bound for a column of type `dt` is SOUND under
@@ -967,127 +967,12 @@ object IcebergLite {
     * comparator: numerics compare numerically, dates/timestamps render
     * fixed-width non-numeric strings, booleans order
     * 'false' < 'true' both ways. */
-  private def boundSound(dt: org.apache.spark.sql.types.DataType, v: String): Boolean =
+  private[graft] def boundSound(dt: org.apache.spark.sql.types.DataType, v: String): Boolean =
     dt match {
       case org.apache.spark.sql.types.StringType =>
         v.toLongOption.isEmpty && v.toDoubleOption.isEmpty
       case _ => true
     }
-
-  /** Strip the URI scheme and percent-decode a `_metadata.file_path` /
-    * `input_file_name()` value to the plain filesystem path — the same
-    * decoding [[inputFileCol]] applies at eval time (literal `+`
-    * shielded: URL form-decoding would corrupt it into a space). */
-  private def decodeFileUri(s: String): String =
-    java.net.URLDecoder.decode(
-      s.replaceFirst("^[a-z]+:/+", "/").replace("+", "%2B"),
-      java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Per-FILE manifest entries for the parquet files just written under
-    * `data/<runDir>/` — ONE distributed aggregate over the written
-    * files, grouped on the hidden `_metadata` column (file path and
-    * exact file size come from the scan itself, so no driver walk, no
-    * per-file footer opens: at a 10⁶-file write the driver's only work
-    * is holding the O(files) entry list the manifest needs anyway).
-    * Each file's TRUE min/max column bounds and record count are
-    * aggregated where the file lives — this is what real Iceberg's
-    * write tasks report into manifests, and per-file (not
-    * per-partition-tuple) bounds are what make file-level pruning
-    * selective when a partition holds many files. The read-back is
-    * columnar over freshly-written (page-cached) files with the
-    * writer's OWN schema — no partition-value re-inference, exact
-    * value round-trip, and the bounds use the identical
-    * `cast(col AS string)` encoding filters compare against.
-    * Partition values are parsed from the hive path segments
-    * (URI-decoded, then hive-unescaped). */
-  private def perFileEntries(spark: SparkSession, tablePath: String, runDir: String,
-      dataSchema: org.apache.spark.sql.types.StructType): Seq[DataFile] = {
-    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, max, min}
-    val root = s"$tablePath/data/$runDir"
-    val written = spark.read.schema(dataSchema)
-      .option("recursiveFileLookup", "true").parquet(root)
-    val dataCols = dataSchema.fields.map(_.name)
-    val aggs = count(lit(1)).as("__n") +: dataCols.flatMap(c =>
-      Seq(min(col(c)).cast("string").as(s"__min_$c"),
-        max(col(c)).cast("string").as(s"__max_$c"),
-        // per-file approx NDV (HLL++, one long per column in the
-        // manifest entry) — the per-file CBO signal; the MERGEABLE
-        // cross-file form is the sketch sidecar (writeStatsSidecar)
-        approx_count_distinct(col(c)).as(s"__ndv_$c")))
-    val rootAbs = Paths.get(root).toAbsolutePath.normalize
-    val tableAbs = Paths.get(tablePath).toAbsolutePath.normalize
-    written
-      .groupBy(col("_metadata.file_path").as("__f"),
-        col("_metadata.file_size").as("__sz"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val abs = Paths.get(decodeFileUri(r.getAs[String]("__f")))
-        val rel = tableAbs.relativize(abs).toString
-        val part = rootAbs.relativize(abs).iterator().asScala.map(_.toString)
-          .filter(_.contains("=")).map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            unescapeHive(k) -> unescapeHive(v)
-          }.toMap
-        def sideOf(prefix: String) = dataCols.flatMap { c =>
-          Option(r.getAs[Any](s"$prefix$c")).map(_.toString)
-            .filter(boundSound(dataSchema(c).dataType, _)).map(c -> _)
-        }.toMap
-        DataFile(
-          filePath = rel,
-          fileFormat = "PARQUET", partition = part,
-          recordCount = r.getAs[Long]("__n"),
-          lowerBounds = sideOf("__min_"), upperBounds = sideOf("__max_"),
-          sequenceNumber = -1L, // resolved to the commit's sequence at commit
-          fileSizeBytes = r.getAs[Long]("__sz"),
-          ndv = dataCols.map(c => c -> r.getAs[Long](s"__ndv_$c")).toMap)
-      }.sortBy(_.filePath)
-  }
-
-  /** Per-file MERGEABLE NDV sketches as a STATS SIDECAR — the Puffin
-    * analogue: one more distributed aggregate over the just-written
-    * (page-cached) files computes an HLL sketch (Apache DataSketches,
-    * Spark's `hll_sketch_agg`) per (file, column) and writes the rows
-    * straight to `metadata/stats-<runDir>.parquet` — they never pass
-    * through the driver, unlike the O(files) entry list. Per-file
-    * approx NDV longs (in the manifest) cannot be merged into a
-    * table-level distinct count — overlapping value sets make the sum
-    * an overcount and the max an undercount — but HLL sketches union
-    * EXACTLY, which is why real Iceberg stores theta sketches in
-    * Puffin files rather than merged numbers. [[columnStatsMetadata]]
-    * unions exactly the LIVE files' sketches, so compaction/delete
-    * simply orphan dead rows (their paths stop matching) instead of
-    * corrupting the table-level estimate. Types outside the sketch's
-    * domain (int/long/string/binary) sketch their string cast —
-    * deterministic, and NDV-preserving for the types written here.
-    * Returns the sidecar's table-relative path. */
-  private def writeStatsSidecar(spark: SparkSession, tablePath: String,
-      runDir: String, dataSchema: org.apache.spark.sql.types.StructType): String = {
-    import org.apache.spark.sql.functions.{col, hll_sketch_agg, lit, regexp_replace, replace, url_decode}
-    import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
-    val root = s"$tablePath/data/$runDir"
-    val written = spark.read.schema(dataSchema)
-      .option("recursiveFileLookup", "true").parquet(root)
-    val dataCols = dataSchema.fields.map(_.name)
-    val tableAbs = Paths.get(tablePath).toAbsolutePath.normalize.toString + "/"
-    val relPath = replace(url_decode(regexp_replace(regexp_replace(
-      col("_metadata.file_path"), "^[a-z]+:/+", "/"), "\\+", "%2B")),
-      lit(tableAbs), lit(""))
-    val aggs = dataCols.map { c =>
-      val in = dataSchema(c).dataType match {
-        case IntegerType | LongType | StringType | BinaryType => col(c)
-        case _ => col(c).cast("string")
-      }
-      hll_sketch_agg(in).as(s"__hll_$c")
-    }
-    val perFile = written.groupBy(relPath.as("file_path"))
-      .agg(aggs.head, aggs.tail: _*)
-    val melted = dataCols.map(c => perFile.select(col("file_path"),
-        lit(c).as("column"), col(s"__hll_$c").as("sketch")))
-      .reduce(_ unionByName _)
-    val rel = s"metadata/stats-$runDir.parquet"
-    melted.write.mode("overwrite").parquet(s"$tablePath/$rel")
-    rel
-  }
 
   /** Stats sidecars referenced by a snapshot (carried forward by every
     * commit; full rewrites reset the list to their own sidecar). */
@@ -1105,10 +990,10 @@ object IcebergLite {
     * layout when `partitionColumns` is set — written in parallel, one
     * file per task, NOT coalesced) and return one manifest-entry JSON
     * per written parquet file, with TRUE per-file column bounds, record
-    * counts and sizes collected by [[perFileEntries]]'s distributed
-    * stats pass — zero driver-side per-file work. Returns the entry
-    * JSONs and the written DATA schema (for the commit's per-snapshot
-    * schema union). */
+    * counts and sizes recorded by the write tasks themselves
+    * ([[StatsParquet.write]]) — no read-back, zero driver-side per-file work.
+    * Returns the entry JSONs, the written DATA schema (for the commit's
+    * per-snapshot schema union) and the NDV sidecar path. */
   private def writeDataFiles(spark: SparkSession, tablePath: String, df0: DataFrame,
       partitionColumns0: Seq[String], runDir: String,
       trustedPreDerived: Boolean = false)
@@ -1159,25 +1044,13 @@ object IcebergLite {
     // declared per-file row bound: Spark's writer rolls files at the
     // bound natively — a fat tuple under hash distribution stays one
     // TASK but cuts several bounded files, each with its own stats
-    val rowBound = maxRecordsPerFile(tablePath)
-    val writer0 = dfW.write.mode("overwrite")
-    val writer =
-      if (rowBound > 0) writer0.option("maxRecordsPerFile", rowBound) else writer0
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(s"$tablePath/data/$runDir")
-
-    // TRUE per-file bounds/counts/sizes: one distributed stats pass
-    // over the written files (the data files carry exactly the
-    // non-partition columns — hive layout strips the partition ones)
+    val (files, sidecars) = StatsParquet.write(dfW, tablePath, runDir, partitionColumns,
+      maxRecordsPerFile(tablePath), sidecar = true)
+    // the data files carry exactly the non-partition columns — hive
+    // layout strips the partition ones
     val dataSchema = org.apache.spark.sql.types.StructType(
       dfW.schema.fields.filterNot(f => partitionColumns.contains(f.name)))
-    val entries = perFileEntries(spark, tablePath, runDir, dataSchema).map(entryJson)
-    // NDV sketch sidecar (one more distributed agg over the fresh,
-    // page-cached files) — opt-out for stats-insensitive bulk loads
-    val sidecars =
-      if (spark.conf.getOption("graft.iceberg.stats.sketches").contains("false")) Nil
-      else Seq(writeStatsSidecar(spark, tablePath, runDir, dataSchema))
-    (entries, dataSchema, sidecars)
+    (files.map(entryJson), dataSchema, sidecars)
   }
 
   /** Thrown when a commit finds the table advanced past the snapshot
@@ -1878,8 +1751,14 @@ object IcebergLite {
   def read(spark: SparkSession, tablePath: String, snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): DataFrame = {
     val files = planFiles(spark, tablePath, snapshotId, filters)
-    if (files.isEmpty) spark.emptyDataFrame
-    else {
+    if (files.isEmpty) {
+      // every file pruned (or none yet): zero rows, still with the
+      // snapshot's columns, so callers can select/filter on them — a
+      // table that never recorded a schema has no shape to give
+      if (tableSchema(tablePath, snapshotId).isEmpty) spark.emptyDataFrame
+      else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        logicalShape(tablePath, snapshotId))
+    } else {
       // pending merge-on-read deletes anti-apply first (physical
       // names), then the SNAPSHOT's logical column names surface: a
       // renamed column reads under its name as of that snapshot (time
@@ -1913,15 +1792,7 @@ object IcebergLite {
       snapshotId: Option[Long] = None): DataFrame = {
     val base = read(spark, tablePath, snapshotId,
       resolvedMetaFilters(spark, tablePath, condition, snapshotId))
-    if (base.columns.nonEmpty) base.filter(condition)
-    else {
-      // every file pruned: a schema-less empty frame cannot resolve
-      // the condition — answer zero rows WITH the logical shape
-      val shape = logicalShape(tablePath, snapshotId)
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
-      if (shape.isEmpty) base else empty.filter(condition)
-    }
+    if (base.columns.isEmpty) base else base.filter(condition)
   }
 
   /** The snapshot's LOGICAL read shape: data schema (renames applied)
@@ -2004,7 +1875,7 @@ object IcebergLite {
     // the string form BOUNDS carry: a typed literal cast to string by
     // Catalyst itself (dates render "2024-01-01", not day ordinals)
     // rendered under the SESSION timezone — the same clock bounds are
-    // written with (perFileEntries' string cast) and rowPredicate
+    // written with (the write tasks' string cast) and rowPredicate
     // re-parses with, so timestamp literals compare consistently in
     // any session (this repo pins UTC; external sessions may not)
     def litOf(x: Expression): Option[String] = x match {
@@ -2441,21 +2312,24 @@ object IcebergLite {
   }
 
   /** `column_stats` METADATA TABLE — the read side of the Puffin-
-    * analogue NDV sidecars ([[writeStatsSidecar]]): one row per data
+    * analogue NDV sidecars ([[StatsParquet.write]]): one row per data
     * column with the table-level distinct-count estimate, computed by
     * UNIONING exactly the LIVE files' HLL sketches (`hll_union_agg` →
     * `hll_sketch_estimate`) — sketch union is the only correct merge
     * (per-file counts overlap), and filtering to live paths is what
     * keeps compacted/deleted files out of the estimate while their
     * sidecars await expiry. `file_count` says how many live files
-    * contributed (a file written with sketches disabled, or before
-    * they existed, is simply absent — the estimate covers `file_count`
-    * of the live files). Driver cost: O(stats paths); the sketch scan,
+    * contributed (a file written before sketches existed is simply
+    * absent — the estimate covers `file_count` of the live files).
+    * A file's rows can appear twice (a write task re-run after its
+    * first attempt already closed its sidecar part file), so the count
+    * is of distinct files; the union is unchanged by a repeated sketch.
+    * Driver cost: O(stats paths); the sketch scan,
     * semi-join and union run distributed. Column names surface
     * logical. */
   def columnStatsMetadata(spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, hll_sketch_estimate, hll_union_agg, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, countDistinct, hll_sketch_estimate, hll_union_agg, lit}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val shape = StructType(Seq(
       StructField("column", StringType, nullable = false),
@@ -2475,7 +2349,7 @@ object IcebergLite {
       .join(broadcast(liveDf), Seq("file_path"), "left_semi")
     val agged = sdf.groupBy(col("column"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"), lit(true))).as("ndv"),
-        count(lit(1)).as("file_count"))
+        countDistinct(col("file_path")).as("file_count"))
     if (rmap.isEmpty) agged
     else {
       // surface LOGICAL column names (sketches are keyed physical)
@@ -3057,7 +2931,7 @@ object IcebergLite {
     * recorded [targetLower, targetUpper] range on the key file's
     * `file_path` column must cover some path. Plain string order —
     * paths are never numeric-parsing strings, so this is the exact
-    * order the stats pass min/max'd under; missing bounds are
+    * order the write tasks min/max'd under; missing bounds are
     * conservatively in-range. */
   private def posDelMayTarget(d: PosDelete, paths: Seq[String]): Boolean =
     paths.exists(p => d.targetLower.forall(_.compareTo(p) <= 0) &&
@@ -3142,8 +3016,8 @@ object IcebergLite {
     * under `data/posdel-<tag>/` (real Iceberg's position-delete file
     * form), the parent's manifests are carried verbatim, and the
     * snapshot records one bounded entry per written delete file —
-    * path, row count, and the min/max of the named target paths from
-    * the same distributed stats pass data writes use. A 10⁵-position
+    * path, row count, and the min/max of the named target paths,
+    * recorded by the write tasks as data writes are. A 10⁵-position
     * erasure batch costs O(1) snapshot JSON, not a 10⁵-long ordinal
     * list in metadata. `deletes` keys are table-relative file paths
     * as listed by [[dataFiles]]; every key must be a live file
@@ -3180,7 +3054,7 @@ object IcebergLite {
       .flatMap { case (f, ps) => ps.distinct.sorted.map(p => (f, p)) }
     val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
     pairs.foreach { case (f, p) => rows.add(org.apache.spark.sql.Row(f, p)) }
-    commitPosDeleteFiles(spark, tablePath, parentId,
+    commitPosDeleteFiles(tablePath, parentId,
       spark.createDataFrame(rows, posPairSchema))
   }
 
@@ -3219,15 +3093,14 @@ object IcebergLite {
       .limit(1).collect()
     require(bad.isEmpty,
       s"position delete refers to a non-live file or out-of-range ordinal: ${bad.headOption}")
-    commitPosDeleteFiles(spark, tablePath, parentId,
+    commitPosDeleteFiles(tablePath, parentId,
       pairs.select(col("file_path"), col("pos").cast("long").as("pos")))
   }
 
-  private def commitPosDeleteFiles(spark: SparkSession, tablePath: String,
-      parentId: Option[Long], pairs: DataFrame): Long = {
+  private def commitPosDeleteFiles(tablePath: String, parentId: Option[Long],
+      pairs: DataFrame): Long = {
     val runDir = s"posdel-${runTag()}"
-    pairs.distinct().write.mode("overwrite").parquet(s"$tablePath/data/$runDir")
-    val written = perFileEntries(spark, tablePath, runDir, posPairSchema)
+    val (written, _) = StatsParquet.write(pairs.distinct(), tablePath, runDir)
     if (written.isEmpty) {
       // zero matched positions: no delete files, no snapshot — mirror
       // deleteEquality's guard, and don't leave an empty run dir behind
@@ -3251,8 +3124,8 @@ object IcebergLite {
     * tuple (SQL equality — null keys never match) are dead in every
     * data file whose data-sequence is ≤ this commit's. The keys are
     * written DISTRIBUTED as parquet under `data/eqdel-<tag>/` (they
-    * never pass through the driver), with true per-file bounds from
-    * the same stats pass data writes use — those bounds prune the
+    * never pass through the driver), with true per-file bounds the
+    * write tasks record as data writes do — those bounds prune the
     * read-side anti-join to data files whose own bounds overlap the
     * key range. Zero data-file I/O at delete time; the parent's
     * manifests are carried verbatim. Key column names arrive LOGICAL
@@ -3267,8 +3140,7 @@ object IcebergLite {
     val runDir = s"eqdel-${runTag()}"
     // distinct: each key file must be duplicate-free or the read-side
     // outer join would multiply surviving rows
-    keysP.distinct().write.mode("overwrite").parquet(s"$tablePath/data/$runDir")
-    val written = perFileEntries(spark, tablePath, runDir, keysP.schema)
+    val (written, _) = StatsParquet.write(keysP.distinct(), tablePath, runDir)
     if (written.isEmpty) return parentId.getOrElse(0L)
     val newDels = written.map(f => EqDelete(f.filePath, keysP.columns.toSeq,
       -1L, f.recordCount, f.lowerBounds, f.upperBounds))
@@ -4261,8 +4133,8 @@ object IcebergLite {
   /** Sort-based CLUSTER rewrite as a NEW SNAPSHOT — the data-skipping
     * maintenance op: live rows are range-repartitioned on `sortCols`
     * into ~`targetFiles` files (sorted within each), and per-FILE
-    * column bounds are re-derived with one `input_file_name()` stats
-    * pass over the rewritten files. That last step is the point:
+    * column bounds are recorded by the rewrite's own write tasks.
+    * That last step is the point:
     * `append`/`compact` record bounds per partition tuple
     * (conservative-correct but wide), so a predicate on a scattered
     * column keeps every file; after clustering, file ranges on
@@ -4287,9 +4159,9 @@ object IcebergLite {
     * coding would fix that) but per-file BOUNDS are recorded from
     * the actual values, so skipping stays exact either way.
     *
-    * The stats pass is one distributed
-    * aggregate over exactly the rewritten slice — the same cost class
-    * as the rewrite itself. Prior snapshots stay time-travelable.
+    * The bounds, counts and NDV sketches come out of the rewrite's
+    * own write pass — no second scan of the rewritten slice. Prior
+    * snapshots stay time-travelable.
     *
     * `partitionScoped = true` clusters each hive partition's files
     * INDEPENDENTLY: the range shuffle keys on (partition columns,
@@ -4483,23 +4355,14 @@ object IcebergLite {
           .sortWithinPartitions(keys: _*)
           .drop("__z")
       }
-    val rowBound = maxRecordsPerFile(tablePath)
-    val writer0 = df.write.mode("overwrite")
-    val writer =
-      if (rowBound > 0) writer0.option("maxRecordsPerFile", rowBound) else writer0
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(s"$tablePath/data/$runDir")
-
-    // TRUE per-file bounds/counts/sizes — the same distributed stats
-    // pass every write funnels through; after clustering, file ranges
-    // on sortCols are disjoint so min/max skipping becomes surgical
+    // TRUE per-file bounds/counts/sizes from the write tasks — after
+    // clustering, file ranges on sortCols are disjoint so min/max
+    // skipping becomes surgical
+    val (files, statsAdds) = StatsParquet.write(df, tablePath, runDir, partCols,
+      maxRecordsPerFile(tablePath), sidecar = true)
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partCols.contains(f.name)))
-    val entries = perFileEntries(spark, tablePath, runDir, dataSchema).map(entryJson)
-    val statsAdds =
-      if (spark.conf.getOption("graft.iceberg.stats.sketches").contains("false")) Nil
-      else Seq(writeStatsSidecar(spark, tablePath, runDir, dataSchema))
-    commitSnapshot(tablePath, parentId, entries, carriedManifests = Nil,
+    commitSnapshot(tablePath, parentId, files.map(entryJson), carriedManifests = Nil,
       operation = "replace", pendingRowDeletes = Nil, pendingPosDeletes = Nil,
       pendingEqDeletes = Nil, schemaUnion = dataSchema,
       statsFilesSet = statsAdds) // full rewrite resets the sidecar list

@@ -53,8 +53,7 @@ class ScaleSweepSmokeSpec extends AnyFunSuite {
     ("writemeta", Seq("4000"), Map("files" -> "2000", "pointFilterKept" -> "1")),
     ("eqdel", Seq("4000"), Map("filesRewrittenEq" -> "0", "survivors" -> "3600")),
     ("eqdelk", Seq("4000"), Map.empty),
-    // hidden's point lookup probes uid 4242, so it needs > 4242 rows
-    ("hidden", Seq("5000"), Map("rows" -> "5000")),
+    ("hidden", Seq("1000"), Map("rows" -> "1000")),
     // at toy size the 32 seed files are themselves under the 32 KB
     // small-file threshold, so they compact along with the stragglers
     ("optimize", Seq("4000"), Map("filesAfter" -> "32", "rows" -> "14000")),

@@ -2729,6 +2729,16 @@ class SourcesSpec extends AnyFunSuite {
     val (idNdv, idFiles) = cs("id")
     assert(idFiles == 2L && idNdv >= 140 && idNdv <= 160,
       s"union'd sketch estimate must land near the true 150 distinct, got $idNdv")
+    // a write task re-run after its first attempt closed its sidecar
+    // part file leaves a second part with the same (file, column) rows;
+    // column_stats must count each file once
+    val part = Files.list(java.nio.file.Paths.get(s"$root/${sidecars.head}")).iterator()
+      .asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, part.resolveSibling("part-99999-99999.parquet"))
+    val csDup = IcebergLite.columnStatsMetadata(s, root).collect()
+      .map(r => r.getAs[String]("column") ->
+        (r.getAs[Long]("ndv"), r.getAs[Long]("file_count"))).toMap
+    assert(csDup == cs, s"a leftover sidecar part must not change column_stats: $csDup vs $cs")
 
     // compaction resets the sidecar list to its own; the estimate
     // covers the same rows from the single consolidated file
@@ -3380,6 +3390,150 @@ class SourcesSpec extends AnyFunSuite {
     IcebergLite.append(s, root, Seq((6L, "f")).toDF("id", "v").coalesce(1))
     assert(IcebergLite.snapshotTotals(root).isEmpty,
       "carried legacy entries stay honest-unknown")
+  }
+
+
+  /** One row per value class the write-path stats must get right: NaN,
+    * ±∞, −0.0 vs 0.0 (`z`: min and max are a tie, the first value
+    * seen wins), DECIMAL(18,6), dates before 1970, TIMESTAMP_NTZ,
+    * booleans, binary (empty, high-bit bytes), empty / non-ASCII /
+    * numeric-looking strings, an all-null column, and partition
+    * values that need hive escaping. */
+  private def statsFixture(n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val doubles = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, null, 2.5)
+    val strings = Seq("", "é", "日本語", "zeta", null, "Ärger", "10", "abc")
+    val parts = Seq("a/b", "x=y", "with space", "100%", "plain", "c:d")
+    val rows = (0 until n).map { i =>
+      Row(i, i * 1000003L - 5000000L, doubles(i % 7),
+        if ((i / 6) % 2 == 0) 0.0 else -0.0,
+        if (i % 5 == 0) null else java.math.BigDecimal.valueOf(i * 7919L - 40000L, 6),
+        java.sql.Date.valueOf(java.time.LocalDate.of(1900 + i * 37 % 200, 1 + i % 12, 1 + i % 28)),
+        java.time.LocalDateTime.of(2000 + i % 30, 1 + i % 12, 1 + i % 28,
+          i % 24, i % 60, i * 7 % 60, i % 1000 * 1000),
+        if (i % 4 == 3) null else i % 3 == 0,
+        Array.tabulate[Byte](i % 4)(k => (i * 31 + k * 97).toByte),
+        strings(i % 8), null, parts(i % 6))
+    }
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("z", DoubleType),
+      StructField("dec", DecimalType(18, 6)), StructField("dt", DateType),
+      StructField("ts", TimestampNTZType), StructField("b", BooleanType),
+      StructField("bin", BinaryType), StructField("s", StringType),
+      StructField("n", IntegerType), StructField("p", StringType)))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("one-pass write stats equal the read-back reference, field by field") {
+    import graft.sources.IcebergTransforms.{Bucket, PartitionField}
+    import org.apache.spark.sql.types.LongType
+    val s = spark
+    def runDirOf(path: String) = path.split('/')(1)
+    def fileSchema(root: String, runDir: String) =
+      s.read.option("recursiveFileLookup", "true").parquet(s"$root/data/$runDir").schema
+    def reference(root: String, runDirs: Seq[String]) = runDirs.distinct
+      .flatMap(rd => ReadBackStats.entries(s, root, rd, fileSchema(root, rd)))
+      .map(f => f.filePath -> f).toMap
+    def assertEntriesMatch(root: String): Unit = {
+      val got = IcebergLite.dataFiles(root)
+      val want = reference(root, got.map(f => runDirOf(f.filePath)))
+      assert(got.map(_.filePath).toSet == want.keySet)
+      got.foreach { g =>
+        val w = want(g.filePath)
+        Seq(("partition", g.partition, w.partition),
+          ("recordCount", g.recordCount, w.recordCount),
+          ("lowerBounds", g.lowerBounds, w.lowerBounds),
+          ("upperBounds", g.upperBounds, w.upperBounds),
+          ("fileSizeBytes", g.fileSizeBytes, w.fileSizeBytes),
+          ("ndv", g.ndv, w.ndv)).foreach { case (field, a, b) =>
+          assert(a == b, s"$field of ${g.filePath}: write path $a, read-back $b")
+        }
+      }
+    }
+    def assertSketchesMatch(root: String): Unit = {
+      val live = IcebergLite.dataFiles(root).map(_.filePath)
+      val ref = live.map(runDirOf).distinct
+        .map(rd => ReadBackStats.sketches(s, root, rd, fileSchema(root, rd)))
+        .reduce(_ unionByName _)
+      def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Array[Byte]](2).toSeq).toMap
+      val sidecar = s.read.parquet(IcebergLite.statsFiles(root).map(p => s"$root/$p"): _*)
+        .select("file_path", "column", "sketch")
+      assert(keyed(sidecar) == keyed(ref), "sidecar sketches must be byte-identical")
+      val want = ReadBackStats.columnStats(ref, live)
+      assert(ReadBackStats.columnStats(sidecar, live) == want)
+      // column_stats unions in sidecar-file order, which can move an
+      // HLL estimate within its error (lgK 12: ~1.6% per sigma)
+      IcebergLite.columnStatsMetadata(s, root).collect().foreach { r =>
+        val (ndv, fileCount) = want(r.getString(0))
+        assert(r.getLong(2) == fileCount && math.abs(r.getLong(1) - ndv) <= 0.05 * ndv,
+          s"column_stats ${r.getString(0)}: ${(r.getLong(1), r.getLong(2))}, reference ${(ndv, fileCount)}")
+      }
+    }
+
+    // identity partitions needing hive escaping; then rolled files; then
+    // a declared sort order (the same rows land in a different order)
+    val root = Files.createTempDirectory("iceberg_write_stats").toString
+    IcebergLite.createTable(root)
+    IcebergLite.append(s, root, statsFixture(600), Seq("p"))
+    IcebergLite.setMaxRecordsPerFile(root, 7L)
+    IcebergLite.append(s, root, statsFixture(90).coalesce(1), Seq("p"))
+    IcebergLite.setMaxRecordsPerFile(root, 0L)
+    IcebergLite.setSortOrder(root, Seq("d"))
+    IcebergLite.append(s, root, statsFixture(120), Seq("p"))
+    val files = IcebergLite.dataFiles(root)
+    assert(files.map(_.partition("p")).toSet ==
+      Set("a/b", "x=y", "with space", "100%", "plain", "c:d"))
+    assert(files.count(_.recordCount == 7L) >= 6, "the 7-row bound must roll files")
+    assertEntriesMatch(root)
+    assertSketchesMatch(root)
+
+    // a hidden-partition spec; 1,500 rows per bucket push the sketches
+    // past their small-count modes
+    val hidden = Files.createTempDirectory("iceberg_write_stats_hidden").toString
+    IcebergLite.createTable(hidden, Seq(PartitionField("l", Bucket(4), LongType)))
+    IcebergLite.append(s, hidden, statsFixture(6000))
+    assertEntriesMatch(hidden)
+    assertSketchesMatch(hidden)
+
+    // position- and equality-delete key files record the same bounds
+    // and counts the read-back finds in them
+    IcebergLite.deletePositions(s, root, Map(
+      files(0).filePath -> Seq(0L, 1L), files(3).filePath -> Seq(0L)))
+    val pos = IcebergLite.posDeletes(root)
+    val posRef = reference(root, pos.map(d => runDirOf(d.filePath)))
+    assert(pos.map(_.filePath).toSet == posRef.keySet)
+    pos.foreach { d =>
+      val w = posRef(d.filePath)
+      assert((d.recordCount, d.targetLower, d.targetUpper) ==
+        (w.recordCount, w.lowerBounds.get("file_path"), w.upperBounds.get("file_path")))
+    }
+    IcebergLite.deleteEquality(s, root,
+      statsFixture(60).filter(col("i") % 3 === 0).select("s", "d", "dec", "dt"))
+    val eq = IcebergLite.eqDeletes(root)
+    val eqRef = reference(root, eq.map(d => runDirOf(d.filePath)))
+    assert(eq.nonEmpty && eq.map(_.filePath).toSet == eqRef.keySet)
+    eq.foreach { d =>
+      val w = eqRef(d.filePath)
+      assert((d.recordCount, d.lowerBounds, d.upperBounds) ==
+        (w.recordCount, w.lowerBounds, w.upperBounds))
+    }
+  }
+
+  test("an all-pruned read still has the table's columns") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("iceberg_all_pruned").toString
+    IcebergLite.createTable(root)
+    IcebergLite.append(s, root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("v"))
+    val pruned = IcebergLite.read(s, root, filters = Seq(IcebergLite.Eq("v", "zzz")))
+    assert(pruned.columns.toSet == Set("id", "v"))
+    assert(pruned.filter($"id" > 0).select("v").count() == 0L)
+    val where = IcebergLite.readWhere(s, root, $"id" > 100L)
+    assert(where.columns.toSet == Set("id", "v") && where.count() == 0L)
   }
 
 }
