@@ -144,6 +144,19 @@ object Engine {
       // (the injection only pays off above real scan sizes); ScaleSpec
       // demonstrates the rewrite with test-scaled thresholds.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // Spark's generated-class cache (Janino output) is one LRU per
+      // JVM, sized by whichever session generates code first. At the
+      // default of 100 a cyclic run over more classes than that never
+      // hits: the 22 TPC-H rows need 307, so every warm pass
+      // recompiled all of them. Sized to the whole catalog's working
+      // set, measured with `ScaleSweep codegen 3` at sf0.01: one pass
+      // of all 241 rows compiles 2,426 distinct classes, and every
+      // later pass ~270 that are never reused. 4096 is the smallest
+      // power of two with ≥ 1.5× headroom over that. Heap after GC on
+      // the third pass: 342 MiB here, 258 MiB at 100 (~30 KB per
+      // cached class). Not a dial: re-measure before changing it
+      // (docs/BENCH_NOTES.md, "Generated-class cache").
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

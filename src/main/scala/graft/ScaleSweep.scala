@@ -17,6 +17,7 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *   scripts/run_main.sh graft.ScaleSweep [nDocs]               # dedup paths
   *   scripts/run_main.sh graft.ScaleSweep <mode> [size] [dial]  # see `modes`
   *   scripts/run_main.sh graft.ScaleSweep ab [catalog names…]   # stock vs shipped
+  *   scripts/run_main.sh graft.ScaleSweep codegen [passes] [catalog names…]
   *
   * SPARK_GRAFT_SF_DIR names the TPC-H directory the table-reading modes
   * use (default: the sf0.1 test tables, as for Bench). An unknown mode
@@ -81,7 +82,9 @@ object ScaleSweep {
         env.getOrElse("SPARK_GRAFT_TPCH_SRC", "/root/testdata/sf0.1"),
         math.max(2, size(a).toInt))),
       "ab" -> metered((s, m, a) => abSweep(s, m, sfDir,
-        if (a.isEmpty) queries.TpchQueries.reshaped else a)))
+        if (a.isEmpty) queries.TpchQueries.reshaped else a)),
+      "codegen" -> metered((s, m, a) => codegenSweep(s, m, sfDir, size(a, 3L).toInt,
+        a.filterNot(_.forall(_.isDigit)))))
   }
 
   def main(args: Array[String]): Unit = {
@@ -857,8 +860,9 @@ object ScaleSweep {
     * interleaved over two rounds in one JVM, because back-to-back suite
     * runs drift more per window (~±5%) than the effects measured. Each
     * arm prints one JSON line: its result digest, wall time and the
-    * settled shuffle/spill deltas. Both arms of a row must give the
-    * same digest — an order-insensitive distributed aggregate over the
+    * settled shuffle/spill deltas and generated classes compiled (0 for
+    * a TPC-H row on round 2). Both arms of a row must give the same
+    * digest — an order-insensitive distributed aggregate over the
     * name-sorted columns (count plus the exact sum of per-row xxhash64),
     * so no result is collected to the driver at any scale.
     *
@@ -890,12 +894,62 @@ object ScaleSweep {
           s""""rows":${digest.getLong(0)},"resultDigest":"${digest.get(1)}",""" +
           s""""wallSec":${r(wall)},""" + shuffleJson("", delta) +
           s""""memSpillMB":${mb(delta.spillMem)},"diskSpillMB":${mb(delta.spillDisk)},""" +
-          s""""sf":"$sfDir"}""")
+          s""""compiles":${delta.compiles},"sf":"$sfDir"}""")
         digest
       }
       require(digests.distinct.size == 1,
         s"ab: $name stock and shipped results differ: ${digests.mkString(" vs ")}")
     }
+  }
+
+  /** The generated-class working set behind `Engine.session`'s
+    * `spark.sql.codegen.cache.maxEntries`: runs catalog rows (all of
+    * them when none are named) into the noop sink `passes` times in
+    * this JVM and prints one JSON line with, per pass, the classes
+    * compiled, the summed row walls and the used heap after a GC. A
+    * pass that compiles nothing new is served by the cache; the last
+    * pass's per-row counts (`recompiling`, the 20 largest of
+    * `recompilingRows`) name the rows whose classes are never reused
+    * however large the cache.
+    *
+    *   SPARK_GRAFT_SF_DIR=<sf0.01 tables> scripts/run_main.sh graft.ScaleSweep codegen 3
+    */
+  private def codegenSweep(spark: SparkSession, m: TaskMetrics, sfDir: String,
+      passes: Int, names: Seq[String]): Unit = {
+    val catalog = SparkEntry.queries
+    val missing = names.filterNot(catalog.contains)
+    require(missing.isEmpty, s"codegen: no catalog row named ${missing.mkString(", ")}")
+    val rows = catalog.toSeq.sortBy(_._1).filter(p => names.isEmpty || names.contains(p._1))
+    Engine.registerDir(spark, sfDir)
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    val perPass = (1 to passes).map { _ =>
+      var before = m.settled()
+      val perRow = rows.map { case (name, fn) =>
+        val (_, wall) = timed {
+          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          catch { case e: Exception =>
+            failed += name
+            System.err.println(s"[codegen] $name failed: ${e.getClass.getSimpleName}")
+          }
+        }
+        val after = m.settled()
+        val compiles = (after - before).compiles
+        before = after
+        (name, compiles, wall)
+      }
+      System.gc()
+      val rt = Runtime.getRuntime
+      (perRow, (rt.totalMemory - rt.freeMemory) / (1 << 20))
+    }
+    def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
+    val recompiling = perPass.last._1.filter(_._2 > 0).sortBy(r => (-r._2, r._1))
+    val top = recompiling.take(20).map { case (n, c, _) => s""""$n":$c""" }
+    println(s"""{"sweep":"codegen","rows":${rows.size},"passes":$passes,""" +
+      s""""failed":${arr(failed.toSeq.map(n => s""""$n""""))},""" +
+      s""""compiles":${arr(perPass.map(_._1.map(_._2).sum))},""" +
+      s""""wallSec":${arr(perPass.map(p => r(p._1.map(_._3).sum)))},""" +
+      s""""heapMB":${arr(perPass.map(_._2))},"recompilingRows":${recompiling.size},""" +
+      s""""recompiling":${top.mkString("{", ",", "}")},"sf":"$sfDir"}""")
   }
 
   /** Iceberg write-family sweep at 10⁶ rows / 32 partitions / 128

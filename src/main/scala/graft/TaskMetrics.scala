@@ -5,25 +5,38 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Task-level byte counters summed since a [[TaskMetrics]] listener was
-  * attached; the difference of two settled readings is one window's
-  * total. */
+  * attached, plus Spark's JVM-wide count of generated classes compiled;
+  * the difference of two settled readings is one window's total. */
 final case class TaskTotals(shuffleRead: Long, shuffleWrite: Long,
-    spillMem: Long, spillDisk: Long) {
+    spillMem: Long, spillDisk: Long, compiles: Long) {
   def -(o: TaskTotals): TaskTotals = TaskTotals(shuffleRead - o.shuffleRead,
-    shuffleWrite - o.shuffleWrite, spillMem - o.spillMem, spillDisk - o.spillDisk)
-  /** (name, bytes) pairs, in the order Bench's detail fields print them. */
+    shuffleWrite - o.shuffleWrite, spillMem - o.spillMem, spillDisk - o.spillDisk,
+    compiles - o.compiles)
+  /** (name, count) pairs, in the order Bench's detail fields print them. */
   def fields: Seq[(String, Long)] = Seq("shuffleRead" -> shuffleRead,
-    "shuffleWrite" -> shuffleWrite, "spillMem" -> spillMem, "spillDisk" -> spillDisk)
+    "shuffleWrite" -> shuffleWrite, "spillMem" -> spillMem, "spillDisk" -> spillDisk,
+    "compiles" -> compiles)
 }
 
 /** The task-metrics listener behind `Bench` and `ScaleSweep`: shuffle
   * and spill bytes, the peak per-task execution memory, and per-stage
   * task durations for the straggler ratio — the engine-metrics surface
   * the reference exposes per query (`src/execution/context.rs:33-53`).
+  *
+  * `compiles` is Spark's own counter of Janino compiles
+  * (`CodegenMetrics.METRIC_COMPILATION_TIME`), driver and executor
+  * side. It is JVM-wide, so it is read at each job and SQL event the
+  * listener receives: a detached listener stops counting like its
+  * other totals, and since a query's compiles all happen before its
+  * execution-end event, a settled window holds all of them. A warm
+  * query that compiles anything is recompiling classes the cache has
+  * dropped (see `Engine.session`).
   *
   * Listener delivery is asynchronous: a `TaskEnd` can arrive after the
   * action that ran the task has returned. Read totals only through
@@ -40,6 +53,7 @@ final class TaskMetrics extends SparkListener {
   // (executor heap / task slots); a sum over tasks would overstate it
   // by the task count. Reset per timed window, not delta'd.
   private val peakTask = new AtomicLong
+  private val compiles = new AtomicLong(compileCount)
   /** stageId -> task durations (ms). */
   private val durations = new ConcurrentHashMap[Int, java.util.List[Long]]()
 
@@ -58,8 +72,15 @@ final class TaskMetrics extends SparkListener {
     }
   }
 
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = compiles.set(compileCount)
+
+  // SQL execution start/end arrive here
+  override def onOtherEvent(e: SparkListenerEvent): Unit = compiles.set(compileCount)
+
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def snapshot(): TaskTotals = TaskTotals(
-    shuffleRead.get, shuffleWrite.get, spillMem.get, spillDisk.get)
+    shuffleRead.get, shuffleWrite.get, spillMem.get, spillDisk.get, compiles.get)
 
   /** Totals once the listener has gone quiet: three consecutive
     * identical reads 50 ms apart (at most ~1.5 s of waiting). Call it

@@ -61,7 +61,8 @@ class ScaleSweepSmokeSpec extends AnyFunSuite {
     ("update", Nil, Map("sf" -> "\"sf0.001\"")),
     ("sqldml", Nil, Map("sf" -> "\"sf0.001\"")),
     ("stream", Seq("1"), Map("witnesses" -> "true")),
-    ("tpchgen", Seq("2"), Map("replicas" -> "2")))
+    ("tpchgen", Seq("2"), Map("replicas" -> "2")),
+    ("codegen", Seq("1", "tpch_q06"), Map("rows" -> "1", "failed" -> "[]")))
 
   test("the toy list covers every mode but ab") {
     assert(toy.map(_._1).toSet == table.keySet - "ab")

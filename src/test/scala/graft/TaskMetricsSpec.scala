@@ -20,6 +20,16 @@ class TaskMetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("a query that generates a new class counts its compiles in its window") {
+    TaskMetrics.during(spark) { m =>
+      val before = m.settled()
+      // a literal no earlier query used, so no cached class fits it
+      spark.range(10).selectExpr(s"id * ${System.nanoTime} AS x")
+        .write.format("noop").mode("overwrite").save()
+      assert((m.settled() - before).compiles > 0)
+    }
+  }
+
   test("during detaches its listener, so later jobs leave its totals alone") {
     val m = TaskMetrics.during(spark)(identity)
     val detached = m.settled()
