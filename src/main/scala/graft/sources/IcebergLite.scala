@@ -174,18 +174,15 @@ object IcebergLite {
     * into copy-on-write commits via `entryJson`. */
   def dataFiles(tablePath: String, snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): Seq[DataFile] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
+    snapshotAt(tablePath, snapshotId) match {
       case None => Nil
-      case Some(id) =>
-        dataFilesFrom(tablePath, id, parseManifestList(tablePath, id), filters)
+      case Some(snap) =>
+        dataFilesFrom(tablePath, snap, parseManifestList(tablePath, snap), filters)
     }
 
-  private def dataFilesFrom(tablePath: String, id: Long, manifests: Seq[ManifestRef],
+  private def dataFilesFrom(tablePath: String, snap: Snapshot, manifests: Seq[ManifestRef],
       filters: Seq[PartitionFilter]): Seq[DataFile] = {
-    val rmap = renames(tablePath, Some(id))
-    val projected = withProjectedFilters(tablePath, filters)
-    val physFilters =
-      if (rmap.isEmpty) projected else projected.map(physicalFilter(rmap, _))
+    val physFilters = physicalFilters(tablePath, snap, filters)
     // manifest-level skip FIRST: a summarized manifest whose partition
     // ranges reject the filters is never opened or parsed
     val surviving = manifests.filter(manifestMayMatch(_, physFilters))
@@ -239,11 +236,9 @@ object IcebergLite {
       summaries: Option[Map[String, ColSummary]],
       totalRecords: Long = -1L, totalBytes: Long = -1L)
 
-  private def parseManifestList(tablePath: String, id: Long): Seq[ManifestRef] = {
-    val snap = readJson(s"$tablePath/metadata/snap-$id.snapshot.json")
-    val manifestList = (snap \ "manifest_list").extract[String]
-    readJson(s"$tablePath/$manifestList") match {
-      case JArray(ms) => ms.map { m =>
+  private def parseManifestList(tablePath: String, snap: Snapshot): Seq[ManifestRef] =
+    snap.manifestList.map(ml => readJson(s"$tablePath/$ml")) match {
+      case Some(JArray(ms)) => ms.map { m =>
         val sums = (m \ "partition_summaries") match {
           case JObject(fields) => Some(fields.map { case (c, v) =>
             val lo = (v \ "lower").extract[String]
@@ -260,6 +255,15 @@ object IcebergLite {
       }
       case _ => Nil
     }
+
+  /** Logical `filters` projected through the hidden-partitioning specs
+    * and translated to `snap`'s physical column names — what every
+    * manifest- and entry-level match runs against. */
+  private def physicalFilters(tablePath: String, snap: Snapshot,
+      filters: Seq[PartitionFilter]): Seq[PartitionFilter] = {
+    val projected = withProjectedFilters(tablePath, filters)
+    if (snap.renames.isEmpty) projected
+    else projected.map(physicalFilter(snap.renames, _))
   }
 
   /** (rows, bytes) of a snapshot from manifest-LIST totals alone —
@@ -271,19 +275,13 @@ object IcebergLite {
     * snapshot) is Some((0, 0)) — certainty of emptiness. */
   def snapshotTotals(tablePath: String,
       snapshotId: Option[Long] = None): Option[(Long, Long)] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
+    snapshotAt(tablePath, snapshotId) match {
       case None => Some((0L, 0L))
-      case Some(id) =>
-        val refs = parseManifestList(tablePath, id)
+      case Some(snap) =>
+        val refs = parseManifestList(tablePath, snap)
         if (refs.exists(r => r.totalRecords < 0 || r.totalBytes < 0)) None
         else Some((refs.map(_.totalRecords).sum, refs.map(_.totalBytes).sum))
     }
-
-  /** Manifest paths listed by a snapshot's manifest list (table-
-    * relative). One small JSON read — O(manifests) driver work, never
-    * O(files). */
-  private def manifestPathsOf(tablePath: String, id: Long): Seq[String] =
-    parseManifestList(tablePath, id).map(_.path)
 
   /** The partition summary of a manifest's entries: per partition
     * column, the [min,max] of the entries' partition values under
@@ -364,11 +362,9 @@ object IcebergLite {
     * exactly as entry-level pruning does). Exposed for tests. */
   private[graft] def manifestsMatching(tablePath: String, id: Long,
       filters: Seq[PartitionFilter]): Seq[String] = {
-    val rmap = renames(tablePath, Some(id))
-    val projected = withProjectedFilters(tablePath, filters)
-    val physFilters =
-      if (rmap.isEmpty) projected else projected.map(physicalFilter(rmap, _))
-    parseManifestList(tablePath, id)
+    val snap = snapshot(tablePath, id)
+    val physFilters = physicalFilters(tablePath, snap, filters)
+    parseManifestList(tablePath, snap)
       .filter(manifestMayMatch(_, physFilters)).map(_.path)
   }
 
@@ -393,20 +389,17 @@ object IcebergLite {
   def planFilesDistributed(spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): Seq[DataFile] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
+    snapshotAt(tablePath, snapshotId) match {
       case None => Nil
-      case Some(id) => planFilesDistributedFrom(spark, tablePath, id,
-        parseManifestList(tablePath, id), filters)
+      case Some(snap) => planFilesDistributedFrom(spark, tablePath, snap,
+        parseManifestList(tablePath, snap), filters)
     }
 
   private def planFilesDistributedFrom(spark: SparkSession, tablePath: String,
-      id: Long, manifests: Seq[ManifestRef],
+      snap: Snapshot, manifests: Seq[ManifestRef],
       filters: Seq[PartitionFilter]): Seq[DataFile] = {
     if (manifests.isEmpty) return Nil
-    val rmap = renames(tablePath, Some(id))
-    val projected = withProjectedFilters(tablePath, filters)
-    val physFilters =
-      if (rmap.isEmpty) projected else projected.map(physicalFilter(rmap, _))
+    val physFilters = physicalFilters(tablePath, snap, filters)
     // manifest-level summary skip happens on the DRIVER (the summaries
     // live in the one small manifest-list read); only surviving
     // manifests fan out to executors for entry-level pruning
@@ -425,26 +418,29 @@ object IcebergLite {
       .collect().toSeq.sortBy(_.filePath)
   }
 
-  /** Planning entry point used by [[read]]: driver-side pruning below
-    * `graft.iceberg.planning.distributedThreshold` manifests (default
+  /** The manifest count from which planning and metadata maintenance
+    * run as a Spark job instead of in the driver (session conf, default
     * 64 — metadata this small plans faster in-process than a job
-    * round-trip), the distributed path at or above it. Both paths
-    * return the identical file set. */
+    * round-trip). */
+  private def distributedThreshold(spark: SparkSession): Int =
+    spark.conf.getOption("graft.iceberg.planning.distributedThreshold")
+      .map(_.toInt).getOrElse(64)
+
+  /** Planning entry point used by [[read]]: driver-side pruning below
+    * [[distributedThreshold]] manifests, the distributed path at or
+    * above it. Both paths return the identical file set. */
   def planFiles(spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): Seq[DataFile] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
+    snapshotAt(tablePath, snapshotId) match {
       case None => Nil
-      case Some(id) =>
-        val threshold = spark.conf
-          .getOption("graft.iceberg.planning.distributedThreshold")
-          .map(_.toInt).getOrElse(64)
+      case Some(snap) =>
         // manifest list resolved ONCE and handed to whichever planner
         // wins the threshold — no metadata file is read twice per plan
-        val manifests = parseManifestList(tablePath, id)
-        if (manifests.size < threshold)
-          dataFilesFrom(tablePath, id, manifests, filters)
-        else planFilesDistributedFrom(spark, tablePath, id, manifests, filters)
+        val manifests = parseManifestList(tablePath, snap)
+        if (manifests.size < distributedThreshold(spark))
+          dataFilesFrom(tablePath, snap, manifests, filters)
+        else planFilesDistributedFrom(spark, tablePath, snap, manifests, filters)
     }
 
   /** A pending merge-on-read row delete — Iceberg v2 sequence-number
@@ -544,60 +540,101 @@ object IcebergLite {
     }
   }
 
+  /** A snapshot's three pending merge-on-read delete forms. */
+  private[graft] final case class PendingDeletes(rows: Seq[RowDelete] = Nil,
+      pos: Seq[PosDelete] = Nil, eq: Seq[EqDelete] = Nil) {
+
+    /** The deletes some `kept` file can still be subject to — what a
+      * rewrite commit carries. A row or equality delete stays while a
+      * kept file has sequence ≤ the delete's and lies in its scope;
+      * rewritten files got the rewriting commit's (higher) sequence, so
+      * materialized deletes age out of scope on their own. A position
+      * delete stays while its target range covers a kept path (its
+      * targets dropped or rewritten under new paths = materialized);
+      * range coverage is conservative — one straddling kept files it
+      * never named stays pending harmlessly (the anti-join has no key
+      * for them) until compaction clears it, real Iceberg's exact
+      * behavior for delete-file bounds. The key FILES stay on disk
+      * until snapshot expiry reclaims them. */
+    def prunedTo(tablePath: String, kept: Seq[DataFile]): PendingDeletes = {
+      val keptPaths = kept.map(_.filePath)
+      PendingDeletes(
+        rows.filter(d => kept.exists(f =>
+          f.sequenceNumber <= d.sequenceNumber && d.filters.forall(_.matches(f)))),
+        pos.filter(posDelMayTarget(_, keptPaths)),
+        eq.filter(d => kept.exists(eqScopeMatches(tablePath, d, _))))
+    }
+  }
+
+  /** One parsed `snap-<id>.snapshot.json` — every field any reader or
+    * commit takes from it. Fields a snapshot lacks (the demo
+    * generator's, or one written before the field was tracked) read
+    * as: operation `append`, sequence number and timestamp 0, no
+    * parent, no schema, and empty renames, deletes and sidecars. */
+  private final case class Snapshot(manifestList: Option[String],
+      parent: Option[Long], sequenceNumber: Long, operation: String,
+      timestampMs: Long, renames: Map[String, String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      deletes: PendingDeletes, statsFiles: Seq[String])
+
+  /** Parse snapshot `id` — the one reader of the snapshot document. */
+  private def snapshot(tablePath: String, id: Long): Snapshot = {
+    val j = readJson(s"$tablePath/metadata/snap-$id.snapshot.json")
+    def long(field: String) = (j \ field).toOption.collect { case JInt(n) => n.toLong }
+    def str(v: JValue) = v.toOption.collect { case JString(x) => x }
+    def arr(v: JValue) = v match {
+      case JArray(xs) => xs
+      case _ => Nil
+    }
+    val rows = arr(j \ "row_deletes").map(d => RowDelete(
+      (d \ "sequence_number").extractOrElse[Long](0L),
+      arr(d \ "filters").map(parseFilter)))
+    val pos = arr(j \ "position_deletes").map(d => PosDelete(
+      (d \ "file").extract[String],
+      (d \ "record_count").extractOrElse[Long](-1L),
+      str(d \ "target_lower"), str(d \ "target_upper")))
+    val eq = arr(j \ "equality_deletes").map(d => EqDelete(
+      (d \ "file").extract[String],
+      (d \ "key_columns").extract[Seq[String]],
+      (d \ "sequence_number").extractOrElse[Long](0L),
+      (d \ "record_count").extractOrElse[Long](-1L),
+      (d \ "lower_bounds").extractOrElse[Map[String, String]](Map.empty),
+      (d \ "upper_bounds").extractOrElse[Map[String, String]](Map.empty)))
+    val schema = j \ "schema" match {
+      case JArray(fs) => Some(org.apache.spark.sql.types.StructType(fs.map { f =>
+        org.apache.spark.sql.types.StructField(
+          (f \ "name").extract[String],
+          parseFieldType((f \ "type").extract[String]),
+          (f \ "nullable").extractOrElse[Boolean](true))
+      }))
+      case _ => None
+    }
+    Snapshot(str(j \ "manifest_list"), long("parent_snapshot_id"),
+      long("sequence_number").getOrElse(0L), str(j \ "operation").getOrElse("append"),
+      long("timestamp_ms").getOrElse(0L),
+      (j \ "column_renames").extractOrElse[Map[String, String]](Map.empty),
+      schema, PendingDeletes(rows, pos, eq), arr(j \ "stats_files").collect { case JString(f) => f })
+  }
+
+  /** Snapshot `snapshotId`, else the current one (None = empty table). */
+  private def snapshotAt(tablePath: String, snapshotId: Option[Long]): Option[Snapshot] =
+    snapshotId.orElse(currentSnapshotId(tablePath)).map(snapshot(tablePath, _))
+
+  private def pendingDeletes(tablePath: String, snapshotId: Option[Long]): PendingDeletes =
+    snapshotAt(tablePath, snapshotId).fold(PendingDeletes())(_.deletes)
+
   /** Pending merge-on-read deletes as of a snapshot (empty when none
     * or all have been materialized by a rewrite). */
   def rowDeletes(tablePath: String, snapshotId: Option[Long] = None): Seq[RowDelete] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
-      case None => Nil
-      case Some(id) =>
-        (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "row_deletes") match {
-          case JArray(ds) => ds.map { d =>
-            RowDelete(
-              (d \ "sequence_number").extractOrElse[Long](0L),
-              (d \ "filters") match {
-                case JArray(fs) => fs.map(parseFilter)
-                case _ => Nil
-              })
-          }
-          case _ => Nil
-        }
-    }
+    snapshotAt(tablePath, snapshotId).map(_.deletes.rows).getOrElse(Nil)
 
   /** Pending merge-on-read equality-delete files as of a snapshot. */
   def eqDeletes(tablePath: String, snapshotId: Option[Long] = None): Seq[EqDelete] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
-      case None => Nil
-      case Some(id) =>
-        (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "equality_deletes") match {
-          case JArray(ds) => ds.map { d =>
-            EqDelete(
-              (d \ "file").extract[String],
-              (d \ "key_columns").extract[Seq[String]],
-              (d \ "sequence_number").extractOrElse[Long](0L),
-              (d \ "record_count").extractOrElse[Long](-1L),
-              (d \ "lower_bounds").extractOrElse[Map[String, String]](Map.empty),
-              (d \ "upper_bounds").extractOrElse[Map[String, String]](Map.empty))
-          }
-          case _ => Nil
-        }
-    }
+    snapshotAt(tablePath, snapshotId).map(_.deletes.eq).getOrElse(Nil)
 
   /** Pending merge-on-read position-delete files as of a snapshot. */
   def posDeletes(tablePath: String, snapshotId: Option[Long] = None): Seq[PosDelete] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
-      case None => Nil
-      case Some(id) =>
-        (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "position_deletes") match {
-          case JArray(ds) => ds.map { d =>
-            PosDelete(
-              (d \ "file").extract[String],
-              (d \ "record_count").extractOrElse[Long](-1L),
-              (d \ "target_lower").toOption.collect { case JString(v) => v },
-              (d \ "target_upper").toOption.collect { case JString(v) => v })
-          }
-          case _ => Nil
-        }
-    }
+    snapshotAt(tablePath, snapshotId).map(_.deletes.pos).getOrElse(Nil)
 
   // ---- per-snapshot DATA SCHEMA (type-widening evolution) -----------
   //
@@ -692,17 +729,7 @@ object IcebergLite {
     * mergeSchema). */
   def tableSchema(tablePath: String,
       snapshotId: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] =
-    snapshotId.orElse(currentSnapshotId(tablePath)).flatMap { id =>
-      (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "schema") match {
-        case JArray(fs) => Some(org.apache.spark.sql.types.StructType(fs.map { f =>
-          org.apache.spark.sql.types.StructField(
-            (f \ "name").extract[String],
-            parseFieldType((f \ "type").extract[String]),
-            (f \ "nullable").extractOrElse[Boolean](true))
-        }))
-        case _ => None
-      }
-    }
+    snapshotAt(tablePath, snapshotId).flatMap(_.schema)
 
   /** TYPE-WIDENING schema evolution as a NEW SNAPSHOT — metadata-only,
     * zero data I/O (real Iceberg's third evolution form after rename
@@ -909,12 +936,7 @@ object IcebergLite {
     * (empty when the table has never been renamed). Stored whole in
     * each snapshot's JSON, so resolution is O(1) — no chain walk. */
   def renames(tablePath: String, snapshotId: Option[Long] = None): Map[String, String] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
-      case None => Map.empty
-      case Some(id) =>
-        (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "column_renames")
-          .extractOrElse[Map[String, String]](Map.empty)
-    }
+    snapshotAt(tablePath, snapshotId).map(_.renames).getOrElse(Map.empty)
 
   /** The physical (as-written-in-parquet) name behind a logical name. */
   private def physicalName(rmap: Map[String, String], logical: String): String =
@@ -977,14 +999,7 @@ object IcebergLite {
   /** Stats sidecars referenced by a snapshot (carried forward by every
     * commit; full rewrites reset the list to their own sidecar). */
   def statsFiles(tablePath: String, snapshotId: Option[Long] = None): Seq[String] =
-    snapshotId.orElse(currentSnapshotId(tablePath)) match {
-      case None => Nil
-      case Some(id) =>
-        (readJson(s"$tablePath/metadata/snap-$id.snapshot.json") \ "stats_files") match {
-          case JArray(fs) => fs.collect { case JString(p) => p }
-          case _ => Nil
-        }
-    }
+    snapshotAt(tablePath, snapshotId).map(_.statsFiles).getOrElse(Nil)
 
   /** Write `df`'s rows as new data files under `data/<runDir>/` (hive
     * layout when `partitionColumns` is set — written in parallel, one
@@ -996,8 +1011,7 @@ object IcebergLite {
     * per-snapshot schema union) and the NDV sidecar path. */
   private def writeDataFiles(spark: SparkSession, tablePath: String, df0: DataFrame,
       partitionColumns0: Seq[String], runDir: String,
-      trustedPreDerived: Boolean = false)
-      : (Seq[String], org.apache.spark.sql.types.StructType, Seq[String]) = {
+      trustedPreDerived: Boolean = false): Written = {
     import org.apache.spark.sql.functions.col
     // files are ALWAYS written under physical names, so a table's data
     // files share one schema across renames and mergeSchema reads stay
@@ -1179,15 +1193,18 @@ object IcebergLite {
     * optimistic-concurrency rules: a racing branch append rebases, a
     * stale copy-on-write branch commit throws. This is the
     * write-audit-publish pattern: land commits on a branch, validate,
-    * then fast-forward main to publish them all at once. */
+    * then fast-forward main to publish them all at once.
+    *
+    * What a commit does not set it carries from the (possibly rebased)
+    * parent: renames, pending deletes (`deletes` = None), schema and
+    * stats sidecars — all taken from ONE parse of the parent's
+    * snapshot document. */
   private[graft] def commitSnapshot(tablePath: String, parentId: Option[Long],
       entries: Seq[String], carriedManifests: Seq[String],
       operation: String = "append",
       columnRenames: Map[String, String] = null,
       rebaseOnConflict: Boolean = false,
-      pendingRowDeletes: Seq[RowDelete] = null,
-      pendingPosDeletes: Seq[PosDelete] = null,
-      pendingEqDeletes: Seq[EqDelete] = null,
+      deletes: Option[PendingDeletes] = None,
       toBranch: Option[String] = None,
       schemaUnion: org.apache.spark.sql.types.StructType = null,
       schemaSet: org.apache.spark.sql.types.StructType = null,
@@ -1216,19 +1233,20 @@ object IcebergLite {
     // of which ref points at it, so max+1 here is collision-free
     // across all heads. Data-DIRECTORY names are opaque run tags for
     // the same reason — a dir name must never claim a snapshot id.
-    val freshId = (snapshots(tablePath) :+ 0L).max + 1
-    val (id, parent, carried) =
-      if (!conflicted) (freshId, parentId, carriedManifests)
-      else (freshId, cur, parentManifests(tablePath, cur))
+    val id = (snapshots(tablePath) :+ 0L).max + 1
+    val parent = if (conflicted) cur else parentId
+    val parentSnap = parent.map(snapshot(tablePath, _))
+    val parentRefs = parentSnap.map(parseManifestList(tablePath, _)).getOrElse(Nil)
+    val carried = if (conflicted) parentRefs.map(_.path) else carriedManifests
     // every commit must carry the (possibly rebased) parent's rename
     // mapping forward (or the successor snapshot would silently revert
     // renamed columns); callers pass an explicit map only when
     // CHANGING it
-    val rmap = Option(columnRenames).getOrElse(renames(tablePath, parent))
+    val rmap = Option(columnRenames).orElse(parentSnap.map(_.renames)).getOrElse(Map.empty)
     // like renames, pending merge-on-read deletes are carried forward
     // by every commit unless the op explicitly changes them (a rewrite
     // materializes deletes and passes a pruned/empty list)
-    val dels0 = Option(pendingRowDeletes).getOrElse(rowDeletes(tablePath, parent))
+    val pending = deletes.orElse(parentSnap.map(_.deletes)).getOrElse(PendingDeletes())
     // the commit's SEQUENCE NUMBER: snapshot ids are assigned
     // max+1 under the commit lock, so the id doubles as the monotone
     // commit ordinal — still written out as an explicit
@@ -1237,12 +1255,10 @@ object IcebergLite {
     // convention. Writer-side −1 sentinels ("this commit") resolve
     // here, AFTER any rebase has picked the final id.
     val seq = id
-    val dels = dels0.map(d =>
+    val dels = pending.rows.map(d =>
       if (d.sequenceNumber < 0) d.copy(sequenceNumber = seq) else d)
-    // position and equality-file deletes carry forward like renames
-    val pdels = Option(pendingPosDeletes).getOrElse(posDeletes(tablePath, parent))
-    val eqdels0 = Option(pendingEqDeletes).getOrElse(eqDeletes(tablePath, parent))
-    val eqdels = eqdels0.map(d =>
+    val pdels = pending.pos
+    val eqdels = pending.eq.map(d =>
       if (d.sequenceNumber < 0) d.copy(sequenceNumber = seq) else d)
     // per-snapshot DATA schema: a data commit UNION-merges its write
     // schema into the parent's (add-column + stale-narrow-writer
@@ -1250,7 +1266,7 @@ object IcebergLite {
     // metadata-only commits carry the parent's forward. A parent
     // without tracking stays legacy unless this commit starts it
     // (first snapshot, or an explicit set).
-    val parentSchema = parent.flatMap(p => tableSchema(tablePath, Some(p)))
+    val parentSchema = parentSnap.flatMap(_.schema)
     val schema: Option[org.apache.spark.sql.types.StructType] =
       (Option(schemaSet), Option(schemaUnion), parentSchema) match {
         case (Some(set), _, _) => Some(set)
@@ -1272,9 +1288,7 @@ object IcebergLite {
     // parent does not list (rewriteManifests' fresh consolidations) and
     // the commit's own new manifest are parsed once — O(their entries),
     // the same cost class as writing them
-    val parentRefs: Map[String, ManifestRef] =
-      parent.map(p => parseManifestList(tablePath, p)
-        .map(r => r.path -> r).toMap).getOrElse(Map.empty)
+    val parentRef = parentRefs.map(r => r.path -> r).toMap
     // per list entry: totals (rows, bytes — real Iceberg's
     // added_rows_count family) and the partition summary, from ONE
     // source each in priority order: a caller that computed them
@@ -1291,7 +1305,7 @@ object IcebergLite {
         if (fs.exists(f => f.recordCount < 0 || f.fileSizeBytes < 0)) (-1L, -1L)
         else (fs.map(_.recordCount).sum, fs.map(_.fileSizeBytes).sum)
       val ((rows, bytes), summaryJson) =
-        (knownSummaryJson.get(path), parentRefs.get(path)) match {
+        (knownSummaryJson.get(path), parentRef.get(path)) match {
           case (Some(body), parentRef) =>
             // a caller-provided summary without matching totals still
             // falls back to the parent carry (or a parse) — a summary
@@ -1347,8 +1361,7 @@ object IcebergLite {
     // rewrite RESETS the list to its own sidecar (statsFilesSet) so it
     // stays bounded by live writes instead of accreting forever
     val stats = Option(statsFilesSet).getOrElse(
-      (parent.map(p => statsFiles(tablePath, Some(p))).getOrElse(Nil) ++
-        addStatsFiles).distinct)
+      (parentSnap.map(_.statsFiles).getOrElse(Nil) ++ addStatsFiles).distinct)
     val statsJsonField =
       if (stats.isEmpty) ""
       else s""",\n "stats_files": [${stats.map(jstr).mkString(", ")}]"""
@@ -1380,15 +1393,8 @@ object IcebergLite {
   /** Manifest paths listed by `parentId`'s manifest list (empty for an
     * empty table). */
   private[graft] def parentManifests(tablePath: String, parentId: Option[Long]): Seq[String] =
-    parentId.map { pid =>
-      readJson(s"$tablePath/metadata/snap-$pid.snapshot.json") \ "manifest_list" match {
-        case JString(ml) => readJson(s"$tablePath/$ml") match {
-          case JArray(ms) => ms.map(m => (m \ "manifest_path").extract[String])
-          case _ => Nil
-        }
-        case _ => Nil
-      }
-    }.getOrElse(Nil)
+    parentId.map(id => parseManifestList(tablePath, snapshot(tablePath, id)).map(_.path))
+      .getOrElse(Nil)
 
   /** Initialize an EMPTY table (a current-snapshot pointer with no
     * snapshot) so the first `append` has a commit target. Idempotent;
@@ -1937,52 +1943,21 @@ object IcebergLite {
   def readWithMetadataColumns(spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, replace}
+    import org.apache.spark.sql.types.{LongType, StringType}
     val files = planFiles(spark, tablePath, snapshotId, filters)
-    if (files.isEmpty) {
+    if (files.isEmpty)
       // zero files (empty table or fully-pruned filter) still returns
-      // the documented shape: the snapshot's logical columns plus
-      // `_file`/`_pos`, so selecting them yields zero rows instead of
-      // AnalysisException. Identity partition columns (not in the
-      // data schema — hive layout strips them) are appended as the
-      // strings the non-empty read recovers them as.
-      import org.apache.spark.sql.types.{LongType, StringType, StructType}
+      // the documented shape: the snapshot's logical columns (identity
+      // and legacy partition columns as the strings a non-empty read
+      // recovers) plus `_pos`/`_file`, so selecting them yields zero
+      // rows instead of AnalysisException
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        logicalShape(tablePath, snapshotId).add("_pos", LongType).add("_file", StringType))
+    else {
       val rmap = renames(tablePath, snapshotId)
-      val dataCols = tableSchema(tablePath, snapshotId)
-        .getOrElse(new StructType()).fields
-        .map(f => f.copy(name = rmap.getOrElse(f.name, f.name)))
-      val identCols = partitionSpec(tablePath)
-        .filter(_.transform == IcebergTransforms.Identity).map(_.name)
-        .filterNot(n => dataCols.exists(_.name == n))
-        .map(n => org.apache.spark.sql.types.StructField(n, StringType))
-      val shape = StructType(dataCols ++ identCols)
-        .add("_pos", LongType).add("_file", StringType)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
+      val base = readWithDeletes(spark, tablePath, files, snapshotId, metadataColumns = true)
+      if (rmap.isEmpty) base else base.withColumnsRenamed(rmap)
     }
-    val base = readFileSet(spark, tablePath, files, withRowPos = true,
-      snapshotId = snapshotId)
-    val tableAbs = Paths.get(tablePath).toAbsolutePath.normalize.toString + "/"
-    val withMeta = base
-      .withColumn("_pos", col("__graft_pos"))
-      .withColumn("_file", replace(inputFileCol, lit(tableAbs), lit("")))
-      // scan-captured file identity for the delete appliers (see
-      // [[fileIdCol]] — input_file_name() cannot resolve above the
-      // delete-file joins)
-      .withColumn("__graft_scan_file", inputFileCol)
-    val survivors = applyPosDeletes(
-      applyEqDeletes(
-        applyRowDeletes(withMeta, tablePath, files, rowDeletes(tablePath, snapshotId)),
-        tablePath, files, eqDeletes(tablePath, snapshotId)),
-      tablePath, files, posDeletes(tablePath, snapshotId))
-      .drop("__graft_scan_file")
-    // applyPosDeletes consumes __graft_pos only when a pending position
-    // delete targets a read file; drop the scratch column either way
-    val cleaned =
-      if (survivors.columns.contains("__graft_pos")) survivors.drop("__graft_pos")
-      else survivors
-    val rmap = renames(tablePath, snapshotId)
-    if (rmap.isEmpty) cleaned else cleaned.withColumnsRenamed(rmap)
   }
 
   /** MANIFEST REWRITE — real Iceberg's `rewrite_manifests` maintenance
@@ -2001,8 +1976,8 @@ object IcebergLite {
   def rewriteManifests(tablePath: String, targetManifests: Int = 1): Long = {
     require(targetManifests >= 1, "need at least one target manifest")
     val parentId = currentSnapshotId(tablePath)
-    val current = parentId.map(id => manifestPathsOf(tablePath, id)).getOrElse(Nil)
-    if (current.size <= targetManifests) return parentId.getOrElse(0L)
+    if (parentManifests(tablePath, parentId).size <= targetManifests)
+      return parentId.getOrElse(0L)
     // CLUSTER entries by partition tuple before grouping: each target
     // manifest then covers a narrow partition range, which is what
     // makes the manifest-list partition summaries selective — a
@@ -2050,12 +2025,10 @@ object IcebergLite {
       targetManifests: Int): Long = {
     require(targetManifests >= 1, "need at least one target manifest")
     val parentId = currentSnapshotId(tablePath)
-    val current = parentId.map(id => manifestPathsOf(tablePath, id)).getOrElse(Nil)
+    val current = parentManifests(tablePath, parentId)
     if (current.size <= targetManifests) return parentId.getOrElse(0L)
-    val threshold = spark.conf
-      .getOption("graft.iceberg.planning.distributedThreshold")
-      .map(_.toInt).getOrElse(64)
-    if (current.size < threshold) return rewriteManifests(tablePath, targetManifests)
+    if (current.size < distributedThreshold(spark))
+      return rewriteManifests(tablePath, targetManifests)
     val tp = tablePath
     val tag = runTag()
     import org.apache.spark.sql.functions.col
@@ -2101,19 +2074,16 @@ object IcebergLite {
     * `overwrite` / `replace`). Tables written before the field existed
     * were append-built, so a missing field reads as `append`. */
   def snapshotOperation(tablePath: String, snapshotId: Long): String =
-    (readJson(s"$tablePath/metadata/snap-$snapshotId.snapshot.json") \ "operation")
-      .toOption.collect { case JString(op) => op }.getOrElse("append")
+    snapshot(tablePath, snapshotId).operation
 
   /** Parent snapshot id (None for the chain root). */
   def parentSnapshotId(tablePath: String, snapshotId: Long): Option[Long] =
-    (readJson(s"$tablePath/metadata/snap-$snapshotId.snapshot.json") \ "parent_snapshot_id")
-      .toOption.collect { case JInt(n) => n.toLong }
+    snapshot(tablePath, snapshotId).parent
 
   /** Commit sequence number of a snapshot (0 for pre-sequence
     * metadata). */
   def snapshotSequenceNumber(tablePath: String, snapshotId: Long): Long =
-    (readJson(s"$tablePath/metadata/snap-$snapshotId.snapshot.json") \ "sequence_number")
-      .toOption.collect { case JInt(n) => n.toLong }.getOrElse(0L)
+    snapshot(tablePath, snapshotId).sequenceNumber
 
   /** Table HISTORY as a DataFrame — the observability surface real
     * Iceberg exposes as its `snapshots`/`history` metadata tables and
@@ -2131,22 +2101,15 @@ object IcebergLite {
     val manifestCounts = scala.collection.mutable.Map.empty[String, Long]
     def filesIn(m: String): Long =
       manifestCounts.getOrElseUpdate(m, manifestFiles(tablePath, m).size.toLong)
-    def arrLen(v: JValue): Long = v match {
-      case JArray(xs) => xs.size.toLong
-      case _ => 0L
-    }
     snapshots(tablePath).foreach { id =>
-      val j = readJson(s"$tablePath/metadata/snap-$id.snapshot.json")
+      val snap = snapshot(tablePath, id)
+      val d = snap.deletes
       rows.add(org.apache.spark.sql.Row(
-        id,
-        (j \ "sequence_number").toOption.collect { case JInt(n) => n.toLong }.getOrElse(0L),
-        (j \ "parent_snapshot_id").toOption
-          .collect { case JInt(n) => java.lang.Long.valueOf(n.toLong) }.orNull,
-        (j \ "operation").toOption.collect { case JString(op) => op }.getOrElse("append"),
-        (j \ "timestamp_ms").toOption.collect { case JInt(n) => n.toLong }.getOrElse(0L),
-        manifestPathsOf(tablePath, id).map(filesIn).sum,
-        arrLen(j \ "row_deletes") + arrLen(j \ "position_deletes") +
-          arrLen(j \ "equality_deletes")))
+        id, snap.sequenceNumber,
+        snap.parent.map(java.lang.Long.valueOf).orNull,
+        snap.operation, snap.timestampMs,
+        parseManifestList(tablePath, snap).map(r => filesIn(r.path)).sum,
+        (d.rows.size + d.pos.size + d.eq.size).toLong))
     }
     import org.apache.spark.sql.types._
     spark.createDataFrame(rows, StructType(Seq(
@@ -2201,12 +2164,10 @@ object IcebergLite {
       f.filePath, f.fileFormat,
       f.partition.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/"),
       f.recordCount, f.sequenceNumber, f.fileSizeBytes)
-    val snap = snapshotId.orElse(currentSnapshotId(tablePath))
-    val manifests = snap.map(manifestPathsOf(tablePath, _)).getOrElse(Nil)
-    val threshold = spark.conf
-      .getOption("graft.iceberg.planning.distributedThreshold")
-      .map(_.toInt).getOrElse(64)
-    if (manifests.size >= threshold) {
+    val snap = snapshotAt(tablePath, snapshotId)
+    val refs = snap.map(parseManifestList(tablePath, _)).getOrElse(Nil)
+    val manifests = refs.map(_.path)
+    if (manifests.size >= distributedThreshold(spark)) {
       // big metadata: parse manifests as ONE Spark job (the same
       // fan-out planFilesDistributed uses) — SHOW PARTITIONS / the
       // files and partitions tables on a 10⁵-manifest table must not
@@ -2220,8 +2181,7 @@ object IcebergLite {
         .toDF(schema.fieldNames.toSeq: _*)
     } else {
       val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-      snap.foreach(id => dataFilesFrom(tablePath, id,
-        parseManifestList(tablePath, id), Nil).foreach(f =>
+      snap.foreach(sn => dataFilesFrom(tablePath, sn, refs, Nil).foreach(f =>
         rows.add(org.apache.spark.sql.Row.fromTuple(rowOf(f)))))
       spark.createDataFrame(rows, schema)
     }
@@ -2295,8 +2255,8 @@ object IcebergLite {
       snapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-    snapshotId.orElse(currentSnapshotId(tablePath)).foreach { id =>
-      parseManifestList(tablePath, id).foreach { m =>
+    snapshotAt(tablePath, snapshotId).foreach { snap =>
+      parseManifestList(tablePath, snap).foreach { m =>
         val fs = manifestFiles(tablePath, m.path)
         val summary = m.summaries.map(s => s.toSeq.sortBy(_._1)
           .map { case (c, cs) => s"$c:[${cs.lower},${cs.upper}]" }.mkString(";"))
@@ -2414,8 +2374,7 @@ object IcebergLite {
     * written before timestamps existed — they read as "older than any
     * requested time", the conservative direction). */
   def snapshotTimestampMs(tablePath: String, snapshotId: Long): Long =
-    (readJson(s"$tablePath/metadata/snap-$snapshotId.snapshot.json") \ "timestamp_ms")
-      .toOption.collect { case JInt(n) => n.toLong }.getOrElse(0L)
+    snapshot(tablePath, snapshotId).timestampMs
 
   /** TIMESTAMP AS OF resolution: the latest ancestor of the current
     * snapshot committed at or before `tsMillis` (None when the table
@@ -2703,8 +2662,9 @@ object IcebergLite {
         (if (df.columns.contains(f.name)) col(f.name) else lit(null))
           .cast(f.dataType).as(f.name)).toSeq: _*)
     val parts = chain.reverse.toSeq.flatMap { c =>
-      val p = parentSnapshotId(tablePath, c)
-      if (snapshotOperation(tablePath, c) == "replace") None
+      val snap = snapshot(tablePath, c)
+      val p = snap.parent
+      if (snap.operation == "replace") None
       else {
         val parentFiles = p.map(pp => dataFiles(tablePath, Some(pp))).getOrElse(Nil)
         val curFiles = dataFiles(tablePath, Some(c))
@@ -2715,12 +2675,10 @@ object IcebergLite {
         // carried files a NEW pending delete of this commit could
         // touch — the merge-on-read delta (entries carried from the
         // parent are value-identical and cancel out)
-        val oldRow = p.map(pp => rowDeletes(tablePath, Some(pp))).getOrElse(Nil).toSet
-        val oldEq = p.map(pp => eqDeletes(tablePath, Some(pp))).getOrElse(Nil).toSet
-        val oldPos = p.map(pp => posDeletes(tablePath, Some(pp))).getOrElse(Nil).toSet
-        val newRow = rowDeletes(tablePath, Some(c)).filterNot(oldRow)
-        val newEq = eqDeletes(tablePath, Some(c)).filterNot(oldEq)
-        val newPos = posDeletes(tablePath, Some(c)).filterNot(oldPos)
+        val old = p.fold(PendingDeletes())(snapshot(tablePath, _).deletes)
+        val newRow = snap.deletes.rows.filterNot(old.rows.toSet)
+        val newEq = snap.deletes.eq.filterNot(old.eq.toSet)
+        val newPos = snap.deletes.pos.filterNot(old.pos.toSet)
         val carried = curFiles.filter(f => parentPaths.contains(f.filePath))
         val morTouched = carried.filter { f =>
           newRow.exists(d => f.sequenceNumber <= d.sequenceNumber &&
@@ -2916,17 +2874,6 @@ object IcebergLite {
     filtered.drop("__graft_del_file")
   }
 
-  /** Drop pending deletes that no surviving file can still be subject
-    * to: a delete stays pending only while some kept file has sequence
-    * ≤ the delete's AND could match its filters. Rewritten files got
-    * the rewriting commit's (higher) sequence, so materialized deletes
-    * age out of scope automatically — this prune just keeps the
-    * snapshot JSON from carrying dead entries forever. */
-  private def pruneDeletes(dels: Seq[RowDelete],
-      kept: Seq[DataFile]): Seq[RowDelete] =
-    dels.filter(d => kept.exists(f =>
-      f.sequenceNumber <= d.sequenceNumber && d.filters.forall(_.matches(f))))
-
   /** Whether a position-delete file could name any of `paths`: its
     * recorded [targetLower, targetUpper] range on the key file's
     * `file_path` column must cover some path. Plain string order —
@@ -2936,19 +2883,6 @@ object IcebergLite {
   private def posDelMayTarget(d: PosDelete, paths: Seq[String]): Boolean =
     paths.exists(p => d.targetLower.forall(_.compareTo(p) <= 0) &&
       d.targetUpper.forall(_.compareTo(p) >= 0))
-
-  /** Position deletes are path-scoped: one whose target range covers
-    * no kept file has been materialized (its targets dropped or
-    * rewritten under new paths) and vanishes. Range coverage is
-    * conservative — a delete whose range straddles kept files it
-    * never named stays pending harmlessly (the anti-join has no key
-    * for them) until compaction clears it, real Iceberg's exact
-    * behavior for delete-file bounds. */
-  private def prunePosDeletes(dels: Seq[PosDelete],
-      kept: Seq[DataFile]): Seq[PosDelete] = {
-    val keptPaths = kept.map(_.filePath)
-    dels.filter(posDelMayTarget(_, keptPaths))
-  }
 
   /** Anti-apply pending POSITION-DELETE files: every pending key file
     * whose target range covers a read file is read (columnar,
@@ -2985,30 +2919,38 @@ object IcebergLite {
     * (predicate, equality-file, then position) anti-applied — the one
     * call every reader and every materializing rewrite goes through.
     * The within-file ordinal is captured at the scan only when some
-    * pending position delete actually targets a read file. */
+    * pending position delete actually targets a read file, or when
+    * `metadataColumns` asks for the `_pos`/`_file` columns (physical
+    * names). */
   private def readWithDeletes(spark: SparkSession, tablePath: String,
-      files: Seq[DataFile], snapshotId: Option[Long]): DataFrame = {
-    val pdels = posDeletes(tablePath, snapshotId)
-    val rdels = rowDeletes(tablePath, snapshotId)
-    val edels = eqDeletes(tablePath, snapshotId)
+      files: Seq[DataFile], snapshotId: Option[Long],
+      metadataColumns: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, replace}
+    val dels = pendingDeletes(tablePath, snapshotId)
     val readPaths = files.map(_.filePath)
-    val needPos = pdels.exists(posDelMayTarget(_, readPaths))
+    val needPos = metadataColumns || dels.pos.exists(posDelMayTarget(_, readPaths))
     val base0 = readFileSet(spark, tablePath, files, withRowPos = needPos,
       snapshotId = snapshotId)
+    val base1 =
+      if (!metadataColumns) base0
+      else base0.withColumn("_pos", col("__graft_pos")).withColumn("_file", replace(
+        inputFileCol, lit(Paths.get(tablePath).toAbsolutePath.normalize.toString + "/"), lit("")))
     // file identity captured ONCE, at the scan (single file source in
     // the plan here) — appliers after the first delete-file join read
     // the captured column, where input_file_name() can no longer
     // resolve (see [[fileIdCol]]). Only paid when a pending delete
     // exists: the common clean read stays projection-free.
     val base =
-      if (rdels.isEmpty && edels.isEmpty && !needPos) base0
-      else base0.withColumn("__graft_scan_file", inputFileCol)
+      if (dels.rows.isEmpty && dels.eq.isEmpty && !needPos) base1
+      else base1.withColumn("__graft_scan_file", inputFileCol)
+    // applyPosDeletes consumes __graft_pos only when a pending position
+    // delete targets a read file; drop the scratch column either way
     applyPosDeletes(
       applyEqDeletes(
-        applyRowDeletes(base, tablePath, files, rdels),
-        tablePath, files, edels),
-      tablePath, files, pdels)
-      .drop("__graft_scan_file")
+        applyRowDeletes(base, tablePath, files, dels.rows),
+        tablePath, files, dels.eq),
+      tablePath, files, dels.pos)
+      .drop("__graft_scan_file", "__graft_pos")
   }
 
   /** Merge-on-read POSITION delete as a NEW SNAPSHOT — zero data-file
@@ -3112,10 +3054,10 @@ object IcebergLite {
     }
     val newDels = written.map(f => PosDelete(f.filePath, f.recordCount,
       f.lowerBounds.get("file_path"), f.upperBounds.get("file_path")))
+    val dels = pendingDeletes(tablePath, parentId)
     commitSnapshot(tablePath, parentId, entries = Nil,
       carriedManifests = parentManifests(tablePath, parentId),
-      operation = "delete",
-      pendingPosDeletes = posDeletes(tablePath, parentId) ++ newDels)
+      operation = "delete", deletes = Some(dels.copy(pos = dels.pos ++ newDels)))
   }
 
   /** Merge-on-read EQUALITY-DELETE FILE as a NEW SNAPSHOT — the
@@ -3144,10 +3086,10 @@ object IcebergLite {
     if (written.isEmpty) return parentId.getOrElse(0L)
     val newDels = written.map(f => EqDelete(f.filePath, keysP.columns.toSeq,
       -1L, f.recordCount, f.lowerBounds, f.upperBounds))
+    val dels = pendingDeletes(tablePath, parentId)
     commitSnapshot(tablePath, parentId, entries = Nil,
       carriedManifests = parentManifests(tablePath, parentId),
-      operation = "delete",
-      pendingEqDeletes = eqDeletes(tablePath, parentId) ++ newDels)
+      operation = "delete", deletes = Some(dels.copy(eq = dels.eq ++ newDels)))
   }
 
   /** Whether an equality delete can still affect data file `f`:
@@ -3253,15 +3195,6 @@ object IcebergLite {
     filtered.drop("__graft_del_file", "__graft_data_seq")
   }
 
-  /** An equality delete stays pending only while some kept file is
-    * still in its scope; otherwise it has been materialized (or its
-    * files rewritten past it) and ages out. The key FILE itself stays
-    * on disk until snapshot expiry reclaims it with the snapshots
-    * that reference it. */
-  private def pruneEqDeletes(tablePath: String, dels: Seq[EqDelete],
-      kept: Seq[DataFile]): Seq[EqDelete] =
-    dels.filter(d => kept.exists(eqScopeMatches(tablePath, d, _)))
-
   /** Merge-on-read row DELETE as a NEW SNAPSHOT — Iceberg v2's delete
     * path, the latency/read-overhead counterpoint to the copy-on-write
     * [[delete]]: ZERO data I/O at delete time. Files the filters cover
@@ -3286,34 +3219,70 @@ object IcebergLite {
     val filtersP =
       if (rmap.isEmpty) filters else filters.map(physicalFilter(rmap, _))
     val parentId = currentSnapshotId(tablePath)
-    val live = dataFiles(tablePath)
-    val (touched, kept) = live.partition(f => filtersP.forall(_.matches(f)))
-    val partCols = touched.flatMap(_.partition.keys).distinct.sorted
-    // same residual analysis as the CoW path: conjuncts decided
-    // file-level by an exact partition value hold for every row of a
-    // touched file — an empty residual means every touched file dies
-    // WHOLESALE (pure metadata drop, no pending predicate needed)
-    val residual = filtersP.filterNot(f =>
-      partCols.contains(f.column) && touched.forall(_.partition.contains(f.column)))
-    if (touched.isEmpty || residual.isEmpty)
-      // wholesale: files drop from the manifest outright
-      commitSnapshot(tablePath, parentId, kept.map(entryJson),
-        carriedManifests = Nil, operation = "delete",
-        pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-        pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-        pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept))
-    else
+    val (touched, kept) = dataFiles(tablePath).partition(f => filtersP.forall(_.matches(f)))
+    // an empty residual means every touched file dies WHOLESALE: the
+    // files drop from the manifest outright (pure metadata drop, no
+    // pending predicate needed)
+    if (residualFilters(filtersP, touched).isEmpty)
+      commitRewrite(tablePath, parentId, kept, nothingWritten, "delete")
+    else {
       // residual predicate: ZERO manifest change — the parent's
       // manifests are carried verbatim (no file list rewrite at all;
       // the r7 shape re-listed every live file) and the snapshot
       // records one RowDelete with the FULL conjunct set, scoped at
       // read time to files with sequence ≤ this commit's. On a 10⁶-
-      // file table this commit writes O(1) metadata.
+      // file table this commit writes O(1) metadata. The parent's
+      // pending deletes carry unpruned: no file left the table, and
+      // every commit that drops files prunes them to what it keeps.
+      val dels = pendingDeletes(tablePath, parentId)
       commitSnapshot(tablePath, parentId, entries = Nil,
         carriedManifests = parentManifests(tablePath, parentId),
         operation = "delete",
-        pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), live) :+
-          RowDelete(-1L, filtersP))
+        deletes = Some(dels.copy(rows = dels.rows :+ RowDelete(-1L, filtersP))))
+    }
+  }
+
+  /** The conjuncts of a delete left to evaluate per row over the
+    * `touched` files: a conjunct on a partition column EVERY touched
+    * file carries exactly (not the conservative bounds fallback) is
+    * decided file-level and holds for all their rows. Empty = the
+    * touched files die wholesale (always, when none is touched). */
+  private def residualFilters(filters: Seq[PartitionFilter],
+      touched: Seq[DataFile]): Seq[PartitionFilter] =
+    filters.filterNot(f => touched.forall(_.partition.contains(f.column)))
+
+  /** The partition columns a rewrite writes under: a spec table's
+    * CURRENT spec fields (old-spec files migrate to it — Iceberg's
+    * rewrite-to-latest-spec behavior), else the rewritten files' own
+    * manifest partition keys. */
+  private def rewritePartCols(spec: Seq[IcebergTransforms.PartitionField],
+      files: Seq[DataFile]): Seq[String] =
+    if (spec.nonEmpty) spec.map(_.name).sorted
+    else files.flatMap(_.partition.keys).distinct.sorted
+
+  /** What a rewrite wrote — [[writeDataFiles]]' manifest entries, data
+    * schema (null: nothing written) and NDV sidecars. */
+  private type Written = (Seq[String], org.apache.spark.sql.types.StructType, Seq[String])
+  private val nothingWritten: Written = (Nil, null, Nil)
+
+  /** The one commit every copy-on-write rewrite ends in: the `kept`
+    * files of snapshot `parentId` re-listed verbatim plus the
+    * rewrite's new entries, the parent's pending deletes pruned to the
+    * kept files (the rewritten ones materialized them), the write
+    * schema union-merged. The NDV sidecar list gains this write's,
+    * except after a FULL rewrite (`resetStats`: compact, cluster,
+    * truncate): every live file is fresh, so the list resets to this
+    * write's and old sidecars die with old snapshots. */
+  private def commitRewrite(tablePath: String, parentId: Option[Long],
+      kept: Seq[DataFile], written: Written, operation: String,
+      resetStats: Boolean = false, toBranch: Option[String] = None): Long = {
+    val (entries, schema, stats) = written
+    commitSnapshot(tablePath, parentId, kept.map(entryJson) ++ entries,
+      carriedManifests = Nil, operation = operation,
+      deletes = Some(pendingDeletes(tablePath, parentId).prunedTo(tablePath, kept)),
+      toBranch = toBranch, schemaUnion = schema,
+      addStatsFiles = if (resetStats) Nil else stats,
+      statsFilesSet = if (resetStats) stats else null)
   }
 
   private def rowPredicate(df: DataFrame, f: PartitionFilter): org.apache.spark.sql.Column = {
@@ -3360,39 +3329,21 @@ object IcebergLite {
     val live = dataFiles(tablePath)
     // a file needs rewriting only if every conjunct can match it
     val (touched, kept) = live.partition(f => filters.forall(_.matches(f)))
-    val (rewritten, wSchema, statsAdds) =
-      if (touched.isEmpty)
-        (Nil: Seq[String], null: org.apache.spark.sql.types.StructType, Nil: Seq[String])
+    // the residual takes the ORIGINAL conjuncts: projected ones name
+    // partition fields that are not data columns, and on a
+    // spec-evolved table not even every touched file carries them
+    val residual = residualFilters(filters0, touched)
+    val written =
+      if (residual.isEmpty) nothingWritten // none touched, or deleted wholesale
       else {
-        val partCols = touched.flatMap(_.partition.keys).distinct.sorted
-        // residual = ORIGINAL conjuncts on data columns (partition
-        // conjuncts are uniformly true for every touched file, decided
-        // file-level) — only sound when every touched file carries the
-        // partition value exactly (not the conservative bounds
-        // fallback). Projected conjuncts never enter the residual:
-        // they name partition fields that are not data columns, and on
-        // a spec-evolved table not even every touched file carries
-        // them.
-        val residual = filters0.filterNot(f =>
-          partCols.contains(f.column) &&
-            touched.forall(_.partition.contains(f.column)))
-        if (residual.isEmpty) // deleted wholesale
-          (Nil: Seq[String], null: org.apache.spark.sql.types.StructType, Nil: Seq[String])
-        else {
-          // pending MoR deletes on the touched files materialize here
-          val df = readWithDeletes(spark, tablePath, touched, parentId)
-          val survivors = df.filter(not(coalesce(
-            residual.map(rowPredicate(df, _)).reduce(_ && _), lit(false))))
-          writeDataFiles(spark, tablePath, survivors, partCols, s"delete-${runTag()}")
-        }
+        // pending MoR deletes on the touched files materialize here
+        val df = readWithDeletes(spark, tablePath, touched, parentId)
+        val survivors = df.filter(not(coalesce(
+          residual.map(rowPredicate(df, _)).reduce(_ && _), lit(false))))
+        writeDataFiles(spark, tablePath, survivors,
+          rewritePartCols(partitionSpec(tablePath), touched), s"delete-${runTag()}")
       }
-    commitSnapshot(tablePath, parentId,
-      kept.map(entryJson) ++ rewritten, carriedManifests = Nil,
-      operation = "delete",
-      pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-      pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-      pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept),
-      schemaUnion = wSchema, addStatsFiles = statsAdds)
+    commitRewrite(tablePath, parentId, kept, written, "delete")
   }
 
   /** Copy-on-write row-level UPDATE as ONE NEW SNAPSHOT (SQL `UPDATE
@@ -3455,31 +3406,19 @@ object IcebergLite {
     // the moment their source column changed: drop and re-derive
     val derivedNames = spec.filter(_.transform != IcebergTransforms.Identity).map(_.name)
     val rederived = withSpecColumns(spec, backPhys.drop(derivedNames: _*))
-    val partCols =
-      if (spec.nonEmpty) spec.map(_.name).sorted
-      else touched.flatMap(_.partition.keys).distinct.sorted
-    val (rewritten, wSchema, statsAdds) = writeDataFiles(spark, tablePath, rederived,
-      partCols, s"update-${runTag()}", trustedPreDerived = true)
-    commitSnapshot(tablePath, parentId,
-      kept.map(entryJson) ++ rewritten, carriedManifests = Nil,
-      operation = "overwrite",
-      pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-      pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-      pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept),
-      schemaUnion = wSchema, addStatsFiles = statsAdds)
+    commitRewrite(tablePath, parentId, kept,
+      writeDataFiles(spark, tablePath, rederived, rewritePartCols(spec, touched),
+        s"update-${runTag()}", trustedPreDerived = true), "overwrite")
   }
 
   /** TRUNCATE as a NEW SNAPSHOT: zero entries, schema carried, prior
     * snapshots (and any branch/tag pinning them) stay time-travelable
     * until GC — a metadata-only commit however large the table. */
   def truncate(tablePath: String): Long = {
-    val parentId = currentSnapshotId(tablePath)
-    commitSnapshot(tablePath, parentId, Nil, carriedManifests = Nil,
-      operation = "delete",
-      pendingRowDeletes = Nil, pendingPosDeletes = Nil, pendingEqDeletes = Nil,
-      // no rows -> no column stats: carrying the parent's sidecars
-      // would report NDVs for deleted data
-      statsFilesSet = Nil)
+    // no rows -> no column stats: carrying the parent's sidecars
+    // would report NDVs for deleted data
+    commitRewrite(tablePath, currentSnapshotId(tablePath), Nil, nothingWritten,
+      "delete", resetStats = true)
   }
 
   /** Small-file COMPACTION as a NEW SNAPSHOT: every live row is
@@ -3500,29 +3439,20 @@ object IcebergLite {
     val live = dataFiles(tablePath)
     if (live.isEmpty) return parentId.getOrElse(0L)
     val spec = partitionSpec(tablePath)
-    // spec tables compact into the CURRENT spec's layout (old-spec
-    // files migrate here — Iceberg's rewrite-to-latest-spec behavior);
-    // legacy tables keep their manifest-derived partition keys
-    val partCols =
-      if (spec.nonEmpty) spec.map(_.name).sorted
-      else live.flatMap(_.partition.keys).distinct.sorted
+    val partCols = rewritePartCols(spec, live)
     // a full rewrite MATERIALIZES every pending merge-on-read delete
-    // (equality AND position): read with deletes applied, commit with
-    // the pending lists cleared. Spec tables re-derive their hidden
-    // partition columns so the repartition keys resolve.
+    // (equality AND position): read with deletes applied; nothing is
+    // kept, so the commit clears the pending lists. Spec tables
+    // re-derive their hidden partition columns so the repartition keys
+    // resolve.
     val base = withSpecColumns(spec,
       readWithDeletes(spark, tablePath, live, parentId))
     val df =
       if (partCols.nonEmpty) base.repartition(partCols.map(col): _*)
       else base.coalesce(1)
-    val (entries, wSchema, statsAdds) = writeDataFiles(spark, tablePath, df, partCols,
-      s"compact-${runTag()}", trustedPreDerived = true)
-    commitSnapshot(tablePath, parentId, entries, carriedManifests = Nil,
-      operation = "replace", pendingRowDeletes = Nil, pendingPosDeletes = Nil,
-      pendingEqDeletes = Nil, schemaUnion = wSchema,
-      // full rewrite: every live file is fresh, so the sidecar list
-      // RESETS to this write's — old sidecars die with old snapshots
-      statsFilesSet = statsAdds)
+    commitRewrite(tablePath, parentId, Nil,
+      writeDataFiles(spark, tablePath, df, partCols, s"compact-${runTag()}",
+        trustedPreDerived = true), "replace", resetStats = true)
   }
 
   /** SIZE-AWARE compaction (real Iceberg's `rewriteDataFiles` /
@@ -3555,23 +3485,15 @@ object IcebergLite {
     val touchedSet = touched.toSet
     val kept = live.filterNot(touchedSet)
     val spec = partitionSpec(tablePath)
-    val partCols =
-      if (spec.nonEmpty) spec.map(_.name).sorted
-      else touched.flatMap(_.partition.keys).distinct.sorted
+    val partCols = rewritePartCols(spec, touched)
     val base = withSpecColumns(spec,
       readWithDeletes(spark, tablePath, touched, parentId))
     val df =
       if (partCols.nonEmpty) base.repartition(partCols.map(col): _*)
       else base.coalesce(1)
-    val (entries, wSchema, statsAdds) = writeDataFiles(spark, tablePath, df, partCols,
-      s"compact-${runTag()}", trustedPreDerived = true)
-    commitSnapshot(tablePath, parentId,
-      kept.map(entryJson) ++ entries, carriedManifests = Nil,
-      operation = "replace",
-      pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-      pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-      pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept),
-      schemaUnion = wSchema, addStatsFiles = statsAdds)
+    commitRewrite(tablePath, parentId, kept,
+      writeDataFiles(spark, tablePath, df, partCols, s"compact-${runTag()}",
+        trustedPreDerived = true), "replace")
   }
 
   /** Copy-on-write MERGE (upsert) as a NEW SNAPSHOT: source rows whose
@@ -3698,12 +3620,7 @@ object IcebergLite {
       tombstoneCol.map(t => coalesce(col(t).cast("boolean"), lit(false)))
         .getOrElse(lit(false))
     val live = dataFiles(tablePath, parentId)
-    val spec = partitionSpec(tablePath)
-    // spec tables rewrite under the CURRENT spec (writeDataFiles
-    // derives); legacy tables keep their manifest partition keys
-    val partCols =
-      if (spec.nonEmpty) spec.map(_.name).sorted
-      else live.flatMap(_.partition.keys).distinct.sorted
+    val partCols = rewritePartCols(partitionSpec(tablePath), live)
     val dup = source.groupBy(keyCols.map(col): _*).count()
       .filter(col("count") > 1).limit(1).count()
     require(dup == 0, s"merge source has duplicate keys on ${keyCols.mkString(",")}")
@@ -3862,15 +3779,9 @@ object IcebergLite {
         case (None, Some(i)) => i
         case (None, None) => return parentId.getOrElse(0L)
       }
-      val (entries, wSchema, statsAdds) = writeDataFiles(spark, tablePath,
-        newData, partCols, s"merge-${runTag()}")
-      return commitSnapshot(tablePath, parentId,
-        keptEntries.map(entryJson) ++ entries, carriedManifests = Nil,
-        operation = "overwrite",
-        pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), keptEntries),
-        pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), keptEntries),
-        pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), keptEntries),
-        toBranch = toBranch, schemaUnion = wSchema, addStatsFiles = statsAdds)
+      return commitRewrite(tablePath, parentId, keptEntries,
+        writeDataFiles(spark, tablePath, newData, partCols, s"merge-${runTag()}"),
+        "overwrite", toBranch = toBranch)
     }
     val newData =
       if (touched.isEmpty) upsertRows
@@ -3906,15 +3817,9 @@ object IcebergLite {
           }
           alive.drop("__graft_src", "__graft_rn")
       }
-    val (entries, wSchema, statsAdds) = writeDataFiles(spark, tablePath, newData, partCols,
-      s"merge-${runTag()}")
-    commitSnapshot(tablePath, parentId,
-      kept.map(entryJson) ++ entries, carriedManifests = Nil,
-      operation = "overwrite",
-      pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-      pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-      pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept),
-      toBranch = toBranch, schemaUnion = wSchema, addStatsFiles = statsAdds)
+    commitRewrite(tablePath, parentId, kept,
+      writeDataFiles(spark, tablePath, newData, partCols, s"merge-${runTag()}"),
+      "overwrite", toBranch = toBranch)
   }
 
   /** Snapshot EXPIRY — the GC that completes the copy-on-write family:
@@ -3987,17 +3892,12 @@ object IcebergLite {
       if (expired.isEmpty) (0, 0)
       else {
         def manifestsOf(id: Long): Seq[String] = parentManifests(tablePath, Some(id))
-        // equality- and position-delete KEY FILES live under data/ and
-        // are referenced from snapshot JSON, not manifests — they join
-        // the data retention set or a retained snapshot's pending
-        // deletes would silently fail open after GC
-        def filesOf(id: Long): Seq[String] =
-          dataFiles(tablePath, Some(id)).map(_.filePath) ++
-            eqDeletes(tablePath, Some(id)).map(_.filePath) ++
-            posDeletes(tablePath, Some(id)).map(_.filePath)
+        // delete KEY FILES join the data retention set, or a retained
+        // snapshot's pending deletes would silently fail open after GC
         val keepManifests = retained.flatMap(manifestsOf)
-        val keepData = retained.flatMap(filesOf)
-        val dropData = expired.flatMap(filesOf).distinct.filterNot(keepData)
+        val keepData = retained.flatMap(referencedFiles(tablePath, _))
+        val dropData = expired.flatMap(referencedFiles(tablePath, _)).distinct
+          .filterNot(keepData)
         val dropManifests = expired.flatMap(manifestsOf).distinct.filterNot(keepManifests)
         // NDV-sketch sidecars (parquet DIRECTORIES under metadata/)
         // referenced only by expired snapshots go too
@@ -4021,6 +3921,15 @@ object IcebergLite {
         (expired.size, dropData.size)
       }
     }
+  }
+
+  /** Every file under `data/` snapshot `id` references: its live data
+    * files plus its pending equality- and position-delete KEY FILES
+    * (listed in the snapshot document, not in manifests). */
+  private def referencedFiles(tablePath: String, id: Long): Seq[String] = {
+    val d = snapshot(tablePath, id).deletes
+    dataFiles(tablePath, Some(id)).map(_.filePath) ++
+      d.eq.map(_.filePath) ++ d.pos.map(_.filePath)
   }
 
   /** Metadata-only column RENAME as a NEW SNAPSHOT — the second
@@ -4108,10 +4017,8 @@ object IcebergLite {
     * them. Returns the table-relative paths it deleted. */
   def removeOrphanFiles(tablePath: String, olderThanMs: Long = 3L * 24 * 3600 * 1000)
       : Seq[String] = {
-    val referenced: Set[String] = snapshots(tablePath)
-      .flatMap(id => dataFiles(tablePath, Some(id)).map(_.filePath) ++
-        eqDeletes(tablePath, Some(id)).map(_.filePath) ++
-        posDeletes(tablePath, Some(id)).map(_.filePath)).toSet
+    val referenced: Set[String] =
+      snapshots(tablePath).flatMap(referencedFiles(tablePath, _)).toSet
     val dataRoot = Paths.get(s"$tablePath/data")
     if (!Files.exists(dataRoot)) return Nil
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -4235,11 +4142,7 @@ object IcebergLite {
     val live = dataFiles(tablePath)
     if (live.isEmpty) return parentId.getOrElse(0L)
     val clusterSpec = partitionSpec(tablePath)
-    // spec tables cluster into the CURRENT spec's layout (old-spec
-    // files migrate); legacy tables keep manifest partition keys
-    val partCols =
-      if (clusterSpec.nonEmpty) clusterSpec.map(_.name).sorted
-      else live.flatMap(_.partition.keys).distinct.sorted
+    val partCols = rewritePartCols(clusterSpec, live)
     val runDir = s"cluster-${runTag()}"
     // full rewrite: pending MoR deletes materialize (cleared at commit);
     // spec tables re-derive hidden partition columns for the scoped keys
@@ -4362,10 +4265,9 @@ object IcebergLite {
       maxRecordsPerFile(tablePath), sidecar = true)
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partCols.contains(f.name)))
-    commitSnapshot(tablePath, parentId, files.map(entryJson), carriedManifests = Nil,
-      operation = "replace", pendingRowDeletes = Nil, pendingPosDeletes = Nil,
-      pendingEqDeletes = Nil, schemaUnion = dataSchema,
-      statsFilesSet = statsAdds) // full rewrite resets the sidecar list
+    // full rewrite: nothing kept, pending deletes materialized above
+    commitRewrite(tablePath, parentId, Nil, (files.map(entryJson), dataSchema, statsAdds),
+      "replace", resetStats = true)
   }
 
   /** Dynamic-partition OVERWRITE as a NEW SNAPSHOT: partitions present
@@ -4408,14 +4310,8 @@ object IcebergLite {
       .toSet
     val kept = dataFiles(tablePath).filterNot(f =>
       replaced.contains(partitionColumns.map(c => c -> f.partition.getOrElse(c, "null")).toMap))
-    val (entries, wSchema, statsAdds) = writeDataFiles(spark, tablePath, df, partitionColumns,
-      s"overwrite-${runTag()}", trustedPreDerived = true)
-    commitSnapshot(tablePath, parentId,
-      kept.map(entryJson) ++ entries, carriedManifests = Nil,
-      operation = "overwrite",
-      pendingRowDeletes = pruneDeletes(rowDeletes(tablePath, parentId), kept),
-      pendingPosDeletes = prunePosDeletes(posDeletes(tablePath, parentId), kept),
-      pendingEqDeletes = pruneEqDeletes(tablePath, eqDeletes(tablePath, parentId), kept),
-      schemaUnion = wSchema, addStatsFiles = statsAdds)
+    commitRewrite(tablePath, parentId, kept,
+      writeDataFiles(spark, tablePath, df, partitionColumns, s"overwrite-${runTag()}",
+        trustedPreDerived = true), "overwrite")
   }
 }

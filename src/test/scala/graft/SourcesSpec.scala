@@ -3536,4 +3536,19 @@ class SourcesSpec extends AnyFunSuite {
     assert(where.columns.toSet == Set("id", "v") && where.count() == 0L)
   }
 
+  test("an all-pruned metadata-column read keeps the legacy partition columns") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("iceberg_meta_pruned").toString
+    IcebergLite.createTable(root)
+    IcebergLite.append(s, root, Seq((1L, "x", "a"), (2L, "y", "b")).toDF("id", "v", "p"),
+      partitionColumns = Seq("p"))
+    val full = IcebergLite.readWithMetadataColumns(s, root)
+    val pruned = IcebergLite.readWithMetadataColumns(s, root,
+      filters = Seq(IcebergLite.Eq("p", "absent")))
+    assert(full.count() == 2L && pruned.count() == 0L)
+    assert(pruned.columns.toSeq == full.columns.toSeq)
+    assert(pruned.columns.toSeq == Seq("id", "v", "p", "_pos", "_file"))
+  }
+
 }
