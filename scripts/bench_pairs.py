@@ -16,7 +16,10 @@ change is a claimable gain: it wins at least 9/10 of ALL pairs run,
 its median beats the parent's by more than the parent's IQR, and no
 run failed, was incorrect, or (change side) failed more operations
 than the parent. Failed or incorrect runs are left out of the
-medians and count as pairs the change did not win.
+medians and count as pairs the change did not win. Each run's record
+also carries `steal_s`, the CPU steal run.py logged for its JVM, and
+the summary ends with each side's median steal: a side that ran with
+more steal reads slower for it.
 
 Each checkout builds its own engine into its own `.bench_build/`; both
 must hold the same `perfbench/` and `BENCHMARK.json` for the
@@ -26,6 +29,7 @@ import argparse
 import filecmp
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -52,17 +56,24 @@ def same_benchmark(a, b):
     return True
 
 
+STEAL = re.compile(r"cpu steal during the JVM run: ([0-9.]+) s")
+
+
 def run_once(checkout, workload, seed, seconds):
-    """One benchmark run in `checkout`; its parsed result line, or None."""
+    """One benchmark run in `checkout`: its parsed result line (None when
+    the run failed) and the CPU steal run.py logged for it (None when it
+    logged none)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    steal = STEAL.findall(p.stderr)
+    steal = float(steal[-1]) if steal else None
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
         sys.stderr.write(f"run failed in {checkout} (exit {p.returncode}):\n"
                          f"{p.stderr[-2000:]}\n")
-        return None
-    return json.loads(lines[-1])
+        return None, steal
+    return json.loads(lines[-1]), steal
 
 
 def quartiles(xs):
@@ -116,16 +127,19 @@ def main():
         bench = json.load(f)
 
     pairs = []
+    steals = {"parent": [], "change": []}
     for i in range(a.pairs):
         order = [("parent", parent), ("change", change)]
         if i % 2:
             order.reverse()
         got = {}
         for side, path in order:
-            line = run_once(path, a.workload, a.seed, bench["run_seconds"])
+            line, steal = run_once(path, a.workload, a.seed, bench["run_seconds"])
             got[side] = line
+            if steal is not None:
+                steals[side].append(steal)
             rec = {"pair": i, "side": side, "workload": a.workload,
-                   "seed": a.seed, "result": line}
+                   "seed": a.seed, "steal_s": steal, "result": line}
             print(json.dumps(rec, separators=(",", ":")), flush=True)
             if a.out:
                 with open(a.out, "a") as f:
@@ -148,6 +162,8 @@ def main():
               f"{r['change_median']:7.3f} [{r['change_q1']:.3f}, {r['change_q3']:.3f}]   "
               f"{r['change_wins']:>2}/{r['pairs']:<3} {r['parent_iqr']:8.3f} "
               f"{r['ratio']:6.3f}  {'yes' if r['gain'] else 'no'}")
+    med = {s: (f"{statistics.median(v):.2f} s" if v else "n/a") for s, v in steals.items()}
+    print(f"cpu steal per run, median: parent {med['parent']}, change {med['change']}")
 
 
 if __name__ == "__main__":

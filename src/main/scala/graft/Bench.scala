@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main (driver contract): runs the headline TPC-H
   * suite on SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{"q1":s,...},"sf":...}`.
@@ -21,12 +23,45 @@ import java.nio.file.Files
   * 33-53`: execute time, peak memory, spill counters). Shuffle/spill
   * bytes are the numbers that predict 100 TB behavior: a query whose
   * wall time is fine but whose shuffle bytes equal its input size is
-  * the one that falls over at scale.
+  * the one that falls over at scale. A query that fails in the warm or
+  * the timed pass is named on stderr and in the detail file's
+  * `failures` list (`{query, phase, error class}`); the pointer line
+  * counts the failed queries as `failed`.
   *
   * Baseline comparison: BASELINE.md's 66.7 s suite total at SF=0.1
   * (5.3 s excluding Q21).
   */
 object Bench {
+
+  /** One failed query run: its catalog name, the phase it failed in
+    * (`warm` or `timed`) and the error's class. */
+  final case class Failure(query: String, phase: String, error: String) {
+    def json: String = s"""{"query":"$query","phase":"$phase","error":"$error"}"""
+  }
+
+  /** Run `body` for `query`; a non-fatal error is reported on stderr,
+    * named, and returned instead of thrown. */
+  private def attempt[T](query: String, phase: String)(body: => T): Either[Failure, T] =
+    try Right(body)
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $query failed in the $phase pass: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+        Left(Failure(query, phase, e.getClass.getName))
+    }
+
+  /** The per-query loop: one untimed `warm` pass over `names`, then
+    * `runs` timed runs of each, keeping the sample `best` picks. A query
+    * that fails in either pass is named in the failures instead of
+    * stopping the suite; one that fails its timed runs has no sample. */
+  private[graft] def runSuite[T](names: Seq[String], runs: Int)(
+      warm: String => Unit, timed: String => T)(best: Seq[T] => T)
+      : (Seq[(String, Option[T])], Seq[Failure]) = {
+    val warmFailures = names.flatMap(n => attempt(n, "warm")(warm(n)).left.toOption)
+    val timedRuns = names.map(n => n -> attempt(n, "timed")(best((1 to runs).map(_ => timed(n)))))
+    (timedRuns.map { case (n, r) => n -> r.toOption },
+      warmFailures ++ timedRuns.flatMap(_._2.left.toOption))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -40,7 +75,7 @@ object Bench {
     Engine.registerDir(spark, sfDir)
     Engine.tableNames.foreach { t =>
       try spark.table(t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
 
     // One timed run ->
@@ -64,22 +99,13 @@ object Bench {
     // the suite's 307 classes: at Spark's default of 100 every timed
     // run recompiled its query. Each query's `compiles` in the detail
     // file reads 0 while that holds.
-    (1 to 22).foreach { i =>
-      val name = f"tpch_q$i%02d"
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
-
-    val results = (1 to 22).map { i =>
-      val name = f"tpch_q$i%02d"
-      val key = s"q$i"
-      try {
-        val samples = (1 to runs).map(_ => timeOnce(name))
-        val best = samples.minBy(_._1)
-        key -> Some(best)
-      } catch { case _: Throwable => key -> None }
-    }
+    // A failing query is named on stderr and in the detail file, and
+    // its wall reads -1.0 in the contract line.
+    val (timed, failures) = runSuite((1 to 22).map(i => f"tpch_q$i%02d"), runs)(
+      warm = name => SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save(),
+      timed = timeOnce)(_.minBy(_._1))
+    val results = timed.map { case (name, best) => s"q${name.stripPrefix("tpch_q").toInt}" -> best }
 
     // Detailed engine-metrics map: since r18 it goes to a FILE with a
     // compact pointer line on stdout (VERDICT r17 item 6: the ~2.3 KB
@@ -98,15 +124,17 @@ object Bench {
       }
       "\"" + k + "\":{" + fields + "}"
     }.mkString("{", ",", "}")
-    val detailLine = s"""{"bench_detail":$ms,"runs":$runs,"sf":"$sfDir"}"""
+    val failed = failures.map(_.query).distinct.size
+    val detailLine = s"""{"bench_detail":$ms,"failures":${failures.map(_.json).mkString("[", ",", "]")},""" +
+      s""""runs":$runs,"sf":"$sfDir"}"""
     val dtag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "")
     try {
       // createTempFile: an unpredictable name, created owner-only — a
       // fixed /tmp path could be pre-planted by another local user
       val detailPath = Files.createTempFile(s"graft_bench_detail_${dtag}_", ".json")
       Files.writeString(detailPath, detailLine)
-      println(s"""{"bench_detail_file":"$detailPath","sf":"$sfDir"}""")
-    } catch { case _: Throwable => println(detailLine) }
+      println(s"""{"bench_detail_file":"$detailPath","sf":"$sfDir","failed":$failed}""")
+    } catch { case NonFatal(_) => println(detailLine) }
 
     // Second bench surface: the reference's own 156-query golden suite
     // (it benchmarks the same set), end-to-end into the noop sink over
@@ -127,7 +155,7 @@ object Bench {
         val golden = queries.RefManifest.loadAll()
         def runAll(): Int = golden.count { case (_, sql) =>
           try { spark.sql(sql).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(_) => false }
         }
         runAll() // warm
         // timed pass records PER-QUERY walls: the r14 lesson is that
@@ -141,7 +169,7 @@ object Bench {
           val q0 = System.nanoTime()
           val good =
             try { spark.sql(sql).write.format("noop").mode("overwrite").save(); true }
-            catch { case _: Throwable => false }
+            catch { case NonFatal(_) => false }
           if (good) ok += 1
           name -> (if (good) r4((System.nanoTime() - q0) / 1e9) else -1.0)
         }
@@ -163,7 +191,7 @@ object Bench {
           s"""{"golden_per_query":$full,"totalSec":${r4(gWall)},"sf":"$sfDir"}""")
         println(s"""{"metric":"golden_suite","value":${r4(gWall)},"unit":"sec","queries":${golden.size},"succeeded":$ok,"perq_file":"$perqPath","sf":"$sfDir"}""")
         queries.RefManifest.restoreViews(spark, sfDir)
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
     }
     val qs = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(w => r4(w._1)).getOrElse(-1.0)

@@ -167,6 +167,14 @@ object IcebergLite {
       case _ => Nil
     }
 
+  /** The entries snapshot `id` wrote into its own manifest: for an
+    * append, the files it added. A commit that added none wrote no
+    * manifest, which reads as empty. */
+  private def addedFiles(tablePath: String, id: Long): Seq[DataFile] = {
+    val own = s"metadata/manifest-$id.json"
+    if (Files.exists(Paths.get(s"$tablePath/$own"))) manifestFiles(tablePath, own) else Nil
+  }
+
   /** Live data files of a snapshot, after partition pruning. Filter
     * columns are LOGICAL names (post-rename); manifests store physical
     * names, so filters are translated before matching. The returned
@@ -724,6 +732,18 @@ object IcebergLite {
     case other => org.apache.spark.sql.types.DataType.fromDDL(other)
   }
 
+  /** The merged footer schema of a pre-tracking snapshot's live files —
+    * the bootstrap for the first schema-changing commit (`op` names it
+    * in the refusal when there are no files). */
+  private def liveFooterSchema(spark: SparkSession, tablePath: String,
+      parentId: Option[Long], op: String): org.apache.spark.sql.types.StructType = {
+    val live = dataFiles(tablePath, parentId)
+    require(live.nonEmpty, s"$op on a table with no data files")
+    ManifestFileIndex.scan(spark, tablePath,
+      live.map(f => ManifestFileIndex.ScanFile(f.filePath, Nil)),
+      new org.apache.spark.sql.types.StructType(), None, mergeSchema = true).schema
+  }
+
   /** The DATA-column schema recorded by a snapshot (physical names;
     * None for pre-tracking snapshots → readers fall back to
     * mergeSchema). */
@@ -759,10 +779,7 @@ object IcebergLite {
     val cur = tableSchema(tablePath, parentId).getOrElse {
       // bootstrap from the live files' merged footers (no conflict can
       // exist yet — this is the first widening)
-      val live = dataFiles(tablePath, parentId)
-      require(live.nonEmpty, "widen on a table with no data files")
-      spark.read.option("mergeSchema", "true")
-        .parquet(live.map(f => s"$tablePath/${f.filePath}"): _*).schema
+      liveFooterSchema(spark, tablePath, parentId, "widen")
     }
     require(cur.fieldNames.contains(phys), s"column $column does not exist")
     val from = cur(phys).dataType
@@ -788,12 +805,8 @@ object IcebergLite {
       "at CREATE TABLE or in the first insert instead")
     require(cols.nonEmpty, "no columns to add")
     val rmap = renames(tablePath, parentId)
-    val cur = tableSchema(tablePath, parentId).getOrElse {
-      val live = dataFiles(tablePath, parentId)
-      require(live.nonEmpty, "add columns on a table with no data files")
-      spark.read.option("mergeSchema", "true")
-        .parquet(live.map(f => s"$tablePath/${f.filePath}"): _*).schema
-    }
+    val cur = tableSchema(tablePath, parentId).getOrElse(
+      liveFooterSchema(spark, tablePath, parentId, "add columns"))
     // collision set: the FULL logical shape (data + spec + legacy
     // partition columns) AND the physical names — a new column named
     // after a renamed column's physical name would commit a duplicate
@@ -873,12 +886,8 @@ object IcebergLite {
         "at CREATE TABLE or in the first insert instead")
       require(adds.nonEmpty, "no columns to add")
       val rmap = renames(tablePath, parentId)
-      val cur = tableSchema(tablePath, parentId).getOrElse {
-        val live = dataFiles(tablePath, parentId)
-        require(live.nonEmpty, "add columns on a table with no data files")
-        spark.read.option("mergeSchema", "true")
-          .parquet(live.map(f => s"$tablePath/${f.filePath}"): _*).schema
-      }
+      val cur = tableSchema(tablePath, parentId).getOrElse(
+        liveFooterSchema(spark, tablePath, parentId, "add columns"))
       val taken = scala.collection.mutable.Set.empty[String] ++
         logicalShape(tablePath, parentId).fieldNames ++
         partitionSpec(tablePath).map(_.name) ++ cur.fieldNames
@@ -913,12 +922,8 @@ object IcebergLite {
       val rmap = renames(tablePath, parentId)
       val specNames = partitionSpecs(tablePath).flatten
         .flatMap(f => Seq(f.source, f.name)).toSet
-      val cur = tableSchema(tablePath, parentId).getOrElse {
-        val live = dataFiles(tablePath, parentId)
-        require(live.nonEmpty, "widen on a table with no data files")
-        spark.read.option("mergeSchema", "true")
-          .parquet(live.map(f => s"$tablePath/${f.filePath}"): _*).schema
-      }
+      val cur = tableSchema(tablePath, parentId).getOrElse(
+        liveFooterSchema(spark, tablePath, parentId, "widen"))
       var next = cur
       widens.foreach { case (p0, t) =>
         val p = physicalName(rmap, p0.head) +: p0.tail
@@ -1210,11 +1215,8 @@ object IcebergLite {
       schemaSet: org.apache.spark.sql.types.StructType = null,
       knownSummaryJson: Map[String, String] = Map.empty,
       knownTotals: Map[String, (Long, Long)] = Map.empty,
-      writeOwnManifest: Boolean = true,
       addStatsFiles: Seq[String] = Nil,
       statsFilesSet: Seq[String] = null): Long = withCommitLock(tablePath) {
-    require(writeOwnManifest || entries.isEmpty,
-      "a commit that skips its own manifest cannot carry entries")
     val cur = toBranch match {
       case Some(name) => Some(resolveBranchHead(tablePath, name))
       case None => currentSnapshotId(tablePath)
@@ -1276,6 +1278,10 @@ object IcebergLite {
       }
     val seqEntries = entries.map(
       _.replace("\"sequence_number\": -1,", s""""sequence_number": $seq,"""))
+    // a commit that adds no entries (a metadata-only commit, or one that
+    // re-lists nothing) writes no manifest of its own: an empty one
+    // could prune nothing, yet every read would open it
+    val writeOwnManifest = seqEntries.nonEmpty
     if (writeOwnManifest)
       Files.writeString(Paths.get(s"$tablePath/metadata/manifest-$id.json"),
         seqEntries.mkString("{\"entries\": [", ",\n", "]}"))
@@ -1749,11 +1755,12 @@ object IcebergLite {
   /** Read a snapshot of the table as a DataFrame: metadata-pruned file
     * list → ONE `spark.read.parquet` over all surviving files (plan size
     * O(1) in the partition count — the round-1 union-per-partition shape
-    * choked the driver at 10k+ partitions). Partition values are
-    * recovered per-row from `input_file_name()` via a broadcast join
-    * against the manifest's (path → partition tuple) map, so partition
-    * predicates stay usable in SQL and the data files themselves never
-    * need the columns. Spark's pushdown/row-group pruning apply on top. */
+    * choked the driver at 10k+ partitions). The scan's file index is
+    * the manifest itself ([[ManifestFileIndex]]): each file's partition
+    * tuple reaches its rows as constants, so partition predicates stay
+    * usable in SQL (and prune files again at the scan) while the data
+    * files themselves never need the columns. Spark's pushdown/row-group
+    * pruning apply on top. */
   def read(spark: SparkSession, tablePath: String, snapshotId: Option[Long] = None,
       filters: Seq[PartitionFilter] = Nil): DataFrame = {
     val files = planFiles(spark, tablePath, snapshotId, filters)
@@ -2066,8 +2073,7 @@ object IcebergLite {
     commitSnapshot(tablePath, parentId, entries = Nil,
       carriedManifests = written.map(_._1).toSeq, operation = "replace",
       knownSummaryJson = written.map(w => w._1 -> w._2).toMap,
-      knownTotals = written.map(w => w._1 -> (w._3, w._4)).toMap,
-      writeOwnManifest = false)
+      knownTotals = written.map(w => w._1 -> (w._3, w._4)).toMap)
   }
 
   /** The operation that produced a snapshot (`append` / `delete` /
@@ -2359,7 +2365,7 @@ object IcebergLite {
     val op = snapshotOperation(tablePath, snapshotId)
     require(op == "append", s"only append snapshots cherry-pick (got '$op')")
     val parentId = currentSnapshotId(tablePath)
-    val picked = manifestFiles(tablePath, s"metadata/manifest-$snapshotId.json")
+    val picked = addedFiles(tablePath, snapshotId)
     require(picked.nonEmpty, s"snapshot $snapshotId added no files")
     val livePaths = dataFiles(tablePath, parentId).map(_.filePath).toSet
     val dup = picked.map(_.filePath).filter(livePaths)
@@ -2597,7 +2603,7 @@ object IcebergLite {
         throw new IllegalArgumentException(
           s"snapshot $cursor in the incremental range was expired")
       snapshotOperation(tablePath, cursor) match {
-        case "append" => added ++= manifestFiles(tablePath, s"metadata/manifest-$cursor.json")
+        case "append" => added ++= addedFiles(tablePath, cursor)
         case "replace" => // compaction/cluster: no logical row change
         case op => throw new IllegalArgumentException(
           s"cannot read incrementally through a '$op' snapshot ($cursor)")
@@ -2610,6 +2616,7 @@ object IcebergLite {
     else {
       val rmap = renames(tablePath, Some(to))
       val base = readFileSet(spark, tablePath, added.toSeq, snapshotId = Some(to))
+        .drop(FileCol, SeqCol)
       if (rmap.isEmpty) base else base.withColumnsRenamed(rmap)
     }
   }
@@ -2721,58 +2728,40 @@ object IcebergLite {
     if (rmap.isEmpty) out else out.withColumnsRenamed(rmap)
   }
 
-  /** The decoded absolute filesystem path of the file a row came from —
-    * the ONE file-identity key every per-row comparison (partition
-    * recovery, merge-on-read delete scoping) joins on.
-    * `input_file_name()` reports the Hadoop Path URI: scheme-prefixed
-    * and PERCENT-ENCODED (a space reads as `%20`), symlinks NOT
-    * resolved. Stripping the scheme and url-decoding (after shielding
-    * literal `+`, which form-decoding would corrupt into a space)
-    * yields the plain path — which [[absPath]] computes on the driver
-    * with NO canonicalization, so spaces, %-encodable characters and
-    * symlinked table paths all compare equal on both sides. (The r7
-    * shape compared the still-encoded URI against `getCanonicalPath`:
-    * any encodable character or symlink made delete scoping silently
-    * fail OPEN — deleted rows resurfaced.) */
-  private def inputFileCol: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{input_file_name, regexp_replace, url_decode}
-    url_decode(regexp_replace(
-      regexp_replace(input_file_name(), "^[a-z]+:/+", "/"), "\\+", "%2B"))
-  }
+  /** The per-file constants of an IcebergLite scan (see
+    * [[readFileSet]]): the file's table-relative path as the manifest
+    * lists it, and its data sequence number. */
+  private val FileCol = "__graft_file"
+  private val SeqCol = "__graft_seq"
+  /** The within-file row ordinal, captured at the scan when a position
+    * delete or `_pos` needs it. */
+  private val PosCol = "__graft_pos"
 
-  /** The row's decoded data-file identity for delete scoping.
-    * `input_file_name()` refuses to resolve above a join of TWO file
-    * sources, and a delete-applying plan has exactly that shape (the
-    * data scan joined against a delete-file scan) — so the identity
-    * is captured ONCE at the scan as `__graft_scan_file` (see
-    * [[readWithDeletes]] / [[readWithMetadataColumns]]) and every
-    * applier after the first join reads the captured column. The
-    * eval-time fallback keeps single-source callers working. */
-  private def fileIdCol(df: DataFrame): org.apache.spark.sql.Column =
-    if (df.columns.contains("__graft_scan_file"))
-      org.apache.spark.sql.functions.col("__graft_scan_file")
-    else inputFileCol
-
-  /** Driver-side twin of [[inputFileCol]]: absolute, `.`-normalized,
-    * symlinks untouched (Spark never resolves them either). */
-  private def absPath(tablePath: String, rel: String): String =
-    Paths.get(tablePath, rel).toAbsolutePath.normalize.toString
-
-  /** Read an explicit manifest file list (partition values recovered
-    * per-row, as in `read`). */
+  /** Scan an explicit manifest file list through [[ManifestFileIndex]]:
+    * the data columns, then the identity and legacy partition columns
+    * (strings as the manifest records them; null where a file has no
+    * value for one), then the per-file constants [[FileCol]] and
+    * [[SeqCol]] every delete applier keys on. Spark fills partition
+    * columns once per file, so no row pays for them; callers drop the
+    * two constants. */
   private def readFileSet(spark: SparkSession, tablePath: String,
-      files: Seq[DataFile], withRowPos: Boolean = false,
-      snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
+      files: Seq[DataFile], snapshotId: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String.fromString
     // transform-derived partition fields are HIDDEN: the source column
     // lives in the data files, so only identity partition values (which
-    // hive layout strips from the files) are recovered onto rows.
+    // hive layout strips from the files) surface as columns.
     // Union over every spec version — old-layout files hide too.
     val hiddenFields = partitionSpecs(tablePath).flatten
       .filter(_.transform != IcebergTransforms.Identity).map(_.name).toSet
     val partCols = files.flatMap(_.partition.keys).distinct
       .filterNot(hiddenFields).sorted
-    val paths = files.map(f => s"$tablePath/${f.filePath}")
+    val partitionSchema = StructType(partCols.map(StructField(_, StringType)) ++ Seq(
+      StructField(FileCol, StringType, nullable = false),
+      StructField(SeqCol, LongType, nullable = false)))
+    val scanFiles = files.map(f => ManifestFileIndex.ScanFile(f.filePath,
+      partCols.map(c => fromString(f.partition.getOrElse(c, null))) ++
+        Seq(fromString(f.filePath), f.sequenceNumber)))
     // Schema resolution, by NAME (the reference's JSON layout carries
     // no Iceberg field ids): a schema-tracking snapshot reads with its
     // OWN recorded schema as the explicit parquet schema — files that
@@ -2783,61 +2772,11 @@ object IcebergLite {
     // snapshot's schema, so history sees history's columns and types.
     // Pre-tracking snapshots keep the legacy mergeSchema union —
     // footer merging is metadata-only and Spark distributes it.
-    val base0 = tableSchema(tablePath, snapshotId) match {
-      case Some(sch) =>
-        val readSchema = org.apache.spark.sql.types.StructType(
-          sch.fields.filterNot(f => partCols.contains(f.name)))
-        spark.read.schema(readSchema).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
-    // the file-source `_metadata` hidden column resolves only directly
-    // over the scan — it does NOT survive the partition-recovery join
-    // below — so when position deletes need the within-file ordinal it
-    // is materialized here, at the scan, as `__graft_pos`
-    // (`_metadata.row_index` is the true 0-based ordinal, stable under
-    // split reads). applyPosDeletes consumes and drops it.
-    val base =
-      if (withRowPos) base0.withColumn("__graft_pos",
-        org.apache.spark.sql.functions.col("_metadata.row_index"))
-      else base0
-    // FAIL CLOSED: every manifest file must resolve to a plan input
-    // file under the same decoded-absolute-path key the row-level
-    // comparisons use. `inputFiles` reports the identical
-    // percent-encoded URI form `input_file_name()` does (verified:
-    // space → %20, literal % → %25 in both), so the driver decodes it
-    // exactly as [[inputFileCol]] decodes at eval. A divergence would
-    // otherwise fail OPEN (deletes silently no-op, partitions NULL).
-    val planFiles = base.inputFiles.map(s => java.net.URLDecoder.decode(
-      s.replaceFirst("^[a-z]+:/+", "/").replace("+", "%2B"),
-      java.nio.charset.StandardCharsets.UTF_8)).toSet
-    val missing = files.map(f => absPath(tablePath, f.filePath)).filterNot(planFiles)
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"file-identity check failed: ${missing.size} manifest file(s) not in the " +
-        s"plan's input set under the shared path key, e.g. ${missing.head}")
-    if (partCols.isEmpty) base
-    else {
-      val schema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("__graft_file", org.apache.spark.sql.types.StringType) +:
-          partCols.map(c => org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-      val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-      files.foreach { f =>
-        rows.add(org.apache.spark.sql.Row.fromSeq(
-          absPath(tablePath, f.filePath) +: partCols.map(c => f.partition.getOrElse(c, null))))
-      }
-      val partDf = spark.createDataFrame(rows, schema)
-      base
-        .withColumn("__graft_file", inputFileCol)
-        .join(broadcast(partDf), Seq("__graft_file"))
-        .drop("__graft_file")
-    }
+    val schema = tableSchema(tablePath, snapshotId)
+    ManifestFileIndex.scan(spark, tablePath, scanFiles, partitionSchema, schema,
+      mergeSchema = schema.isEmpty)
   }
 
-  /** Row-level Column for one filter over a DATA column — the literal
-    * is cast to the column's native type so the comparison matches the
-    * bounds semantics (bounds are min/max string-casts of the same
-    * typed data). Partition-column conjuncts are never built this way:
-    * their truth is uniform per file and is decided exactly at the
-    * file level by `PartitionFilter.matches`. */
   /** Apply pending merge-on-read deletes to a physical-name DataFrame
     * being read from `files`: each delete kills rows matching its
     * filters inside exactly the files whose data-sequence number is ≤
@@ -2846,11 +2785,10 @@ object IcebergLite {
     * a file the delete's filters provably cannot touch (partition
     * value / bounds mismatch) is pruned from the scope entirely, so
     * the per-row work is a codegen'd predicate over only the files
-    * that need it. The file check is an `input_file_name()` projection
-    * against a bounded in-plan list; readFileSet's fail-closed check
-    * already proved every read file resolves under the shared
-    * decoded-absolute-path key, so the scoping can never silently
-    * no-op. */
+    * that need it. The file check tests the scan's [[FileCol]]
+    * constant against the in-scope manifest paths — the same strings,
+    * so the scoping cannot silently miss a file — and is left out when
+    * every read file is in scope. */
   private def applyRowDeletes(df: DataFrame, tablePath: String,
       files: Seq[DataFile], dels: Seq[RowDelete]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
@@ -2863,15 +2801,12 @@ object IcebergLite {
       d -> files.filter(f =>
         f.sequenceNumber <= d.sequenceNumber && scopeFilters.forall(_.matches(f)))
     }.filter(_._2.nonEmpty)
-    if (scoped.isEmpty) return df
-    val withFile = df.withColumn("__graft_del_file", fileIdCol(df))
-    val filtered = scoped.foldLeft(withFile) { case (d, (del, inScope)) =>
-      val inFiles = col("__graft_del_file").isin(
-        inScope.map(f => absPath(tablePath, f.filePath)): _*)
-      val pred = del.filters.map(rowPredicate(d, _)).reduce(_ && _)
-      d.filter(not(inFiles && coalesce(pred, lit(false))))
+    scoped.foldLeft(df) { case (d, (del, inScope)) =>
+      val pred = coalesce(del.filters.map(rowPredicate(d, _)).reduce(_ && _), lit(false))
+      d.filter(not(
+        if (inScope.size == files.size) pred
+        else col(FileCol).isin(inScope.map(_.filePath): _*) && pred))
     }
-    filtered.drop("__graft_del_file")
   }
 
   /** Whether a position-delete file could name any of `paths`: its
@@ -2887,32 +2822,28 @@ object IcebergLite {
   /** Anti-apply pending POSITION-DELETE files: every pending key file
     * whose target range covers a read file is read (columnar,
     * distributed), the key sets union into ONE (file_path, pos)
-    * anti-join against the rows' scan-captured (file, `__graft_pos`)
-    * identity — however many delete files are pending, reads pay one
-    * join (the same single-join collapse [[applyEqDeletes]] applies).
-    * Rows of files no delete names have no join key and pass through;
-    * duplicate positions across delete files are harmless (anti-join
-    * semantics, no row multiplication). */
+    * anti-join against the rows' ([[FileCol]], [[PosCol]]) identity —
+    * both sides carry the manifest's table-relative path — however
+    * many delete files are pending, reads pay one join (the same
+    * single-join collapse [[applyEqDeletes]] applies). Rows of files no
+    * delete names have no join key and pass through; duplicate
+    * positions across delete files are harmless (anti-join semantics,
+    * no row multiplication). */
   private def applyPosDeletes(df: DataFrame, tablePath: String,
       files: Seq[DataFile], dels: Seq[PosDelete]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.functions.col
     val readPaths = files.map(_.filePath)
     val relevant = dels.filter(posDelMayTarget(_, readPaths))
     if (relevant.isEmpty) return df
-    val spark = df.sparkSession
-    val prefix = Paths.get(tablePath).toAbsolutePath.normalize.toString + "/"
-    // one multi-path scan over every relevant delete file (they share
-    // the (file_path, pos) schema) — never a per-file union
-    val keys = spark.read
-      .parquet(relevant.map(d => s"$tablePath/${d.filePath}"): _*)
-      .select(concat(lit(prefix), col("file_path")).as("__graft_pd_file"),
-        col("pos").as("__graft_pd_pos"))
-    val withKeys = df.withColumn("__graft_del_file", fileIdCol(df))
-    withKeys.join(keys,
-        withKeys("__graft_del_file") === keys("__graft_pd_file") &&
-          withKeys("__graft_pos") === keys("__graft_pd_pos"),
+    // one scan over every relevant delete file (they share the
+    // (file_path, pos) schema) — never a per-file union
+    val keys = ManifestFileIndex.scan(df.sparkSession, tablePath,
+        relevant.map(d => ManifestFileIndex.ScanFile(d.filePath, Nil)),
+        new org.apache.spark.sql.types.StructType(), Some(posPairSchema))
+      .select(col("file_path").as("__graft_pd_file"), col("pos").as("__graft_pd_pos"))
+    df.join(keys,
+        df(FileCol) === keys("__graft_pd_file") && df(PosCol) === keys("__graft_pd_pos"),
         "left_anti")
-      .drop("__graft_del_file", "__graft_pos")
   }
 
   /** Read `files` with ALL pending merge-on-read delete forms
@@ -2925,32 +2856,25 @@ object IcebergLite {
   private def readWithDeletes(spark: SparkSession, tablePath: String,
       files: Seq[DataFile], snapshotId: Option[Long],
       metadataColumns: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, replace}
+    import org.apache.spark.sql.functions.col
     val dels = pendingDeletes(tablePath, snapshotId)
     val readPaths = files.map(_.filePath)
     val needPos = metadataColumns || dels.pos.exists(posDelMayTarget(_, readPaths))
-    val base0 = readFileSet(spark, tablePath, files, withRowPos = needPos,
-      snapshotId = snapshotId)
-    val base1 =
-      if (!metadataColumns) base0
-      else base0.withColumn("_pos", col("__graft_pos")).withColumn("_file", replace(
-        inputFileCol, lit(Paths.get(tablePath).toAbsolutePath.normalize.toString + "/"), lit("")))
-    // file identity captured ONCE, at the scan (single file source in
-    // the plan here) — appliers after the first delete-file join read
-    // the captured column, where input_file_name() can no longer
-    // resolve (see [[fileIdCol]]). Only paid when a pending delete
-    // exists: the common clean read stays projection-free.
+    val scan = readFileSet(spark, tablePath, files, snapshotId)
+    // the file-source `_metadata` hidden column resolves only directly
+    // over the scan — not above a delete join — so the ordinal is
+    // materialized here (`_metadata.row_index` is the true 0-based
+    // ordinal, stable under split reads)
+    val base0 = if (needPos) scan.withColumn(PosCol, col("_metadata.row_index")) else scan
     val base =
-      if (dels.rows.isEmpty && dels.eq.isEmpty && !needPos) base1
-      else base1.withColumn("__graft_scan_file", inputFileCol)
-    // applyPosDeletes consumes __graft_pos only when a pending position
-    // delete targets a read file; drop the scratch column either way
+      if (!metadataColumns) base0
+      else base0.withColumn("_pos", col(PosCol)).withColumn("_file", col(FileCol))
     applyPosDeletes(
       applyEqDeletes(
         applyRowDeletes(base, tablePath, files, dels.rows),
         tablePath, files, dels.eq),
       tablePath, files, dels.pos)
-      .drop("__graft_scan_file", "__graft_pos")
+      .drop(FileCol, SeqCol, PosCol)
   }
 
   /** Merge-on-read POSITION delete as a NEW SNAPSHOT — zero data-file
@@ -3117,14 +3041,13 @@ object IcebergLite {
     * files are pending — a CDC table committing every few minutes
     * between hourly compactions carries dozens of pending files, and
     * a join per file would chain dozens of shuffles onto every read.
-    * Each key row is tagged with its delete's sequence number
-    * (max-reduced per key tuple: any delete at-or-after a row's data
-    * sequence kills it, so the max tag decides), and the row side
-    * carries its file's data-sequence via the same broadcast
-    * (path → value) join partition recovery uses — O(read files)
-    * rows, never a per-delete `isin` literal list in the plan. The
-    * kill condition `data_seq ≤ key_seq` IS the v2 contract; the
-    * per-delete bounds scope remains what prunes deletes that can
+    * Each key row carries its delete's sequence number as a per-file
+    * constant of the key scan (max-reduced per key tuple: any delete
+    * at-or-after a row's data sequence kills it, so the max tag
+    * decides), and the row side carries its file's data sequence as
+    * the scan's [[SeqCol]] constant — no per-row lookup on either
+    * side. The kill condition `data_seq ≤ key_seq` IS the v2 contract;
+    * the per-delete bounds scope remains what prunes deletes that can
     * touch nothing (a file whose bounds exclude every key never has a
     * matching key tuple, so dropping the per-file scope check from
     * the row predicate changes no survivor). The join is a plain
@@ -3132,67 +3055,30 @@ object IcebergLite {
     * CDC batches, both correct at scale. */
   private def applyEqDeletes(df: DataFrame, tablePath: String,
       files: Seq[DataFile], dels: Seq[EqDelete]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, not}
-    val scoped = dels.map(d => d -> files.filter(eqScopeMatches(tablePath, d, _)))
-      .filter(_._2.nonEmpty)
-    if (scoped.isEmpty) return df
-    val spark = df.sparkSession
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val seqRows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-    files.foreach(f => seqRows.add(org.apache.spark.sql.Row(
-      absPath(tablePath, f.filePath), f.sequenceNumber)))
-    val seqDf = spark.createDataFrame(seqRows, StructType(Seq(
-      StructField("__graft_del_file", StringType, nullable = false),
-      StructField("__graft_data_seq", LongType, nullable = false))))
-    val withSeq = df.withColumn("__graft_del_file", fileIdCol(df))
-      .join(broadcast(seqDf), Seq("__graft_del_file"), "left_outer")
-    val bySignature = scoped.map(_._1).groupBy(_.keyCols).toSeq
-      .sortBy(_._1.mkString(","))
-    val filtered = bySignature.foldLeft(withSeq) { case (acc, (keyCols, group)) =>
-      // ONE multi-path scan for the signature's key files — a union of
-      // per-file reads would grow the plan (and codegen) linearly with
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, not}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val scoped = dels.filter(d => files.exists(eqScopeMatches(tablePath, d, _)))
+    val keySeq = "__graft_key_seq"
+    val bySignature = scoped.groupBy(_.keyCols).toSeq.sortBy(_._1.mkString(","))
+    bySignature.foldLeft(df) { case (acc, (keyCols, group)) =>
+      // ONE scan for the signature's key files — a union of per-file
+      // reads would grow the plan (and codegen) linearly with
       // pending-file count, which a parallel-writer CDC delete makes
       // large (each deleteEquality cuts one key file per write task)
-      val scan = spark.read
-        .parquet(group.map(d => s"$tablePath/${d.filePath}"): _*)
-      val seqs = group.map(_.sequenceNumber).distinct
-      val keysRaw =
-        if (seqs.size == 1)
-          // all files from one commit: one shared sequence literal,
-          // and the commit's distinct() write guarantees unique keys
-          scan.select(keyCols.map(col): _*)
-            .withColumn("__graft_key_seq", lit(seqs.head))
-        else {
-          // per-row sequence recovered via a broadcast (key-file →
-          // commit sequence) map — the same O(pending files) shape the
-          // data side uses, keeping ONE scan node however many delete
-          // commits are pending
-          import org.apache.spark.sql.functions.{regexp_replace, url_decode}
-          val kfRows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-          group.foreach(d => kfRows.add(org.apache.spark.sql.Row(
-            absPath(tablePath, d.filePath), d.sequenceNumber)))
-          val kfDf = spark.createDataFrame(kfRows, StructType(Seq(
-            StructField("__graft_kf", StringType, nullable = false),
-            StructField("__graft_key_seq", LongType, nullable = false))))
-          val decoded = url_decode(regexp_replace(regexp_replace(
-            col("_metadata.file_path"), "^[a-z]+:/+", "/"), "\\+", "%2B"))
-          scan.select(keyCols.map(col) :+ decoded.as("__graft_kf"): _*)
-            .join(broadcast(kfDf), Seq("__graft_kf"))
-            .drop("__graft_kf")
-        }
+      val keysRaw = ManifestFileIndex.scan(df.sparkSession, tablePath,
+          group.map(d => ManifestFileIndex.ScanFile(d.filePath, Seq(d.sequenceNumber))),
+          StructType(Seq(StructField(keySeq, LongType, nullable = false))), None)
+        .select(keyCols.map(col) :+ col(keySeq): _*)
+      // one commit's files are duplicate-free (its write is distinct);
       // keys across commits can repeat → re-distinct keeping the max
-      // sequence (any delete at-or-after a row's data sequence kills
-      // it, so the max tag decides)
+      // sequence
       val keys =
-        if (seqs.size == 1) keysRaw
-        else keysRaw.groupBy(keyCols.map(col): _*)
-          .agg(max(col("__graft_key_seq")).as("__graft_key_seq"))
+        if (group.map(_.sequenceNumber).distinct.size == 1) keysRaw
+        else keysRaw.groupBy(keyCols.map(col): _*).agg(max(col(keySeq)).as(keySeq))
       acc.join(keys, keyCols, "left_outer")
-        .filter(not(coalesce(
-          col("__graft_data_seq") <= col("__graft_key_seq"), lit(false))))
-        .drop("__graft_key_seq")
+        .filter(not(coalesce(col(SeqCol) <= col(keySeq), lit(false))))
+        .drop(keySeq)
     }
-    filtered.drop("__graft_del_file", "__graft_data_seq")
   }
 
   /** Merge-on-read row DELETE as a NEW SNAPSHOT — Iceberg v2's delete
@@ -3285,6 +3171,12 @@ object IcebergLite {
       statsFilesSet = if (resetStats) stats else null)
   }
 
+  /** Row-level Column for one filter over a DATA column — the literal
+    * is cast to the column's native type so the comparison matches the
+    * bounds semantics (bounds are min/max string-casts of the same
+    * typed data). Partition-column conjuncts are never built this way:
+    * their truth is uniform per file and is decided exactly at the
+    * file level by `PartitionFilter.matches`. */
   private def rowPredicate(df: DataFrame, f: PartitionFilter): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, lit}
     val dt = df.schema(f.column).dataType
@@ -4136,7 +4028,7 @@ object IcebergLite {
       targetFiles: Int, zorder: Boolean,
       partitionScoped: Boolean,
       quantileCoded: Boolean): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, floor, input_file_name, lit, max, min, when}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, floor, lit, max, min, when}
     require(sortCols.nonEmpty && targetFiles >= 1, "cluster needs sort columns and a file target")
     val parentId = currentSnapshotId(tablePath)
     val live = dataFiles(tablePath)

@@ -237,4 +237,61 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("SortMergeJoin"))
   }
+
+  test("IcebergLite reads take partition values and file identity from the manifest index") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    import graft.sources.IcebergLite
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_iceberg").toString
+    IcebergLite.createTable(root)
+    (0 until 2).foreach { a =>
+      IcebergLite.append(s, root, (0L until 20L).map(i =>
+        (a * 100L + i, i % 4, if (i % 2 == 0) "even" else "odd")).toDF("id", "k", "part"), Seq("part"))
+    }
+    // no expression anywhere in the plan works a file's identity out of
+    // its path, row by row
+    def pathDecoding(df: DataFrame): Seq[String] = {
+      val qe = df.queryExecution
+      (Seq(qe.analyzed, qe.optimizedPlan).flatMap(_.collect { case n => n.expressions })
+        ++ qe.sparkPlan.collect { case n => n.expressions }).flatten
+        .flatMap(_.collect { case e => e.getClass.getSimpleName })
+        .filter(Set("InputFileName", "UrlDecode", "RegExpReplace"))
+    }
+    def joins(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size +
+        df.queryExecution.sparkPlan.collect { case j: BaseJoinExec => j }.size
+
+    val clean = IcebergLite.read(s, root)
+    assert(pathDecoding(clean).isEmpty, pathDecoding(clean))
+    assert(joins(clean) == 0, clean.queryExecution.sparkPlan)
+    val even = clean.filter(col("part") === "even")
+    val scans = even.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1 &&
+      scans.head.partitionFilters.exists(_.references.map(_.name).toSet == Set("part")),
+      even.queryExecution.sparkPlan)
+    assert(even.count() == 20L)
+
+    // one pending delete of each kind: predicate, equality file, positions
+    val (file0, pos0) = IcebergLite.readWithMetadataColumns(s, root)
+      .filter(col("id") === 0L).select("_file", "_pos").as[(String, Long)].head()
+    IcebergLite.deleteMergeOnRead(s, root, Seq(IcebergLite.Eq("k", "1")))
+    IcebergLite.deleteEquality(s, root, Seq(2L, 102L).toDF("id"))
+    IcebergLite.deletePositions(s, root, Map(file0 -> Seq(pos0)))
+    assert(IcebergLite.rowDeletes(root).size == 1 &&
+      IcebergLite.eqDeletes(root).size == 1 && IcebergLite.posDeletes(root).size == 1)
+    val withDeletes = IcebergLite.read(s, root)
+    assert(pathDecoding(withDeletes).isEmpty, pathDecoding(withDeletes))
+    // 40 rows − the 10 with k = 1 − ids 2 and 102 − id 0
+    assert(withDeletes.select("id").as[Long].collect().sorted.toSeq ==
+      (0 until 2).flatMap(a => (0L until 20L).filter(i => i % 4 != 1).map(a * 100L + _))
+        .filterNot(Set(0L, 2L, 102L)))
+    val meta = IcebergLite.readWithMetadataColumns(s, root)
+    assert(pathDecoding(meta).isEmpty, pathDecoding(meta))
+    assert(meta.count() == 27L)
+  }
 }

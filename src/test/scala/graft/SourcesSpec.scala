@@ -2026,12 +2026,12 @@ class SourcesSpec extends AnyFunSuite {
     val joins = df.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }
-    // one data-side sequence-map join + one key-file-map broadcast +
-    // ONE key join for the whole signature — and the count must stay
-    // FLAT as more deletes pile up (the r9 shape paid one join per
-    // pending file)
-    assert(joins.size == 3,
-      s"4 pending deletes of one signature must cost 3 joins total, got ${joins.size}")
+    // ONE key join for the whole signature (both sides' sequence
+    // numbers are per-file scan constants, so no lookup join) — and the
+    // count must stay FLAT as more deletes pile up (the r9 shape paid
+    // one join per pending file)
+    assert(joins.size == 1,
+      s"4 pending deletes of one signature must cost 1 join total, got ${joins.size}")
     val vs = df.select("v").as[String].collect().sorted.toSeq
     assert(!vs.contains("old1") && !vs.contains("old2") && !vs.contains("old3") &&
       !vs.contains("old4") && !vs.contains("old18") && vs.contains("re2") &&
@@ -2050,8 +2050,8 @@ class SourcesSpec extends AnyFunSuite {
     val joins2 = df2.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }
-    assert(joins2.size == joins.size + 2,
-      s"second signature adds exactly its map+key joins, got ${joins2.size}")
+    assert(joins2.size == joins.size + 1,
+      s"second signature adds exactly its key join, got ${joins2.size}")
     assert(df2.count() == 12L)
   }
 
@@ -3549,6 +3549,110 @@ class SourcesSpec extends AnyFunSuite {
     assert(full.count() == 2L && pruned.count() == 0L)
     assert(pruned.columns.toSeq == full.columns.toSeq)
     assert(pruned.columns.toSeq == Seq("id", "v", "p", "_pos", "_file"))
+  }
+
+  // The manifest file index: each test reads back exactly the rows it
+  // wrote, whatever filters, layouts and schema changes sit between.
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("manifest index: partition-only filters, Hive-escaped values and a missing partition value") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("iceberg_index_parts").toString
+    IcebergLite.createTable(root)
+    val regions = Seq("a/b", "x=y", "with space", "100%", "plain")
+    IcebergLite.append(s, root, regions.zipWithIndex.flatMap { case (r, i) =>
+      (0 until 3).map(j => (i * 10L + j, r))
+    }.toDF("id", "region"), Seq("region"))
+    // a second layout: its files carry a kind value and no region value
+    IcebergLite.append(s, root, Seq((100L, "k1"), (101L, "k2")).toDF("id", "kind"), Seq("kind"))
+    val t = IcebergLite.read(s, root)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().sorted.toSeq
+    assert(rowSet(t.select("id", "region", "kind")) == rowSet(
+      (regions.zipWithIndex.flatMap { case (r, i) =>
+        (0 until 3).map(j => (i * 10L + j, Option(r), Option.empty[String]))
+      } ++ Seq((100L, None, Some("k1")), (101L, None, Some("k2"))))
+        .toDF("id", "region", "kind")))
+    // every escaped value round-trips and selects its own files
+    regions.zipWithIndex.foreach { case (r, i) =>
+      assert(ids(t.filter(col("region") === r)) == (0 until 3).map(i * 10L + _), r)
+    }
+    assert(ids(t.filter(col("region").isin("x=y", "100%"))) == Seq(10L, 11L, 12L, 30L, 31L, 32L))
+    assert(ids(t.filter(col("region").isNull)) == Seq(100L, 101L))
+    assert(ids(t.filter(col("kind") === "k2" || col("region") === "a/b")) == Seq(0L, 1L, 2L, 101L))
+    assert(ids(IcebergLite.readWhere(s, root, col("region") === "with space")) == Seq(20L, 21L, 22L))
+    t.createOrReplaceTempView("iceberg_index_parts")
+    assert(ids(s.sql("SELECT id FROM iceberg_index_parts WHERE region > 'w'")) ==
+      Seq(10L, 11L, 12L, 20L, 21L, 22L))
+    assert(ids(s.sql("SELECT id FROM iceberg_index_parts WHERE kind IS NOT NULL AND region IS NULL")) ==
+      Seq(100L, 101L))
+    assert(ids(s.sql("SELECT id FROM iceberg_index_parts WHERE region = '100%' AND id > 30")) ==
+      Seq(31L, 32L))
+  }
+
+  test("manifest index: a spec table with identity and bucket[4] fields") {
+    val s = spark
+    import s.implicits._
+    val root = freshSpecTable(Seq(PartitionField("region", IcebergTransforms.Identity, StringType),
+      PartitionField("id", Bucket(4), LongType)))
+    val rows = (0L until 40L).map(id => (id, s"v$id", if (id % 3 == 0) "x=y" else "a/b"))
+    IcebergLite.append(s, root, rows.toDF("id", "v", "region").coalesce(1))
+    val t = IcebergLite.read(s, root)
+    assert(t.columns.sorted.toSeq == Seq("id", "region", "v"))
+    assert(rowSet(t.select("id", "v", "region")) == rowSet(rows.toDF("id", "v", "region")))
+    assert(rowSet(t.filter(col("region") === "x=y").select("id", "v", "region")) ==
+      rowSet(rows.filter(_._3 == "x=y").toDF("id", "v", "region")))
+    assert(t.filter(col("id") === 17L).select("v").as[String].collect().toSeq == Seq("v17"))
+  }
+
+  test("manifest index: renamed and widened columns, and a pre-tracking table through mergeSchema") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("iceberg_index_evolve").toString
+    IcebergLite.createTable(root)
+    IcebergLite.append(s, root, Seq((1, "a", "p1"), (2, "b", "p2")).toDF("n", "v", "part"), Seq("part"))
+    IcebergLite.renameColumn(root, "v", "w")
+    IcebergLite.widenColumn(s, root, "n", LongType)
+    IcebergLite.append(s, root, Seq((3L, "c", "p1")).toDF("n", "w", "part"), Seq("part"))
+    val t = IcebergLite.read(s, root)
+    assert(t.schema("n").dataType == LongType)
+    assert(rowSet(t.select("n", "w", "part")) ==
+      rowSet(Seq((1L, "a", "p1"), (2L, "b", "p2"), (3L, "c", "p1")).toDF("n", "w", "part")))
+    assert(rowSet(t.filter(col("part") === "p1").select("n", "w")) ==
+      rowSet(Seq((1L, "a"), (3L, "c")).toDF("n", "w")))
+    // the generated reference-layout table records no schema: its data
+    // columns come from the files' merged footers
+    assert(IcebergLite.tableSchema(tableDir).isEmpty)
+    val legacy = IcebergLite.read(s, tableDir)
+    assert(rowSet(legacy.filter(col("year") >= "2024").select("id", "v", "year")) ==
+      rowSet(Seq((3L, "c", "2024"), (4L, "d", "2025"), (5L, "e", "2025"), (6L, "f", "2025"))
+        .toDF("id", "v", "year")))
+  }
+
+  test("manifest index: _file/_pos name live rows and feed a DataFrame position delete") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("iceberg_index_meta").toString
+    IcebergLite.createTable(root)
+    val rows = (0L until 12L).map(i => (i, s"v$i", if (i % 2 == 0) "with space" else "100%"))
+    IcebergLite.append(s, root, rows.toDF("id", "v", "region").coalesce(1), Seq("region"))
+    val meta = IcebergLite.readWithMetadataColumns(s, root)
+    val live = IcebergLite.dataFiles(root).map(_.filePath).toSet
+    val located = meta.select("_file", "_pos", "id").as[(String, Long, Long)].collect()
+    assert(located.map(_._1).toSet == live)
+    // within each file the ordinals are 0..n-1 in write order
+    located.groupBy(_._1).values.foreach { fs =>
+      assert(fs.sortBy(_._3).map(_._2).toSeq == fs.indices.map(_.toLong))
+    }
+    IcebergLite.deletePositions(s, root, meta.filter(col("id").isin(3L, 4L, 11L))
+      .select(col("_file").as("file_path"), col("_pos").as("pos")))
+    assert(IcebergLite.read(s, root).select("id").as[Long].collect().sorted.toSeq ==
+      (0L until 12L).filterNot(Set(3L, 4L, 11L)))
+    assert(IcebergLite.readWithMetadataColumns(s, root).filter(col("region") === "100%")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 5L, 7L, 9L))
   }
 
 }
