@@ -1502,7 +1502,7 @@ object ScaleSweep {
     val tombstones = keysDf.select(col("k"), lit(null).cast("double").as("amount"),
       lit(null).cast("string").as("v"), lit(true).as("op_del"))
     val (_, cowWall) = timed(IcebergLite.merge(spark, rootCow, tombstones, keyCols = Seq("k"),
-      maxKeyPrune = 100, tombstoneCol = Some("op_del")))
+      maxKeyPrune = 100, whenMatched = IcebergLite.WhenMatched.UpdateAll(tombstone = Some("op_del"))))
     val rewrittenCow = IcebergLite.dataFiles(rootCow)
       .count(f => !cowBefore.contains(f.filePath))
     val nCow = IcebergLite.read(spark, rootCow).count()

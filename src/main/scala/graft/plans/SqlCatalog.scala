@@ -743,7 +743,7 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       GraftDeleteCommand(path,
         org.apache.spark.sql.GraftColumnBridge.toCol(bare(cond)),
         noCondition = cond == Literal.TrueLiteral)
-    // UPDATE ... WHERE keys IN (subquery): the update-only expr-merge
+    // UPDATE ... WHERE keys IN (subquery): the update-only merge
     // with the subquery result as the key set (same routing rationale
     // as the IN-delete above)
     case UpdateTable(GraftTarget(path, _, branch), assignments,
@@ -970,8 +970,11 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     *  - `WHEN MATCHED AND source.seq >= target.seq THEN UPDATE SET *`
     *    maps onto the ordered-upsert `precedence` column;
     *  - `WHEN MATCHED AND source.flag THEN DELETE` maps onto the CDC
-    *    `tombstoneCol`; a bare `WHEN MATCHED THEN DELETE` (no update
-    *    action) tags every source row as a tombstone.
+    *    `tombstone`; a bare `WHEN MATCHED THEN DELETE` (no update
+    *    action) is [[IcebergLite.WhenMatched.Delete]];
+    *  - `UPDATE SET col = expr`, `INSERT (cols) VALUES (exprs)` and
+    *    `WHEN NOT MATCHED BY SOURCE THEN DELETE` map onto the column
+    *    level clauses.
     * Everything else refuses with a message naming the gap. */
   private def mergeFor(path: String, tAlias: Option[String],
       toBranch: Option[String], source: LogicalPlan, cond: Expression,
@@ -983,7 +986,7 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     // (target rows whose keys the source lacks die). Unconditional
     // DELETE only; inherently a full-table rewrite (every file may
     // hold an unmatched row), priced as such by the primitive.
-    val deleteUnmatchedTarget = notMatchedBySource match {
+    val deleteBySource = notMatchedBySource match {
       case Seq() => false
       case Seq(DeleteAction(None)) => true
       case other => throw new IllegalArgumentException(
@@ -1039,9 +1042,10 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     require(keyPairs.map(_._2.toLowerCase).distinct.size == keyPairs.size,
       "MERGE ON uses the same source column for two target keys")
     // an assignment VALUE sees target columns bare and source columns
-    // as __graft_s_<name> — the disambiguation the expr-merge's
-    // touched-row join uses (source keys are renamed first, so a
-    // reference to the source key lands on its target name)
+    // as __graft_s_<name> — the disambiguation the merge's touched-row
+    // join uses (source keys are renamed first, so a reference to the
+    // source key lands on its target name). An INSERT value sees the
+    // source row only.
     val sourceColsLower = source.output.map(_.name.toLowerCase).toSet
     // LAZY: only a bare single-part SET value needs the target shape —
     // qualified and star assignments (the common forms) never pay this
@@ -1072,7 +1076,7 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     def srcRef(name: String): UnresolvedAttribute =
       UnresolvedAttribute.quoted(
         "__graft_s_" + keyRenamesLower.getOrElse(name.toLowerCase, name))
-    def assignVal(e: Expression): org.apache.spark.sql.Column = {
+    def assignVal(e: Expression, insert: Boolean = false): org.apache.spark.sql.Column = {
       require(!e.exists(_.isInstanceOf[PlanExpression[_]]) &&
         !e.exists(_.isInstanceOf[SubqueryExpression]),
         "subqueries in MERGE assignments are not supported for graft tables")
@@ -1083,6 +1087,8 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
             if a.nameParts.length > 1 &&
               sourceNames.contains(a.nameParts.init.last.toLowerCase) =>
           srcRef(a.nameParts.last)
+        case a: UnresolvedAttribute if insert => throw new IllegalArgumentException(
+          s"INSERT values may reference source columns only, got ${a.sql}")
         case a: UnresolvedAttribute =>
           // an unqualified name that lives on BOTH sides must not
           // silently prefer the target (Spark raises
@@ -1116,7 +1122,7 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     var tombstone: Option[String] = None
     var hasUpdate = false
     var deleteAll = false
-    var updateAssigns: Option[Seq[(String, org.apache.spark.sql.Column)]] = None
+    var setPairs: Option[Seq[(String, org.apache.spark.sql.Column)]] = None
     matched.foreach {
       case UpdateStarAction(None) => hasUpdate = true
       case UpdateStarAction(Some(GreaterThanOrEqual(l, r))) =>
@@ -1132,7 +1138,7 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
         val pairs = assigns.map(a => assignTarget(a.key) -> assignVal(a.value))
         require(pairs.map(_._1).distinct.size == pairs.size,
           "UPDATE SET assigns the same column twice")
-        updateAssigns = Some(pairs)
+        setPairs = Some(pairs)
       case org.apache.spark.sql.catalyst.plans.logical.UpdateAction(Some(c), _, _) =>
         throw new IllegalArgumentException(
           "conditional UPDATE SET col = expr is unsupported (fold the " +
@@ -1146,33 +1152,14 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       case other => throw new IllegalArgumentException(
         s"unsupported WHEN MATCHED action $other (UPDATE SET ... / DELETE only)")
     }
-    // INSERT VALUES expressions see the SOURCE row only (the unmatched
-    // frame IS the source, so references land bare, key-renamed)
-    def insertVal(e: Expression): org.apache.spark.sql.Column = {
-      require(!e.exists(_.isInstanceOf[PlanExpression[_]]) &&
-        !e.exists(_.isInstanceOf[SubqueryExpression]),
-        "subqueries in MERGE assignments are not supported for graft tables")
-      org.apache.spark.sql.GraftColumnBridge.toCol(e.transform {
-        case a: AttributeReference if source.outputSet.contains(a) =>
-          UnresolvedAttribute.quoted(
-            keyRenamesLower.getOrElse(a.name.toLowerCase, a.name))
-        case a: UnresolvedAttribute
-            if a.nameParts.length > 1 &&
-              sourceNames.contains(a.nameParts.init.last.toLowerCase) =>
-          UnresolvedAttribute.quoted(keyRenamesLower.getOrElse(
-            a.nameParts.last.toLowerCase, a.nameParts.last))
-        case a: UnresolvedAttribute => throw new IllegalArgumentException(
-          s"INSERT values may reference source columns only, got ${a.sql}")
-      })
-    }
-    val (insertAll, insertAssigns) = notMatched match {
-      case Seq() => (false, None)
-      case Seq(InsertStarAction(None)) => (true, None)
+    val whenNotMatched = notMatched match {
+      case Seq() => IcebergLite.WhenNotMatched.Skip
+      case Seq(InsertStarAction(None)) => IcebergLite.WhenNotMatched.InsertAll
       case Seq(org.apache.spark.sql.catalyst.plans.logical.InsertAction(None, assigns)) =>
-        val pairs = assigns.map(a => assignTarget(a.key) -> insertVal(a.value))
+        val pairs = assigns.map(a => assignTarget(a.key) -> assignVal(a.value, insert = true))
         require(pairs.map(_._1).distinct.size == pairs.size,
           "INSERT assigns the same column twice")
-        (true, Some(pairs): Option[Seq[(String, org.apache.spark.sql.Column)]])
+        IcebergLite.WhenNotMatched.Insert(pairs)
       case Seq(org.apache.spark.sql.catalyst.plans.logical.InsertAction(Some(c), _)) =>
         throw new IllegalArgumentException(
           s"conditional INSERT is unsupported (filter the source instead): ${c.sql}")
@@ -1180,6 +1167,8 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
         s"unsupported WHEN NOT MATCHED action $other " +
           "(one INSERT * or INSERT (cols) VALUES (exprs))")
     }
+    val insertAll = whenNotMatched != IcebergLite.WhenNotMatched.Skip
+    val columnInsert = whenNotMatched.isInstanceOf[IcebergLite.WhenNotMatched.Insert]
     require(!(deleteAll && (hasUpdate || tombstone.nonEmpty)),
       "a bare WHEN MATCHED THEN DELETE cannot combine with UPDATE " +
         "(use a source tombstone flag for per-row routing)")
@@ -1192,36 +1181,39 @@ case class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       a.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.UpdateAction]) <= 1,
       "at most one WHEN MATCHED ... UPDATE clause is supported (clause " +
         "ordering between multiple UPDATE arms has no merge-primitive mapping)")
-    require(updateAssigns.isEmpty || (tombstone.isEmpty && precedence.isEmpty),
+    require(setPairs.isEmpty || tombstone.isEmpty,
       "UPDATE SET col = expr cannot combine with a DELETE arm or an " +
         "ordered-upsert condition (those are replace-semantics forms)")
-    require(insertAssigns.isEmpty || tombstone.isEmpty,
+    require(!columnInsert || tombstone.isEmpty,
       "column-level INSERT cannot combine with a DELETE arm")
     require(tombstone.isEmpty || hasUpdate,
       "a flag-tombstone arm (WHEN MATCHED AND source.flag THEN DELETE) " +
         "combines only with WHEN MATCHED THEN UPDATE SET * (the CDC " +
         "replace form); for delete-only routing pre-filter the source " +
         "and use a bare WHEN MATCHED THEN DELETE")
-    require(insertAssigns.isEmpty || !hasUpdate || updateAssigns.nonEmpty,
+    require(!columnInsert || !hasUpdate || setPairs.nonEmpty,
       "column-level INSERT combines with column-level UPDATE SET " +
         "assignments (or stands alone), not with UPDATE SET *")
-    require(!deleteUnmatchedTarget ||
-      (tombstone.isEmpty && precedence.isEmpty && !deleteAll &&
-        (!hasUpdate || updateAssigns.nonEmpty)),
+    require(!deleteBySource || (!deleteAll && (!hasUpdate || setPairs.nonEmpty)),
       "WHEN NOT MATCHED BY SOURCE THEN DELETE combines with column-level " +
         "UPDATE SET assignments and/or an INSERT arm, not with UPDATE SET * " +
         "or matched-DELETE forms")
-    require(hasUpdate || deleteAll || insertAll || deleteUnmatchedTarget,
+    require(hasUpdate || deleteAll || insertAll || deleteBySource,
       "MERGE needs WHEN MATCHED THEN UPDATE/DELETE, WHEN NOT MATCHED " +
         "THEN INSERT, or WHEN NOT MATCHED BY SOURCE THEN DELETE")
-    require(!hasUpdate || insertAll || updateAssigns.nonEmpty,
+    require(!hasUpdate || insertAll || setPairs.nonEmpty,
       "upsert MERGE needs WHEN NOT MATCHED THEN INSERT * (the merge " +
         "primitive always inserts unmatched source rows); update-only " +
         "MERGE is supported with column-level SET assignments")
-    GraftMergeCommand(path, source, keyCols, precedence, tombstone, deleteAll,
-      toBranch, keyRenames, updateAssigns, insertAll, insertAssigns,
-      insertOnly = !hasUpdate && !deleteAll && insertAll,
-      deleteUnmatchedTarget = deleteUnmatchedTarget)
+    val whenMatched =
+      if (deleteAll) IcebergLite.WhenMatched.Delete
+      else setPairs match {
+        case Some(assigns) => IcebergLite.WhenMatched.Update(assigns, deleteBySource)
+        case None if hasUpdate => IcebergLite.WhenMatched.UpdateAll(precedence, tombstone)
+        case None => IcebergLite.WhenMatched.Keep(deleteBySource)
+      }
+    GraftMergeCommand(path, source, keyCols, whenMatched, whenNotMatched,
+      toBranch, keyRenames)
   }
 }
 
@@ -1441,7 +1433,7 @@ case class GraftDeleteInCommand(tablePath: String, keyCols: Seq[String],
 }
 
 /** `UPDATE t SET col = expr WHERE (k, ...) IN (subquery)` → the
-  * update-only expr-merge: the subquery result is the key set, the
+  * update-only merge: the subquery result is the key set, the
   * SET expressions transform matched rows in place (target columns
   * bare), unmatched keys no-op, and the rewrite stays scoped to
   * key-touched files. Duplicate subquery keys dedupe first (IN is a
@@ -1471,8 +1463,9 @@ case class GraftUpdateInCommand(tablePath: String, keyCols: Seq[String],
     // exact-case): `SET V = 1` on column v must update v, not fail
     val assignsC = assignments.map { case (n, c) =>
       (GraftSqlCatalog.resolveColumn(shape.fieldNames, n).getOrElse(n), c) }
-    IcebergLite.merge(spark, tablePath, keys.toDF(resolved: _*).distinct(),
-      resolved, updateAssigns = Some(assignsC), insertUnmatched = false)
+    IcebergLite.merge(spark, tablePath, keys.toDF(resolved: _*).distinct(), resolved,
+      whenMatched = IcebergLite.WhenMatched.Update(assignsC),
+      whenNotMatched = IcebergLite.WhenNotMatched.Skip)
     Nil
   }
 }
@@ -1500,20 +1493,13 @@ case class GraftUpdateCommand(tablePath: String,
 /** Supported `MERGE INTO` shapes → [[IcebergLite.merge]] (see
   * [[GraftSqlResolution.mergeFor]] for the mapping). */
 case class GraftMergeCommand(tablePath: String, source: LogicalPlan,
-    keyCols: Seq[String], precedence: Option[String],
-    tombstone: Option[String], deleteAll: Boolean,
-    toBranch: Option[String],
-    keyRenames: Map[String, String] = Map.empty,
-    updateAssigns: Option[Seq[(String, org.apache.spark.sql.Column)]] = None,
-    insertAll: Boolean = true,
-    insertAssigns: Option[Seq[(String, org.apache.spark.sql.Column)]] = None,
-    insertOnly: Boolean = false,
-    deleteUnmatchedTarget: Boolean = false) extends RunnableCommand {
+    keyCols: Seq[String], whenMatched: IcebergLite.WhenMatched,
+    whenNotMatched: IcebergLite.WhenNotMatched, toBranch: Option[String],
+    keyRenames: Map[String, String] = Map.empty) extends RunnableCommand {
   override def innerChildren: Seq[QueryPlan[_]] = source :: Nil
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[LogicalPlan]): LogicalPlan = this
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, lit}
     val srcRaw = org.apache.spark.sql.GraftColumnBridge.toDF(spark, source)
     // differently-named ON keys: the source key column takes its
     // target name before anything else sees the frame
@@ -1570,31 +1556,25 @@ case class GraftMergeCommand(tablePath: String, source: LogicalPlan,
             actual(f.name).map(c => col(c).cast(f.dataType).as(f.name))) ++
             src0.columns.toSeq.filterNot(consumed.contains).map(col)): _*)
       }
-    // user spellings of the ON keys and SET/INSERT target columns
-    // resolve to the live schema's canonical casing BEFORE the merge
-    // primitive: its logical→physical rename translation is an
-    // exact-case map, so a case-variant spelling of a RENAMED column
-    // would otherwise pass through untranslated
+    // user spellings of the ON keys, the precedence column and the
+    // SET/INSERT target columns resolve to the live schema's canonical
+    // casing BEFORE the merge primitive: its logical→physical rename
+    // translation is an exact-case map, so a case-variant spelling of
+    // a RENAMED column would otherwise pass through untranslated
     def canon(n: String): String =
       GraftSqlCatalog.resolveColumn(live.fieldNames, n).getOrElse(n)
-    val keyColsC = keyCols.map(canon)
-    val updateAssignsC = updateAssigns.map(_.map { case (n, c) => (canon(n), c) })
-    val insertAssignsC = insertAssigns.map(_.map { case (n, c) => (canon(n), c) })
-    val (df, tomb) =
-      if (deleteAll) (src.withColumn("__graft_tombstone", lit(true)),
-        Some("__graft_tombstone"))
-      else (src, tombstone)
-    // expr-form statements insert exactly when they carry an INSERT
-    // arm; the legacy star/tombstone path always inserts (primitive
-    // contract — mergeFor requires the INSERT * there)
-    val exprStatement = updateAssigns.nonEmpty || insertAssigns.nonEmpty ||
-      insertOnly || deleteUnmatchedTarget
-    IcebergLite.merge(spark, tablePath, df, keyColsC,
-      precedence = precedence, tombstoneCol = tomb, toBranch = toBranch,
-      updateAssigns = updateAssignsC,
-      insertUnmatched = if (exprStatement) insertAll else true,
-      insertAssigns = insertAssignsC, insertOnly = insertOnly,
-      deleteUnmatchedTarget = deleteUnmatchedTarget)
+    def canonAll(assigns: Seq[(String, org.apache.spark.sql.Column)]) =
+      assigns.map { case (n, c) => (canon(n), c) }
+    IcebergLite.merge(spark, tablePath, src, keyCols.map(canon), toBranch = toBranch,
+      whenMatched = whenMatched match {
+        case m: IcebergLite.WhenMatched.UpdateAll => m.copy(precedence = m.precedence.map(canon))
+        case m: IcebergLite.WhenMatched.Update => m.copy(assigns = canonAll(m.assigns))
+        case m => m
+      },
+      whenNotMatched = whenNotMatched match {
+        case IcebergLite.WhenNotMatched.Insert(a) => IcebergLite.WhenNotMatched.Insert(canonAll(a))
+        case n => n
+      })
     Nil
   }
 }

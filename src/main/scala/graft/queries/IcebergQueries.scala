@@ -856,7 +856,8 @@ object IcebergQueries extends QueryCatalog {
       val ins = Seq((99999901L, 7L, 5.5, false), (99999902L, 8L, 6.5, false))
         .toDF("event_id", "user_id", "value", "op_del")
       IcebergLite.merge(s, root, dels.unionByName(upds).unionByName(ins),
-        keyCols = Seq("event_id"), tombstoneCol = Some("op_del"))
+        keyCols = Seq("event_id"),
+        whenMatched = IcebergLite.WhenMatched.UpdateAll(tombstone = Some("op_del")))
       IcebergLite.read(s, root)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy(col("event_id"))
@@ -1523,7 +1524,7 @@ object IcebergQueries extends QueryCatalog {
     .createTempDirectory("graft_iceberg_sqlmergeexpr_row")
 
   /** Column-level MERGE (r11, SqlCatalog.scala mergeFor +
-    * IcebergLite.merge updateAssigns) under a VALUES oracle: `WHEN
+    * IcebergLite.merge `WhenMatched.Update`) under a VALUES oracle: `WHEN
     * MATCHED THEN UPDATE SET t.col = expr` transforms matched rows IN
     * PLACE (arithmetic over BOTH sides, a function of a source
     * column), the ON clause equates DIFFERENTLY-NAMED key columns
@@ -1907,7 +1908,7 @@ object IcebergQueries extends QueryCatalog {
     .createTempDirectory("graft_iceberg_updin_row")
 
   /** UPDATE WHERE key IN (subquery) (r11, GraftUpdateInCommand): the
-    * update-only expr-merge with the subquery result as the key set —
+    * update-only merge with the subquery result as the key set —
     * matched rows transform in place, unmatched keys no-op, duplicate
     * subquery keys dedupe (set membership). Oracle: DuckDB's own
     * UPDATE ... IN over the same rows. */

@@ -240,11 +240,12 @@ object EventStream {
               }
               if (!ups.isEmpty)
                 graft.sources.IcebergLite.merge(batch.sparkSession, tablePath,
-                  ups, Seq(keyCol), precedence = Some(seqCol))
+                  ups, Seq(keyCol), whenMatched =
+                    graft.sources.IcebergLite.WhenMatched.UpdateAll(Some(seqCol)))
             } else {
               graft.sources.IcebergLite.merge(batch.sparkSession, tablePath,
-                latest, Seq(keyCol), precedence = Some(seqCol),
-                tombstoneCol = tombstoneCol, toBranch = toBranch)
+                latest, Seq(keyCol), toBranch = toBranch, whenMatched =
+                  graft.sources.IcebergLite.WhenMatched.UpdateAll(Some(seqCol), tombstoneCol))
             }
             committed = true
           } catch {

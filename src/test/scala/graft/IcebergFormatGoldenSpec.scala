@@ -79,11 +79,11 @@ class IcebergFormatGoldenSpec extends AnyFunSuite {
     IcebergLite.merge(s, a, frame((1L, "m1", 11, 11L, "a"), (9L, "m9", 9, 90L, "b")),
       Seq("id"))
     IcebergLite.merge(s, a, frame((1L, "stale", 1, 5L, "a"), (6L, "new6", 6, 61L, "a")),
-      Seq("id"), precedence = Some("ts"))
+      Seq("id"), whenMatched = IcebergLite.WhenMatched.UpdateAll(precedence = Some("ts")))
     IcebergLite.merge(s, a,
       Seq((9L, "x", 9, 91L, "b", true), (10L, "t10", 10, 100L, "b", false))
         .toDF("id", "v", "n", "ts", "p", "del").coalesce(1),
-      Seq("id"), tombstoneCol = Some("del"))
+      Seq("id"), whenMatched = IcebergLite.WhenMatched.UpdateAll(tombstone = Some("del")))
     IcebergLite.createBranch(a, "audit")
     IcebergLite.merge(s, a, frame((11L, "br", 11, 110L, "a")), Seq("id"),
       toBranch = Some("audit"))
@@ -95,7 +95,6 @@ class IcebergFormatGoldenSpec extends AnyFunSuite {
     IcebergLite.compact(s, a)
     IcebergLite.renameColumn(a, "v", "w")
     IcebergLite.widenColumn(s, a, "n", LongType)
-    IcebergLite.rewriteManifests(a, 1)
     IcebergLite.append(s, a, frame((14L, "a14", 14, 140L, "c")), p)
     IcebergLite.append(s, a, frame((15L, "a15", 15, 150L, "d")), p)
     // the distributed (Spark-job) manifest rewrite, forced; it orders
@@ -104,6 +103,8 @@ class IcebergFormatGoldenSpec extends AnyFunSuite {
     s.conf.set("graft.iceberg.planning.distributedThreshold", "1")
     try IcebergLite.rewriteManifests(s, a, 2)
     finally s.conf.unset("graft.iceberg.planning.distributedThreshold")
+    // the driver-side rewrite, after the appends: two manifests left
+    IcebergLite.rewriteManifests(a, 1)
     IcebergLite.truncate(a)
 
     // ---- table B: hidden partitioning (bucket spec on `id`) ----
@@ -115,7 +116,7 @@ class IcebergFormatGoldenSpec extends AnyFunSuite {
     IcebergLite.deleteMergeOnRead(s, b, Seq(IcebergLite.Eq("v", "a2")))
     IcebergLite.merge(s, b, frame((3L, "e3", 3, 31L, "b"), (7L, "e7", 7, 70L, "d")),
       Seq("id"),
-      updateAssigns = Some(Seq("v" -> col("__graft_s_v"))))
+      whenMatched = IcebergLite.WhenMatched.Update(Seq("v" -> col("__graft_s_v"))))
     IcebergLite.updateWhere(s, b, col("id") === 4L,
       Seq("n" -> org.apache.spark.sql.functions.lit(40).cast(IntegerType)))
     IcebergLite.delete(s, b, Seq(IcebergLite.Eq("id", "5")))

@@ -2975,7 +2975,7 @@ class SourcesSpec extends AnyFunSuite {
       Seq((3L, 1L, null.asInstanceOf[String], true),
         (5L, 1L, "upd5", false),
         (100L, 1L, "new", false)).toDF("id", "seq", "v", "op_del"),
-      keyCols = Seq("id"), tombstoneCol = Some("op_del"))
+      keyCols = Seq("id"), whenMatched = IcebergLite.WhenMatched.UpdateAll(tombstone = Some("op_del")))
     val read1 = IcebergLite.read(s, root)
     assert(read1.count() == 20L) // 20 - 1 deleted + 1 inserted
     assert(read1.filter(col("id") === 3L).count() == 0L)
@@ -2988,15 +2988,109 @@ class SourcesSpec extends AnyFunSuite {
     IcebergLite.merge(s, root,
       Seq((5L, 9L, null.asInstanceOf[String], true), // delete 5 at seq 9
         (7L, 9L, "upd7", false)).toDF("id", "seq", "v", "op_del"),
-      keyCols = Seq("id"), precedence = Some("seq"), tombstoneCol = Some("op_del"))
+      keyCols = Seq("id"), whenMatched = IcebergLite.WhenMatched.UpdateAll(Some("seq"), Some("op_del")))
     // stale delete (seq 0 < stored seq 9) must NOT remove key 7
     IcebergLite.merge(s, root,
       Seq((7L, 0L, null.asInstanceOf[String], true)).toDF("id", "seq", "v", "op_del"),
-      keyCols = Seq("id"), precedence = Some("seq"), tombstoneCol = Some("op_del"))
+      keyCols = Seq("id"), whenMatched = IcebergLite.WhenMatched.UpdateAll(Some("seq"), Some("op_del")))
     val read2 = IcebergLite.read(s, root)
     assert(read2.filter(col("id") === 5L).count() == 0L, "newer delete wins")
     assert(read2.filter(col("id") === 7L).select("v").as[String].head() == "upd7",
       "stale delete cannot remove a newer row")
+  }
+
+  // one data file holding two null-key rows and a key held twice; the
+  // merge sources below name key 1 (and 2) and a new key 9 only
+  private def mergeTarget(root: String): Unit = {
+    val s = spark
+    import s.implicits._
+    IcebergLite.append(s, root, Seq[(Option[Long], Long, String)](
+      (Some(1L), 1L, "a"), (None, 1L, "b"), (None, 2L, "c"), (Some(2L), 1L, "d"),
+      (Some(3L), 1L, "x"), (Some(3L), 1L, "y")).toDF("k", "seq", "v").coalesce(1))
+    assert(IcebergLite.dataFiles(root).size == 1)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("k", "seq", "v").collect()
+      .map(r => s"[${r.get(0)},${r.get(1)},${r.get(2)}]").sorted.toSeq
+
+  test("precedence merge keeps every target row the source never names") {
+    val s = spark
+    import s.implicits._
+    val untouched = Seq("[3,1,x]", "[3,1,y]", "[null,1,b]", "[null,2,c]")
+    val ordered = freshSpecTable(Nil)
+    mergeTarget(ordered)
+    IcebergLite.merge(s, ordered, Seq((1L, 5L, "z"), (9L, 1L, "new")).toDF("k", "seq", "v"),
+      Seq("k"), whenMatched = IcebergLite.WhenMatched.UpdateAll(precedence = Some("seq")))
+    assert(rowsOf(IcebergLite.read(s, ordered)) ==
+      (Seq("[1,5,z]", "[2,1,d]", "[9,1,new]") ++ untouched).sorted)
+
+    // with tombstones: key 2's delete wins (seq 3 > 1) and is not inserted
+    val withTombstones = freshSpecTable(Nil)
+    mergeTarget(withTombstones)
+    IcebergLite.merge(s, withTombstones,
+      Seq((1L, 5L, "z", false), (2L, 3L, null.asInstanceOf[String], true),
+        (9L, 1L, "new", false)).toDF("k", "seq", "v", "del"),
+      Seq("k"), whenMatched = IcebergLite.WhenMatched.UpdateAll(Some("seq"), Some("del")))
+    assert(rowsOf(IcebergLite.read(s, withTombstones)) ==
+      (Seq("[1,5,z]", "[9,1,new]") ++ untouched).sorted)
+
+    // the same statement in SQL
+    val catalogRoot = Files.createTempDirectory("merge_defect_sql").toString
+    s.conf.set("spark.sql.catalog.mdef", classOf[graft.plans.GraftCatalogPlugin].getName)
+    s.conf.set("spark.sql.catalog.mdef.root", catalogRoot)
+    s.sql("CREATE NAMESPACE mdef.db")
+    s.sql("CREATE TABLE mdef.db.t (k BIGINT, seq BIGINT, v STRING)")
+    mergeTarget(graft.sources.Catalog.tablePath(catalogRoot, "db", "t"))
+    Seq((1L, 5L, "z"), (9L, 1L, "new")).toDF("k", "seq", "v")
+      .createOrReplaceTempView("mdef_src")
+    s.sql("""
+      MERGE INTO mdef.db.t AS t USING mdef_src AS s
+      ON t.k = s.k
+      WHEN MATCHED AND s.seq >= t.seq THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(rowsOf(s.sql("SELECT * FROM mdef.db.t")) ==
+      (Seq("[1,5,z]", "[2,1,d]", "[9,1,new]") ++ untouched).sorted)
+  }
+
+  test("precedence merge: the target wins only with a non-null, greater value") {
+    val s = spark
+    import s.implicits._
+    // keys: 1 target greater, 2 target null, 3 tie, 4 source null, 5 both null
+    val target = Seq[(Long, Option[Long], String)]((1L, Some(5L), "t1"), (2L, None, "t2"),
+      (3L, Some(5L), "t3"), (4L, Some(5L), "t4"), (5L, None, "t5"))
+    val source = Seq[(Long, Option[Long], String)]((1L, Some(4L), "s1"), (2L, Some(1L), "s2"),
+      (3L, Some(5L), "s3"), (4L, None, "s4"), (5L, None, "s5"))
+    val upsert = freshSpecTable(Nil)
+    IcebergLite.append(s, upsert, target.toDF("k", "seq", "v").coalesce(1))
+    IcebergLite.merge(s, upsert, source.toDF("k", "seq", "v"), Seq("k"),
+      whenMatched = IcebergLite.WhenMatched.UpdateAll(precedence = Some("seq")))
+    assert(rowsOf(IcebergLite.read(s, upsert)) ==
+      Seq("[1,5,t1]", "[2,1,s2]", "[3,5,s3]", "[4,5,t4]", "[5,null,s5]"))
+    // a tombstone deletes only where the source wins
+    val deletes = freshSpecTable(Nil)
+    IcebergLite.append(s, deletes, target.toDF("k", "seq", "v").coalesce(1))
+    IcebergLite.merge(s, deletes,
+      source.toDF("k", "seq", "v").withColumn("del", lit(true)), Seq("k"),
+      whenMatched = IcebergLite.WhenMatched.UpdateAll(Some("seq"), Some("del")))
+    assert(rowsOf(IcebergLite.read(s, deletes)) == Seq("[1,5,t1]", "[4,5,t4]"))
+  }
+
+  test("merge matches a key held by two target rows once per target row") {
+    val s = spark
+    import s.implicits._
+    val target = Seq((1L, 1L, "a"), (1L, 1L, "b"), (2L, 1L, "c")).toDF("k", "seq", "v")
+    val replace = freshSpecTable(Nil)
+    IcebergLite.append(s, replace, target.coalesce(1))
+    IcebergLite.merge(s, replace, Seq((1L, 2L, "z")).toDF("k", "seq", "v"), Seq("k"))
+    assert(rowsOf(IcebergLite.read(s, replace)) == Seq("[1,2,z]", "[1,2,z]", "[2,1,c]"))
+    val assign = freshSpecTable(Nil)
+    IcebergLite.append(s, assign, target.coalesce(1))
+    IcebergLite.merge(s, assign, Seq((1L, 2L, "z")).toDF("k", "seq", "v"), Seq("k"),
+      whenMatched = IcebergLite.WhenMatched.Update(
+        Seq("v" -> concat(col("v"), col("__graft_s_v")))),
+      whenNotMatched = IcebergLite.WhenNotMatched.Skip)
+    assert(rowsOf(IcebergLite.read(s, assign)) == Seq("[1,1,az]", "[1,1,bz]", "[2,1,c]"))
   }
 
   test("streaming CDC upsert honors delete records end-to-end") {
@@ -3119,10 +3213,11 @@ class SourcesSpec extends AnyFunSuite {
     IcebergLite.compact(s, root)
     val compacted = IcebergLite.dataFiles(root)
     assert(compacted.forall(_.partition.keySet == Set("id_bucket8")))
-    // 80 rows - both id=17 rows replaced by the single merged one
-    assert(IcebergLite.read(s, root).count() == 79L)
+    // 80 rows: the merge matched each of the two id=17 rows (one per
+    // append) and replaced it with the source row
+    assert(IcebergLite.read(s, root).count() == 80L)
     assert(IcebergLite.read(s, root).filter(col("id") === 17L)
-      .select("v").as[String].head() == "upd")
+      .select("v").as[String].collect().toSeq == Seq("upd", "upd"))
     // and post-compact pruning uses the new layout exclusively
     val keptAfter = IcebergLite.dataFiles(root, filters = Seq(IcebergLite.Eq("id", "17")))
     assert(keptAfter.size == 1 && keptAfter.head.partition.contains("id_bucket8"))
