@@ -49,6 +49,12 @@ object Engine {
     spark.table(name)
   }
 
+  /** Runs Spark SQL over the tables under `sfDir`. */
+  def sql(spark: SparkSession, sfDir: String)(text: String): DataFrame = {
+    registerDir(spark, sfDir)
+    spark.sql(text)
+  }
+
   /** Register tables as CATALOG tables (not temp views) and ANALYZE
     * them, then enable cost-based optimization — the Spark analogue of
     * the reference's stats-driven JoinReorder (`join_reorder.rs:29`):

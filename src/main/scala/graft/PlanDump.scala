@@ -45,7 +45,7 @@ object PlanDump {
       println(s"[plandump] wrote $p")
     }
 
-    val reshaped = queries.TpchQueries.reshaped
+    val reshaped = queries.TpchQueries.reshaped.keys.toSeq.sorted
     reshaped.foreach { name =>
       write(name, "before",
         spark.sql(SparkEntry.oracleSql(name)).queryExecution.explainString(mode))

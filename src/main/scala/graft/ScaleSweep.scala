@@ -82,7 +82,7 @@ object ScaleSweep {
         env.getOrElse("SPARK_GRAFT_TPCH_SRC", "/root/testdata/sf0.1"),
         math.max(2, size(a).toInt))),
       "ab" -> metered((s, m, a) => abSweep(s, m, sfDir,
-        if (a.isEmpty) queries.TpchQueries.reshaped else a)),
+        if (a.isEmpty) queries.TpchQueries.reshaped.keys.toSeq.sorted else a)),
       "codegen" -> metered((s, m, a) => codegenSweep(s, m, sfDir, size(a, 3L).toInt,
         a.filterNot(_.forall(_.isDigit)))))
   }
@@ -858,10 +858,15 @@ object ScaleSweep {
     * row's declared oracle SQL in Spark (`SparkEntry.oracleSql`), the
     * shipped arm the row itself (`SparkEntry.queries`). Arms are
     * interleaved over two rounds in one JVM, because back-to-back suite
-    * runs drift more per window (~±5%) than the effects measured. Each
-    * arm prints one JSON line: its result digest, wall time and the
-    * settled shuffle/spill deltas and generated classes compiled (0 for
-    * a TPC-H row on round 2). Both arms of a row must give the same
+    * runs drift more per window (~±5%) than the effects measured, and
+    * their order alternates (ABBA: stock first in round 1, shipped first
+    * in round 2), because whichever arm runs first pays ~5% more. An
+    * unprinted warm-up round runs each arm once before them, so both
+    * printed rounds are warm and each arm has one warm sample in each
+    * order. Each arm prints one JSON line (`order` is its place in the
+    * pair): its result digest, wall time and the settled shuffle/spill
+    * deltas and generated classes compiled (0 for a TPC-H row once
+    * warm). Both arms of a row must give the same
     * digest — an order-insensitive distributed aggregate over the
     * name-sorted columns (count plus the exact sum of per-row xxhash64),
     * so no result is collected to the driver at any scale.
@@ -876,11 +881,13 @@ object ScaleSweep {
     require(missing.isEmpty,
       s"ab: no catalog row with oracle SQL named ${missing.mkString(", ")}")
     Engine.registerDir(spark, sfDir)
-    for (round <- 1 to 2; name <- names) {
-      val arms = Seq[(String, () => DataFrame)](
+    // round 0 is the warm-up: run, checked, not printed
+    for (round <- 0 to 2; name <- names) {
+      val stockFirst = Seq[(String, () => DataFrame)](
         "stock" -> (() => spark.sql(oracle(name))),
         "shipped" -> (() => shipped(name)(spark, sfDir)))
-      val digests = arms.map { case (arm, df) =>
+      val arms = if (round == 2) stockFirst.reverse else stockFirst
+      val digests = arms.zipWithIndex.map { case ((arm, df), i) =>
         val before = m.settled()
         val (digest, wall) = timed {
           val d = df()
@@ -890,7 +897,7 @@ object ScaleSweep {
             .head
         }
         val delta = m.settled() - before
-        println(s"""{"sweep":"ab","query":"$name","arm":"$arm","round":$round,""" +
+        if (round > 0) println(s"""{"sweep":"ab","query":"$name","arm":"$arm","round":$round,"order":${i + 1},""" +
           s""""rows":${digest.getLong(0)},"resultDigest":"${digest.get(1)}",""" +
           s""""wallSec":${r(wall)},""" + shuffleJson("", delta) +
           s""""memSpillMB":${mb(delta.spillMem)},"diskSpillMB":${mb(delta.spillDisk)},""" +

@@ -34,5 +34,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(sql => q.name -> sql.stripMargin.trim)).toMap
+    all.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
 }

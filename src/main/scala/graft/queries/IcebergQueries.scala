@@ -1910,15 +1910,17 @@ object IcebergQueries extends QueryCatalog {
   /** UPDATE WHERE key IN (subquery) (r11, GraftUpdateInCommand): the
     * update-only merge with the subquery result as the key set —
     * matched rows transform in place, unmatched keys no-op, duplicate
-    * subquery keys dedupe (set membership). Oracle: DuckDB's own
-    * UPDATE ... IN over the same rows. */
+    * subquery keys dedupe (set membership). Oracle: the updated rows as
+    * VALUES, amounts cast to DOUBLE (the column's type — DuckDB types a
+    * bare 20.0 as DECIMAL, which matches Spark's DOUBLE only within
+    * tolerance). */
   private val icebergSqlUpdateIn = Q(
     "iceberg_sql_update_in",
     Some("""
       SELECT * FROM (VALUES
-        (CAST(1 AS BIGINT), 20.0, 'A'),
-        (CAST(2 AS BIGINT), 20.0, 'b'),
-        (CAST(3 AS BIGINT), 60.0, 'C'))
+        (CAST(1 AS BIGINT), CAST(20.0 AS DOUBLE), 'A'),
+        (CAST(2 AS BIGINT), CAST(20.0 AS DOUBLE), 'b'),
+        (CAST(3 AS BIGINT), CAST(60.0 AS DOUBLE), 'C'))
         t(id, amt, note)
       ORDER BY id"""),
     (s, _) => {

@@ -12,20 +12,18 @@ import graft.Engine
   * (`src/planner/logical_plan.rs:8-21`), aggregation
   * (`src/physical/operators/hash_agg.rs`), sort/limit/top-k
   * (`sort.rs`, `limit.rs`), set ops (`binder.rs:193-276`), subquery
-  * forms (`logical_expr.rs:925-939`) — each expressed Spark-first and
-  * checked against DuckDB. Window functions and GROUPING SETS exceed
-  * the reference surface (README.md:278 lists windows as unbuilt);
-  * they're free on Spark so we cover them too.
+  * forms (`logical_expr.rs:925-939`) — each checked against DuckDB.
+  * Window functions and GROUPING SETS exceed the reference surface
+  * (README.md:278 lists windows as unbuilt); they're free on Spark so
+  * we cover them too. A row runs its oracle text (`Q.sql`) unless it
+  * is a declared reshape (`reshaped` gives each its reason): a
+  * write-and-reread roundtrip, a graft operator, or a function
+  * spelling the oracle cannot carry.
   */
 object OperatorQueries extends QueryCatalog {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Engine.t(s, dir, name)
-
-  private def sql(s: SparkSession, dir: String)(q: String): DataFrame = {
-    Engine.registerDir(s, dir)
-    s.sql(q)
-  }
 
   private def dsum(c: Column) =
     sum(c.cast(DataTypes.createDecimalType(18, 6))).cast("double")
@@ -36,31 +34,20 @@ object OperatorQueries extends QueryCatalog {
     * ParquetTable projection pushdown, storage/parquet.rs:26-327, and
     * row-group pruning, row_group_pruning.rs). `.explain` shows
     * ReadSchema with only two columns and PushedFilters on o_totalprice. */
-  private val scanProjection = Q(
+  private val scanProjection = Q.sql(
     "scan_projection",
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice FROM orders
       WHERE o_totalprice > 495000
-      ORDER BY o_orderkey"""),
-    (s, dir) =>
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .filter(col("o_totalprice") > 495000)
-        .orderBy(col("o_orderkey")))
+      ORDER BY o_orderkey""")
 
   /** In-memory table (reference MemoryTableExec, scan.rs:100-258):
-    * driver-local rows parallelized across partitions. */
-  private val scanMemory = Q(
+    * inline VALUES rows plan as a LocalRelation. */
+  private val scanMemory = Q.sql(
     "scan_memory",
-    Some("""
+    """
       SELECT x, x * x AS sq FROM (VALUES (1), (2), (3), (4), (5)) AS t(x)
-      ORDER BY x"""),
-    (s, _) => {
-      import s.implicits._
-      Seq(1, 2, 3, 4, 5).toDF("x")
-        .select(col("x"), (col("x") * col("x")).as("sq"))
-        .orderBy(col("x"))
-    })
+      ORDER BY x""")
 
   /** Per-JVM scratch root for the source-format roundtrip rows (same
     * pattern as IcebergQueries.appendRoot): a fixed cross-process path
@@ -114,57 +101,39 @@ object OperatorQueries extends QueryCatalog {
   // ---------------------------------------------------------------- joins
 
   /** Inner equi-join (reference HashJoinExec Inner, hash_join.rs:172). */
-  private val joinInner = Q(
+  private val joinInner = Q.sql(
     "join_inner",
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice, c_name
       FROM orders JOIN customer ON o_custkey = c_custkey
       WHERE o_totalprice > 480000
-      ORDER BY o_orderkey"""),
-    (s, dir) =>
-      t(s, dir, "orders").filter(col("o_totalprice") > 480000)
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
-        .orderBy(col("o_orderkey")))
+      ORDER BY o_orderkey""")
 
   /** Left outer join with join-condition filter (unmatched rows kept). */
-  private val joinLeft = Q(
+  private val joinLeft = Q.sql(
     "join_left",
-    Some("""
+    """
       SELECT c_custkey, o_orderkey
       FROM customer LEFT JOIN orders
         ON c_custkey = o_custkey AND o_totalprice > 490000
       WHERE c_custkey < 100
-      ORDER BY c_custkey, o_orderkey"""),
-    (s, dir) => {
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 490000)
-      t(s, dir, "customer").filter(col("c_custkey") < 100)
-        .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-        .select(col("c_custkey"), col("o_orderkey"))
-        .orderBy(col("c_custkey"), col("o_orderkey"))
-    })
+      ORDER BY c_custkey, o_orderkey""")
 
   /** Right outer join (reference hash_join.rs Right, unmatched-build
     * emission :1809-1828). */
-  private val joinRight = Q(
+  private val joinRight = Q.sql(
     "join_right",
-    Some("""
+    """
       SELECT c_custkey, o_orderkey
       FROM orders RIGHT JOIN customer
         ON c_custkey = o_custkey AND o_totalprice > 490000
       WHERE c_custkey < 100
-      ORDER BY c_custkey, o_orderkey"""),
-    (s, dir) =>
-      t(s, dir, "orders").filter(col("o_totalprice") > 490000)
-        .join(t(s, dir, "customer"), col("c_custkey") === col("o_custkey"), "right_outer")
-        .filter(col("c_custkey") < 100)
-        .select(col("c_custkey"), col("o_orderkey"))
-        .orderBy(col("c_custkey"), col("o_orderkey")))
+      ORDER BY c_custkey, o_orderkey""")
 
   /** Full outer join of two aggregated sides. */
-  private val joinFull = Q(
+  private val joinFull = Q.sql(
     "join_full",
-    Some("""
+    """
       SELECT cn.nk AS c_nk, sn.nk AS s_nk, cn.n_cust, sn.n_supp
       FROM (SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer
             WHERE c_nationkey < 15 GROUP BY c_nationkey) cn
@@ -172,110 +141,62 @@ object OperatorQueries extends QueryCatalog {
            (SELECT s_nationkey AS nk, count(*) AS n_supp FROM supplier
             WHERE s_nationkey > 10 GROUP BY s_nationkey) sn
         ON cn.nk = sn.nk
-      ORDER BY c_nk NULLS FIRST, s_nk NULLS FIRST"""),
-    (s, dir) => {
-      val cn = t(s, dir, "customer").filter(col("c_nationkey") < 15)
-        .groupBy(col("c_nationkey").as("nk")).agg(count(lit(1)).as("n_cust"))
-      val sn = t(s, dir, "supplier").filter(col("s_nationkey") > 10)
-        .groupBy(col("s_nationkey").as("nk")).agg(count(lit(1)).as("n_supp"))
-      cn.join(sn, cn("nk") === sn("nk"), "full_outer")
-        .select(cn("nk").as("c_nk"), sn("nk").as("s_nk"), col("n_cust"), col("n_supp"))
-        .orderBy(col("c_nk").asc_nulls_first, col("s_nk").asc_nulls_first)
-    })
+      ORDER BY c_nk NULLS FIRST, s_nk NULLS FIRST""")
 
   /** Left semi join — EXISTS shape (reference Semi, planner :675-692). */
-  private val joinSemi = Q(
+  private val joinSemi = Q.sql(
     "join_semi",
-    Some("""
+    """
       SELECT c_custkey, c_name FROM customer
       WHERE EXISTS (SELECT 1 FROM orders
                     WHERE o_custkey = c_custkey AND o_totalprice > 490000)
-      ORDER BY c_custkey"""),
-    (s, dir) => {
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 490000)
-      t(s, dir, "customer")
-        .join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    })
+      ORDER BY c_custkey""")
 
   /** Left anti join — NOT EXISTS shape. */
-  private val joinAnti = Q(
+  private val joinAnti = Q.sql(
     "join_anti",
-    Some("""
+    """
       SELECT s_suppkey, s_name FROM supplier
       WHERE NOT EXISTS (SELECT 1 FROM lineitem
                         WHERE l_suppkey = s_suppkey
                           AND l_shipdate > TIMESTAMP '2001-01-01 00:00:00')
-      ORDER BY s_suppkey"""),
-    (s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > to_timestamp_ntz(lit("2001-01-01 00:00:00")))
-      t(s, dir, "supplier")
-        .join(l, col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_suppkey"))
-    })
+      ORDER BY s_suppkey""")
 
   /** Cross join (reference Cross, logical_plan.rs:8-21). */
-  private val joinCross = Q(
+  private val joinCross = Q.sql(
     "join_cross",
-    Some("""
+    """
       SELECT r_name, seg
       FROM region CROSS JOIN (SELECT DISTINCT c_mktsegment AS seg FROM customer) s
-      ORDER BY r_name, seg"""),
-    (s, dir) => {
-      val segs = t(s, dir, "customer").select(col("c_mktsegment").as("seg")).distinct()
-      t(s, dir, "region").crossJoin(segs)
-        .select(col("r_name"), col("seg"))
-        .orderBy(col("r_name"), col("seg"))
-    })
+      ORDER BY r_name, seg""")
 
   /** Self join (same-order line pairs from one supplier). */
-  private val joinSelf = Q(
+  private val joinSelf = Q.sql(
     "join_self",
-    Some("""
+    """
       SELECT count(*) AS pairs
       FROM lineitem l1 JOIN lineitem l2
         ON l1.l_orderkey = l2.l_orderkey
        AND l1.l_linenumber < l2.l_linenumber
-       AND l1.l_suppkey = l2.l_suppkey"""),
-    (s, dir) => {
-      val l1 = t(s, dir, "lineitem").select(
-        col("l_orderkey").as("k1"), col("l_linenumber").as("n1"), col("l_suppkey").as("s1"))
-      val l2 = t(s, dir, "lineitem").select(
-        col("l_orderkey").as("k2"), col("l_linenumber").as("n2"), col("l_suppkey").as("s2"))
-      l1.join(l2, col("k1") === col("k2") && col("n1") < col("n2") && col("s1") === col("s2"))
-        .agg(count(lit(1)).as("pairs"))
-    })
+       AND l1.l_suppkey = l2.l_suppkey""")
 
   /** Equi-join with non-equi residual (reference CompiledFilter fast
     * path, hash_join.rs:812-870). */
-  private val joinInequality = Q(
+  private val joinInequality = Q.sql(
     "join_inequality",
-    Some("""
+    """
       SELECT count(*) AS n
       FROM supplier JOIN customer
-        ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal"""),
-    (s, dir) =>
-      t(s, dir, "supplier")
-        .join(t(s, dir, "customer"),
-          col("s_nationkey") === col("c_nationkey") && col("s_acctbal") > col("c_acctbal"))
-        .agg(count(lit(1)).as("n")))
+        ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal""")
 
   /** Pure-inequality join → broadcast nested loop (reference binds these
     * as Cross+Filter, binder.rs:569-621). */
-  private val joinRange = Q(
+  private val joinRange = Q.sql(
     "join_range",
-    Some("""
+    """
       SELECT r1.r_name AS a, r2.r_name AS b
       FROM region r1 JOIN region r2 ON r1.r_regionkey < r2.r_regionkey
-      ORDER BY a, b"""),
-    (s, dir) => {
-      val r1 = t(s, dir, "region").select(col("r_regionkey").as("k1"), col("r_name").as("a"))
-      val r2 = t(s, dir, "region").select(col("r_regionkey").as("k2"), col("r_name").as("b"))
-      r1.join(r2, col("k1") < col("k2")).select(col("a"), col("b")).orderBy(col("a"), col("b"))
-    })
+      ORDER BY a, b""")
 
   /** As-of join ➕ (absent in the reference; kdb/pandas/DuckDB staple):
     * for each click, the most recent prior view by the same user.
@@ -307,107 +228,63 @@ object OperatorQueries extends QueryCatalog {
   // ----------------------------------------------------------- aggregates
 
   /** COUNT/COUNT DISTINCT/SUM/AVG/MIN/MAX (hash_agg.rs:2002+). */
-  private val aggBasic = Q(
+  private val aggBasic = Q.sql(
     "agg_basic",
-    Some("""
+    """
       SELECT l_returnflag, count(*) AS n, count(DISTINCT l_suppkey) AS n_supp,
              round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_qty,
              round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS avg_price,
              min(l_shipdate) AS first_ship, max(l_shipdate) AS last_ship
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n"),
-          countDistinct(col("l_suppkey")).as("n_supp"),
-          round(dsum(col("l_quantity")), 2).as("sum_qty"),
-          round(dsum(col("l_extendedprice")) / count(lit(1)), 4).as("avg_price"),
-          min(col("l_shipdate")).as("first_ship"),
-          max(col("l_shipdate")).as("last_ship"))
-        .orderBy(col("l_returnflag")))
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   /** SUM DISTINCT (quantity is integral → exact). */
-  private val aggDistinct = Q(
+  private val aggDistinct = Q.sql(
     "agg_distinct",
-    Some("""
+    """
       SELECT l_linestatus, round(sum(DISTINCT l_quantity), 2) AS sum_dq,
              count(DISTINCT l_partkey) AS n_parts
-      FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_linestatus"))
-        .agg(
-          round(sum_distinct(col("l_quantity")), 2).as("sum_dq"),
-          countDistinct(col("l_partkey")).as("n_parts"))
-        .orderBy(col("l_linestatus")))
+      FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""")
 
   /** STDDEV/VARIANCE family (hash_agg.rs enum :176-223). */
-  private val aggStats = Q(
+  private val aggStats = Q.sql(
     "agg_stats",
-    Some("""
+    """
       SELECT l_returnflag,
              round(stddev_samp(l_quantity), 4) AS sd_samp,
              round(stddev_pop(l_quantity), 4) AS sd_pop,
              round(var_samp(l_quantity), 4) AS v_samp,
              round(var_pop(l_quantity), 4) AS v_pop
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          round(stddev_samp(col("l_quantity")), 4).as("sd_samp"),
-          round(stddev_pop(col("l_quantity")), 4).as("sd_pop"),
-          round(var_samp(col("l_quantity")), 4).as("v_samp"),
-          round(var_pop(col("l_quantity")), 4).as("v_pop"))
-        .orderBy(col("l_returnflag")))
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   /** BOOL_AND/BOOL_OR/COUNT_IF (hash_agg COUNT_IF/BOOL_* variants). */
-  private val aggBool = Q(
+  private val aggBool = Q.sql(
     "agg_bool",
-    Some("""
+    """
       SELECT event_type,
              bool_and(value > 0) AS all_pos,
              bool_or(value > 90) AS any_big,
              count(*) FILTER (WHERE value > 50) AS n_over_50
-      FROM events GROUP BY event_type ORDER BY event_type"""),
-    (s, dir) =>
-      t(s, dir, "events").groupBy(col("event_type"))
-        .agg(
-          bool_and(col("value") > 0).as("all_pos"),
-          bool_or(col("value") > 90).as("any_big"),
-          count_if(col("value") > 50).as("n_over_50"))
-        .orderBy(col("event_type")))
+      FROM events GROUP BY event_type ORDER BY event_type""")
 
   /** MAX_BY/MIN_BY (hash_agg.rs:340-344); ANY_VALUE on a functionally
     * dependent column (deterministic). */
-  private val aggMinmaxBy = Q(
+  private val aggMinmaxBy = Q.sql(
     "agg_minmax_by",
-    Some("""
+    """
       SELECT o_orderpriority,
              max_by(o_totalprice, o_orderkey) AS price_of_last,
              min_by(o_totalprice, o_orderkey) AS price_of_first
-      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
-    (s, dir) =>
-      t(s, dir, "orders").groupBy(col("o_orderpriority"))
-        .agg(
-          max_by(col("o_totalprice"), col("o_orderkey")).as("price_of_last"),
-          min_by(col("o_totalprice"), col("o_orderkey")).as("price_of_first"))
-        .orderBy(col("o_orderpriority")))
+      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")
 
   /** BITWISE_AND/OR/XOR_AGG (hash_agg BITWISE_*_AGG). */
-  private val aggBitwise = Q(
+  private val aggBitwise = Q.sql(
     "agg_bitwise",
-    Some("""
+    """
       SELECT l_returnflag,
              bit_and(l_linenumber) AS band,
              bit_or(l_linenumber) AS bor,
              bit_xor(l_linenumber) AS bxor
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          bit_and(col("l_linenumber")).as("band"),
-          bit_or(col("l_linenumber")).as("bor"),
-          bit_xor(col("l_linenumber")).as("bxor"))
-        .orderBy(col("l_returnflag")))
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   /** LISTAGG (hash_agg.rs:1689) — deterministic via sorted distinct set. */
   private val aggListagg = Q(
@@ -422,21 +299,14 @@ object OperatorQueries extends QueryCatalog {
         .orderBy(col("o_orderpriority")))
 
   /** CORR/COVAR_POP/COVAR_SAMP (hash_agg CORR/COVAR_*). */
-  private val aggCorr = Q(
+  private val aggCorr = Q.sql(
     "agg_corr",
-    Some("""
+    """
       SELECT l_returnflag,
              round(corr(l_extendedprice, l_quantity), 4) AS r,
              round(covar_pop(l_extendedprice, l_quantity), 2) AS cp,
              round(covar_samp(l_extendedprice, l_quantity), 2) AS cs
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          round(corr(col("l_extendedprice"), col("l_quantity")), 4).as("r"),
-          round(covar_pop(col("l_extendedprice"), col("l_quantity")), 2).as("cp"),
-          round(covar_samp(col("l_extendedprice"), col("l_quantity")), 2).as("cs"))
-        .orderBy(col("l_returnflag")))
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   /** SKEWNESS/KURTOSIS. Spark computes population g1 / excess-g2; DuckDB's
     * skewness is bias-corrected sample and kurtosis_pop matches g2 — the
@@ -456,25 +326,16 @@ object OperatorQueries extends QueryCatalog {
         .orderBy(col("l_returnflag")))
 
   /** REGR_* linear-regression aggregates (hash_agg REGR_*). */
-  private val aggRegr = Q(
+  private val aggRegr = Q.sql(
     "agg_regr",
-    Some("""
+    """
       SELECT l_returnflag,
              round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
              round(regr_intercept(l_extendedprice, l_quantity), 4) AS icept,
              regr_count(l_extendedprice, l_quantity) AS n,
              round(regr_avgx(l_extendedprice, l_quantity), 4) AS ax,
              round(regr_avgy(l_extendedprice, l_quantity), 4) AS ay
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          round(regr_slope(col("l_extendedprice"), col("l_quantity")), 4).as("slope"),
-          round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 4).as("icept"),
-          regr_count(col("l_extendedprice"), col("l_quantity")).as("n"),
-          round(regr_avgx(col("l_extendedprice"), col("l_quantity")), 4).as("ax"),
-          round(regr_avgy(col("l_extendedprice"), col("l_quantity")), 4).as("ay"))
-        .orderBy(col("l_returnflag")))
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   /** Percentiles — reference APPROX_PERCENTILE is *exact* sort-based
     * (hash_agg.rs:1753-1785), so we use Spark's exact `percentile`
@@ -496,302 +357,206 @@ object OperatorQueries extends QueryCatalog {
         .orderBy(col("l_returnflag")))
 
   /** ANY_VALUE over a functionally-dependent column (deterministic). */
-  private val aggAnyValue = Q(
+  private val aggAnyValue = Q.sql(
     "agg_any_value",
-    Some("""
+    """
       SELECT n_nationkey, any_value(n_name) AS name
-      FROM nation GROUP BY n_nationkey ORDER BY n_nationkey"""),
-    (s, dir) =>
-      t(s, dir, "nation").groupBy(col("n_nationkey"))
-        .agg(any_value(col("n_name")).as("name"))
-        .orderBy(col("n_nationkey")))
+      FROM nation GROUP BY n_nationkey ORDER BY n_nationkey""")
 
   /** ROLLUP (exceeds reference — binder.rs:1019-1023 rejects these). */
-  private val aggRollup = Q(
+  private val aggRollup = Q.sql(
     "agg_rollup",
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus, count(*) AS n,
              round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2) AS sq
       FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), round(dsum(col("l_quantity")), 2).as("sq"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first))
+      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
 
   /** CUBE (exceeds reference). */
-  private val aggCube = Q(
+  private val aggCube = Q.sql(
     "agg_cube",
-    Some("""
+    """
       SELECT o_orderstatus, o_orderpriority, count(*) AS n
       FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""),
-    (s, dir) =>
-      t(s, dir, "orders").cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first))
+      ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""")
 
   /** GROUPING SETS via SQL (exceeds reference). */
-  private val aggGroupingSets = Q(
+  private val aggGroupingSets = Q.sql(
     "agg_grouping_sets",
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus, count(*) AS n
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT l_returnflag, l_linestatus, count(*) AS n
-      FROM lineitem
-      GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""))
+      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
 
   /** Global (no GROUP BY) scalar aggregate — reference SIMD scalar-agg
     * path (hash_agg.rs:392-415). */
-  private val aggGlobal = Q(
+  private val aggGlobal = Q.sql(
     "agg_global",
-    Some("""
+    """
       SELECT count(*) AS n, min(o_orderdate) AS first_o, max(o_orderdate) AS last_o,
              min(o_orderstatus) AS min_st, max(o_orderstatus) AS max_st
-      FROM orders"""),
-    (s, dir) =>
-      t(s, dir, "orders").agg(
-        count(lit(1)).as("n"),
-        min(col("o_orderdate")).as("first_o"),
-        max(col("o_orderdate")).as("last_o"),
-        min(col("o_orderstatus")).as("min_st"),
-        max(col("o_orderstatus")).as("max_st")))
+      FROM orders""")
 
   // -------------------------------------------------- sort / limit / topk
 
   /** Multi-key sort with explicit direction + null placement (reference
     * SortExpr defaults NULLS FIRST both directions, logical_expr.rs:813-825). */
-  private val sortMulti = Q(
+  private val sortMulti = Q.sql(
     "sort_multi",
-    Some("""
+    """
       SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity
       FROM lineitem
       ORDER BY l_returnflag DESC, l_quantity ASC, l_orderkey, l_linenumber
-      LIMIT 50"""),
-    (s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
-        .orderBy(col("l_returnflag").desc, col("l_quantity").asc,
-          col("l_orderkey"), col("l_linenumber"))
-        .limit(50))
+      LIMIT 50""")
 
   /** NULLS FIRST placement on a computed nullable key. */
-  private val sortNulls = Q(
+  private val sortNulls = Q.sql(
     "sort_nulls",
-    Some("""
+    """
       SELECT o_orderkey, nullif(o_orderstatus, 'O') AS st
       FROM orders WHERE o_orderkey < 200
-      ORDER BY st NULLS FIRST, o_orderkey"""),
-    (s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderkey") < 200)
-        .select(col("o_orderkey"), nullif(col("o_orderstatus"), lit("O")).as("st"))
-        .orderBy(col("st").asc_nulls_first, col("o_orderkey")))
+      ORDER BY st NULLS FIRST, o_orderkey""")
 
   /** OFFSET + LIMIT (reference LimitExec skip/fetch, limit.rs:13-194). */
-  private val limitOffset = Q(
+  private val limitOffset = Q.sql(
     "limit_offset",
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice FROM orders
-      ORDER BY o_orderkey LIMIT 20 OFFSET 10"""),
-    (s, dir) =>
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey")).offset(10).limit(20))
+      ORDER BY o_orderkey LIMIT 20 OFFSET 10""")
 
   /** Top-K — Catalyst fuses to TakeOrderedAndProject (reference Sort-with-
     * fetch fusion, planner.rs:835-865). */
-  private val topk = Q(
+  private val topk = Q.sql(
     "topk",
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 5"""),
-    (s, dir) =>
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(5))
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 5""")
 
   /** DISTINCT (reference rewrites to group-by-all, planner.rs:867-892). */
-  private val distinctRows = Q(
+  private val distinctRows = Q.sql(
     "distinct_rows",
-    Some("""
+    """
       SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-      ORDER BY l_returnflag, l_linestatus"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").select(col("l_returnflag"), col("l_linestatus"))
-        .distinct().orderBy(col("l_returnflag"), col("l_linestatus")))
+      ORDER BY l_returnflag, l_linestatus""")
 
   // -------------------------------------------------------------- set ops
 
-  private val setopUnionAll = Q(
+  private val setopUnionAll = Q.sql(
     "setop_union_all",
-    Some("""
+    """
       SELECT c_custkey AS id FROM customer WHERE c_acctbal > 9900
       UNION ALL
       SELECT s_suppkey FROM supplier WHERE s_acctbal > 9000
-      ORDER BY id"""),
-    (s, dir) =>
-      t(s, dir, "customer").filter(col("c_acctbal") > 9900).select(col("c_custkey").as("id"))
-        .unionAll(t(s, dir, "supplier").filter(col("s_acctbal") > 9000).select(col("s_suppkey")))
-        .orderBy(col("id")))
+      ORDER BY id""")
 
-  private val setopUnion = Q(
+  private val setopUnion = Q.sql(
     "setop_union",
-    Some("""
+    """
       SELECT c_nationkey AS nk FROM customer
       UNION
       SELECT s_nationkey FROM supplier
-      ORDER BY nk"""),
-    (s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .union(t(s, dir, "supplier").select(col("s_nationkey")))
-        .distinct().orderBy(col("nk")))
+      ORDER BY nk""")
 
-  private val setopIntersect = Q(
+  private val setopIntersect = Q.sql(
     "setop_intersect",
-    Some("""
+    """
       SELECT c_nationkey AS nk FROM customer WHERE c_acctbal > 9000
       INTERSECT
       SELECT s_nationkey FROM supplier
-      ORDER BY nk"""),
-    (s, dir) =>
-      t(s, dir, "customer").filter(col("c_acctbal") > 9000).select(col("c_nationkey").as("nk"))
-        .intersect(t(s, dir, "supplier").select(col("s_nationkey")))
-        .orderBy(col("nk")))
+      ORDER BY nk""")
 
-  private val setopIntersectAll = Q(
+  private val setopIntersectAll = Q.sql(
     "setop_intersect_all",
-    Some("""
+    """
       SELECT l_suppkey AS k FROM lineitem WHERE l_quantity = 1
       INTERSECT ALL
       SELECT l_suppkey FROM lineitem WHERE l_quantity = 2
-      ORDER BY k"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_quantity") === 1).select(col("l_suppkey").as("k"))
-        .intersectAll(t(s, dir, "lineitem").filter(col("l_quantity") === 2).select(col("l_suppkey")))
-        .orderBy(col("k")))
+      ORDER BY k""")
 
-  private val setopExcept = Q(
+  private val setopExcept = Q.sql(
     "setop_except",
-    Some("""
+    """
       SELECT c_nationkey AS nk FROM customer
       EXCEPT
       SELECT s_nationkey FROM supplier
-      ORDER BY nk"""),
-    (s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .except(t(s, dir, "supplier").select(col("s_nationkey")))
-        .orderBy(col("nk")))
+      ORDER BY nk""")
 
-  private val setopExceptAll = Q(
+  private val setopExceptAll = Q.sql(
     "setop_except_all",
-    Some("""
+    """
       SELECT l_suppkey AS k FROM lineitem WHERE l_quantity = 1
       EXCEPT ALL
       SELECT l_suppkey FROM lineitem WHERE l_quantity = 2
-      ORDER BY k"""),
-    (s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_quantity") === 1).select(col("l_suppkey").as("k"))
-        .exceptAll(t(s, dir, "lineitem").filter(col("l_quantity") === 2).select(col("l_suppkey")))
-        .orderBy(col("k")))
+      ORDER BY k""")
 
   // ------------------------------------------------------------ subqueries
 
   /** Uncorrelated scalar subquery (reference pre-computes to literal,
     * planner.rs:144-290). */
-  private val subqScalar = Q(
+  private val subqScalar = Q.sql(
     "subq_scalar",
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice FROM orders
       WHERE o_totalprice > 1.9 * (SELECT avg(o_totalprice) FROM orders)
-      ORDER BY o_orderkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT o_orderkey, o_totalprice FROM orders
-      WHERE o_totalprice > 1.9 * (SELECT avg(o_totalprice) FROM orders)
-      ORDER BY o_orderkey"""))
+      ORDER BY o_orderkey""")
 
   /** IN subquery → semi join (subquery_decorrelation.rs:375). */
-  private val subqIn = Q(
+  private val subqIn = Q.sql(
     "subq_in",
-    Some("""
+    """
       SELECT o_orderkey FROM orders
       WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < -900)
-      ORDER BY o_orderkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT o_orderkey FROM orders
-      WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < -900)
-      ORDER BY o_orderkey"""))
+      ORDER BY o_orderkey""")
 
   /** NOT IN subquery → anti join (null-aware). */
-  private val subqNotIn = Q(
+  private val subqNotIn = Q.sql(
     "subq_not_in",
-    Some("""
+    """
       SELECT s_suppkey FROM supplier
       WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-      ORDER BY s_suppkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT s_suppkey FROM supplier
-      WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-      ORDER BY s_suppkey"""))
+      ORDER BY s_suppkey""")
 
   /** Correlated scalar subquery in the SELECT list (reference
     * SubqueryExecutor path, subquery.rs:47-70). */
-  private val subqScalarSelect = Q(
+  private val subqScalarSelect = Q.sql(
     "subq_scalar_select",
-    Some("""
+    """
       SELECT o_orderkey,
              (SELECT max(l_extendedprice) FROM lineitem WHERE l_orderkey = o_orderkey) AS max_line
       FROM orders WHERE o_orderkey < 100
-      ORDER BY o_orderkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT o_orderkey,
-             (SELECT max(l_extendedprice) FROM lineitem WHERE l_orderkey = o_orderkey) AS max_line
-      FROM orders WHERE o_orderkey < 100
-      ORDER BY o_orderkey"""))
+      ORDER BY o_orderkey""")
 
   /** Nested subquery: IN over EXISTS. */
-  private val subqNested = Q(
+  private val subqNested = Q.sql(
     "subq_nested",
-    Some("""
+    """
       SELECT c_custkey FROM customer
       WHERE c_custkey IN (SELECT o_custkey FROM orders
                           WHERE o_totalprice > 450000
                             AND EXISTS (SELECT 1 FROM lineitem
                                         WHERE l_orderkey = o_orderkey AND l_quantity = 50))
-      ORDER BY c_custkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT c_custkey FROM customer
-      WHERE c_custkey IN (SELECT o_custkey FROM orders
-                          WHERE o_totalprice > 450000
-                            AND EXISTS (SELECT 1 FROM lineitem
-                                        WHERE l_orderkey = o_orderkey AND l_quantity = 50))
-      ORDER BY c_custkey"""))
+      ORDER BY c_custkey""")
 
   // ------------------------------------------------------------------ CTEs
 
   /** Chained CTEs (reference binds CTEs first, binder.rs:166-176). */
-  private val cteChained = Q(
+  private val cteChained = Q.sql(
     "cte_chained",
-    Some("""
+    """
       WITH big AS (SELECT o_custkey, o_totalprice FROM orders WHERE o_totalprice > 400000),
            per_cust AS (SELECT o_custkey, count(*) AS n_big FROM big GROUP BY o_custkey)
       SELECT n_big, count(*) AS n_cust FROM per_cust
-      GROUP BY n_big ORDER BY n_big"""),
-    (s, dir) => sql(s, dir)("""
-      WITH big AS (SELECT o_custkey, o_totalprice FROM orders WHERE o_totalprice > 400000),
-           per_cust AS (SELECT o_custkey, count(*) AS n_big FROM big GROUP BY o_custkey)
-      SELECT n_big, count(*) AS n_cust FROM per_cust
-      GROUP BY n_big ORDER BY n_big"""))
+      GROUP BY n_big ORDER BY n_big""")
 
   // -------------------------------------------------------------- complex
   // (mirrors the reference's golden `complex/` category: CTEs + unions +
   //  deep nesting, tests/expected_results/ — SURVEY §5)
 
   /** Union of two aggregates inside a CTE, joined back to a dimension. */
-  private val complexUnionCte = Q(
+  private val complexUnionCte = Q.sql(
     "complex_union_cte",
-    Some("""
+    """
       WITH balances AS (
         SELECT c_nationkey AS nk, 'customer' AS side,
                round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2) AS bal
@@ -803,26 +568,13 @@ object OperatorQueries extends QueryCatalog {
       SELECT n_name, side, bal
       FROM balances JOIN nation ON nk = n_nationkey
       WHERE bal > 0
-      ORDER BY n_name, side"""),
-    (s, dir) => sql(s, dir)("""
-      WITH balances AS (
-        SELECT c_nationkey AS nk, 'customer' AS side,
-               round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2) AS bal
-        FROM customer GROUP BY c_nationkey
-        UNION ALL
-        SELECT s_nationkey, 'supplier',
-               round(CAST(sum(CAST(s_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2)
-        FROM supplier GROUP BY s_nationkey)
-      SELECT n_name, side, bal
-      FROM balances JOIN nation ON nk = n_nationkey
-      WHERE bal > 0
-      ORDER BY n_name, side"""))
+      ORDER BY n_name, side""")
 
   /** Deeply nested derived tables with a correlated predicate at the
     * innermost level. */
-  private val complexNested = Q(
+  private val complexNested = Q.sql(
     "complex_nested",
-    Some("""
+    """
       SELECT priority, n_orders, round(avg_price, 2) AS avg_price
       FROM (SELECT priority, count(*) AS n_orders,
                    CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_price
@@ -832,23 +584,12 @@ object OperatorQueries extends QueryCatalog {
                                       WHERE c_mktsegment = 'BUILDING')) x
             GROUP BY priority) y
       WHERE n_orders > 10
-      ORDER BY priority"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT priority, n_orders, round(avg_price, 2) AS avg_price
-      FROM (SELECT priority, count(*) AS n_orders,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_price
-            FROM (SELECT o_orderpriority AS priority, o_totalprice
-                  FROM orders
-                  WHERE o_custkey IN (SELECT c_custkey FROM customer
-                                      WHERE c_mktsegment = 'BUILDING')) x
-            GROUP BY priority) y
-      WHERE n_orders > 10
-      ORDER BY priority"""))
+      ORDER BY priority""")
 
   /** CTE feeding a window function feeding a HAVING-style filter. */
-  private val complexCteWindow = Q(
+  private val complexCteWindow = Q.sql(
     "complex_cte_window",
-    Some("""
+    """
       WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type, count(*) AS n
         FROM events GROUP BY 1, 2)
@@ -857,23 +598,13 @@ object OperatorQueries extends QueryCatalog {
                    rank() OVER (PARTITION BY day ORDER BY n DESC, event_type) AS rnk
             FROM daily) x
       WHERE rnk <= 2
-      ORDER BY day, rnk, event_type"""),
-    (s, dir) => sql(s, dir)("""
-      WITH daily AS (
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type, count(*) AS n
-        FROM events GROUP BY 1, 2)
-      SELECT day, event_type, n, rnk
-      FROM (SELECT day, event_type, n,
-                   rank() OVER (PARTITION BY day ORDER BY n DESC, event_type) AS rnk
-            FROM daily) x
-      WHERE rnk <= 2
-      ORDER BY day, rnk, event_type"""))
+      ORDER BY day, rnk, event_type""")
 
   /** Expression soup: arithmetic/boolean/comparison precedence + CASE
     * nesting (mirrors golden `expr/` category). */
-  private val complexExpr = Q(
+  private val complexExpr = Q.sql(
     "complex_expr",
-    Some("""
+    """
       SELECT o_orderkey,
              (o_totalprice + 10) * 2 - o_orderkey % 7 AS arith,
              NOT (o_totalprice > 250000 AND o_orderstatus = 'F')
@@ -883,56 +614,30 @@ object OperatorQueries extends QueryCatalog {
                   ELSE 'out' END AS nested_case,
              o_orderkey BETWEEN 50 AND 150 AS in_range,
              o_orderstatus IN ('F', 'P') AND o_orderpriority NOT IN ('5-LOW') AS multi_in
-      FROM orders WHERE o_orderkey < 200 ORDER BY o_orderkey"""),
-    (s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderkey") < 200)
-        .select(col("o_orderkey"),
-          ((col("o_totalprice") + 10) * 2 - col("o_orderkey") % 7).as("arith"),
-          (!(col("o_totalprice") > 250000 && col("o_orderstatus") === "F") ||
-            col("o_orderkey") % 2 === 0).as("boolexpr"),
-          when(col("o_totalprice").between(100000, 300000),
-            when(col("o_orderstatus") === "F", "mid-f").otherwise("mid-x"))
-            .otherwise("out").as("nested_case"),
-          col("o_orderkey").between(50, 150).as("in_range"),
-          (col("o_orderstatus").isin("F", "P") &&
-            !col("o_orderpriority").isin("5-LOW")).as("multi_in"))
-        .orderBy(col("o_orderkey")))
+      FROM orders WHERE o_orderkey < 200 ORDER BY o_orderkey""")
 
   // --------------------------------------------------------------- window
 
   /** ROW_NUMBER/RANK/DENSE_RANK (exceeds reference — README.md:278). */
-  private val windowRank = Q(
+  private val windowRank = Q.sql(
     "window_rank",
-    Some("""
+    """
       SELECT * FROM (
         SELECT o_orderpriority, o_orderkey, o_totalprice,
                row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn,
                rank() OVER (PARTITION BY o_orderpriority ORDER BY o_orderstatus) AS rk
         FROM orders) x
       WHERE rn <= 3
-      ORDER BY o_orderpriority, rn"""),
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val byPrice = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val byStatus = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_orderstatus"))
-      t(s, dir, "orders")
-        .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
-          row_number().over(byPrice).as("rn"),
-          rank().over(byStatus).as("rk"))
-        .filter(col("rn") <= 3)
-        .orderBy(col("o_orderpriority"), col("rn"))
-    })
+      ORDER BY o_orderpriority, rn""")
 
   /** Full window-function surface: lead/lag/first/nth/ntile/
     * percent_rank/cume_dist + a value-RANGE frame (peer-inclusive
     * count of orders within $1000 below the current price). All
     * deterministic: partitions order by the unique o_orderkey, and the
     * RANGE frame is value-defined so duplicates don't reorder it. */
-  private val windowFrames = Q(
+  private val windowFrames = Q.sql(
     "window_frames",
-    Some("""
+    """
       SELECT o_custkey, o_orderkey, o_totalprice,
              lag(o_totalprice) OVER w AS prev_price,
              lead(o_totalprice) OVER w AS next_price,
@@ -948,44 +653,18 @@ object OperatorQueries extends QueryCatalog {
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey),
              wf AS (PARTITION BY o_custkey ORDER BY o_orderkey
                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      ORDER BY o_custkey, o_orderkey"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             lag(o_totalprice) OVER w AS prev_price,
-             lead(o_totalprice) OVER w AS next_price,
-             first_value(o_totalprice) OVER wf AS first_price,
-             nth_value(o_totalprice, 2) OVER wf AS second_price,
-             ntile(4) OVER (ORDER BY o_orderkey) AS quartile,
-             round(percent_rank() OVER (ORDER BY o_orderkey), 6) AS pr,
-             round(cume_dist() OVER (ORDER BY o_orderkey), 6) AS cd,
-             count(*) OVER (ORDER BY o_totalprice
-                            RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS near_below
-      FROM orders
-      WHERE o_custkey < 30
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey),
-             wf AS (PARTITION BY o_custkey ORDER BY o_orderkey
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      ORDER BY o_custkey, o_orderkey"""))
+      ORDER BY o_custkey, o_orderkey""")
 
   /** Running aggregate + LAG over event time (exceeds reference). */
-  private val windowRunning = Q(
+  private val windowRunning = Q.sql(
     "window_running",
-    Some("""
+    """
       SELECT event_id,
              round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running,
              lag(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
       FROM events WHERE user_id < 20
-      ORDER BY event_id"""),
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events").filter(col("user_id") < 20)
-        .select(col("event_id"),
-          round(sum(col("value")).over(w.rowsBetween(Window.unboundedPreceding, 0)), 4).as("running"),
-          lag(col("event_type"), 1).over(w).as("prev_type"))
-        .orderBy(col("event_id"))
-    })
+      ORDER BY event_id""")
 
   // ------------------------------------------------------- events (batch time ops)
 
@@ -1091,6 +770,15 @@ object OperatorQueries extends QueryCatalog {
             col("o_orderkey") % 7)))
         .select(col("o_orderkey"), col("pos"), col("col").as("x"))
         .orderBy(col("o_orderkey"), col("pos")))
+
+  override val reshaped: Map[String, String] = Map(
+    "scan_write_roundtrip" -> "the run writes and re-reads parquet",
+    "scan_csv_roundtrip" -> "the run writes and re-reads CSV",
+    "scan_json_roundtrip" -> "the run writes and re-reads JSON lines",
+    "join_bucketed" -> "the run writes bucketed tables and joins them without an exchange",
+    "agg_skew_salted" -> "runs the salted two-stage aggregate (operators.Skew)",
+    "join_skew_salted" -> "runs the salted join (operators.Skew)",
+    "events_time_bucket" -> "Spark's date_trunc yields TIMESTAMP; the oracle's cast yields TIMESTAMP_NTZ")
 
   override def defs: Seq[Q] = Seq(
     scanProjection, scanMemory, scanWriteRoundtrip, scanCsvRoundtrip,

@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.Engine
 
 /** TPC-H q01–q22 adapted to the driver's subset schema (FIXTURES.md §A).
@@ -31,39 +28,26 @@ import graft.Engine
   *    no nation-name filter (only 100 suppliers at sf0.01).
   *  - q22: phone country code → substr(c_name,17,2).
   *
-  * Queries use the DataFrame DSL (Catalyst handles pushdown/pruning/
-  * join strategy); subquery-shaped ones go through spark.sql to exercise
-  * the SQL entry point (reference entry point A, context.rs:217).
+  * Every row runs its oracle text (`Q.sql`) unless it is a declared
+  * reshape (`reshaped`): one whose Spark side ships a different plan,
+  * measured stock against shipped with `ScaleSweep ab`. Money sums
+  * quantize each term to DECIMAL(18,6) (lossless here — money columns
+  * are 2dp, discount/tax 2dp, so any 2-3-term product is <= 6dp), sum
+  * exactly and return double: plain double sums differ by accumulation
+  * order and can straddle a rounding boundary (seen on q09/q10 at
+  * sf0.01), and at 100 TB this is also the *correct* money math.
   * Doubles are rounded on both sides; every ORDER BY carries a total
   * tiebreak so LIMIT result sets are deterministic.
   */
 object TpchQueries extends QueryCatalog {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Engine.t(s, dir, name)
-
-  private def sql(s: SparkSession, dir: String)(q: String): DataFrame = {
-    Engine.registerDir(s, dir)
-    s.sql(q)
-  }
-
-  private def ts(v: String) = to_timestamp_ntz(lit(v))
-
-  /** Order-independent double sum: quantize each term to DECIMAL(18,6)
-    * (lossless here — money columns are 2dp, discount/tax 2dp, so any
-    * 2-3-term product is <= 6dp), sum exactly, return double. Makes the
-    * result independent of partition/merge order, so Spark and DuckDB
-    * agree bit-for-bit — plain double sums differ by accumulation order
-    * and can straddle a rounding boundary (seen on q09/q10 at sf0.01).
-    * At 100 TB this is also the *correct* money math (no drift).
-    */
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast(org.apache.spark.sql.types.DataTypes.createDecimalType(18, 6))).cast("double")
-
-  /** Q1 — pricing summary report. Unchanged vs spec. */
-  val q01 = Q(
+  /** Q1 — pricing summary report. Unchanged vs spec. l_quantity is
+    * integer-valued (1-50), so its plain double sum is exact (< 2^53)
+    * and order-independent; only the money terms need the decimal
+    * quantization. */
+  val q01 = Q.sql(
     "tpch_q01",
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus,
              round(sum(l_quantity), 2) AS sum_qty,
              round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_base_price,
@@ -76,30 +60,12 @@ object TpchQueries extends QueryCatalog {
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
       GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""),
-    (s, dir) => {
-      // l_quantity is integer-valued (1-50): a plain double sum is exact
-      // (< 2^53) and order-independent, so only the money terms need the
-      // decimal quantization (measured: saves the widest decimal agg)
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= ts("1998-09-02 00:00:00"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(dsum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
-          round(sum(col("l_quantity")) / count(lit(1)), 4).as("avg_qty"),
-          round(dsum(col("l_extendedprice")) / count(lit(1)), 4).as("avg_price"),
-          round(dsum(col("l_discount")) / count(lit(1)), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    })
+      ORDER BY l_returnflag, l_linestatus""")
 
   /** Q2 — correlated scalar subquery choosing the best supplier per region. */
-  val q02 = Q(
+  val q02 = Q.sql(
     "tpch_q02",
-    Some("""
+    """
       SELECT r_name, s_name, s_acctbal
       FROM region r
       JOIN nation n ON n.n_regionkey = r.r_regionkey
@@ -107,21 +73,12 @@ object TpchQueries extends QueryCatalog {
       WHERE s_acctbal = (SELECT max(s2.s_acctbal)
                          FROM supplier s2 JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
                          WHERE n2.n_regionkey = r.r_regionkey)
-      ORDER BY r_name, s_name"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT r_name, s_name, s_acctbal
-      FROM region r
-      JOIN nation n ON n.n_regionkey = r.r_regionkey
-      JOIN supplier s ON s.s_nationkey = n.n_nationkey
-      WHERE s_acctbal = (SELECT max(s2.s_acctbal)
-                         FROM supplier s2 JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-                         WHERE n2.n_regionkey = r.r_regionkey)
-      ORDER BY r_name, s_name"""))
+      ORDER BY r_name, s_name""")
 
   /** Q3 — shipping priority: 3-way join, group, top-10 by revenue. */
-  val q03 = Q(
+  val q03 = Q.sql(
     "tpch_q03",
-    Some("""
+    """
       SELECT l_orderkey,
              round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
              o_orderdate
@@ -131,19 +88,7 @@ object TpchQueries extends QueryCatalog {
         AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
       GROUP BY l_orderkey, o_orderdate
       ORDER BY revenue DESC, o_orderdate, l_orderkey
-      LIMIT 10"""),
-    (s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders").filter(col("o_orderdate") < ts("1998-01-01 00:00:00"))
-      val l = t(s, dir, "lineitem").filter(col("l_shipdate") > ts("1998-01-01 00:00:00"))
-      c.join(o, col("c_custkey") === col("o_custkey"))
-        .join(l, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-        .select(col("l_orderkey"), col("revenue"), col("o_orderdate"))
-        .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-        .limit(10)
-    })
+      LIMIT 10""")
 
   /** Q4 — order priority checking via EXISTS (lateness adapted). */
   val q04 = Q(
@@ -176,7 +121,7 @@ object TpchQueries extends QueryCatalog {
     // but AQE may coalesce to the advisory size instead of emitting
     // shuffle.partitions fixed tasks) — interleaved rebab A/B: faster
     // at sf0.1/sf10/sf100, zero spill at all three.
-    (s, dir) => sql(s, dir)(q04SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q04SparkSql))
 
   /** The shipped q4 SQL. */
   private val q04SparkSql = """
@@ -194,9 +139,9 @@ object TpchQueries extends QueryCatalog {
       ORDER BY o_orderpriority"""
 
   /** Q5 — local supplier volume: 6-way join with two small broadcast dims. */
-  val q05 = Q(
+  val q05 = Q.sql(
     "tpch_q05",
-    Some("""
+    """
       SELECT n_name, round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
       FROM customer, orders, lineitem, supplier, nation, region
       WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey AND l_suppkey = s_suppkey
@@ -205,47 +150,23 @@ object TpchQueries extends QueryCatalog {
         AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       GROUP BY n_name
-      ORDER BY revenue DESC, n_name"""),
-    (s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= ts("1996-01-01 00:00:00") &&
-          col("o_orderdate") < ts("1998-01-01 00:00:00"))
-      t(s, dir, "customer")
-        .join(o, col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .groupBy(col("n_name"))
-        .agg(round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    })
+      ORDER BY revenue DESC, n_name""")
 
   /** Q6 — forecasting revenue change: pure scan+filter+scalar agg. */
-  val q06 = Q(
+  val q06 = Q.sql(
     "tpch_q06",
-    Some("""
+    """
       SELECT round(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         AND l_discount BETWEEN 0.04 AND 0.06
-        AND l_quantity < 24"""),
-    (s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= ts("1996-01-01 00:00:00") &&
-          col("l_shipdate") < ts("1997-01-01 00:00:00") &&
-          col("l_discount").between(0.04, 0.06) &&
-          col("l_quantity") < 24)
-        .agg(round(dsum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"))
-    })
+        AND l_quantity < 24""")
 
   /** Q7 — volume shipping between two nations, grouped by year. */
-  val q07 = Q(
+  val q07 = Q.sql(
     "tpch_q07",
-    Some("""
+    """
       SELECT supp_nation, cust_nation, l_year, round(CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
       FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS BIGINT) AS l_year,
@@ -259,34 +180,12 @@ object TpchQueries extends QueryCatalog {
               AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
                                  AND TIMESTAMP '1997-12-31 00:00:00') shipping
       GROUP BY supp_nation, cust_nation, l_year
-      ORDER BY supp_nation, cust_nation, l_year"""),
-    (s, dir) => {
-      val n1 = t(s, dir, "nation").select(
-        col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
-      val n2 = t(s, dir, "nation").select(
-        col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
-      t(s, dir, "supplier")
-        .join(t(s, dir, "lineitem")
-          .filter(col("l_shipdate").between(ts("1996-01-01 00:00:00"), ts("1997-12-31 00:00:00"))),
-          col("s_suppkey") === col("l_suppkey"))
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "customer"), col("c_custkey") === col("o_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("n1_key"))
-        .join(broadcast(n2), col("c_nationkey") === col("n2_key"))
-        .filter((col("supp_nation") === "NATION_9" && col("cust_nation") === "NATION_7") ||
-          (col("supp_nation") === "NATION_7" && col("cust_nation") === "NATION_9"))
-        .select(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"),
-          (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
-        .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-        .agg(round(dsum(col("volume")), 2).as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    })
+      ORDER BY supp_nation, cust_nation, l_year""")
 
   /** Q8 — national market share within a region, by year. */
-  val q08 = Q(
+  val q08 = Q.sql(
     "tpch_q08",
-    Some("""
+    """
       SELECT o_year,
              round(CAST(sum(CAST(CASE WHEN nation = 'NATION_9' THEN volume ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) / CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE), 4) AS mkt_share
       FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -298,35 +197,12 @@ object TpchQueries extends QueryCatalog {
               AND n1.n_regionkey = r_regionkey AND r_name = 'AMERICA'
               AND s_nationkey = n2.n_nationkey AND p_type = 'ECONOMY') all_nations
       GROUP BY o_year
-      ORDER BY o_year"""),
-    (s, dir) => {
-      val n1 = t(s, dir, "nation").select(
-        col("n_nationkey").as("n1_key"), col("n_regionkey").as("n1_region"))
-      val n2 = t(s, dir, "nation").select(
-        col("n_nationkey").as("n2_key"), col("n_name").as("nation"))
-      t(s, dir, "part").filter(col("p_type") === "ECONOMY")
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")), col("s_suppkey") === col("l_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("c_nationkey") === col("n1_key"))
-        .join(broadcast(t(s, dir, "region")), col("n1_region") === col("r_regionkey"))
-        .filter(col("r_name") === "AMERICA")
-        .join(broadcast(n2), col("s_nationkey") === col("n2_key"))
-        .select(year(col("o_orderdate")).cast("long").as("o_year"),
-          (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"),
-          col("nation"))
-        .groupBy(col("o_year"))
-        .agg(round(
-          dsum(when(col("nation") === "NATION_9", col("volume")).otherwise(lit(0))) / dsum(col("volume")),
-          4).as("mkt_share"))
-        .orderBy(col("o_year"))
-    })
+      ORDER BY o_year""")
 
   /** Q9 — product-type profit (cost proxied by p_retailprice, see delta). */
-  val q09 = Q(
+  val q09 = Q.sql(
     "tpch_q09",
-    Some("""
+    """
       SELECT nation, o_year, round(CAST(sum(CAST(amount AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_profit
       FROM (SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
                    l_extendedprice * (1 - l_discount) - 0.01 * p_retailprice * l_quantity AS amount
@@ -335,26 +211,12 @@ object TpchQueries extends QueryCatalog {
               AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
               AND p_name LIKE '%red%') profit
       GROUP BY nation, o_year
-      ORDER BY nation, o_year DESC"""),
-    (s, dir) => {
-      t(s, dir, "part").filter(col("p_name").like("%red%"))
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")), col("s_suppkey") === col("l_suppkey"))
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"),
-          (col("l_extendedprice") * (lit(1) - col("l_discount")) -
-            lit(0.01) * col("p_retailprice") * col("l_quantity")).as("amount"))
-        .groupBy(col("nation"), col("o_year"))
-        .agg(round(dsum(col("amount")), 2).as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    })
+      ORDER BY nation, o_year DESC""")
 
   /** Q10 — returned item reporting, top-20 customers by lost revenue. */
-  val q10 = Q(
+  val q10 = Q.sql(
     "tpch_q10",
-    Some("""
+    """
       SELECT c_custkey, c_name,
              round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
              c_acctbal, n_name
@@ -365,22 +227,7 @@ object TpchQueries extends QueryCatalog {
         AND l_returnflag = 'R' AND c_nationkey = n_nationkey
       GROUP BY c_custkey, c_name, c_acctbal, n_name
       ORDER BY revenue DESC, c_custkey
-      LIMIT 20"""),
-    (s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= ts("1996-01-01 00:00:00") &&
-          col("o_orderdate") < ts("1996-07-01 00:00:00"))
-      t(s, dir, "customer")
-        .join(o, col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem").filter(col("l_returnflag") === "R"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-        .select(col("c_custkey"), col("c_name"), col("revenue"), col("c_acctbal"), col("n_name"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    })
+      LIMIT 20""")
 
   /** Q11 — important stock: HAVING vs scalar-subquery fraction (see delta). */
   val q11 = Q(
@@ -410,7 +257,7 @@ object TpchQueries extends QueryCatalog {
     // spill (it is map-side); at toy SFs the extra exchange is noise.
     // r18: the exchange is REBALANCE (rebab A/B: wins at every SF —
     // sf100 78.6/99.0 vs 102.2/120.7 s — spill stays zero).
-    (s, dir) => sql(s, dir)(q11SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q11SparkSql))
 
   /** The shipped q11 SQL. */
   private val q11SparkSql = """
@@ -424,9 +271,9 @@ object TpchQueries extends QueryCatalog {
       ORDER BY value DESC, l_partkey"""
 
   /** Q12 — shipping modes and order priority (adapted, see delta). */
-  val q12 = Q(
+  val q12 = Q.sql(
     "tpch_q12",
-    Some("""
+    """
       SELECT l_linestatus,
              count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')) AS high_line_count,
              count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS low_line_count
@@ -435,19 +282,7 @@ object TpchQueries extends QueryCatalog {
         AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
       GROUP BY l_linestatus
-      ORDER BY l_linestatus"""),
-    (s, dir) => {
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem")
-          .filter(col("l_shipdate") >= ts("1996-01-01 00:00:00") &&
-            col("l_shipdate") < ts("1997-01-01 00:00:00")),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(
-          count_if(col("o_orderpriority").isin("1-URGENT", "2-HIGH")).as("high_line_count"),
-          count_if(!col("o_orderpriority").isin("1-URGENT", "2-HIGH")).as("low_line_count"))
-        .orderBy(col("l_linestatus"))
-    })
+      ORDER BY l_linestatus""")
 
   /** Q13 — customer order-count distribution via left outer join. */
   val q13 = Q(
@@ -479,7 +314,7 @@ object TpchQueries extends QueryCatalog {
     // 4): outer semantics keep every customer row, the orders filter
     // keeps ~4/5 of rows, and every o_custkey matches — no selective
     // side exists to build a filter from.
-    (s, dir) => sql(s, dir)(q13SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q13SparkSql))
 
   /** The shipped q13 SQL. */
   private val q13SparkSql = """
@@ -494,32 +329,20 @@ object TpchQueries extends QueryCatalog {
       ORDER BY custdist DESC, c_count DESC"""
 
   /** Q14 — promotion effect: conditional revenue share. */
-  val q14 = Q(
+  val q14 = Q.sql(
     "tpch_q14",
-    Some("""
+    """
       SELECT round(100.00 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE)
                    / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 4) AS promo_revenue
       FROM lineitem, part
       WHERE l_partkey = p_partkey
         AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1996-02-01 00:00:00'"""),
-    (s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= ts("1996-01-01 00:00:00") &&
-          col("l_shipdate") < ts("1996-02-01 00:00:00"))
-        .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-        .agg(round(
-          lit(100.0) *
-            dsum(when(col("p_type") === "PROMO",
-              col("l_extendedprice") * (lit(1) - col("l_discount"))).otherwise(lit(0))) /
-            dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
-          4).as("promo_revenue"))
-    })
+        AND l_shipdate < TIMESTAMP '1996-02-01 00:00:00'""")
 
   /** Q15 — top supplier by revenue: CTE + scalar-subquery max. */
-  val q15 = Q(
+  val q15 = Q.sql(
     "tpch_q15",
-    Some("""
+    """
       WITH revenue AS (SELECT l_suppkey AS supplier_no,
                               CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS total_rev
                        FROM lineitem
@@ -530,19 +353,7 @@ object TpchQueries extends QueryCatalog {
       FROM supplier, revenue
       WHERE s_suppkey = supplier_no
         AND total_rev = (SELECT max(total_rev) FROM revenue)
-      ORDER BY s_suppkey"""),
-    (s, dir) => sql(s, dir)("""
-      WITH revenue AS (SELECT l_suppkey AS supplier_no,
-                              CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS total_rev
-                       FROM lineitem
-                       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-                         AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-                       GROUP BY l_suppkey)
-      SELECT s_suppkey, s_name, round(total_rev, 2) AS total_revenue
-      FROM supplier, revenue
-      WHERE s_suppkey = supplier_no
-        AND total_rev = (SELECT max(total_rev) FROM revenue)
-      ORDER BY s_suppkey"""))
+      ORDER BY s_suppkey""")
 
   /** Q16 — parts/supplier relationship with NOT IN exclusion (see delta). */
   val q16 = Q(
@@ -566,7 +377,7 @@ object TpchQueries extends QueryCatalog {
     // digest, 36-45 s -> 28-30 s. The oracle keeps the stock form.
     // r18: the dedupe-key exchange is REBALANCE (rebab A/B: -38% at
     // sf10, parity at sf100, zero spill everywhere).
-    (s, dir) => sql(s, dir)(q16SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q16SparkSql))
 
   /** The shipped q16 SQL. */
   private val q16SparkSql = """
@@ -584,20 +395,14 @@ object TpchQueries extends QueryCatalog {
       ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
 
   /** Q17 — small-quantity-order revenue: correlated avg subquery. */
-  val q17 = Q(
+  val q17 = Q.sql(
     "tpch_q17",
-    Some("""
+    """
       SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0, 2) AS avg_yearly
       FROM lineitem, part
       WHERE p_partkey = l_partkey AND p_brand = 'Brand#3' AND p_size = 10
         AND l_quantity < (SELECT 0.5 * avg(l_quantity)
-                          FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0, 2) AS avg_yearly
-      FROM lineitem, part
-      WHERE p_partkey = l_partkey AND p_brand = 'Brand#3' AND p_size = 10
-        AND l_quantity < (SELECT 0.5 * avg(l_quantity)
-                          FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)"""))
+                          FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""")
 
   /** Q18 — large-volume customers: IN over grouped HAVING subquery. */
   val q18 = Q(
@@ -626,7 +431,7 @@ object TpchQueries extends QueryCatalog {
     // KEEPS REPARTITION — there AQE's 2:1 coalesce of the 49 MB
     // rebalance partitions re-concentrated the ~150M-key stacked
     // aggregate state and spilled 39.7+4.8 GB at sf100 (measured).
-    (s, dir) => sql(s, dir)(q18SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q18SparkSql))
 
   /** The shipped q18 SQL. */
   private val q18SparkSql = """
@@ -643,46 +448,38 @@ object TpchQueries extends QueryCatalog {
       ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
       LIMIT 100"""
 
-  /** Q19 — discounted revenue: OR-of-ANDs disjunctive pushdown (see delta). */
-  val q19 = Q(
+  /** Q19 — discounted revenue: OR-of-ANDs disjunctive pushdown (see delta).
+    *
+    * Spark side: the oracle plus BROADCAST(part). The brand/size
+    * disjuncts filter part to a few percent before the join, but the
+    * static size estimate does not see that: once part's files pass the
+    * 64 MB broadcast threshold (sf100 here) the stock plan sort-merges,
+    * shuffling lineitem. `ScaleSweep ab` at sf10 with the threshold
+    * scaled to 1/10 (sf100's broadcast decisions): stock 7.8 / 8.8 s and
+    * 825.5 MB shuffled, hinted 2.8 / 3.0 s and nothing shuffled, equal
+    * digests (SCALE.md). */
+  val q19 = Q.hinted(
     "tpch_q19",
-    Some("""
+    """
       SELECT round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
       FROM lineitem, part
       WHERE p_partkey = l_partkey AND (
             (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 21)
          OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 10 AND 30)
-         OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 20 AND 40))"""),
-    (s, dir) => {
-      val p = broadcast(t(s, dir, "part"))
-      t(s, dir, "lineitem")
-        .join(p, col("p_partkey") === col("l_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) && col("l_quantity").between(1, 21)) ||
-          (col("p_brand") === "Brand#2" && col("p_size").between(1, 20) && col("l_quantity").between(10, 30)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 25) && col("l_quantity").between(20, 40)))
-        .agg(round(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-    })
+         OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 20 AND 40))""",
+    "BROADCAST(part)")
 
   /** Q20 — potential part promotion: nested IN + grouped HAVING (see delta). */
-  val q20 = Q(
+  val q20 = Q.sql(
     "tpch_q20",
-    Some("""
+    """
       SELECT s_name, s_acctbal
       FROM supplier
       WHERE s_suppkey IN (SELECT l_suppkey FROM lineitem, part
                           WHERE l_partkey = p_partkey AND p_name LIKE '%red%'
                           GROUP BY l_suppkey HAVING sum(l_quantity) > 100)
         AND s_acctbal > 0
-      ORDER BY s_name"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT s_name, s_acctbal
-      FROM supplier
-      WHERE s_suppkey IN (SELECT l_suppkey FROM lineitem, part
-                          WHERE l_partkey = p_partkey AND p_name LIKE '%red%'
-                          GROUP BY l_suppkey HAVING sum(l_quantity) > 100)
-        AND s_acctbal > 0
-      ORDER BY s_name"""))
+      ORDER BY s_name""")
 
   /** Q21 — suppliers who kept orders waiting: EXISTS + NOT EXISTS (see delta).
     *
@@ -770,34 +567,34 @@ object TpchQueries extends QueryCatalog {
       GROUP BY s_name
       ORDER BY numwait DESC, s_name
       LIMIT 100"""),
-    (s, dir) => sql(s, dir)(q21SparkSql))
+    (s, dir) => Engine.sql(s, dir)(q21SparkSql))
 
   /** Q22 — global sales opportunity: scalar avg + NOT EXISTS (see delta). */
-  val q22 = Q(
+  val q22 = Q.sql(
     "tpch_q22",
-    Some("""
+    """
       SELECT cntrycode, count(*) AS numcust, round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2) AS totacctbal
       FROM (SELECT substr(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
             FROM customer
             WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)) custsale
       WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
       GROUP BY cntrycode
-      ORDER BY cntrycode"""),
-    (s, dir) => sql(s, dir)("""
-      SELECT cntrycode, count(*) AS numcust, round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2) AS totacctbal
-      FROM (SELECT substr(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
-            FROM customer
-            WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)) custsale
-      WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-      GROUP BY cntrycode
-      ORDER BY cntrycode"""))
+      ORDER BY cntrycode""")
 
-  /** The rows the r16–r18 spill campaign reshaped: each ships a plan
-    * different from its stock oracle SQL. `ScaleSweep ab` re-measures
-    * stock against shipped on these by default, and `PlanDump` captures
-    * their before/after plans. */
-  val reshaped: Seq[String] = Seq(
-    "tpch_q04", "tpch_q11", "tpch_q13", "tpch_q16", "tpch_q18", "tpch_q21")
+  /** The rows that ship a plan different from their stock oracle SQL:
+    * the r16–r18 spill campaign's reshapes, and q19's broadcast of
+    * part. `ScaleSweep ab` re-measures stock against shipped on these by
+    * default, and `PlanDump` captures their before/after plans. Every
+    * other row runs its oracle (`OraclePlanSpec`); SCALE.md has the A/B
+    * runs behind each decision. */
+  override val reshaped: Map[String, String] = Map(
+    "tpch_q04" -> "a per-order max(l_shipdate) aggregate replaces the sort-merge semi join",
+    "tpch_q11" -> "one per-part aggregate serves the threshold subquery from the same shuffle",
+    "tpch_q13" -> "orders are counted per customer below the join, colocated first",
+    "tpch_q16" -> "SHUFFLE_HASH(part) and a repartition before count(DISTINCT) remove the sort spill",
+    "tpch_q18" -> "REPARTITION(l_orderkey) under the HAVING subquery colocates the aggregate",
+    "tpch_q19" -> "part is broadcast: past the broadcast threshold the stock plan shuffles lineitem",
+    "tpch_q21" -> "lineitem is scanned once, without the EXISTS/NOT EXISTS re-scans")
 
   override def defs: Seq[Q] = Seq(
     q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11,

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Engine
 
 /** Coverage for the Trino-compat layer (TrinoFunctions): every custom
@@ -21,11 +19,6 @@ import graft.Engine
   */
 object TrinoQueries extends QueryCatalog {
 
-  private def sql(s: SparkSession, dir: String)(q: String): DataFrame = {
-    Engine.registerDir(s, dir)
-    s.sql(q)
-  }
-
   /** cosine_similarity/cosine_distance vs DuckDB's native list kernels. */
   private val trinoCosine = Q(
     "trino_cosine",
@@ -36,7 +29,7 @@ object TrinoQueries extends QueryCatalog {
       FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
       WHERE a.vec_id < 25
       ORDER BY a.vec_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT a.vec_id,
              round(cosine_similarity(a.embedding, b.embedding), 6) AS cos_sim,
              round(cosine_distance(a.embedding, b.embedding), 6) AS cos_dist
@@ -63,7 +56,7 @@ object TrinoQueries extends QueryCatalog {
              CAST(epoch(date_trunc('second', ts)) AS DOUBLE) AS unixtime,
              CAST(last_day(CAST(ts AS DATE)) AS DATE) AS ldom
       FROM events WHERE event_id < 15 ORDER BY event_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT event_id,
              date_add(day, 5, ts) AS plus5d,
              date_add(minute, 90, ts) AS plus90m,
@@ -90,7 +83,7 @@ object TrinoQueries extends QueryCatalog {
              CAST(p_name AS BLOB) = CAST(p_name AS BLOB) AS utf8_ok,
              lower(p_type) AS lo
       FROM part WHERE p_partkey < 20 ORDER BY p_partkey"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT p_partkey,
              CAST(strpos(p_name, 'e') AS BIGINT) AS pos_e,
              CAST(codepoint(p_name) AS BIGINT) AS cp,
@@ -116,7 +109,7 @@ object TrinoQueries extends QueryCatalog {
              starts_with(n_name, 'NATION') AS sw,
              ends_with(n_name, '0') AS ew
       FROM nation ORDER BY n_nationkey"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT n_nationkey,
              from_utf8(from_base32(to_base32(n_name))) = n_name AS b32_ok,
              from_utf8(from_base64url(to_base64url(n_name))) = n_name AS b64url_ok,
@@ -146,7 +139,7 @@ object TrinoQueries extends QueryCatalog {
              CAST(CASE WHEN p_size >= 50 THEN 11 ELSE floor(p_size / 5.0) + 1 END AS BIGINT) AS wb
       FROM (SELECT p_partkey, p_size, p_retailprice - 1500 AS x FROM part)
       WHERE p_partkey < 20 ORDER BY p_partkey"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT p_partkey,
              truncate(x, 2) AS tr2,
              truncate(x) AS tr0,
@@ -165,7 +158,7 @@ object TrinoQueries extends QueryCatalog {
              round(exp(avg(ln(l_quantity))), 6) AS geo_mean,
              round(exp(avg(ln(l_extendedprice))), 4) AS geo_price
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT l_returnflag,
              round(geometric_mean(l_quantity), 6) AS geo_mean,
              round(geometric_mean(l_extendedprice), 4) AS geo_price
@@ -177,7 +170,7 @@ object TrinoQueries extends QueryCatalog {
   private val trinoChecksum = Q(
     "trino_checksum",
     Some("SELECT true AS order_independent, count(*) AS n FROM lineitem"),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       WITH whole AS (SELECT checksum(l_orderkey * 31 + l_linenumber) AS c FROM lineitem),
            parts AS (SELECT checksum(l_orderkey * 31 + l_linenumber) AS c FROM (
                        SELECT l_orderkey, l_linenumber FROM lineitem WHERE l_orderkey % 2 = 0
@@ -221,7 +214,7 @@ object TrinoQueries extends QueryCatalog {
                        ELSE floor(n_chars / 100.0) + 1 END AS BIGINT) AS wb
       FROM (SELECT doc_id, text, n_chars, n_chars / 7.0 - 100 AS x FROM documents)
       WHERE doc_id < 25 ORDER BY doc_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT doc_id,
              normalize(text) = text AS norm_ok,
              human_readable_seconds(doc_id * 3671) AS hrs,
@@ -252,7 +245,7 @@ object TrinoQueries extends QueryCatalog {
       SELECT doc_id, stem1, mac, mac_md5, ncdf, incdf, bcdf, tcdf
       FROM '/root/repo/data/stat_cdf_expected.parquet'
       ORDER BY doc_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT doc_id,
              word_stem(element_at(array(
                'caresses','ponies','ties','caress','cats','feed','agreed',
@@ -294,7 +287,7 @@ object TrinoQueries extends QueryCatalog {
                     + 1.96 * sqrt(p * (1.0 - p) / 1000.0 + z2 / (4.0 * 1000.0 * 1000.0)))
                    / (1.0 + z2 / 1000.0), 6) AS wiu
       FROM v ORDER BY doc_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT doc_id,
              round(t_pdf(CAST(doc_id AS DOUBLE) / 100.0, 10), 6) AS tpdf,
              round(wilson_interval_lower(doc_id + 1, 1000, 1.96), 6) AS wil,
@@ -324,9 +317,8 @@ object TrinoQueries extends QueryCatalog {
              TRUE AS sketch_in_band
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     (s, dir) => {
-      Engine.registerDir(s, dir)
       s.conf.set("spark.graft.approxPercentile.exact", "false")
-      try s.sql("""
+      try Engine.sql(s, dir)("""
         SELECT l_returnflag,
                count(*) AS n,
                round(percentile(CAST(l_quantity AS DOUBLE), 0.5), 4) AS exact_p50,
@@ -351,7 +343,7 @@ object TrinoQueries extends QueryCatalog {
              CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_ndv,
              TRUE AS sketch_in_band
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT l_returnflag,
              count(DISTINCT l_partkey) AS exact_ndv,
              (approx_count_distinct(l_partkey)
@@ -375,7 +367,7 @@ object TrinoQueries extends QueryCatalog {
       SELECT doc_id, slen, mm3, dur, dur_sec
       FROM '/root/repo/data/hash_expected.parquet'
       ORDER BY doc_id"""),
-    (s, dir) => sql(s, dir)("""
+    (s, dir) => Engine.sql(s, dir)("""
       SELECT doc_id, slen,
              murmur3(substring(
                repeat('The quick brown fox jumps over the lazy dog. ', 10),
@@ -394,6 +386,12 @@ object TrinoQueries extends QueryCatalog {
                           cast(doc_id as int) + 1) AS dur
         FROM documents WHERE doc_id < 25)
       ORDER BY doc_id"""))
+
+  override val reshaped: Map[String, String] = Map(
+    "trino_math" -> "exercises the Trino spelling (truncate, to_base, width_bucket)",
+    "trino_agg_fns" -> "exercises the Trino geometric_mean; the oracle is exp(avg(ln x))",
+    "trino_checksum" -> "exercises the Trino checksum; the oracle pins its order-independence TRUE",
+    "trino_approx_ndv_sketch" -> "runs the HLL sketch; the oracle pins its band check TRUE")
 
   override def defs: Seq[Q] = Seq(
     trinoCosine, trinoDatetime, trinoStrings, trinoEncoding, trinoMath,

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LeafNode, LogicalPlan}
+import org.scalatest.exceptions.TestFailedException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the optimizations SURVEY §4 maps from the
@@ -240,7 +244,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("IcebergLite reads take partition values and file identity from the manifest index") {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
@@ -293,5 +296,61 @@ class PlanSpec extends AnyFunSuite {
     val meta = IcebergLite.readWithMetadataColumns(s, root)
     assert(pathDecoding(meta).isEmpty, pathDecoding(meta))
     assert(meta.count() == 27L)
+  }
+
+  // Plan contracts for the spill-removing TPC-H reshapes: sf100 spill
+  // cannot be re-run here, so each pins, on the optimized logical plan
+  // (which broadcasting at toy size cannot hide), the shape that
+  // removed it. Each contract must fail on the stock oracle SQL, or it
+  // pins nothing; the test checks that too and reports why it fails.
+
+  /** Leaves scanning the table whose rows carry column `key`. */
+  private def scans(p: LogicalPlan, key: String): Int =
+    p.collectWithSubqueries { case l: LeafNode if l.output.exists(_.name == key) => l }.size
+
+  private def groupedOn(a: Aggregate): Seq[String] =
+    a.groupingExpressions.collect { case r: AttributeReference => r.name }
+
+  private def contract(name: String)(holds: LogicalPlan => Unit): Unit = {
+    Engine.registerDir(spark, sf0001)
+    holds(SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan)
+    val stock = spark.sql(SparkEntry.oracleSql(name)).queryExecution.optimizedPlan
+    val e = intercept[TestFailedException](holds(stock))
+    info(s"fails on the stock oracle: ${e.getMessage}")
+  }
+
+  test("q04 plan contract: a per-order lineitem aggregate replaces the semi join") {
+    contract("tpch_q04") { p =>
+      val semiJoin = p.exists { case j: Join => j.joinType == LeftSemi; case _ => false }
+      assert(!semiJoin, "the plan has a LeftSemi join")
+      val perOrder = p.exists {
+        case a: Aggregate => groupedOn(a) == Seq("l_orderkey") && scans(a, "l_orderkey") > 0
+        case _ => false
+      }
+      assert(perOrder, "no lineitem aggregate is keyed on l_orderkey")
+    }
+  }
+
+  test("q13 plan contract: orders are aggregated below the customer join") {
+    contract("tpch_q13") { p =>
+      val belowJoin = p.exists {
+        case j: Join =>
+          Seq(j.left -> j.right, j.right -> j.left).exists { case (o, c) =>
+            scans(c, "c_custkey") > 0 &&
+              o.exists { case a: Aggregate => scans(a, "o_orderkey") > 0; case _ => false }
+          }
+        case _ => false
+      }
+      assert(belowJoin, "no orders aggregate sits below the customer join")
+    }
+  }
+
+  test("q21 plan contract: one lineitem scan, no Expand") {
+    contract("tpch_q21") { p =>
+      val expand = p.exists(_.isInstanceOf[Expand])
+      assert(!expand, "the plan has an Expand")
+      val lineitemScans = scans(p, "l_orderkey")
+      assert(lineitemScans == 1, "lineitem is scanned more than once")
+    }
   }
 }

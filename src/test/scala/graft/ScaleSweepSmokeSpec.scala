@@ -83,13 +83,18 @@ class ScaleSweepSmokeSpec extends AnyFunSuite {
 
   test("ab tpch_q13 tpch_q21: interleaved arms, equal stock and shipped digests") {
     val lines = run("ab", "tpch_q13", "tpch_q21")
-    val arms = lines.map(l => (field(l, "query"), field(l, "round"), field(l, "arm")))
+    val arms = lines.map(l =>
+      (field(l, "query"), field(l, "round"), field(l, "arm"), field(l, "order")))
+    // ABBA: stock runs first in round 1, shipped first in round 2
     assert(arms == (for (round <- 1 to 2; q <- Seq("tpch_q13", "tpch_q21");
-        arm <- Seq("stock", "shipped")) yield (s""""$q"""", round.toString, s""""$arm"""")))
-    lines.grouped(2).foreach { case Seq(stock, shipped) =>
-      assert(field(stock, "resultDigest") == field(shipped, "resultDigest"))
-      assert(field(stock, "rows").toLong > 0)
+        (arm, order) <- (if (round == 1) Seq("stock", "shipped") else Seq("shipped", "stock"))
+          .zip(Seq("1", "2"))) yield (s""""$q"""", round.toString, s""""$arm"""", order)))
+    lines.grouped(2).foreach { case Seq(a, b) =>
+      assert(field(a, "resultDigest") == field(b, "resultDigest"))
+      assert(field(a, "rows").toLong > 0)
     }
+    // the unprinted warm-up round compiled every arm: both printed rounds are warm
+    lines.foreach(l => assert(field(l, "compiles") == "0", l))
   }
 
   test("an unknown mode exits non-zero and lists the valid modes") {
