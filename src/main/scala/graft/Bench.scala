@@ -63,6 +63,22 @@ object Bench {
       warmFailures ++ timedRuns.flatMap(_._2.left.toOption))
   }
 
+  /** Run the golden pass when a reference is mounted and it is not
+    * skipped. Returns the one short line to print when it did not run
+    * (`not_run` and the reason) or failed (`failed` and the error
+    * class); a pass that ran printed its own lines. */
+  private[graft] def goldenPass(referenceMounted: Boolean, skip: Boolean)(
+      run: => Unit): Option[String] = {
+    def notRun(reason: String) = Some(s"""{"golden_suite":"not_run","reason":"$reason"}""")
+    if (skip) notRun("SPARK_GRAFT_BENCH_SKIP_GOLDEN is set")
+    else if (!referenceMounted) notRun(s"no reference manifest at ${queries.RefManifest.path}")
+    else
+      try { run; None }
+      catch {
+        case NonFatal(e) => Some(s"""{"golden_suite":"failed","error":"${e.getClass.getName}"}""")
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Validated: a non-numeric or <=0 value must not silently produce an
@@ -142,57 +158,55 @@ object Bench {
     // timed pass. The warm pass's compiles carry over to the timed pass
     // only while the 156 queries' classes fit the generated-class cache
     // `Engine.session` sizes; at Spark's default of 100 entries the
-    // timed pass recompiled every query. Skipped silently when no
-    // reference checkout is mounted. Emitted BEFORE the contract line,
-    // which must stay last.
+    // timed pass recompiled every query. When it does not run, or
+    // fails, one short line says why (`goldenPass`). Emitted BEFORE the
+    // contract line, which must stay last.
     // SKIP_GOLDEN: scaled anchors (sf>=10 replica dirs) time only the
     // TPC-H suite — the golden pass would triple the window for a
     // number BENCH_NOTES tracks separately.
-    if (queries.RefManifest.available &&
-        !sys.env.contains("SPARK_GRAFT_BENCH_SKIP_GOLDEN")) {
-      try {
-        queries.RefManifest.padViews(spark)
-        val golden = queries.RefManifest.loadAll()
-        def runAll(): Int = golden.count { case (_, sql) =>
+    goldenPass(queries.RefManifest.available,
+        skip = sys.env.contains("SPARK_GRAFT_BENCH_SKIP_GOLDEN")) {
+      queries.RefManifest.padViews(spark)
+      val golden = queries.RefManifest.loadAll()
+      def runAll(): Int = golden.count { case (_, sql) =>
+        try { spark.sql(sql).write.format("noop").mode("overwrite").save(); true }
+        catch { case NonFatal(_) => false }
+      }
+      runAll() // warm
+      // timed pass records PER-QUERY walls: the r14 lesson is that
+      // the suite TOTAL swings 25.7–34.5 s across machine windows on
+      // identical code, so a regression inside the total is
+      // invisible — per-query walls localize it (the same reason
+      // Bench reports per-query TPC-H walls).
+      val g0 = System.nanoTime()
+      var ok = 0
+      val perQ = golden.map { case (name, sql) =>
+        val q0 = System.nanoTime()
+        val good =
           try { spark.sql(sql).write.format("noop").mode("overwrite").save(); true }
           catch { case NonFatal(_) => false }
-        }
-        runAll() // warm
-        // timed pass records PER-QUERY walls: the r14 lesson is that
-        // the suite TOTAL swings 25.7–34.5 s across machine windows on
-        // identical code, so a regression inside the total is
-        // invisible — per-query walls localize it (the same reason
-        // Bench reports per-query TPC-H walls).
-        val g0 = System.nanoTime()
-        var ok = 0
-        val perQ = golden.map { case (name, sql) =>
-          val q0 = System.nanoTime()
-          val good =
-            try { spark.sql(sql).write.format("noop").mode("overwrite").save(); true }
-            catch { case NonFatal(_) => false }
-          if (good) ok += 1
-          name -> (if (good) r4((System.nanoTime() - q0) / 1e9) else -1.0)
-        }
-        val gWall = (System.nanoTime() - g0) / 1e9
-        // slowest-first detail line (diagnostics; full map would be
-        // ~4 KB and risk crowding the driver's capture window), then
-        // the compact golden total
-        val slow = perQ.sortBy(-_._2).take(20)
-          .map { case (n, w) => s""""$n":$w""" }.mkString("{", ",", "}")
-        println(s"""{"golden_detail_top20":$slow,"sf":"$sfDir"}""")
-        // the FULL per-query map goes to a file (it is ~4 KB — too big
-        // for the driver's stdout tail window, which must keep the
-        // contract line); a fresh temp file per run, so two concurrent
-        // bench runs never clobber each other's detail file
-        val full = perQ.map { case (n, w) => s""""$n":$w""" }
-          .mkString("{", ",", "}")
-        val perqPath = Files.createTempFile(s"graft_golden_perq_${dtag}_", ".json")
-        Files.writeString(perqPath,
-          s"""{"golden_per_query":$full,"totalSec":${r4(gWall)},"sf":"$sfDir"}""")
-        println(s"""{"metric":"golden_suite","value":${r4(gWall)},"unit":"sec","queries":${golden.size},"succeeded":$ok,"perq_file":"$perqPath","sf":"$sfDir"}""")
-        queries.RefManifest.restoreViews(spark, sfDir)
-      } catch { case NonFatal(_) => }
-    }
+        if (good) ok += 1
+        name -> (if (good) r4((System.nanoTime() - q0) / 1e9) else -1.0)
+      }
+      val gWall = (System.nanoTime() - g0) / 1e9
+      // slowest-first detail line (diagnostics; full map would be
+      // ~4 KB and risk crowding a reader's stdout capture window), then
+      // the compact golden total
+      val slow = perQ.sortBy(-_._2).take(20)
+        .map { case (n, w) => s""""$n":$w""" }.mkString("{", ",", "}")
+      println(s"""{"golden_detail_top20":$slow,"sf":"$sfDir"}""")
+      // the FULL per-query map goes to a file (it is ~4 KB — too big
+      // for a reader's 2000-char stdout tail, which must keep the
+      // contract line); a fresh temp file per run, so two concurrent
+      // bench runs never clobber each other's detail file
+      val full = perQ.map { case (n, w) => s""""$n":$w""" }
+        .mkString("{", ",", "}")
+      val perqPath = Files.createTempFile(s"graft_golden_perq_${dtag}_", ".json")
+      Files.writeString(perqPath,
+        s"""{"golden_per_query":$full,"totalSec":${r4(gWall)},"sf":"$sfDir"}""")
+      println(s"""{"metric":"golden_suite","value":${r4(gWall)},"unit":"sec","queries":${golden.size},"succeeded":$ok,"perq_file":"$perqPath","sf":"$sfDir"}""")
+      queries.RefManifest.restoreViews(spark, sfDir)
+    }.foreach(println)
     val qs = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(w => r4(w._1)).getOrElse(-1.0)
     }.mkString("{", ",", "}")

@@ -10,8 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * temp-view registry and the engine is Spark SQL itself.
   *
   * Tables are one-parquet-per-table driver testdata (TESTDATA.md). At
-  * 100 TB each table would be a partitioned parquet/iceberg directory;
-  * `spark.read.parquet(path)` handles both shapes unchanged.
+  * 100 TB each table would be a partitioned parquet/iceberg directory.
+  * Either way a table's schema comes from the footer of its first
+  * parquet file, read once on the driver (`sources.ParquetTables`), and
+  * Spark's file index lists the files and discovers hive partitions, so
+  * registering a directory starts no Spark job.
   */
 object Engine {
 

@@ -371,7 +371,7 @@ object TpchQueries extends QueryCatalog {
     // side builds as a per-partition hash map so the 600M-row lineitem
     // streams through the join UNSORTED (the sort-merge big-side sort
     // was the whole 17.2 GB memory + 3.2 GB disk spill the sf100 suite
-    // charged q16); (b) REPARTITION on the dedupe key before the
+    // charged q16); (b) an exchange on the dedupe key before the
     // count(DISTINCT) so partial-agg state is group-sized (the
     // q11/q18/q21 rule). r17 q16ab A/B: zero spill, identical result
     // digest, 36-45 s -> 28-30 s. The oracle keeps the stock form.
@@ -417,7 +417,7 @@ object TpchQueries extends QueryCatalog {
       GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
       ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
       LIMIT 100"""),
-    // REPARTITION(l_orderkey) under the HAVING subquery is the r17
+    // An l_orderkey exchange under the HAVING subquery is the r17
     // high-cardinality-aggregation fix (the retired q18ab A/B at
     // sf100, docs/BENCH_NOTES.md; re-measure with `ScaleSweep ab`):
     // ~150M l_orderkey groups from 600M rows —
@@ -591,8 +591,8 @@ object TpchQueries extends QueryCatalog {
     "tpch_q04" -> "a per-order max(l_shipdate) aggregate replaces the sort-merge semi join",
     "tpch_q11" -> "one per-part aggregate serves the threshold subquery from the same shuffle",
     "tpch_q13" -> "orders are counted per customer below the join, colocated first",
-    "tpch_q16" -> "SHUFFLE_HASH(part) and a repartition before count(DISTINCT) remove the sort spill",
-    "tpch_q18" -> "REPARTITION(l_orderkey) under the HAVING subquery colocates the aggregate",
+    "tpch_q16" -> "SHUFFLE_HASH(part) and a REBALANCE on the DISTINCT key before count(DISTINCT) remove the sort spill",
+    "tpch_q18" -> "REBALANCE(l_orderkey) under the HAVING subquery colocates the aggregate",
     "tpch_q19" -> "part is broadcast: past the broadcast threshold the stock plan shuffles lineitem",
     "tpch_q21" -> "lineitem is scanned once, without the EXISTS/NOT EXISTS re-scans")
 

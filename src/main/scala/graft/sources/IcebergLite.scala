@@ -2291,8 +2291,9 @@ object IcebergLite {
     * first attempt already closed its sidecar part file), so the count
     * is of distinct files; the union is unchanged by a repeated sketch.
     * Driver cost: O(stats paths); the sketch scan,
-    * semi-join and union run distributed. Column names surface
-    * logical. */
+    * semi-join and union run distributed, and the scan takes the
+    * sidecar's fixed schema instead of inferring it with a job. Column
+    * names surface logical. */
   def columnStatsMetadata(spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, countDistinct, hll_sketch_estimate, hll_union_agg, lit}
@@ -2311,7 +2312,8 @@ object IcebergLite {
     val liveDf = spark.createDataFrame(liveRows,
       StructType(Seq(StructField("file_path", StringType, nullable = false))))
     val rmap = renames(tablePath, snapshotId)
-    val sdf = spark.read.parquet(stats.map(s => s"$tablePath/$s"): _*)
+    val sdf = spark.read.schema(StatsParquet.sidecarSchema)
+      .parquet(stats.map(s => s"$tablePath/$s"): _*)
       .join(broadcast(liveDf), Seq("file_path"), "left_semi")
     val agged = sdf.groupBy(col("column"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"), lit(true))).as("ndv"),

@@ -42,7 +42,7 @@ object StatsParquet {
   import IcebergLite.DataFile
 
   /** Row layout of the NDV sidecar: one row per (data file, column). */
-  private val sidecarSchema = StructType(Seq(
+  private[sources] val sidecarSchema = StructType(Seq(
     StructField("file_path", StringType, nullable = false),
     StructField("column", StringType, nullable = false),
     StructField("sketch", BinaryType, nullable = false)))

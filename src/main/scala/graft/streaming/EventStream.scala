@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.ParquetTables
+
 /** Structured-Streaming surface over the events table.
   *
   * The reference has no event-time streaming at all (SURVEY §2.10 —
@@ -327,14 +329,17 @@ object EventStream {
     q.stop()
   }
 
-  def tableStream(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/$table.parquet").schema
+  /** `table` under `sfDir` as a file stream, with the schema of its
+    * parquet footer (NANOS columns as raw longs). */
+  def tableStream(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    streamOf(spark, sfDir, table, ParquetTables.footer(spark, s"$sfDir/$table.parquet"))
+
+  private def streamOf(spark: SparkSession, sfDir: String, table: String,
+      footer: ParquetTables.Footer): DataFrame =
     spark.readStream
-      .schema(batchSchema)
+      .schema(footer.schema)
       .option("pathGlobFilter", s"$table.parquet")
       .parquet(sfDir)
-  }
 
   /** The events table as a stream with the same footer-aware NANOS→NTZ
     * ts repair as the batch reader (ParquetTables.read): the raw-long
@@ -342,17 +347,14 @@ object EventStream {
     * `ts` as TIMESTAMP(NANOS). Testdata written with ordinary
     * TIMESTAMP_MICROS arrives as a timestamp column already and needs
     * at most a cast to TIMESTAMP_NTZ (session tz is pinned UTC, so the
-    * cast is value-preserving either way). */
+    * cast is value-preserving either way). One footer read serves both
+    * the stream's schema and that check. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = tableStream(spark, sfDir, "events")
-    val nanoTs = graft.sources.ParquetTables
-      .nanoTimestampColumns(s"$sfDir/events.parquet",
-        spark.sparkContext.hadoopConfiguration)
-      .contains("ts")
+    val footer = ParquetTables.footer(spark, s"$sfDir/events.parquet")
     val repaired =
-      if (nanoTs) expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
+      if (footer.nanoColumns.contains("ts")) ParquetTables.repairNanos("ts")
       else expr("cast(ts as timestamp_ntz)")
-    raw.withColumn("ts", repaired)
+    streamOf(spark, sfDir, "events", footer).withColumn("ts", repaired)
   }
 
   /** Run a streaming DataFrame to completion into an in-memory table

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LeafNode, LogicalPlan, RebalancePartitions, SHUFFLE_HASH}
 import org.scalatest.exceptions.TestFailedException
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -311,6 +311,12 @@ class PlanSpec extends AnyFunSuite {
   private def groupedOn(a: Aggregate): Seq[String] =
     a.groupingExpressions.collect { case r: AttributeReference => r.name }
 
+  private def rebalancedOn(p: LogicalPlan, keys: String*): Boolean = p.exists {
+    case r: RebalancePartitions =>
+      r.partitionExpressions.collect { case a: AttributeReference => a.name } == keys
+    case _ => false
+  }
+
   private def contract(name: String)(holds: LogicalPlan => Unit): Unit = {
     Engine.registerDir(spark, sf0001)
     holds(SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan)
@@ -351,6 +357,30 @@ class PlanSpec extends AnyFunSuite {
       assert(!expand, "the plan has an Expand")
       val lineitemScans = scans(p, "l_orderkey")
       assert(lineitemScans == 1, "lineitem is scanned more than once")
+    }
+  }
+
+  test("q16 plan contract: the DISTINCT key is rebalanced and part builds a shuffled hash") {
+    contract("tpch_q16") { p =>
+      assert(rebalancedOn(p, "p_brand", "p_type", "p_size", "l_suppkey"),
+        "no RebalancePartitions on (p_brand, p_type, p_size, l_suppkey)")
+      val hashedPart = p.exists {
+        case j: Join =>
+          Seq(j.left -> j.hint.leftHint, j.right -> j.hint.rightHint).exists { case (side, h) =>
+            scans(side, "p_partkey") > 0 && h.exists(_.strategy.contains(SHUFFLE_HASH))
+          }
+        case _ => false
+      }
+      assert(hashedPart, "the part join has no SHUFFLE_HASH hint on part")
+    }
+  }
+
+  test("q18 plan contract: lineitem is rebalanced on l_orderkey under the HAVING aggregate") {
+    contract("tpch_q18") { p =>
+      val colocated = p.collectWithSubqueries {
+        case a: Aggregate if groupedOn(a) == Seq("l_orderkey") => rebalancedOn(a, "l_orderkey")
+      }.contains(true)
+      assert(colocated, "no l_orderkey aggregate sits over a RebalancePartitions(l_orderkey)")
     }
   }
 }
